@@ -455,67 +455,50 @@ def entry(spark: SparkSession) -> DataFrame:
     return findings_rollup(_demo_values(spark, SF0001))
 
 
-#: DRIVER-ROUND-13 rotation (the driver gate checks the FIRST 50
+#: DRIVER-ROUND-15 rotation (the driver gate checks the FIRST 50
 #: queries() entries; rounds here and below are DRIVER rounds — the
 #: committed CORRECTNESS_r*.json artifacts — never internal build
 #: iterations).
 #:
-#: Round 12 was the third consecutive fully-green 50/50 window, so
-#: this window is again pure rotation + new surface:
-#:   (a) the 45-entry declared cohort (MUST_FRONT_BY_ROUND[13],
-#:       verbatim: every entry whose latest driver row is r10 — age 3
-#:       the moment the r12 artifact landed — i.e. the r10 window's
-#:       50 rows minus the two round-11 instrument retirements minus
-#:       the 3 that round 12's fill slots early-refreshed);
-#:   (b) the 4 round-12 deferred registrations, NEW this window
-#:       (never-gated, rule 1): corpus_ngram_novelty (per-bench-doc
-#:       memorization audit, operators/corpus.py),
-#:       embed_semantic_decon (SemDeDup-style cosine decontamination,
-#:       operators/simsearch.py), orders_rfm_segments (two-level
-#:       exact-rank RFM quartiles, operators/analytics.py), and
-#:       corpus_tokenizer_fertility (per-language fertility audit,
-#:       operators/bpe.py) — all implemented + pytest-gated in round
-#:       12 with registration deferred per the collocations precedent;
-#:   (c) 1 MORE new registration (never-gated, rule 1) spending the
-#:       last free slot: unity_rest_columns — the S3 Unity REST
-#:       paginated walk, the final pytest-only enumeration surface
-#:       made oracle-checkable (its oracle is the info_schema path's
-#:       relation: REST/info_schema equality IS the contract).
-#: 45 + 4 + 1 = 50 exactly. The full 50-entry r11-latest cohort hits
-#: the age bound when the r13 artifact lands; MUST_FRONT_BY_ROUND[14]
-#: declares it (a zero-slack window, the round-11 precedent — r13
-#: follows three consecutive fully-green rounds, and every entry in
-#: this window carries a prior green row or five local gates).
+#: The round-14 rotation never landed, so the r13 and r14 artifacts
+#: gated the same 50 entries, and round 15 begins with 100 entries at
+#: or over the 3-round age bound: the 50 r11-latest rows at age 4 (the
+#: round-14 declared cohort, MUST_FRONT_BY_ROUND[14]) and the 50
+#: r12-latest rows at age 3. Fifty slots hold one cohort, so this
+#: window fronts the OLDER one, verbatim (MUST_FRONT_BY_ROUND[15]);
+#: the r12-latest cohort is declared for round 16
+#: (MUST_FRONT_BY_ROUND[16]). Until then the age tripwire
+#: (test_parked_driver_age_is_bounded) reports those 50 parked age-3
+#: entries: the overflow of the skipped rotation, not a correctness
+#: regression. No entry has a red latest row or lacks a driver row.
 #: The FULL 150-query set is verified every session by
 #: tools/selfcheck.py, tools/edge_sweep.py, and the scaling sweeps in
 #: PERF.md.
 FRONT_50 = [
-    # (a) the 45-entry declared cohort (MUST_FRONT_BY_ROUND[13])
-    "sketch_hll_distinct", "stream_kmv_distinct",
-    "ann_cosine_matmul", "ann_ivf_matmul", "ann_ivf_topk",
-    "ann_ivfpq_matmul", "ann_ivfpq_topk", "ann_pq_matmul",
-    "ann_pq_topk", "ann_pq_trained_topk", "bloom_semijoin_filter",
-    "corpus_anonymize", "corpus_bigram_logprob", "corpus_bm25_topk",
-    "corpus_cdc_dedup", "corpus_curate_pii",
-    "corpus_unigram_logprob", "dedup_containment",
-    "doc_pii_density", "dq_anomaly_days", "dq_constraint_suite",
-    "embed_cluster_mix", "embed_jl_topk", "embed_kmeans_lloyd",
-    "embed_semdedup_keep_list", "events_asof_join",
-    "events_neighbor_window", "events_sessions",
-    "layout_zorder_stats", "multimodal_features",
-    "multimodal_phash_dedup", "multimodal_resize",
-    "pii_candidate_features", "pii_candidates_rollup",
-    "pii_ensemble_gated", "pii_ner_context_signals",
-    "pii_redaction_contexts", "pii_scan_demo_crm",
-    "sample_columns_topn", "sketch_histogram_quantiles",
-    "sketch_hll_union", "stream_events_hourly",
-    "stream_events_sessions", "stream_hll_distinct",
-    "stream_phash_keep_list",
-    # (b) the 4 round-12 deferred registrations — never-gated, rule (1)
-    "corpus_ngram_novelty", "embed_semantic_decon",
-    "orders_rfm_segments", "corpus_tokenizer_fertility",
-    # (c) the S3 REST enumeration registration — never-gated, rule (1)
-    "unity_rest_columns",
+    # the 50-entry r11-latest cohort (MUST_FRONT_BY_ROUND[14] and [15])
+    "ann_filtered_topk", "ann_ivfpq_trained_topk",
+    "ann_pq_trained_matmul", "catalog_columns", "corpus_bpe_apply",
+    "corpus_bpe_encode", "corpus_bpe_merges", "corpus_chunk_overlap",
+    "corpus_dsir_select", "corpus_line_dedup",
+    "corpus_minhash_decontaminate", "corpus_normalize_text",
+    "corpus_quality_classifier", "corpus_substring_dedup",
+    "corpus_winnow_pairs", "dedup_clusters", "dedup_exact",
+    "dedup_keep_list", "dedup_lsh_near_pairs",
+    "dedup_minhash_signatures", "dedup_ngram_jaccard",
+    "dedup_simhash", "dq_k_anonymity", "dq_referential_suite",
+    "embed_hard_negatives", "embed_knn_eval", "embed_spectrum_stats",
+    "eval_greedy_metrics", "events_transition_matrix",
+    "layout_compaction_plan", "layout_partition_skew",
+    "multimodal_phash_keep_list", "orders_basket_pairs",
+    "pii_candidates_scored", "pii_full_pipeline",
+    "pii_incremental_scan", "pii_metadata_hints",
+    "pii_ner_merge_max", "pii_overlap_suppressed",
+    "pii_repeated_spans", "pii_scan_catalog_tables",
+    "pii_scan_enabled_types", "profile_columns",
+    "sketch_cms_heavy_hitters", "stream_cms_counters",
+    "stream_dedup_events", "stream_dedup_keep_list",
+    "stream_dsir_select", "stream_events_recent_score",
+    "tpch_local_supplier_volume",
 ]
 
 

@@ -29,188 +29,56 @@ def _spark(app: str):
     return get_spark(f"cpss-{app}")
 
 
-def _full_scope(args) -> bool:
-    """True when the scan's fingerprint basis covers the FULL catalog
-    schema — no table subset, no column glob, no --since pruning (the
-    --incremental fingerprint pass itself runs before its own pruning,
-    so it always covers the in-scope columns). Only such a run may
-    compact sidecar refs for dropped/renamed columns
-    (write_column_fingerprints evict_missing)."""
-    return not (args.tables or args.target or args.since)
-
-
 def cmd_scan(args) -> int:
     from .config import load_config
-    from .operators.findings import findings_rollup
     from .operators.rules import rules_for_types
-    from .sinks.findings_store import to_findings_records, write_findings
-    from .sinks.writeback import FakeCatalogClient, apply_writeback
-    from .sources.melt import TESTDATA_SCHEMAS, melt_table
+    from .scan import prune_columns, scan_catalog
+    from .sinks.writeback import FakeCatalogClient
+    from .sources.melt import TESTDATA_SCHEMAS
     from .sources.targets import match_names, parse_target
-    from functools import reduce
-    from pyspark.sql import DataFrame
 
-    spark = _spark("scan")
-    cfg = load_config(args.config or None)
+    if (args.since or args.incremental) and not args.store:
+        raise SystemExit("--since and --incremental need --store (the "
+                         "lookback source and fingerprint sidecar)")
     tables = tuple(args.tables.split(",")) if args.tables \
         else tuple(TESTDATA_SCHEMAS)
     col_pat = "*"
     if args.target:
         # reference P1: glob URI gates enumeration before any scan job.
         # Component semantics follow the column_ref shape
-        # spark://table/column: the first pattern prunes tables
-        # driver-side, the second prunes columns — BOTH at plan
-        # construction with the same fnmatch semantics via match_names
-        # (reference-faithful: its targets ARE fnmatch patterns,
-        # glue.py:152-159 / unity.py:110-115 — the previous in-plan
-        # rlike filter supported only * and ?, a deviation this
-        # unification deliberately removes), so a
-        # pruned column never enters the melt projection, the --since
-        # lookback, OR the --incremental fingerprint basis. The
-        # round-11 ADVICE hole this closes: filtering columns only
-        # after fingerprinting persisted glob-excluded columns as
-        # "freshly scanned" without ever scanning them, so later
-        # --incremental runs pruned their PII forever.
+        # spark://table/column: the first pattern prunes tables, the
+        # second prunes columns, both with the reference's fnmatch
+        # semantics (glue.py:152-159 / unity.py:110-115) and both at
+        # plan construction, so a pruned column never enters the melt,
+        # the --since lookback OR the --incremental fingerprint basis
+        # (fingerprinting glob-excluded columns would mark them freshly
+        # scanned without scanning them, and later --incremental runs
+        # would prune their PII forever).
         scheme, tbl_pat, col_pat = parse_target(args.target)
         if scheme not in KNOWN_SCHEMES:
             raise SystemExit(
                 f"unknown target scheme {scheme!r}; known: "
                 f"{', '.join(sorted(KNOWN_SCHEMES))}")
         tables = match_names(tables, tbl_pat)
-    if not tables:
+    table_cols, _ = prune_columns(
+        {t: TESTDATA_SCHEMAS[t] for t in tables},
+        lambda t, c: bool(match_names((c,), col_pat)))
+    if not table_cols:
         print("[]")
         return 0
-    table_cols: dict[str, list] = {t: TESTDATA_SCHEMAS[t] for t in tables}
-    if col_pat != "*":
-        pruned_cols = {
-            t: [(c, ty) for c, ty in cols
-                if match_names((c,), col_pat)]
-            for t, cols in table_cols.items()}
-        table_cols = {t: cols for t, cols in pruned_cols.items() if cols}
-        if not table_cols:
-            print("[]")
-            return 0
-    if args.since:
-        # incremental scan (reference README.md:200 promises --since; its
-        # CLI never implemented it): columns with a fresh-enough finding
-        # in the store are pruned at plan construction — they never enter
-        # the melt projection, so the parquet scan reads neither their
-        # pages nor their footer stats.
-        from .sinks.findings_store import parse_since, recently_scanned_refs
-        from .sources.melt import column_ref
-        store = args.merge_store or args.store
-        if not store:
-            raise SystemExit("--since needs --store or --merge-store "
-                             "(the lookback source)")
-        skip = recently_scanned_refs(
-            spark, store, parse_since(args.since),
-            merged=bool(args.merge_store))
-        pruned = {
-            t: [(c, ty) for c, ty in cols
-                if column_ref(t, c) not in skip]
-            for t, cols in table_cols.items()}
-        # report the columns actually pruned from THIS scan's table set,
-        # not the store-wide fresh-ref count (the store may hold findings
-        # for tables outside --tables).
-        n_skip = sum(len(cols) for cols in table_cols.values()) \
-            - sum(len(cols) for cols in pruned.values())
-        table_cols = {t: cols for t, cols in pruned.items() if cols}
-        print(json.dumps({"since": args.since, "skipped_columns": n_skip,
-                          "tables_remaining": len(table_cols)}),
-              file=sys.stderr)
-        if not table_cols:
-            print("[]")
-            return 0
-    fps_cur = None
-    vals = None
-    if args.incremental:
-        # content-based incremental rescan (the fingerprint half of the
-        # reference's promised --since, operators/incremental.py): one
-        # cheap distinct+hash pass fingerprints every candidate column;
-        # columns whose stored fingerprint is unchanged are pruned at
-        # PLAN CONSTRUCTION (like --since, they never enter the melt the
-        # extraction pipeline reads), and the sidecar refreshes only
-        # AFTER the scan's findings land.
-        from .operators.incremental import column_fingerprints
-        from .sinks.findings_store import changed_column_refs
-        from .sources.melt import column_ref
-        store = args.merge_store or args.store
-        if not store:
-            raise SystemExit("--incremental needs --store or "
-                             "--merge-store (the fingerprint sidecar)")
-        vals_all = reduce(DataFrame.unionByName,
-                          [melt_table(spark, args.sf_dir, t, columns=cols)
-                           for t, cols in table_cols.items()])
-        fps_cur = column_fingerprints(vals_all) \
-            .localCheckpoint(eager=True)
-        changed = changed_column_refs(spark, store, fps_cur)
-        if changed is not None:
-            pruned = {
-                t: [(c, ty) for c, ty in cols
-                    if column_ref(t, c) in changed]
-                for t, cols in table_cols.items()}
-            n_skip = sum(len(cols) for cols in table_cols.values()) \
-                - sum(len(cols) for cols in pruned.values())
-            table_cols = {t: cols for t, cols in pruned.items() if cols}
-            print(json.dumps({"incremental": True,
-                              "skipped_columns": n_skip,
-                              "tables_remaining": len(table_cols)}),
-                  file=sys.stderr)
-        else:
-            # first --incremental run: nothing was pruned, so the scan
-            # covers exactly the columns vals_all already melts —
-            # reuse it instead of constructing the identical union a
-            # second time (round-11 ADVICE: the melt was built twice)
-            vals = vals_all
-            print(json.dumps({"incremental": True, "first_run": True}),
-                  file=sys.stderr)
-        if not table_cols:
-            # nothing changed: refresh the sidecar timestamp and exit
-            from .sinks.findings_store import write_column_fingerprints
-            write_column_fingerprints(fps_cur, store,
-                                      evict_missing=_full_scope(args))
-            print("[]")
-            return 0
-    if vals is None:
-        # plan-construction pruning on purpose, NOT a column_ref filter
-        # over vals_all: rebuilding the melt from the pruned table_cols
-        # means the parquet scan reads ONLY the changed columns' pages
-        # — at catalog scale the rescan I/O tracks the day's delta, not
-        # the catalog. (Persisting/checkpointing the fingerprint pass's
-        # distinct relation to share it with the scan was measured and
-        # REJECTED in round 11: cache-fill cost ~18 s vs ~6 s of
-        # re-derivation saved — operators/incremental.py.)
-        vals = reduce(DataFrame.unionByName,
-                      [melt_table(spark, args.sf_dir, t, columns=cols)
-                       for t, cols in table_cols.items()])
-    per_type = findings_rollup(
-        vals, rules=rules_for_types(cfg.rules.enabled_types))
-    findings = to_findings_records(per_type)
-    out = [r.asDict() for r in findings.collect()]
-    print(json.dumps(out, default=str, indent=2))
-    if args.store:
-        write_findings(findings, args.store)
-    if args.merge_store:
-        from .sinks.findings_store import merge_findings
-        merge_findings(spark, findings, args.merge_store)
-    if args.jdbc_url:
-        from .sinks.findings_store import merge_findings_jdbc
-        merge_findings_jdbc(spark, findings, args.jdbc_url, "findings")
-    if args.apply:
-        client = FakeCatalogClient()
-        stats = apply_writeback(findings, client)
-        print(json.dumps({"writeback": stats}), file=sys.stderr)
-    if args.apply_sql:
-        from .sinks.writeback import apply_writeback_sql
-        stats = apply_writeback_sql(spark, findings)
-        print(json.dumps({"writeback_sql": stats}), file=sys.stderr)
-    if fps_cur is not None:
-        # findings landed -> NOW the columns count as freshly scanned;
-        # a full-scope run also compacts refs for dropped columns
-        from .sinks.findings_store import write_column_fingerprints
-        write_column_fingerprints(fps_cur,
-                                  args.merge_store or args.store,
-                                  evict_missing=_full_scope(args))
+    cfg = load_config(args.config or None)
+    result = scan_catalog(
+        _spark("scan"), args.sf_dir, table_cols, args.store,
+        rules=rules_for_types(cfg.rules.enabled_types),
+        since=args.since, incremental=args.incremental,
+        jdbc_url=args.jdbc_url,
+        client=FakeCatalogClient() if args.apply else None,
+        apply_sql=args.apply_sql,
+        full_catalog=not (args.tables or args.target))
+    for event in result.events:
+        print(json.dumps(event), file=sys.stderr)
+    print(json.dumps([r.asDict() for r in result.findings], default=str,
+                     indent=2))
     return 0
 
 
@@ -438,14 +306,14 @@ def cmd_eval(args) -> int:
 
 def cmd_export(args) -> int:
     from .sinks.findings_store import (export_csv, export_json,
-                                       read_latest_findings)
+                                       read_merged_findings)
     spark = _spark("export")
-    latest = read_latest_findings(spark, args.store)
+    findings = read_merged_findings(spark, args.store)
     if args.fmt == "json":
-        export_json(latest, args.out)
+        export_json(findings, args.out)
     else:
-        export_csv(latest, args.out)
-    print(f"exported {latest.count()} findings to {args.out}")
+        export_csv(findings, args.out)
+    print(f"exported {findings.count()} findings to {args.out}")
     return 0
 
 
@@ -461,20 +329,19 @@ def build_parser() -> argparse.ArgumentParser:
                         "e.g. spark://cust*/c_name")
     s.add_argument("--config", default="")
     s.add_argument("--store", default="",
-                   help="append-only parquet findings store")
-    s.add_argument("--merge-store", default="",
-                   help="MERGE-semantics keyed upsert store")
+                   help="keyed parquet findings store: one row per "
+                        "column, upserted by each scan")
     s.add_argument("--jdbc-url", default="",
                    help="JDBC findings upsert, e.g. jdbc:derby:db;create=true")
     s.add_argument("--since", default="",
                    help="incremental scan: skip columns with a finding "
                         "newer than this window ('24h', '7d', or hours); "
-                        "lookback source is --merge-store or --store")
+                        "lookback source is --store")
     s.add_argument("--incremental", action="store_true",
                    help="content-based incremental scan: fingerprint "
                         "every column's distinct value set, rescan only "
                         "columns whose fingerprint moved since the last "
-                        "run (sidecar lives in --merge-store/--store)")
+                        "run (sidecar lives in --store)")
     s.add_argument("--apply", action="store_true",
                    help="tag write-back via the fake catalog client")
     s.add_argument("--apply-sql", action="store_true",

@@ -453,11 +453,15 @@ def ngram_jaccard_pairs(spark, sf_dir: str,
     AQE promotes the pair/size relations to broadcast when their runtime
     size allows and falls back to shuffle joins when it doesn't.
 
-    Formulation note (measured at sf0.1, local[32]): the freq/sizes
-    groupBy+join shape below BEATS a window-function rewrite (count over
-    partitionBy(shingle) etc.) — the aggregations REDUCE before joining
-    and AQE broadcasts the small reduced relations, while windows shuffle
-    the full shingle relation unreduced (measured 10.5 s vs 4.7 s warm).
+    Formulation note: the shingle-keyed document frequency stays a
+    groupBy+join — measured at sf0.1, local[32], it beat a
+    count-over-partitionBy(shingle) window (4.7 s vs 10.5 s warm): the
+    aggregation REDUCES before joining and AQE broadcasts the small
+    result, while the window shuffles the full shingle relation
+    unreduced. The doc-keyed set size ``n`` is the opposite case: it is
+    a window count riding the exchange+sort the rank window already
+    needs, which replaced a sizes groupBy+join-back (query 4.32 s ->
+    2.77 s in the round-14 suite, the na/nb verify change included).
 
     Lineage note: shingles/prefix are EAGER localCheckpoints, not
     persist(): each downstream job then plans against a materialized

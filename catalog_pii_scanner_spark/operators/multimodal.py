@@ -1453,15 +1453,3 @@ def multimodal_audio_fp_bits(spark: SparkSession,
                     F.col("window_no").cast("bigint").alias("window_no"),
                     F.col("bit").cast("bigint").alias("bit")))
 
-
-def audio_fp_bits_oracle_sql(docs_rel: str = "documents",
-                             window: int = FP_WINDOW,
-                             bits: int = FP_BITS) -> str:
-    """Oracle twin of multimodal_audio_fp_bits over the shared CTE
-    chain: one (asset_id, window_no, bit) row per packed window."""
-    return f"""{_audio_fp_cte_prefix(docs_rel, window)}
-SELECT asset_id, CAST(window_no AS BIGINT) AS window_no,
-       CAST(CASE WHEN byte_sum * prev_len > prev_sum * win_len
-                 THEN 1 ELSE 0 END AS BIGINT) AS bit
-FROM d WHERE window_no BETWEEN 1 AND {bits}
-"""

@@ -40,14 +40,6 @@ _NER_RULES = tuple(
 )
 
 
-def _spacy_provider_available() -> bool:
-    try:  # pragma: no cover - not installed in this environment
-        import spacy  # noqa: F401
-        return True
-    except ImportError:
-        return False
-
-
 # --- heavy-provider path (mapInPandas, executor-global singleton) ------------
 
 #: Per-Python-worker provider cache: the module globals of a UDF module

@@ -2818,16 +2818,6 @@ WHERE round(d.dot / (na.norm * nb.norm), 6) >= {threshold}
 """
 
 
-def _semdedup_flagged_sql(dialect: str, rel: str, n_cells: int,
-                          max_cell: int) -> str:
-    """vec_ids whose cell the cap excluded from pairing."""
-    return f"""
-WITH {_semdedup_cells_cte(dialect, rel, n_cells).lstrip()}
-SELECT a.vec_id FROM assign a
-JOIN cell_n n ON n.cid = a.cid WHERE n.cn > {max_cell}
-"""
-
-
 def semdedup_keep_list_sql(dialect: str, rel: str = "embeddings",
                            threshold: float = SEMDEDUP_T,
                            n_cells: int = SEMDEDUP_CELLS,

@@ -456,10 +456,6 @@ def sketch_hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(hll_registers_sql("spark", rel_prefix="cpss_hlldg_"))
 
 
-def sketch_hll_registers_oracle_sql() -> str:
-    return hll_registers_sql("duckdb")
-
-
 def sketch_hll_rho_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Diagnostic: (col_ref, nz, fd) value histogram; see
     hll_rho_parts_sql."""
@@ -467,19 +463,11 @@ def sketch_hll_rho_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(hll_rho_parts_sql("spark", rel_prefix="cpss_hlldg_"))
 
 
-def sketch_hll_rho_parts_oracle_sql() -> str:
-    return hll_rho_parts_sql("duckdb")
-
-
 def sketch_hll_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Diagnostic: merged (col_ref, v_zero, z_hi, z_lo, filled) Z
     state, estimator division excluded; see hll_state_sql."""
     _hll_diag_views(spark, sf_dir)
     return spark.sql(hll_state_sql("spark", rel_prefix="cpss_hlldg_"))
-
-
-def sketch_hll_state_oracle_sql() -> str:
-    return hll_state_sql("duckdb")
 
 
 #: The streaming drains (HLL + KMV) track two events columns (one

@@ -28,15 +28,3 @@ class PIIType(str, Enum):
 #: Canonical ordering — fusion/argmax determinism depends on it.
 ALL_PII_TYPES: tuple[str, ...] = tuple(t.value for t in PIIType)
 
-#: 0-based rank used as the argmax tie-break key.
-TYPE_RANK: dict[str, int] = {t: i for i, t in enumerate(ALL_PII_TYPES)}
-
-
-def type_rank_sql(col: str) -> str:
-    """A dialect-portable CASE expression mapping a label column to its rank.
-
-    Works verbatim in Spark SQL and DuckDB — used so the Spark plan and the
-    DuckDB oracle share one tie-break definition.
-    """
-    whens = " ".join(f"WHEN '{t}' THEN {i}" for i, t in enumerate(ALL_PII_TYPES))
-    return f"(CASE {col} {whens} ELSE 99 END)"

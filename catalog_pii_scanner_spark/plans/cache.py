@@ -23,8 +23,9 @@ def session_parallelism(spark: SparkSession) -> int:
     configurations surface a non-numeric value ("auto") for the conf, and
     a session built outside session.py may not set it at all — the
     fallback keeps every fan-out consumer working on any session."""
+    value = spark.conf.get("spark.sql.shuffle.partitions", None)
     try:
-        return int(spark.conf.get("spark.sql.shuffle.partitions"))
+        return int(value)
     except (ValueError, TypeError):
         return spark.sparkContext.defaultParallelism
 

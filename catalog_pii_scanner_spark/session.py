@@ -19,6 +19,25 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+#: Upper bound of the derived driver heap, in MiB.
+MAX_DRIVER_MEMORY_MB = 24 * 1024
+
+
+def driver_memory(environ=os.environ, meminfo: str = "/proc/meminfo") -> str:
+    """Driver heap size: ``$SPARK_DRIVER_MEMORY`` when set, else three
+    quarters of the machine's MemTotal capped at 24g (in local mode the
+    driver heap is the executor heap too), else Spark's own 1g where
+    MemTotal cannot be read."""
+    if environ.get("SPARK_DRIVER_MEMORY"):
+        return environ["SPARK_DRIVER_MEMORY"]
+    try:
+        with open(meminfo) as f:
+            kib = next(int(line.split()[1]) for line in f
+                       if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        return "1g"
+    return f"{min(kib * 3 // 4 // 1024, MAX_DRIVER_MEMORY_MB)}m"
+
 
 def get_spark(
     app_name: str = "catalog-pii-scanner-spark",
@@ -59,9 +78,9 @@ def get_spark(
         # read_table restores timestamp semantics at microsecond precision)
         "spark.sql.legacy.parquet.nanosAsLong": "true",
         # single-JVM local mode: driver heap IS the executor heap; size it
-        # so suite-long persisted relations + 32 concurrent task buffers
-        # don't trigger GC storms (machine has 128 GiB)
-        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "24g"),
+        # so suite-long persisted relations + concurrent task buffers
+        # don't trigger GC storms, within what the machine has
+        "spark.driver.memory": driver_memory(),
     }
     if extra_conf:
         conf.update(extra_conf)

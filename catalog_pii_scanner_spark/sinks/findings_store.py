@@ -4,10 +4,11 @@ src/catalog_pii_scanner/db.py:110-241, cli.py:403-482).
 The reference persists a normalized Catalog->Schema->Table->Column
 hierarchy in SQLAlchemy with Findings as a child table, denormalizing
 ``column_ref`` onto Finding for export. Spark-first: the store IS the
-denormalized DataFrame, persisted as parquet partitioned by scan date —
-append-only with upsert semantics by (column_ref, model_version) natural
-key (K1's get-or-create collapses to a window dedup on read, or a Delta
-MERGE where Delta is available).
+denormalized DataFrame, persisted as parquet and keyed on the natural
+key (column_ref, model_version): every write is a MERGE that keeps the
+latest row per key (K1's get-or-create/update), so the store holds
+exactly one row per key and reads need no dedup. The JDBC rendering
+merges the same way.
 
 Export (K5): JSON lines and CSV with the reference's export shape —
 ``types`` list flattened to a comma-joined string for CSV
@@ -18,7 +19,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.errors import AnalysisException
 
 MODEL_VERSION = "cpss-spark-0.1"
 
@@ -47,24 +47,6 @@ def to_findings_records(per_type: DataFrame,
     )
 
 
-def write_findings(findings: DataFrame, store_path: str) -> None:
-    """Append to the parquet store, partitioned by scan date (prunable)."""
-    (findings
-     .withColumn("scan_date", F.to_date("scanned_at"))
-     .write.mode("append").partitionBy("scan_date").parquet(store_path))
-
-
-def read_latest_findings(spark: SparkSession, store_path: str) -> DataFrame:
-    """Upsert-on-read: latest record per (column_ref, model_version)."""
-    w = Window.partitionBy("column_ref", "model_version") \
-        .orderBy(F.col("scanned_at").desc())
-    return (
-        spark.read.parquet(store_path)
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1).drop("rn", "scan_date")
-    )
-
-
 def parse_since(spec: str) -> float:
     """``--since`` window spec -> hours: '24h', '7d', or a plain number
     of hours (reference README.md:200 promises ``--since 24h``; the
@@ -78,8 +60,7 @@ def parse_since(spec: str) -> float:
 
 
 def recently_scanned_refs(spark: SparkSession, store_path: str,
-                          since_hours: float, now=None,
-                          merged: bool = False) -> frozenset[str]:
+                          since_hours: float, now=None) -> frozenset[str]:
     """column_refs with a finding newer than ``now - since_hours`` — the
     skip set for an incremental scan. Driver-side set: the findings store
     is catalog-metadata-sized (one row per column), so collecting refs is
@@ -87,17 +68,14 @@ def recently_scanned_refs(spark: SparkSession, store_path: str,
     happens at PLAN CONSTRUCTION (columns never enter the melt), which no
     in-plan filter can match at 100 TB.
 
-    ``now`` pins the clock for deterministic tests (None = wall clock);
-    ``merged`` selects the MERGE-store layout over the append store."""
-    try:
-        latest = (read_merged_findings(spark, store_path) if merged
-                  else read_latest_findings(spark, store_path))
-    except AnalysisException:
-        # store doesn't exist yet -> nothing to skip. ONLY the
-        # path-not-found analysis error degrades to a full rescan;
-        # a corrupt/unreadable store must propagate, not silently
-        # rescan everything and mask the real failure.
+    ``now`` pins the clock for deterministic tests (None = wall clock).
+    A missing store means nothing to skip; a store that exists is read
+    with its declared schema, so one with no findings yet skips nothing
+    and a corrupt one raises instead of silently rescanning everything.
+    """
+    if not _path_exists(spark, store_path):
         return frozenset()
+    latest = spark.read.schema(MERGE_STORE_SCHEMA).parquet(store_path)
     now_col = (F.lit(now).cast("timestamp") if now is not None
                else F.current_timestamp())
     cutoff = now_col - F.expr(
@@ -110,6 +88,31 @@ def recently_scanned_refs(spark: SparkSession, store_path: str,
 #: Natural-key hash buckets for the MERGE store layout: updates rewrite
 #: only the buckets containing changed keys.
 MERGE_BUCKETS = 16
+
+#: The keyed store's on-disk schema (the bucket is its partition column).
+MERGE_STORE_SCHEMA = FINDINGS_STORE_SCHEMA + ", key_bucket int"
+
+
+def _path_exists(spark: SparkSession, path: str) -> bool:
+    """Whether ``path`` exists, asked of its Hadoop FileSystem — not
+    probed with a read, which logs a FileNotFoundException stack trace
+    on every first run."""
+    jvm = spark.sparkContext._jvm
+    p = jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(
+        spark.sparkContext._jsc.hadoopConfiguration()).exists(p)
+
+
+def _latest_per_key(all_rows: DataFrame) -> DataFrame:
+    """The MERGE step: the latest row per (column_ref, model_version) of
+    stored (``_new`` = 0) UNION incoming (``_new`` = 1) rows, incoming
+    winning scanned_at ties. Materialized (eager localCheckpoint)
+    because every caller overwrites the location it has just read."""
+    w = Window.partitionBy("column_ref", "model_version").orderBy(
+        F.col("scanned_at").desc(), F.col("_new").desc())
+    return (all_rows.withColumn("_rn", F.row_number().over(w))
+            .where(F.col("_rn") == 1).drop("_rn", "_new")
+            .localCheckpoint(eager=True))
 
 
 def merge_findings(spark: SparkSession, findings: DataFrame,
@@ -144,17 +147,8 @@ def merge_findings(spark: SparkSession, findings: DataFrame,
         all_rows = existing.unionByName(incoming)
     else:
         all_rows = incoming
-    w = Window.partitionBy("column_ref", "model_version").orderBy(
-        F.col("scanned_at").desc(), F.col("_new").desc())
-    merged = (
-        all_rows.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1).drop("_rn", "_new")
-        # the write targets the path being read: truncate lineage so the
-        # merged rows are materialized before the overwrite starts
-        .localCheckpoint(eager=True)
-    )
-    merged.write.mode("overwrite").partitionBy("key_bucket") \
-        .parquet(store_path)
+    _latest_per_key(all_rows).write.mode("overwrite") \
+        .partitionBy("key_bucket").parquet(store_path)
 
 
 def read_merged_findings(spark: SparkSession,
@@ -175,15 +169,6 @@ def _jdbc(df_or_spark, url: str, table: str, driver: str):
     if isinstance(df_or_spark, SparkSession):
         return df_or_spark.read.format("jdbc").options(**opts)
     return df_or_spark.write.format("jdbc").options(**opts)
-
-
-def write_findings_jdbc(findings: DataFrame, url: str, table: str,
-                        mode: str = "append",
-                        driver: str = DERBY_DRIVER) -> None:
-    """K1 JDBC path: the relational rendering of the findings store
-    (``types`` flattens to a comma-joined string — JDBC has no arrays)."""
-    flat = findings.withColumn("types", F.concat_ws(",", "types"))
-    _jdbc(flat, url, table, driver).mode(mode).save()
 
 
 def read_findings_jdbc(spark: SparkSession, url: str, table: str,
@@ -207,14 +192,8 @@ def merge_findings_jdbc(spark: SparkSession, findings: DataFrame,
         all_rows = existing.unionByName(incoming)
     except Exception:  # table does not exist yet -> plain create
         all_rows = incoming
-    w = Window.partitionBy("column_ref", "model_version").orderBy(
-        F.col("scanned_at").desc(), F.col("_new").desc())
-    merged = (
-        all_rows.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1).drop("_rn", "_new")
-        .localCheckpoint(eager=True)
-    )
-    _jdbc(merged, url, table, driver).mode("overwrite").save()
+    _jdbc(_latest_per_key(all_rows), url, table, driver) \
+        .mode("overwrite").save()
 
 
 def export_json(findings: DataFrame, path: str) -> None:
@@ -286,13 +265,11 @@ def write_column_fingerprints(fps: DataFrame, store_path: str,
 def read_column_fingerprints(spark: SparkSession,
                              store_path: str) -> DataFrame | None:
     """The stored sidecar, or None when it does not exist yet (first
-    run -> full scan). Only the path-not-found analysis error degrades;
-    a corrupt sidecar propagates (the recently_scanned_refs rule)."""
+    run -> full scan). A sidecar that exists but cannot be read raises
+    (the recently_scanned_refs rule)."""
     import os
-    try:
-        return spark.read.parquet(os.path.join(store_path, FP_SUBDIR))
-    except AnalysisException:
-        return None
+    path = os.path.join(store_path, FP_SUBDIR)
+    return spark.read.parquet(path) if _path_exists(spark, path) else None
 
 
 def changed_column_refs(spark: SparkSession, store_path: str,

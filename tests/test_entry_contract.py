@@ -194,6 +194,65 @@ MUST_FRONT_BY_ROUND: dict[int, set[str]] = {
         "stream_dsir_select", "stream_events_recent_score",
         "tpch_local_supplier_volume",
     },
+    # Round 15: the round-14 rotation never landed (the r13 and r14
+    # artifacts gated the same window), so the round-14 cohort above
+    # reached age 4 and the 50 r12-latest entries reached age 3 at
+    # once — 100 entries for 50 slots. Round 15 fronts the older
+    # cohort, verbatim; the r12-latest cohort cannot also fit, is
+    # declared for round 16 below, and until then keeps
+    # test_parked_driver_age_is_bounded red (it lists exactly those
+    # 50 parked age-3 entries).
+    15: {
+        "ann_filtered_topk", "ann_ivfpq_trained_topk",
+        "ann_pq_trained_matmul", "catalog_columns", "corpus_bpe_apply",
+        "corpus_bpe_encode", "corpus_bpe_merges", "corpus_chunk_overlap",
+        "corpus_dsir_select", "corpus_line_dedup",
+        "corpus_minhash_decontaminate", "corpus_normalize_text",
+        "corpus_quality_classifier", "corpus_substring_dedup",
+        "corpus_winnow_pairs", "dedup_clusters", "dedup_exact",
+        "dedup_keep_list", "dedup_lsh_near_pairs",
+        "dedup_minhash_signatures", "dedup_ngram_jaccard",
+        "dedup_simhash", "dq_k_anonymity", "dq_referential_suite",
+        "embed_hard_negatives", "embed_knn_eval", "embed_spectrum_stats",
+        "eval_greedy_metrics", "events_transition_matrix",
+        "layout_compaction_plan", "layout_partition_skew",
+        "multimodal_phash_keep_list", "orders_basket_pairs",
+        "pii_candidates_scored", "pii_full_pipeline",
+        "pii_incremental_scan", "pii_metadata_hints",
+        "pii_ner_merge_max", "pii_overlap_suppressed",
+        "pii_repeated_spans", "pii_scan_catalog_tables",
+        "pii_scan_enabled_types", "profile_columns",
+        "sketch_cms_heavy_hitters", "stream_cms_counters",
+        "stream_dedup_events", "stream_dedup_keep_list",
+        "stream_dsir_select", "stream_events_recent_score",
+        "tpch_local_supplier_volume",
+    },
+    # Round 16 fronts the 50 r12-latest entries (age 4 by then, the
+    # overflow round 15 could not hold). The r13/r14 window's entries
+    # are at age 2 then, so this cohort fills the window exactly.
+    16: {
+        "ann_cosine_topk", "ann_lsh_matmul", "ann_lsh_topk",
+        "athena_sample_capped", "churned_customers",
+        "corpus_char_entropy", "corpus_collocations", "corpus_curate",
+        "corpus_decontaminate", "corpus_pack_sequences",
+        "corpus_repetition", "corpus_sample_stratified", "corpus_split",
+        "corpus_temperature_sample", "corpus_tfidf_keywords",
+        "corpus_vocab_topk", "dedup_embed_cosine", "doc_fingerprints",
+        "doc_lang_id", "doc_length_quantiles", "doc_quality",
+        "doc_token_counts", "eval_trained_metrics", "events_funnel",
+        "events_hourly", "events_hourly_gapfill", "events_props_stats",
+        "events_retention", "events_sessions_salted",
+        "events_user_state_history", "events_value_outliers",
+        "findings_merge_upsert", "glue_columns", "hms_columns",
+        "llm_budget_plan", "monthly_revenue_running",
+        "multimodal_audio_energy", "multimodal_audio_fingerprint",
+        "multimodal_frame_sample", "multimodal_real_pgm_features",
+        "multimodal_real_wav_features", "orders_priority_pivot",
+        "pii_ensemble_predictions", "sketch_kmv_distinct",
+        "stream_doc_pii_density", "stream_quality_classifier",
+        "top_customers_by_revenue", "tpch_pricing_summary",
+        "unity_columns", "writeback_diff_plan",
+    },
 }
 
 #: Appended to rotation assertion failures so a red suite is read

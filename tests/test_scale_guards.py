@@ -227,7 +227,7 @@ def test_session_parallelism_non_numeric_conf_falls_back():
     from catalog_pii_scanner_spark.plans.cache import session_parallelism
 
     class _Conf:
-        def get(self, key):
+        def get(self, key, default):
             return "auto"
 
     class _SC:
@@ -238,3 +238,42 @@ def test_session_parallelism_non_numeric_conf_falls_back():
         sparkContext = _SC()
 
     assert session_parallelism(_Spark()) == 7
+
+
+def test_session_parallelism_unset_conf_falls_back():
+    """A session that never set spark.sql.shuffle.partitions falls back
+    to defaultParallelism: the key is read with a default, because
+    RuntimeConfig.get on an unset key without one raises."""
+    from catalog_pii_scanner_spark.plans.cache import session_parallelism
+
+    class _Conf:
+        def get(self, key, *default):
+            if not default:
+                raise LookupError(key)  # py4j NoSuchElementException
+            return default[0]
+
+    class _SC:
+        defaultParallelism = 5
+
+    class _Spark:
+        conf = _Conf()
+        sparkContext = _SC()
+
+    assert session_parallelism(_Spark()) == 5
+
+
+def test_driver_memory_default_fits_the_machine(tmp_path):
+    """The driver heap defaults to 3/4 of MemTotal, capped at 24g;
+    SPARK_DRIVER_MEMORY wins; no readable MemTotal -> Spark's 1g."""
+    from catalog_pii_scanner_spark.session import driver_memory
+
+    def meminfo(kib):
+        p = tmp_path / f"meminfo{kib}"
+        p.write_text(f"MemTotal:       {kib} kB\nMemFree:  1000 kB\n")
+        return str(p)
+
+    assert driver_memory({}, meminfo(16 * 1024 * 1024)) == "12288m"
+    assert driver_memory({}, meminfo(128 * 1024 * 1024)) == "24576m"
+    assert driver_memory({"SPARK_DRIVER_MEMORY": "2g"},
+                         meminfo(16 * 1024 * 1024)) == "2g"
+    assert driver_memory({}, str(tmp_path / "missing")) == "1g"

@@ -9,8 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from catalog_pii_scanner_spark.sinks.findings_store import (
-    export_csv, export_json, read_latest_findings, to_findings_records,
-    write_findings)
+    export_csv, export_json, merge_findings, to_findings_records)
 from catalog_pii_scanner_spark.sinks.writeback import (FakeCatalogClient,
                                                        apply_writeback)
 
@@ -37,17 +36,6 @@ def test_findings_record_shape(findings):
     cols = set(findings.columns)
     assert cols == {"column_ref", "types", "confidence", "hit_rate",
                     "model_version", "scanned_at", "source"}
-
-
-def test_store_roundtrip_upsert(spark, findings, tmp_path_factory):
-    store = str(tmp_path_factory.mktemp("store") / "findings")
-    write_findings(findings, store)
-    write_findings(findings, store)  # second scan run appends
-    latest = read_latest_findings(spark, store)
-    # upsert-on-read: one row per column_ref despite two appends
-    assert latest.count() == 2
-    assert latest.groupBy("column_ref").count() \
-        .where(F.col("count") > 1).count() == 0
 
 
 def test_export_json_csv(spark, findings, tmp_path_factory):
@@ -88,7 +76,7 @@ def test_recently_scanned_refs_window(spark, tmp_path_factory):
         "hit_rate double, model_version string, scanned_at string, "
         "source string",
     ).withColumn("scanned_at", F.to_timestamp("scanned_at"))
-    write_findings(df, store)
+    merge_findings(spark, df, store)
     now = "2026-01-02 12:00:00"
     # 24h lookback at that clock covers only the newer finding
     assert recently_scanned_refs(spark, store, 24.0, now=now) \
@@ -99,6 +87,11 @@ def test_recently_scanned_refs_window(spark, tmp_path_factory):
     assert recently_scanned_refs(spark, store, 1.0, now=now) == frozenset()
     # missing store -> empty skip set, not an error
     assert recently_scanned_refs(spark, "/nonexistent/store", 24.0) \
+        == frozenset()
+    # a store that exists but holds no findings yet skips nothing
+    empty = str(tmp_path_factory.mktemp("inc_empty") / "findings")
+    merge_findings(spark, df.limit(0), empty)
+    assert recently_scanned_refs(spark, empty, 24.0, now=now) \
         == frozenset()
 
 
@@ -255,13 +248,14 @@ def test_merge_findings_rewrites_only_touched_buckets(
 
 
 def test_jdbc_roundtrip_and_merge(spark, findings, tmp_path_factory):
-    """Real JDBC against embedded Derby (the driver Spark ships):
-    write -> read back intact; merge is an idempotent keyed upsert."""
+    """Real JDBC against embedded Derby (the driver Spark ships): the
+    first merge creates the table and reads back intact; further merges
+    are an idempotent keyed upsert."""
     from catalog_pii_scanner_spark.sinks.findings_store import (
-        merge_findings_jdbc, read_findings_jdbc, write_findings_jdbc)
+        merge_findings_jdbc, read_findings_jdbc)
     db = str(tmp_path_factory.mktemp("derby") / "findingsdb")
     url = f"jdbc:derby:{db};create=true"
-    write_findings_jdbc(findings, url, "findings")
+    merge_findings_jdbc(spark, findings, url, "findings")
     back = read_findings_jdbc(spark, url, "findings")
     assert back.count() == 2
     assert {tuple(r.types) for r in back.collect()} == \
@@ -280,7 +274,7 @@ def test_column_fingerprint_sidecar_roundtrip(spark, tmp_path_factory):
     from catalog_pii_scanner_spark.operators.incremental import (
         column_fingerprints)
     from catalog_pii_scanner_spark.sinks.findings_store import (
-        changed_column_refs, read_column_fingerprints,
+        FP_SUBDIR, changed_column_refs, read_column_fingerprints,
         write_column_fingerprints)
     store = str(tmp_path_factory.mktemp("fps") / "findings")
     vals = spark.createDataFrame(
@@ -328,6 +322,13 @@ def test_column_fingerprint_sidecar_roundtrip(spark, tmp_path_factory):
     assert {r.column_ref for r in
             read_column_fingerprints(spark, store).collect()} \
         == {"spark://t/b"}
+    # a sidecar that exists but cannot be read raises: it must never
+    # pass for a first run, which would mask the damage
+    bad = tmp_path_factory.mktemp("fps_bad") / "findings"
+    (bad / FP_SUBDIR).mkdir(parents=True)
+    (bad / FP_SUBDIR / "part-00000.parquet").write_bytes(b"not parquet")
+    with pytest.raises(Exception, match="parquet"):
+        changed_column_refs(spark, str(bad), fps)
 
 
 def test_cli_scan_incremental_prunes_unchanged_columns(
@@ -345,7 +346,7 @@ def test_cli_scan_incremental_prunes_unchanged_columns(
     store = str(tmp_path_factory.mktemp("inc3") / "findings")
     monkeypatch.setattr(cli, "_spark", lambda app: spark)
     args = ["scan", "--sf-dir", "/root/testdata/sf0.001",
-            "--tables", "orders", "--merge-store", store,
+            "--tables", "orders", "--store", store,
             "--incremental"]
     assert cli.main(args) == 0
     captured = capsys.readouterr()
@@ -361,6 +362,47 @@ def test_cli_scan_incremental_prunes_unchanged_columns(
     assert json.loads(captured.out) == []
     assert '"skipped_columns": 6' in captured.err
     assert os.stat(os.path.join(store, FP_SUBDIR)).st_mtime >= before
+
+
+def test_failed_scan_never_marks_columns_fresh(
+        spark, sf_dir, tmp_path_factory, capsys, monkeypatch):
+    """Fault injection for the sidecar-last invariant: the write-back,
+    which runs after the store merge, fails on a first --incremental
+    scan. No fingerprint sidecar may be written, the store must still
+    hold one row per column_ref, and the next --incremental run must
+    rescan every column."""
+    import os
+
+    import catalog_pii_scanner_spark.cli as cli
+    import catalog_pii_scanner_spark.scan as scan
+    from catalog_pii_scanner_spark.sinks.findings_store import (
+        FP_SUBDIR, read_column_fingerprints, read_merged_findings)
+    store = str(tmp_path_factory.mktemp("fault") / "findings")
+    monkeypatch.setattr(cli, "_spark", lambda app: spark)
+    args = ["scan", "--sf-dir", sf_dir, "--tables", "orders",
+            "--store", store, "--incremental", "--apply"]
+
+    def crash(findings, client):
+        raise RuntimeError("injected write-back failure")
+
+    with monkeypatch.context() as m:
+        m.setattr(scan, "apply_writeback", crash)
+        with pytest.raises(RuntimeError, match="injected"):
+            cli.main(args)
+    capsys.readouterr()
+    assert not os.path.exists(os.path.join(store, FP_SUBDIR))
+    stored = read_merged_findings(spark, store)
+    assert stored.count() == 1
+    assert stored.groupBy("column_ref").count() \
+        .where(F.col("count") > 1).count() == 0
+    # no sidecar -> the rerun is a first run over all 6 columns
+    assert cli.main(args) == 0
+    captured = capsys.readouterr()
+    assert '"first_run": true' in captured.err
+    assert [f["column_ref"] for f in json.loads(captured.out)] \
+        == ["spark://orders/o_orderdate"]
+    assert read_column_fingerprints(spark, store).count() == 6
+    assert read_merged_findings(spark, store).count() == 1
 
 
 def test_cli_incremental_column_glob_fingerprints_only_in_scope(
@@ -380,7 +422,7 @@ def test_cli_incremental_column_glob_fingerprints_only_in_scope(
     # scoped run: one column of orders
     assert cli.main(["scan", "--sf-dir", "/root/testdata/sf0.001",
                      "--target", "spark://orders/o_orderdate",
-                     "--merge-store", store, "--incremental"]) == 0
+                     "--store", store, "--incremental"]) == 0
     capsys.readouterr()
     fps = read_column_fingerprints(spark, store)
     assert {r.column_ref for r in fps.collect()} \
@@ -388,7 +430,7 @@ def test_cli_incremental_column_glob_fingerprints_only_in_scope(
     # full run over orders: the 5 out-of-scope columns have NO stored
     # fingerprint, so they must enter the scan (only 1 column pruned)
     assert cli.main(["scan", "--sf-dir", "/root/testdata/sf0.001",
-                     "--tables", "orders", "--merge-store", store,
+                     "--tables", "orders", "--store", store,
                      "--incremental"]) == 0
     captured = capsys.readouterr()
     assert '"skipped_columns": 1' in captured.err
@@ -408,7 +450,7 @@ def test_cli_incremental_scoped_run_keeps_out_of_scope_fingerprints(
     store = str(tmp_path_factory.mktemp("inc5") / "findings")
     monkeypatch.setattr(cli, "_spark", lambda app: spark)
     full = ["scan", "--sf-dir", "/root/testdata/sf0.001",
-            "--tables", "orders", "--merge-store", store,
+            "--tables", "orders", "--store", store,
             "--incremental"]
     assert cli.main(full) == 0
     capsys.readouterr()
@@ -417,7 +459,7 @@ def test_cli_incremental_scoped_run_keeps_out_of_scope_fingerprints(
     # must still hold all 6 fingerprints afterwards
     assert cli.main(["scan", "--sf-dir", "/root/testdata/sf0.001",
                      "--target", "spark://orders/o_orderdate",
-                     "--merge-store", store, "--incremental"]) == 0
+                     "--store", store, "--incremental"]) == 0
     captured = capsys.readouterr()
     assert '"skipped_columns": 1' in captured.err
     assert read_column_fingerprints(spark, store).count() == 6
