@@ -293,7 +293,7 @@ def lsh_near_dup_pairs(spark, sf_dir: str, threshold: float = 0.5,
     sigs = _signatures_from_shingles(shingles)
     bands = band_keys(sigs).persist()
     pairs = capped_band_pairs(bands, max_bucket)
-    out = _jaccard_verify(pairs, shingles, threshold)
+    out = _jaccard_verify(pairs, shingles, threshold, sizes_attached=False)
     # a handed-over (entry-memo) shingle relation belongs to the caller
     return checkpoint_release(out, *((shingles, bands) if own
                                      else (bands,)))
@@ -403,11 +403,14 @@ WHERE i.n_common / CAST(za.n + zb.n - i.n_common AS DOUBLE) >= {threshold}
 
 
 def _jaccard_verify(pairs: DataFrame, shingles: DataFrame,
-                    threshold: float) -> DataFrame:
+                    threshold: float, sizes_attached: bool) -> DataFrame:
     """Exact Jaccard over candidate pairs (shared by the LSH and prefix
-    paths). The pair relation joins the shingle relation directly: AQE
-    broadcasts the (runtime-small) pair side and streams shingles, so
-    the verify is one pass over the persisted shingle relation per side.
+    paths). ``sizes_attached`` says ``pairs`` already carries both set
+    sizes as ``na``/``nb`` (the prefix path); otherwise they are counted
+    from ``shingles``. The pair relation joins the shingle relation
+    directly: AQE broadcasts the (runtime-small) pair side and streams
+    shingles, so the verify is one pass over the persisted shingle
+    relation per side.
     (A semi-join pre-restriction of the shingle sides was measured
     SLOWER at sf0.1 — 10.2 s vs 5.3 s — the extra scans cost more than
     the row reduction saves while AQE already broadcasts the pairs.)"""
@@ -416,7 +419,7 @@ def _jaccard_verify(pairs: DataFrame, shingles: DataFrame,
     jac = F.col("n_common") / (F.col("na") + F.col("nb") - F.col("n_common"))
     out_expr = F.expr(ratio_round_halfup(
         "spark", "n_common", "na + nb - n_common")).alias("jaccard")
-    if "na" in pairs.columns and "nb" in pairs.columns:
+    if sizes_attached:
         # the caller already attached both set sizes (the PPJoin prefix
         # relation carries n): grouping by (pair, na, nb) — na/nb are
         # functionally dependent on the pair — skips the two sizes
@@ -512,7 +515,7 @@ def ngram_jaccard_pairs(spark, sf_dir: str,
     )
     # nothing persisted -> nothing to release; checkpoint blocks are
     # reaped by ContextCleaner when the caller drops the references.
-    return _jaccard_verify(pairs, shingles, threshold)
+    return _jaccard_verify(pairs, shingles, threshold, sizes_attached=True)
 
 
 # --- asymmetric containment (quote / subset detection) ----------------------

@@ -33,7 +33,15 @@ def to_findings_records(per_type: DataFrame,
                         model_version: str = MODEL_VERSION) -> DataFrame:
     """Re-nest the per-(column, type) rollup into the reference's Finding
     shape: one row per column with ``types ARRAY<STRING>`` (sorted),
-    column-level confidence = max over types."""
+    column-level confidence = max over types.
+
+    Materialized (eager ``localCheckpoint``): a scan's records are
+    computed ONCE, and the collect, the store and JDBC merges and both
+    write-backs read these rows instead of each re-running the rollup
+    and this groupBy (two jobs per consumer). Every consumer therefore
+    sees the same ``scanned_at`` — one per scan — where a lazy
+    ``current_timestamp()`` was re-evaluated by each action. The rows
+    are metadata-sized: one per column with PII."""
     return (
         per_type.groupBy("column_ref")
         .agg(
@@ -44,6 +52,7 @@ def to_findings_records(per_type: DataFrame,
         .withColumn("model_version", F.lit(model_version))
         .withColumn("scanned_at", F.current_timestamp())
         .withColumn("source", F.lit(source))
+        .localCheckpoint(eager=True)
     )
 
 
@@ -103,16 +112,17 @@ def _path_exists(spark: SparkSession, path: str) -> bool:
         spark.sparkContext._jsc.hadoopConfiguration()).exists(p)
 
 
-def _latest_per_key(all_rows: DataFrame) -> DataFrame:
+def _latest_per_key(all_rows: DataFrame, read_target: bool) -> DataFrame:
     """The MERGE step: the latest row per (column_ref, model_version) of
     stored (``_new`` = 0) UNION incoming (``_new`` = 1) rows, incoming
-    winning scanned_at ties. Materialized (eager localCheckpoint)
-    because every caller overwrites the location it has just read."""
+    winning scanned_at ties. ``read_target`` says ``all_rows`` reads the
+    location the caller then overwrites: only then is the result
+    materialized (eager localCheckpoint) before the write."""
     w = Window.partitionBy("column_ref", "model_version").orderBy(
         F.col("scanned_at").desc(), F.col("_new").desc())
-    return (all_rows.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1).drop("_rn", "_new")
-            .localCheckpoint(eager=True))
+    latest = (all_rows.withColumn("_rn", F.row_number().over(w))
+              .where(F.col("_rn") == 1).drop("_rn", "_new"))
+    return latest.localCheckpoint(eager=True) if read_target else latest
 
 
 def merge_findings(spark: SparkSession, findings: DataFrame,
@@ -144,10 +154,10 @@ def merge_findings(spark: SparkSession, findings: DataFrame,
             .where(F.col("key_bucket").isin(touched))
             .withColumn("_new", F.lit(0))
         )
-        all_rows = existing.unionByName(incoming)
+        all_rows, read_target = existing.unionByName(incoming), True
     else:
-        all_rows = incoming
-    _latest_per_key(all_rows).write.mode("overwrite") \
+        all_rows, read_target = incoming, False
+    _latest_per_key(all_rows, read_target).write.mode("overwrite") \
         .partitionBy("key_bucket").parquet(store_path)
 
 
@@ -189,10 +199,10 @@ def merge_findings_jdbc(spark: SparkSession, findings: DataFrame,
     try:
         existing = _jdbc(spark, url, table, driver).load() \
             .withColumn("_new", F.lit(0))
-        all_rows = existing.unionByName(incoming)
+        all_rows, read_target = existing.unionByName(incoming), True
     except Exception:  # table does not exist yet -> plain create
-        all_rows = incoming
-    _jdbc(_latest_per_key(all_rows), url, table, driver) \
+        all_rows, read_target = incoming, False
+    _jdbc(_latest_per_key(all_rows, read_target), url, table, driver) \
         .mode("overwrite").save()
 
 
@@ -250,26 +260,31 @@ def write_column_fingerprints(fps: DataFrame, store_path: str,
                 .withColumn("scanned_at", F.current_timestamp()))
     stored = read_column_fingerprints(spark, store_path)
     if stored is not None and not evict_missing:
+        # one row per column (metadata scale): materialize before the
+        # overwrite so the write never reads the directory it replaces
         merged = incoming.unionByName(
             stored.join(incoming.select("column_ref"),
-                        "column_ref", "left_anti"))
+                        "column_ref", "left_anti")) \
+            .localCheckpoint(eager=True)
     else:
+        # reads nothing from the target: written straight through
         merged = incoming
-    # one row per column (metadata scale): materialize before the
-    # overwrite so the write never reads the directory it replaces
-    (merged.localCheckpoint(eager=True)
-        .write.mode("overwrite")
-        .parquet(os.path.join(store_path, FP_SUBDIR)))
+    merged.write.mode("overwrite").parquet(os.path.join(store_path,
+                                                        FP_SUBDIR))
 
 
 def read_column_fingerprints(spark: SparkSession,
                              store_path: str) -> DataFrame | None:
     """The stored sidecar, or None when it does not exist yet (first
     run -> full scan). A sidecar that exists but cannot be read raises
-    (the recently_scanned_refs rule)."""
+    (the recently_scanned_refs rule). Read through a glob of its part
+    files: the reader drops a root path whose name starts with '_' as
+    hidden and logs "All paths were ignored" for it."""
     import os
     path = os.path.join(store_path, FP_SUBDIR)
-    return spark.read.parquet(path) if _path_exists(spark, path) else None
+    if not _path_exists(spark, path):
+        return None
+    return spark.read.parquet(os.path.join(path, "*.parquet"))
 
 
 def changed_column_refs(spark: SparkSession, store_path: str,

@@ -12,13 +12,22 @@ engine and the DuckDB oracle produce byte-identical strings:
 
 Melt is a single ``stack()`` projection: no shuffle, input read once, and
 Parquet column pruning still applies to any column subset selection.
+
+Building the melt launches no Spark job. The read is typed: the schema
+comes from one driver-side footer read (:func:`footer_schema`), where
+``spark.read.parquet`` would run a schema-inference job per table (8 of
+the 28 jobs a warm catalog scan ran before). The round-robin fan-out is
+planned only when the size-derived target exceeds one split.
 """
 
 from __future__ import annotations
 
-import pyarrow.parquet as pq
+import json
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 #: Column -> type map of the driver's testdata tables (TESTDATA.md; stable
 #: across scale factors). 'embeddings' is excluded from melt (vector table).
@@ -52,46 +61,103 @@ TESTDATA_SCHEMAS: dict[str, list[tuple[str, str]]] = {
 }
 
 
-def nanos_timestamp_columns(path: str) -> list[str]:
-    """Names of TIMESTAMP(NANOS) columns in a parquet file (footer-only).
-    Directory-shaped tables (the normal multi-part layout) are probed via
-    their first part file — one footer read either way. The check reads
-    the PARQUET logical type, not the arrow-converted schema: pyarrow
-    surfaces legacy INT96 timestamps (Spark's own writer default) as
-    ``timestamp[ns]`` too, which Spark's reader handles natively — only a
-    true Timestamp(nanoseconds) logical type needs the nanosAsLong
-    workaround."""
-    import glob
-    import json
-    import os
-    if os.path.isdir(path):
-        parts = sorted(glob.glob(os.path.join(path, "*.parquet")))
-        if not parts:
-            return []
-        path = parts[0]
-    sch = pq.ParquetFile(path).schema
-    out = []
-    for i in range(len(sch)):
-        col = sch.column(i)
-        lt = col.logical_type
-        if lt is None or lt.type != "TIMESTAMP":
-            continue
-        if json.loads(lt.to_json()).get("timeUnit") == "nanoseconds":
-            out.append(col.name)
-    return out
+def _read_footer(spark: SparkSession, path: str):
+    """(file, ParquetMetadata) of the first data file of the parquet
+    table at ``path``, read on the driver without row-group metadata —
+    no Spark job; ``None`` when ``path`` holds no data file directly (a
+    partitioned layout). Directory-shaped tables are probed via their
+    first data file; names starting with '_' or '.' are not data, as
+    for the reader."""
+    jvm = spark.sparkContext._jvm
+    hconf = spark.sparkContext._jsc.hadoopConfiguration()
+    root = jvm.org.apache.hadoop.fs.Path(path)
+    files = sorted(
+        (st.getPath() for st in root.getFileSystem(hconf).listStatus(root)
+         if st.isFile()
+         and not st.getPath().getName().startswith(("_", "."))),
+        key=lambda f: f.getName())
+    if not files:
+        return None
+    meta = jvm.org.apache.spark.sql.execution.datasources.parquet \
+        .ParquetFooterReader.readFooter(
+            jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+                files[0], hconf),
+            jvm.org.apache.parquet.format.converter.ParquetMetadataConverter
+            .SKIP_ROW_GROUPS)
+    return files[0], meta
+
+
+#: A top-level TIMESTAMP(NANOS) field in parquet's schema rendering
+#: (``MessageType.toString``: top-level fields indented two spaces,
+#: ``<repetition> int64 <name> (<logical type>)[ = <field id>];``).
+_NANOS_FIELD = re.compile(
+    r"^  (?:required|optional|repeated) int64 (.+) "
+    r"\(TIMESTAMP\(NANOS,(?:true|false)\)\)(?: = \d+)?;$", re.M)
+
+
+def _nanos_columns(meta) -> list[str]:
+    """TIMESTAMP(NANOS) columns of a footer, from ONE rendering of its
+    schema (walking the fields costs ~5 py4j calls each). The check
+    reads the PARQUET logical type: legacy INT96 timestamps, Spark's own
+    writer default, need no conversion."""
+    return _NANOS_FIELD.findall(
+        meta.getFileMetaData().getSchema().toString())
+
+
+def nanos_timestamp_columns(spark: SparkSession, path: str) -> list[str]:
+    """Names of TIMESTAMP(NANOS) columns of the parquet table at
+    ``path`` (one driver-side footer read)."""
+    footer = _read_footer(spark, path)
+    return _nanos_columns(footer[1]) if footer else []
+
+
+def footer_schema(spark: SparkSession, path: str
+                  ) -> tuple[StructType, list[str]] | None:
+    """The schema Spark's reader would infer for the parquet table at
+    ``path`` and its TIMESTAMP(NANOS) columns, from ONE driver-side
+    footer read (``None`` for a partitioned layout, see
+    :func:`_read_footer`).
+
+    Inference (``spark.read.parquet`` without a schema) launches a Spark
+    job per table to read the footer of the table's first data file.
+    This reads the same footer on the driver and converts it with
+    Spark's own code path, ``ParquetFileFormat.readSchemaFromFooter``: a
+    schema a Spark writer embedded wins, else
+    ``ParquetToSparkSchemaConverter`` under the session's parquet confs
+    resolves INT96, TIMESTAMP_NTZ, unsigned ints and ``nanosAsLong``
+    exactly as the reader does (a pyarrow type mapping does not)."""
+    footer = _read_footer(spark, path)
+    if footer is None:
+        return None
+    file, meta = footer
+    pq = spark.sparkContext._jvm.org.apache.spark.sql.execution \
+        .datasources.parquet
+    converter = pq.ParquetToSparkSchemaConverter(
+        spark._jsparkSession.sessionState().conf())
+    schema = pq.ParquetFileFormat.readSchemaFromFooter(
+        spark.sparkContext._jvm.org.apache.parquet.hadoop.Footer(file, meta),
+        converter)
+    return StructType.fromJson(json.loads(schema.json())), \
+        _nanos_columns(meta)
 
 
 def read_table(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    """Read a testdata parquet table, normalizing TIMESTAMP(NANOS) columns
-    (rejected by Spark's reader; surfaced as long via
-    spark.sql.legacy.parquet.nanosAsLong) back to microsecond timestamps —
-    the same truncation DuckDB applies."""
+    """Read a testdata parquet table with the schema its footer declares
+    (:func:`footer_schema`: a typed read, no schema-inference job),
+    normalizing TIMESTAMP(NANOS) columns (rejected by Spark's reader;
+    surfaced as long via spark.sql.legacy.parquet.nanosAsLong) back to
+    microsecond timestamps — the same truncation DuckDB applies."""
     path = f"{sf_dir}/{table}.parquet"
     # Runtime-settable; must hold for ANY caller-provided session (the
     # correctness harness builds a plain one), not just session.py's.
+    # Set before the footer is converted: the converter reads it.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
-    for c in nanos_timestamp_columns(path):
+    footer = footer_schema(spark, path)
+    if footer is None:
+        return spark.read.parquet(path)
+    schema, nanos = footer
+    df = spark.read.schema(schema).parquet(path)
+    for c in nanos:
         # pure-LONG floor division, NOT floor(x / 1000): `/` promotes the
         # ns-epoch LONG (~1.7e18, far past 2^53) to DOUBLE, and the
         # precision loss shifts timestamps by +/-1 us (caught by the
@@ -179,7 +245,10 @@ def melt_table(spark: SparkSession, sf_dir: str, table: str,
         # storage the size is unknown and the session-parallelism target
         # applies (a splittable production layout makes fan_out a no-op).
         target = min(target, max(1, math.ceil(nbytes / MELT_SPLIT_BYTES)))
-    df = fan_out(df, parts=target)
+    if target > 1:
+        # a 1-split target needs no fan-out: skip fan_out's df.rdd, which
+        # plans the whole query just to count the scan's partitions
+        df = fan_out(df, parts=target)
     n = len(cols)
     pairs = ", ".join(
         f"'{column_ref(table, c)}', {stringify_sql(c, t, 'spark')}, "

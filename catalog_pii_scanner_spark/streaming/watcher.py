@@ -286,7 +286,7 @@ def stream_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-checked against the same SQL as the batch query."""
     from ..sources.melt import nanos_timestamp_columns
     path = f"{sf_dir}/events.parquet"
-    nanos = "ts" in nanos_timestamp_columns(path)
+    nanos = "ts" in nanos_timestamp_columns(spark, path)
     if nanos:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     drained = run_watcher_once(spark, path, "cpss_stream_hourly",
@@ -322,7 +322,7 @@ def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: event_type, n_users (distinct users per event type)."""
     from ..sources.melt import nanos_timestamp_columns
     path = f"{sf_dir}/events.parquet"
-    nanos = "ts" in nanos_timestamp_columns(path)
+    nanos = "ts" in nanos_timestamp_columns(spark, path)
     if nanos:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     deduped = (
@@ -488,7 +488,7 @@ def stream_events_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the same gaps-and-islands SQL as the batch query."""
     from ..sources.melt import nanos_timestamp_columns
     path = f"{sf_dir}/events.parquet"
-    nanos = "ts" in nanos_timestamp_columns(path)
+    nanos = "ts" in nanos_timestamp_columns(spark, path)
     if nanos:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     stream = (
@@ -735,7 +735,8 @@ def stream_dedup_keep_list(spark: SparkSession, sf_dir: str,
         shingles = doc_shingles_df(spark, sf_dir)
     shingles = (shingles.join(cand_ids, "doc_id", "left_semi")
                 .localCheckpoint(eager=True))
-    verified = _jaccard_verify(pairs, shingles, threshold)
+    verified = _jaccard_verify(pairs, shingles, threshold,
+                               sizes_attached=False)
     clusters = connected_components(verified)
     docs = spark.read.parquet(path).select("doc_id")
     out = docs.join(clusters, "doc_id", "left")

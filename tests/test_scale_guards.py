@@ -5,6 +5,8 @@ each query (no cached-relation accumulation across a long session)."""
 from __future__ import annotations
 
 import gc
+import glob
+import os
 import time
 
 import duckdb
@@ -219,6 +221,91 @@ def test_melt_survives_unstatable_storage(spark, sf_dir, monkeypatch):
     # region: r_regionkey + r_name melted over every row
     n_rows = spark.read.parquet(f"{sf_dir}/region.parquet").count()
     assert df.count() == 2 * n_rows
+
+
+def _inferred_then_nanos(spark, path):
+    """The schema read_table gave when it let Spark infer: the inferred
+    schema with every TIMESTAMP(NANOS) column (read as long under
+    nanosAsLong) converted to a microsecond timestamp."""
+    import json
+
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    df = spark.read.parquet(path)
+    probe = path
+    if os.path.isdir(path):
+        probe = sorted(glob.glob(os.path.join(path, "*.parquet")))[0]
+    sch = pq.ParquetFile(probe).schema
+    for i in range(len(sch)):
+        lt = sch.column(i).logical_type
+        if lt is not None and lt.type == "TIMESTAMP" and json.loads(
+                lt.to_json()).get("timeUnit") == "nanoseconds":
+            c = sch.column(i).name
+            df = df.withColumn(c, F.timestamp_micros(
+                F.expr(f"`{c}` div 1000")))
+    return df.schema
+
+
+def test_typed_read_matches_inference(spark, sf_dir, tmp_path):
+    """read_table takes its schema from the parquet footer instead of an
+    inference job; the schema must be exactly what inference followed
+    by the nanos conversion gives — on every testdata table (events.ts
+    may be TIMESTAMP(NANOS) or NTZ micros), a Spark-written INT96 file
+    and a pyarrow file with NTZ, UTC, nanos and unsigned columns."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from catalog_pii_scanner_spark.sources.melt import (TESTDATA_SCHEMAS,
+                                                        read_table)
+    tables = [t for t in TESTDATA_SCHEMAS
+              if os.path.exists(f"{sf_dir}/{t}.parquet")]
+    assert "events" in tables
+    key = "spark.sql.parquet.outputTimestampType"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "INT96")
+    try:
+        spark.sql("SELECT 1L AS id, timestamp'2024-01-02 03:04:05' AS ts, "
+                  "'x' AS s").write.parquet(f"{tmp_path}/int96.parquet")
+    finally:
+        spark.conf.set(key, before)
+    ts = [dt.datetime(2024, 1, 2, 3, 4, 5)]
+    pq.write_table(pa.table({
+        "ntz": pa.array(ts, pa.timestamp("us")),
+        "utc": pa.array(ts, pa.timestamp("us", tz="UTC")),
+        "nanos": pa.array(ts, pa.timestamp("ns")),
+        "u8": pa.array([1], pa.uint8()),
+        "u16": pa.array([1], pa.uint16()),
+        "u32": pa.array([1], pa.uint32()),
+        "u64": pa.array([1], pa.uint64()),
+        "s": pa.array(["x"], pa.string()),
+    }), f"{tmp_path}/arrow.parquet")
+    cases = [(sf_dir, t) for t in tables] + [(str(tmp_path), "int96"),
+                                             (str(tmp_path), "arrow")]
+    for d, t in cases:
+        want = _inferred_then_nanos(spark, f"{d}/{t}.parquet")
+        assert read_table(spark, d, t).schema == want, t
+
+
+def test_melt_build_launches_no_job(spark, sf_dir):
+    """Building the melt of every testdata table plans without running
+    a Spark job: no schema-inference read, no fan-out planning."""
+    from catalog_pii_scanner_spark.sources.melt import (TESTDATA_SCHEMAS,
+                                                        melt_table)
+    sc = spark.sparkContext
+    group = "test_melt_build_launches_no_job"
+    sc.setJobGroup(group, "melt build")
+    try:
+        for t in TESTDATA_SCHEMAS:
+            if os.path.exists(f"{sf_dir}/{t}.parquet"):
+                melt_table(spark, sf_dir, t)
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs == []
 
 
 def test_session_parallelism_non_numeric_conf_falls_back():

@@ -405,6 +405,31 @@ def test_failed_scan_never_marks_columns_fresh(
     assert read_merged_findings(spark, store).count() == 1
 
 
+def test_scan_findings_evaluated_once(spark, sf_dir, tmp_path_factory):
+    """A scan computes its findings records once: the rows it returns,
+    the rows the store holds and the write-back all come from the same
+    evaluation — equal field by field, ``scanned_at`` included (a lazy
+    ``current_timestamp()`` re-evaluated per action differs)."""
+    from catalog_pii_scanner_spark.scan import scan_catalog
+    from catalog_pii_scanner_spark.sinks.findings_store import (
+        read_merged_findings)
+    from catalog_pii_scanner_spark.sources.melt import TESTDATA_SCHEMAS
+    store = str(tmp_path_factory.mktemp("once") / "findings")
+    client = FakeCatalogClient()
+    res = scan_catalog(spark, sf_dir, {"orders": TESTDATA_SCHEMAS["orders"]},
+                       store, client=client)
+
+    def rows(rs):
+        return sorted((r.asDict() for r in rs),
+                      key=lambda d: d["column_ref"])
+
+    returned = rows(res.findings)
+    assert returned
+    assert returned == rows(read_merged_findings(spark, store).collect())
+    assert [e["writeback"] for e in res.events if "writeback" in e] \
+        == [{"applied": len(returned), "skipped": 0}]
+
+
 def test_cli_incremental_column_glob_fingerprints_only_in_scope(
         spark, tmp_path_factory, capsys, monkeypatch):
     """Round-11 ADVICE (high): a --target COLUMN glob must gate the
