@@ -53,8 +53,6 @@ class EnsembleWeights:
 
 #: ensemble.py:65-67 dataclass defaults (used by the reference's live path).
 REFERENCE_WEIGHTS = EnsembleWeights()
-#: config.py:45-47 defaults (never actually wired in the reference's v0).
-CONFIG_WEIGHTS = EnsembleWeights(w_rule=0.4, w_ner=0.3, w_embed=0.3)
 
 #: Deterministic non-identity Platt parameters per type (exercises F2 with
 #: a != 1, b != 0 in a reproducible way; identity would hide calibration

@@ -112,6 +112,18 @@ def _path_exists(spark: SparkSession, path: str) -> bool:
         spark.sparkContext._jsc.hadoopConfiguration()).exists(p)
 
 
+def _has_buckets(spark: SparkSession, store_path: str) -> bool:
+    """Whether the store already holds ``key_bucket=*`` partitions —
+    the merge's "not a first write" test, asked of the path's Hadoop
+    FileSystem so URI paths are seen too."""
+    if not _path_exists(spark, store_path):
+        return False
+    jvm = spark.sparkContext._jvm
+    pattern = jvm.org.apache.hadoop.fs.Path(store_path, "key_bucket=*")
+    return bool(pattern.getFileSystem(
+        spark.sparkContext._jsc.hadoopConfiguration()).globStatus(pattern))
+
+
 def _latest_per_key(all_rows: DataFrame, read_target: bool) -> DataFrame:
     """The MERGE step: the latest row per (column_ref, model_version) of
     stored (``_new`` = 0) UNION incoming (``_new`` = 1) rows, incoming
@@ -138,15 +150,17 @@ def merge_findings(spark: SparkSession, findings: DataFrame,
     win scanned_at ties. At 100 TB-scale stores this is the standard
     pre-Delta upsert layout: the rewrite cost is bounded by the touched
     buckets, and reads need no dedup window (the store holds exactly one
-    row per key)."""
-    import os
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    row per key).
+
+    Works for any Hadoop path (plain, ``file://``, ``hdfs://``,
+    ``s3a://``): the store's buckets are found through its FileSystem.
+    Dynamic overwrite is a per-write option, so the caller's session
+    conf is left as it was."""
     bucket = F.pmod(F.xxhash64("column_ref"), F.lit(num_buckets)) \
         .cast("int")
     incoming = findings.withColumn("key_bucket", bucket) \
         .withColumn("_new", F.lit(1))
-    if os.path.isdir(store_path) and any(
-            e.startswith("key_bucket=") for e in os.listdir(store_path)):
+    if _has_buckets(spark, store_path):
         touched = [r.key_bucket for r in
                    incoming.select("key_bucket").distinct().collect()]
         existing = (
@@ -158,6 +172,7 @@ def merge_findings(spark: SparkSession, findings: DataFrame,
     else:
         all_rows, read_target = incoming, False
     _latest_per_key(all_rows, read_target).write.mode("overwrite") \
+        .option("partitionOverwriteMode", "dynamic") \
         .partitionBy("key_bucket").parquet(store_path)
 
 

@@ -364,3 +364,35 @@ def test_driver_memory_default_fits_the_machine(tmp_path):
     assert driver_memory({"SPARK_DRIVER_MEMORY": "2g"},
                          meminfo(16 * 1024 * 1024)) == "2g"
     assert driver_memory({}, str(tmp_path / "missing")) == "1g"
+
+
+def test_repeat_scan_reuses_generated_classes(spark, sf_dir,
+                                              tmp_path_factory):
+    """A second identical scan in one session compiles (almost) no new
+    classes: the codegen cache holds a whole scan's generated classes.
+    At Spark's default of 100 entries it thrashes and the second scan
+    recompiles most of them."""
+    from catalog_pii_scanner_spark.scan import scan_catalog
+    from catalog_pii_scanner_spark.session import codegen_counters
+    from catalog_pii_scanner_spark.sinks.writeback import FakeCatalogClient
+    from catalog_pii_scanner_spark.sources.melt import TESTDATA_SCHEMAS
+    tables = {t: TESTDATA_SCHEMAS[t]
+              for t in ("customer", "supplier", "orders", "lineitem")}
+
+    def scan(name):
+        store = str(tmp_path_factory.mktemp(name) / "findings")
+        return scan_catalog(spark, sf_dir, tables, store, incremental=True,
+                            client=FakeCatalogClient(), full_catalog=True)
+
+    first = scan("codegen1")
+    before = codegen_counters(spark)[0]
+    second = scan("codegen2")
+    compiled = codegen_counters(spark)[0] - before
+    assert first.findings and len(second.findings) == len(first.findings)
+    assert compiled <= 10, compiled
+
+
+def test_extra_conf_overrides_codegen_cache_default():
+    from catalog_pii_scanner_spark.session import session_conf
+    key = "spark.sql.codegen.cache.maxEntries"
+    assert session_conf(extra_conf={key: "7"})[key] == "7"

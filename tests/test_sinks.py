@@ -247,6 +247,51 @@ def test_merge_findings_rewrites_only_touched_buckets(
     assert len(untouched) >= len(mtimes) - 1
 
 
+def test_merge_findings_uri_store_keeps_stored_rows(spark,
+                                                   tmp_path_factory):
+    """A ``file://`` store is merged into, not overwritten: two scoped
+    merges of different keys in the same bucket keep both rows. An
+    ``os``-level probe sees no URI store, so every merge would take the
+    first-write branch and replace the bucket with its incoming rows."""
+    from catalog_pii_scanner_spark.sinks.findings_store import (
+        MERGE_BUCKETS, read_merged_findings)
+    refs = [f"parquet://testdata/t/c{i}" for i in range(MERGE_BUCKETS + 1)]
+    by_bucket: dict[int, list[str]] = {}
+    for r in spark.createDataFrame([(r,) for r in refs], "column_ref string") \
+            .select("column_ref", F.pmod(F.xxhash64("column_ref"),
+                                         F.lit(MERGE_BUCKETS)).alias("b")) \
+            .collect():
+        by_bucket.setdefault(r.b, []).append(r.column_ref)
+    # pigeonhole: two of the MERGE_BUCKETS + 1 refs share a bucket
+    a, b = next(v for v in by_bucket.values() if len(v) > 1)[:2]
+    store = (tmp_path_factory.mktemp("merge_uri") / "findings").as_uri()
+    for ref in (a, b):
+        merge_findings(spark, _mk_findings(
+            spark, [(ref, "EMAIL", 5, 5, 0.5, 0.5)]), store)
+    assert sorted(r.column_ref for r in
+                  read_merged_findings(spark, store).collect()) == \
+        sorted([a, b])
+
+
+def test_merge_findings_leaves_session_conf(spark, tmp_path_factory):
+    """Dynamic partition overwrite is the merge's own write option: the
+    session's partitionOverwriteMode, which every later overwrite in the
+    session reads, is the same before and after a merge."""
+    from catalog_pii_scanner_spark.sinks.findings_store import (
+        read_merged_findings)
+    key = "spark.sql.sources.partitionOverwriteMode"
+    store = str(tmp_path_factory.mktemp("merge_conf") / "findings")
+    spark.conf.set(key, "STATIC")
+    try:
+        for rows in (PER_TYPE_ROWS[:1], PER_TYPE_ROWS[2:]):
+            merge_findings(spark, _mk_findings(spark, rows), store)
+            assert spark.conf.get(key) == "STATIC"
+    finally:
+        spark.conf.unset(key)
+    # the option still made the second merge a bucket-scoped rewrite
+    assert read_merged_findings(spark, store).count() == 2
+
+
 def test_jdbc_roundtrip_and_merge(spark, findings, tmp_path_factory):
     """Real JDBC against embedded Derby (the driver Spark ships): the
     first merge creates the table and reads back intact; further merges
