@@ -964,10 +964,11 @@ def _query_catalog() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # running-sum run numbering + per-run aggregate + lead validity
         # intervals — ONE user-keyed exchange feeds all three windows.
         "events_user_state_history": analytics.events_user_state_history,
-        # the K1/J3 bucketed MERGE (sinks/findings_store.py
-        # merge_findings; reference db.py:157-241) as its deterministic
-        # result relation: prior store UNION incoming rescan -> one row
-        # per column_ref with merge_action provenance.
+        # the K1/J3 MERGE (sinks/findings_store.py merge_findings, which
+        # commits each result as a new versioned snapshot; reference
+        # db.py:157-241) as its deterministic result relation: prior
+        # store UNION incoming rescan -> one row per column_ref with
+        # merge_action provenance.
         "findings_merge_upsert": lambda s, sf:
             findings_merge_upsert(basis=_tables_basis(s, sf)),
         # the K2-K4 idempotent diff-before-write (sinks/writeback.py;

@@ -275,7 +275,7 @@ GROUP BY s.column_ref, s.pii_type, a.n_values, a.scan_action
 # The two driver-side sinks expressed as deterministic RELATIONS so the
 # oracle gate can verify their semantics (round-11 verdict item 3):
 #
-# - findings_merge_upsert: the K1/J3 bucketed MERGE
+# - findings_merge_upsert: the K1/J3 MERGE
 #   (sinks/findings_store.py merge_findings; reference db.py:157-241
 #   get-or-create/update) as its result relation — prior store UNION
 #   incoming rescan -> exactly one row per column_ref, incoming wins.

@@ -10,12 +10,31 @@ latest row per key (K1's get-or-create/update), so the store holds
 exactly one row per key and reads need no dedup. The JDBC rendering
 merges the same way.
 
+Layout: a store holds two parts, ``findings`` and ``fingerprints`` (the
+``--incremental`` sidecar), each a sequence of immutable snapshots:
+``<part>/v<N>-<uuid>/`` holds version N's rows, ``<part>/_commits/<N>``
+that directory's name. A write reads the latest version N (one listing
+of ``_commits/``), writes a fresh ``v<N+1>-<uuid>`` (never a directory
+it reads) and commits it by creating ``_commits/<N+1>`` with
+``FileSystem.create(overwrite=false)``: a crashed writer leaves an
+orphan no reader sees; one whose base was committed past loses the
+create and raises. A commit of version N deletes the snapshots older
+than the last ``RETAINED_VERSIONS`` and the other writers' ``v<N>-*``,
+so an orphan is gone within two later commits. Commit files stay, or a
+stale writer could commit a pruned number again. Single writer: the
+create is atomic on HDFS, check-then-create (best-effort) on the local
+FS and S3A; plain S3 has no conditional create. An older layout's store
+is refused, not migrated.
+
 Export (K5): JSON lines and CSV with the reference's export shape —
 ``types`` list flattened to a comma-joined string for CSV
 (cli.py:458-467).
 """
 
 from __future__ import annotations
+
+import uuid
+from contextlib import closing
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -26,6 +45,11 @@ FINDINGS_STORE_SCHEMA = (
     "column_ref string, types array<string>, confidence double, "
     "hit_rate double, model_version string, scanned_at timestamp, "
     "source string")
+
+#: Each store part's on-disk schema: reads run no inference job.
+PART_SCHEMAS = {"findings": FINDINGS_STORE_SCHEMA,
+                "fingerprints": "column_ref string, n_values bigint, "
+                                "fp_hash bigint, scanned_at timestamp"}
 
 
 def to_findings_records(per_type: DataFrame,
@@ -78,13 +102,11 @@ def recently_scanned_refs(spark: SparkSession, store_path: str,
     in-plan filter can match at 100 TB.
 
     ``now`` pins the clock for deterministic tests (None = wall clock).
-    A missing store means nothing to skip; a store that exists is read
-    with its declared schema, so one with no findings yet skips nothing
-    and a corrupt one raises instead of silently rescanning everything.
-    """
-    if not _path_exists(spark, store_path):
+    A store with no committed findings skips nothing; a corrupt snapshot
+    raises instead of silently rescanning everything."""
+    _, _, latest = _read_latest(spark, store_path, "findings")
+    if latest is None:
         return frozenset()
-    latest = spark.read.schema(MERGE_STORE_SCHEMA).parquet(store_path)
     now_col = (F.lit(now).cast("timestamp") if now is not None
                else F.current_timestamp())
     cutoff = now_col - F.expr(
@@ -94,92 +116,99 @@ def recently_scanned_refs(spark: SparkSession, store_path: str,
     return frozenset(r.column_ref for r in rows)
 
 
-#: Natural-key hash buckets for the MERGE store layout: updates rewrite
-#: only the buckets containing changed keys.
-MERGE_BUCKETS = 16
+# --- versioned snapshots (layout and commit rule: module docstring) ---------
 
-#: The keyed store's on-disk schema (the bucket is its partition column).
-MERGE_STORE_SCHEMA = FINDINGS_STORE_SCHEMA + ", key_bucket int"
+#: Versions kept per part: the newest and the one a reader may still read.
+RETAINED_VERSIONS = 2
 
 
-def _path_exists(spark: SparkSession, path: str) -> bool:
-    """Whether ``path`` exists, asked of its Hadoop FileSystem — not
-    probed with a read, which logs a FileNotFoundException stack trace
-    on every first run."""
-    jvm = spark.sparkContext._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(
-        spark.sparkContext._jsc.hadoopConfiguration()).exists(p)
+def _fs(spark: SparkSession, path: str):
+    """(FileSystem, Path) of any Hadoop path (plain, ``file://``, ...)."""
+    p = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), p
 
 
-def _has_buckets(spark: SparkSession, store_path: str) -> bool:
-    """Whether the store already holds ``key_bucket=*`` partitions —
-    the merge's "not a first write" test, asked of the path's Hadoop
-    FileSystem so URI paths are seen too."""
-    if not _path_exists(spark, store_path):
-        return False
-    jvm = spark.sparkContext._jvm
-    pattern = jvm.org.apache.hadoop.fs.Path(store_path, "key_bucket=*")
-    return bool(pattern.getFileSystem(
-        spark.sparkContext._jsc.hadoopConfiguration()).globStatus(pattern))
+def _latest_version(fs, root) -> int:
+    """The part's newest committed version (0: none). A store holding
+    neither part (an older layout's) is refused, not read as empty."""
+    commits = root.suffix("/_commits")
+    if fs.exists(commits):
+        return max((int(st.getPath().getName())
+                    for st in fs.listStatus(commits)
+                    if st.getPath().getName().isdigit()), default=0)
+    store = root.getParent()
+    names = {st.getPath().getName()
+             for st in fs.globStatus(store.suffix("/*")) or ()}
+    if names and names.isdisjoint(PART_SCHEMAS):
+        raise ValueError(f"{store} is not a versioned findings store (an "
+                         "older layout is not read): start a new store")
+    return 0
 
 
-def _latest_per_key(all_rows: DataFrame, read_target: bool) -> DataFrame:
+def _read_latest(spark: SparkSession, store_path: str, part: str
+                 ) -> tuple[str, int, DataFrame | None]:
+    """(part path, N, version N's rows) for the part's latest version N;
+    the rows are None while nothing is committed."""
+    path = f"{store_path}/{part}"
+    fs, root = _fs(spark, path)
+    n = _latest_version(fs, root)
+    if not n:
+        return path, 0, None
+    with closing(fs.open(root.suffix(f"/_commits/{n}"))) as f:
+        name = f.readLine()
+    return path, n, spark.read.schema(PART_SCHEMAS[part]).parquet(
+        f"{path}/{name}")
+
+
+def _commit(spark: SparkSession, part: str, base: int,
+            rows: DataFrame) -> None:
+    """Write ``rows`` as a fresh snapshot, commit it as version
+    ``base + 1`` and prune; raises if another writer committed it first."""
+    fs, root = _fs(spark, part)
+    n, name = base + 1, f"v{base + 1}-{uuid.uuid4().hex}"
+    rows.write.parquet(f"{part}/{name}")
+    # create-if-absent: raises FileAlreadyExists when version n is taken
+    with closing(fs.create(root.suffix(f"/_commits/{n}"), False)) as f:
+        f.writeBytes(name)
+    for st in fs.globStatus(root.suffix("/v*")):
+        d = st.getPath().getName()
+        k = int(d[1:d.index("-")])
+        if k <= n - RETAINED_VERSIONS or (k == n and d != name):
+            fs.delete(st.getPath(), True)
+
+
+def _latest_per_key(all_rows: DataFrame) -> DataFrame:
     """The MERGE step: the latest row per (column_ref, model_version) of
     stored (``_new`` = 0) UNION incoming (``_new`` = 1) rows, incoming
-    winning scanned_at ties. ``read_target`` says ``all_rows`` reads the
-    location the caller then overwrites: only then is the result
-    materialized (eager localCheckpoint) before the write."""
+    winning scanned_at ties."""
     w = Window.partitionBy("column_ref", "model_version").orderBy(
         F.col("scanned_at").desc(), F.col("_new").desc())
-    latest = (all_rows.withColumn("_rn", F.row_number().over(w))
-              .where(F.col("_rn") == 1).drop("_rn", "_new"))
-    return latest.localCheckpoint(eager=True) if read_target else latest
+    return (all_rows.withColumn("_rn", F.row_number().over(w))
+            .where(F.col("_rn") == 1).drop("_rn", "_new"))
 
 
 def merge_findings(spark: SparkSession, findings: DataFrame,
-                   store_path: str,
-                   num_buckets: int = MERGE_BUCKETS) -> None:
+                   store_path: str) -> None:
     """K1 full: MERGE-semantics upsert WITHOUT Delta (reference
-    db.py:157-241 get-or-create/update): the store partitions by a
-    stable hash bucket of the natural key (column_ref, model_version
-    dedups inside); a merge rewrites ONLY the buckets containing
-    incoming keys via dynamic partition overwrite, each rebuilt as
-    latest-per-key from existing-in-bucket UNION incoming. Untouched
-    buckets' files are not rewritten (asserted by test). Incoming rows
-    win scanned_at ties. At 100 TB-scale stores this is the standard
-    pre-Delta upsert layout: the rewrite cost is bounded by the touched
-    buckets, and reads need no dedup window (the store holds exactly one
-    row per key).
-
-    Works for any Hadoop path (plain, ``file://``, ``hdfs://``,
-    ``s3a://``): the store's buckets are found through its FileSystem.
-    Dynamic overwrite is a per-write option, so the caller's session
-    conf is left as it was."""
-    bucket = F.pmod(F.xxhash64("column_ref"), F.lit(num_buckets)) \
-        .cast("int")
-    incoming = findings.withColumn("key_bucket", bucket) \
-        .withColumn("_new", F.lit(1))
-    if _has_buckets(spark, store_path):
-        touched = [r.key_bucket for r in
-                   incoming.select("key_bucket").distinct().collect()]
-        existing = (
-            spark.read.parquet(store_path)
-            .where(F.col("key_bucket").isin(touched))
-            .withColumn("_new", F.lit(0))
-        )
-        all_rows, read_target = existing.unionByName(incoming), True
-    else:
-        all_rows, read_target = incoming, False
-    _latest_per_key(all_rows, read_target).write.mode("overwrite") \
-        .option("partitionOverwriteMode", "dynamic") \
-        .partitionBy("key_bucket").parquet(store_path)
+    db.py:157-241 get-or-create/update): the latest row per natural key
+    (column_ref, model_version) of the latest snapshot UNION the
+    incoming rows is the store's next findings snapshot. One row per
+    column with PII is metadata-sized, so a merge rewrites it whole."""
+    part, base, stored = _read_latest(spark, store_path, "findings")
+    rows = findings.withColumn("_new", F.lit(1))
+    if stored is not None:
+        rows = stored.withColumn("_new", F.lit(0)).unionByName(rows)
+    _commit(spark, part, base, _latest_per_key(rows))
 
 
 def read_merged_findings(spark: SparkSession,
                          store_path: str) -> DataFrame:
-    """The MERGE store holds exactly one row per key — no dedup window."""
-    return spark.read.parquet(store_path).drop("key_bucket")
+    """The latest findings snapshot: exactly one row per key, no dedup
+    window. Raises when the store has no committed findings."""
+    rows = _read_latest(spark, store_path, "findings")[2]
+    if rows is None:
+        raise FileNotFoundError(f"no findings committed in {store_path}")
+    return rows
 
 
 # --- JDBC sink (reference db.py targets SQLite/Postgres; Derby is the
@@ -212,13 +241,14 @@ def merge_findings_jdbc(spark: SparkSession, findings: DataFrame,
     incoming = findings.withColumn("types", F.concat_ws(",", "types")) \
         .withColumn("_new", F.lit(1))
     try:
-        existing = _jdbc(spark, url, table, driver).load() \
-            .withColumn("_new", F.lit(0))
-        all_rows, read_target = existing.unionByName(incoming), True
+        existing = _jdbc(spark, url, table, driver).load()
     except Exception:  # table does not exist yet -> plain create
-        all_rows, read_target = incoming, False
-    _jdbc(_latest_per_key(all_rows, read_target), url, table, driver) \
-        .mode("overwrite").save()
+        merged = _latest_per_key(incoming)
+    else:
+        merged = _latest_per_key(existing.withColumn("_new", F.lit(0))
+                                 .unionByName(incoming)) \
+            .localCheckpoint(eager=True)
+    _jdbc(merged, url, table, driver).mode("overwrite").save()
 
 
 def export_json(findings: DataFrame, path: str) -> None:
@@ -233,73 +263,41 @@ def export_csv(findings: DataFrame, path: str) -> None:
      .write.mode("overwrite").option("header", True).csv(path))
 
 
-# --- column-fingerprint sidecar (the --incremental contract) ------------------
-#
-# The content half of the reference's promised --since semantics
-# (operators/incremental.py has the full design): one row per column
-# with the distinct-value-set fingerprint from the last completed
-# scan. Metadata-scale (catalog-width), and MERGE-upsert semantics
-# (round-11 ADVICE): a SCOPED run (--tables subset, a column-glob
-# target) must not drop the stored fingerprints of out-of-scope
-# columns — a whole-directory overwrite made alternating scoped
-# --incremental runs thrash each other into full rescans. Stored rows
-# whose column_ref the incoming batch does not carry are kept; a
-# partial write must still never survive, so the merged relation is
-# materialized (eager localCheckpoint breaks the read-from-the-
-# overwrite-target dependency) before the atomic overwrite.
-
-FP_SUBDIR = "_fingerprints"
-
-
+# --- column-fingerprint sidecar: the content half of the reference's
+# promised --since semantics (full design in operators/incremental.py),
+# one row per column with its last completed scan's fingerprint -------------
 def write_column_fingerprints(fps: DataFrame, store_path: str,
                               evict_missing: bool = False) -> None:
     """MERGE-upsert (column_ref, n_values, fp_hash) + scanned_at into
     the store's fingerprint sidecar: incoming rows replace stored rows
     with the same column_ref; stored rows outside the incoming scope
-    survive. Callers write AFTER the scan's findings land, so a failed
-    scan cannot mark columns fresh.
+    survive, so SCOPED runs (--tables subset, a column-glob target) do
+    not thrash each other into full rescans (round-11 ADVICE). Callers
+    write AFTER the scan's findings land, so a failed scan cannot mark
+    columns fresh.
 
-    Retention (r12 ADVICE): the keep-out-of-scope rule means refs for
-    columns DROPPED from the catalog (or renamed) survive forever by
-    default — and a recreated column with the same ref and matching
-    content would be pruned by its stale row. ``evict_missing=True``
-    is the compaction path: the caller asserts ``fps`` covers the FULL
-    current scope (an unfiltered run — no table/column globs, no
-    --since pruning), so stored refs absent from it are genuinely gone
-    from the catalog and are dropped. Scoped runs MUST keep the
-    default, or they thrash each other's fingerprints back into full
-    rescans (the round-11 ADVICE bug the merge fixed)."""
-    import os
+    Retention (r12 ADVICE): by default, refs of columns DROPPED from
+    the catalog (or renamed) survive forever, and a recreated column
+    with the same ref and content would be pruned by its stale row.
+    ``evict_missing=True`` is the compaction path: the caller asserts
+    ``fps`` covers the FULL current scope (no table/column globs, no
+    --since pruning), so stored refs absent from it are dropped."""
     spark = fps.sparkSession
-    incoming = (fps.select("column_ref", "n_values", "fp_hash")
-                .withColumn("scanned_at", F.current_timestamp()))
-    stored = read_column_fingerprints(spark, store_path)
+    part, base, stored = _read_latest(spark, store_path, "fingerprints")
+    rows = (fps.select("column_ref", "n_values", "fp_hash")
+            .withColumn("scanned_at", F.current_timestamp()))
     if stored is not None and not evict_missing:
-        # one row per column (metadata scale): materialize before the
-        # overwrite so the write never reads the directory it replaces
-        merged = incoming.unionByName(
-            stored.join(incoming.select("column_ref"),
-                        "column_ref", "left_anti")) \
-            .localCheckpoint(eager=True)
-    else:
-        # reads nothing from the target: written straight through
-        merged = incoming
-    merged.write.mode("overwrite").parquet(os.path.join(store_path,
-                                                        FP_SUBDIR))
+        rows = rows.unionByName(stored.join(rows.select("column_ref"),
+                                            "column_ref", "left_anti"))
+    _commit(spark, part, base, rows)
 
 
 def read_column_fingerprints(spark: SparkSession,
                              store_path: str) -> DataFrame | None:
-    """The stored sidecar, or None when it does not exist yet (first
-    run -> full scan). A sidecar that exists but cannot be read raises
-    (the recently_scanned_refs rule). Read through a glob of its part
-    files: the reader drops a root path whose name starts with '_' as
-    hidden and logs "All paths were ignored" for it."""
-    import os
-    path = os.path.join(store_path, FP_SUBDIR)
-    if not _path_exists(spark, path):
-        return None
-    return spark.read.parquet(os.path.join(path, "*.parquet"))
+    """The latest sidecar snapshot, or None while none is committed
+    (first run -> full scan). A committed snapshot that cannot be read
+    raises (the recently_scanned_refs rule)."""
+    return _read_latest(spark, store_path, "fingerprints")[2]
 
 
 def changed_column_refs(spark: SparkSession, store_path: str,

@@ -62,29 +62,30 @@ TESTDATA_SCHEMAS: dict[str, list[tuple[str, str]]] = {
 
 
 def _read_footer(spark: SparkSession, path: str):
-    """(file, ParquetMetadata) of the first data file of the parquet
-    table at ``path``, read on the driver without row-group metadata —
-    no Spark job; ``None`` when ``path`` holds no data file directly (a
-    partitioned layout). Directory-shaped tables are probed via their
-    first data file; names starting with '_' or '.' are not data, as
-    for the reader."""
+    """(file, ParquetMetadata, bytes) of the parquet table at ``path``:
+    its first data file's footer, read on the driver without row-group
+    metadata — no Spark job — and the summed length of its data files,
+    from the same Hadoop listing (so any Hadoop path is sized); ``None``
+    when ``path`` holds no data file directly (a partitioned layout).
+    Names starting with '_' or '.' are not data, as for the reader."""
     jvm = spark.sparkContext._jvm
     hconf = spark.sparkContext._jsc.hadoopConfiguration()
     root = jvm.org.apache.hadoop.fs.Path(path)
     files = sorted(
-        (st.getPath() for st in root.getFileSystem(hconf).listStatus(root)
+        (st for st in root.getFileSystem(hconf).listStatus(root)
          if st.isFile()
          and not st.getPath().getName().startswith(("_", "."))),
-        key=lambda f: f.getName())
+        key=lambda st: st.getPath().getName())
     if not files:
         return None
+    first = files[0].getPath()
     meta = jvm.org.apache.spark.sql.execution.datasources.parquet \
         .ParquetFooterReader.readFooter(
             jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-                files[0], hconf),
+                first, hconf),
             jvm.org.apache.parquet.format.converter.ParquetMetadataConverter
             .SKIP_ROW_GROUPS)
-    return files[0], meta
+    return first, meta, sum(st.getLen() for st in files)
 
 
 #: A top-level TIMESTAMP(NANOS) field in parquet's schema rendering
@@ -112,10 +113,10 @@ def nanos_timestamp_columns(spark: SparkSession, path: str) -> list[str]:
 
 
 def footer_schema(spark: SparkSession, path: str
-                  ) -> tuple[StructType, list[str]] | None:
+                  ) -> tuple[StructType, list[str], int] | None:
     """The schema Spark's reader would infer for the parquet table at
-    ``path`` and its TIMESTAMP(NANOS) columns, from ONE driver-side
-    footer read (``None`` for a partitioned layout, see
+    ``path``, its TIMESTAMP(NANOS) columns and its data bytes, from ONE
+    driver-side footer read (``None`` for a partitioned layout, see
     :func:`_read_footer`).
 
     Inference (``spark.read.parquet`` without a schema) launches a Spark
@@ -129,7 +130,7 @@ def footer_schema(spark: SparkSession, path: str
     footer = _read_footer(spark, path)
     if footer is None:
         return None
-    file, meta = footer
+    file, meta, nbytes = footer
     pq = spark.sparkContext._jvm.org.apache.spark.sql.execution \
         .datasources.parquet
     converter = pq.ParquetToSparkSchemaConverter(
@@ -138,7 +139,7 @@ def footer_schema(spark: SparkSession, path: str
         spark.sparkContext._jvm.org.apache.parquet.hadoop.Footer(file, meta),
         converter)
     return StructType.fromJson(json.loads(schema.json())), \
-        _nanos_columns(meta)
+        _nanos_columns(meta), nbytes
 
 
 def read_table(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
@@ -147,15 +148,21 @@ def read_table(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     normalizing TIMESTAMP(NANOS) columns (rejected by Spark's reader;
     surfaced as long via spark.sql.legacy.parquet.nanosAsLong) back to
     microsecond timestamps — the same truncation DuckDB applies."""
-    path = f"{sf_dir}/{table}.parquet"
+    return _read_sized(spark, f"{sf_dir}/{table}.parquet")[0]
+
+
+def _read_sized(spark: SparkSession,
+                path: str) -> tuple[DataFrame, int | None]:
+    """:func:`read_table` of ``path`` and the table's data bytes (None
+    for a partitioned layout), both from its one footer read."""
     # Runtime-settable; must hold for ANY caller-provided session (the
     # correctness harness builds a plain one), not just session.py's.
     # Set before the footer is converted: the converter reads it.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     footer = footer_schema(spark, path)
     if footer is None:
-        return spark.read.parquet(path)
-    schema, nanos = footer
+        return spark.read.parquet(path), None
+    schema, nanos, nbytes = footer
     df = spark.read.schema(schema).parquet(path)
     for c in nanos:
         # pure-LONG floor division, NOT floor(x / 1000): `/` promotes the
@@ -169,7 +176,7 @@ def read_table(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
         df = df.withColumn(
             c, F.timestamp_micros(
                 F.expr(f"(`{c}` - pmod(`{c}`, 1000)) div 1000")))
-    return df
+    return df, nbytes
 
 
 def stringify_sql(col: str, dtype: str, dialect: str) -> str:
@@ -204,23 +211,6 @@ DTYPE_CLASS = {"int": "num", "bigint": "num", "double": "num",
 MELT_SPLIT_BYTES = 512 * 1024
 
 
-def _scan_bytes(path: str) -> int | None:
-    """Total parquet bytes under ``path`` via the local filesystem, or
-    ``None`` when the path is not local (s3://, hdfs:// — anything the
-    driver's os.path cannot stat). Callers must treat ``None`` as
-    "size unknown" and fall back to the session-parallelism fan-out
-    target rather than failing the read Spark itself would handle."""
-    import glob
-    import os
-    try:
-        if os.path.isdir(path):
-            return sum(os.path.getsize(p)
-                       for p in glob.glob(os.path.join(path, "*.parquet")))
-        return os.path.getsize(path)
-    except OSError:
-        return None
-
-
 def melt_table(spark: SparkSession, sf_dir: str, table: str,
                columns: list[tuple[str, str]] | None = None) -> DataFrame:
     """Read one parquet table and melt to (column_ref, value, vclass).
@@ -237,13 +227,12 @@ def melt_table(spark: SparkSession, sf_dir: str, table: str,
     import math
     from ..plans.cache import fan_out, session_parallelism
     cols = columns or TESTDATA_SCHEMAS[table]
-    df = read_table(spark, sf_dir, table)
-    nbytes = _scan_bytes(f"{sf_dir}/{table}.parquet")
+    df, nbytes = _read_sized(spark, f"{sf_dir}/{table}.parquet")
     target = session_parallelism(spark)
     if nbytes is not None:
-        # size-derived split count on a stat-able (local) path; on remote
-        # storage the size is unknown and the session-parallelism target
-        # applies (a splittable production layout makes fan_out a no-op).
+        # size-derived split count from the footer read's listing, on any
+        # Hadoop path; a partitioned layout is unsized and the session-
+        # parallelism target applies (its splits make fan_out a no-op).
         target = min(target, max(1, math.ceil(nbytes / MELT_SPLIT_BYTES)))
     if target > 1:
         # a 1-split target needs no fan-out: skip fan_out's df.rdd, which

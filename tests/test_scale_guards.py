@@ -197,17 +197,28 @@ def test_results_invariant_under_parallelism(spark):
         assert a[k] == b[k], f"{k}: differs across shuffle widths"
 
 
-def test_scan_bytes_remote_path_returns_none():
-    """A path the driver's os.path cannot stat (s3://, hdfs://) must not
-    raise — melt sizing falls back to the session-parallelism target."""
-    from catalog_pii_scanner_spark.sources.melt import _scan_bytes
-    assert _scan_bytes("s3://bucket/warehouse/lineitem.parquet") is None
+def test_melt_fan_out_sized_on_uri_paths(spark, sf_dir):
+    """The melt's size-derived fan-out comes from the Hadoop listing the
+    footer read makes, so a ``file://`` table melts into as many
+    partitions as the same table by its plain path (an ``os``-level
+    size probe could not stat the URI and fell back to the session
+    parallelism)."""
+    from catalog_pii_scanner_spark.sources.melt import (TESTDATA_SCHEMAS,
+                                                        melt_table)
+    tables = [t for t in TESTDATA_SCHEMAS
+              if os.path.exists(f"{sf_dir}/{t}.parquet")]
+    assert "orders" in tables
+    uri = "file://" + os.path.abspath(sf_dir)
+    for t in tables:
+        assert melt_table(spark, uri, t).rdd.getNumPartitions() == \
+            melt_table(spark, sf_dir, t).rdd.getNumPartitions(), t
 
 
 def test_melt_survives_unstatable_storage(spark, sf_dir, monkeypatch):
     """melt_table must work when the storage layer is opaque to driver-side
-    os.path (remote object stores): the fan-out target degrades to the
-    session parallelism instead of raising before the read."""
+    os.path (remote object stores): sizing and reading go through the
+    path's Hadoop FileSystem, so a failing os-level stat changes
+    nothing."""
     import os as _os
 
     from catalog_pii_scanner_spark.sources import melt as M
@@ -215,9 +226,11 @@ def test_melt_survives_unstatable_storage(spark, sf_dir, monkeypatch):
     def _boom(path):
         raise OSError(f"stat not supported: {path}")
 
+    n_parts = M.melt_table(spark, sf_dir, "region").rdd.getNumPartitions()
     monkeypatch.setattr(_os.path, "getsize", _boom)
-    assert M._scan_bytes(f"{sf_dir}/region.parquet") is None
+    monkeypatch.setattr(_os.path, "isdir", _boom)
     df = M.melt_table(spark, sf_dir, "region")
+    assert df.rdd.getNumPartitions() == n_parts
     # region: r_regionkey + r_name melted over every row
     n_rows = spark.read.parquet(f"{sf_dir}/region.parquet").count()
     assert df.count() == 2 * n_rows

@@ -216,54 +216,62 @@ def test_merge_findings_updates_never_duplicates(spark, tmp_path_factory):
     assert got.confidence == 0.99
 
 
-def test_merge_findings_rewrites_only_touched_buckets(
+def _committed(part: str) -> str:
+    """The snapshot directory a store part's newest commit names."""
+    import os
+    n = max(int(c) for c in os.listdir(os.path.join(part, "_commits"))
+            if c.isdigit())
+    with open(os.path.join(part, "_commits", str(n))) as f:
+        return os.path.join(part, f.read())
+
+
+def _files(d: str) -> dict[str, tuple[int, int]]:
+    import os
+    return {f: (os.stat(os.path.join(d, f)).st_mtime_ns,
+                os.stat(os.path.join(d, f)).st_size) for f in os.listdir(d)}
+
+
+def test_merge_findings_never_rewrites_committed_snapshots(
         spark, tmp_path_factory):
-    """The MERGE layout's point: an upsert must not rewrite buckets whose
-    keys did not change (bounded rewrite cost at store scale)."""
+    """Version isolation: a merge writes a new snapshot and never
+    rewrites a committed snapshot's files, which stay readable until
+    pruned; after a third merge only the newest two snapshots remain."""
     import os
     from catalog_pii_scanner_spark.sinks.findings_store import (
-        merge_findings)
+        merge_findings, read_merged_findings)
     store = str(tmp_path_factory.mktemp("merge2") / "findings")
+    part = os.path.join(store, "findings")
     base = [(f"parquet://testdata/t/c{i}", "EMAIL", 5, 5, 0.5, 0.5)
             for i in range(40)]
     merge_findings(spark, _mk_findings(spark, base), store)
-    mtimes = {
-        d: max(os.path.getmtime(os.path.join(store, d, f))
-               for f in os.listdir(os.path.join(store, d))
-               if f.endswith(".parquet"))
-        for d in os.listdir(store) if d.startswith("key_bucket=")
-    }
-    assert len(mtimes) > 2  # keys spread over several buckets
+    v1 = _committed(part)
+    files = _files(v1)
+    assert any(f.endswith(".parquet") for f in files)
     merge_findings(spark, _mk_findings(
         spark, [("parquet://testdata/t/c7", "EMAIL", 9, 9, 0.99, 1.0)]),
         store)
-    untouched = [
-        d for d in mtimes
-        if max(os.path.getmtime(os.path.join(store, d, f))
-               for f in os.listdir(os.path.join(store, d))
-               if f.endswith(".parquet")) == mtimes[d]
-    ]
-    # exactly one bucket holds c7; every other bucket's files are intact
-    assert len(untouched) >= len(mtimes) - 1
+    v2 = _committed(part)
+    assert v2 != v1
+    assert _files(v1) == files  # every committed file is intact
+    assert spark.read.parquet(v1).count() == 40
+    assert read_merged_findings(spark, store).where(
+        "confidence = 0.99").count() == 1
+    merge_findings(spark, _mk_findings(
+        spark, [("parquet://testdata/t/c8", "EMAIL", 9, 9, 0.99, 1.0)]),
+        store)
+    assert sorted(d for d in os.listdir(part) if d != "_commits") == \
+        sorted([os.path.basename(v2), os.path.basename(_committed(part))])
 
 
 def test_merge_findings_uri_store_keeps_stored_rows(spark,
                                                    tmp_path_factory):
     """A ``file://`` store is merged into, not overwritten: two scoped
-    merges of different keys in the same bucket keep both rows. An
-    ``os``-level probe sees no URI store, so every merge would take the
-    first-write branch and replace the bucket with its incoming rows."""
+    merges of different keys keep both rows. An ``os``-level probe sees
+    no URI store, so every merge would look like a first write and
+    replace the store with its incoming rows."""
     from catalog_pii_scanner_spark.sinks.findings_store import (
-        MERGE_BUCKETS, read_merged_findings)
-    refs = [f"parquet://testdata/t/c{i}" for i in range(MERGE_BUCKETS + 1)]
-    by_bucket: dict[int, list[str]] = {}
-    for r in spark.createDataFrame([(r,) for r in refs], "column_ref string") \
-            .select("column_ref", F.pmod(F.xxhash64("column_ref"),
-                                         F.lit(MERGE_BUCKETS)).alias("b")) \
-            .collect():
-        by_bucket.setdefault(r.b, []).append(r.column_ref)
-    # pigeonhole: two of the MERGE_BUCKETS + 1 refs share a bucket
-    a, b = next(v for v in by_bucket.values() if len(v) > 1)[:2]
+        read_merged_findings)
+    a, b = "parquet://testdata/t/c0", "parquet://testdata/t/c1"
     store = (tmp_path_factory.mktemp("merge_uri") / "findings").as_uri()
     for ref in (a, b):
         merge_findings(spark, _mk_findings(
@@ -273,10 +281,110 @@ def test_merge_findings_uri_store_keeps_stored_rows(spark,
         sorted([a, b])
 
 
+def test_store_crash_before_commit_leaves_previous_version(
+        spark, tmp_path_factory, monkeypatch):
+    """Fault injection: a writer that dies after writing its snapshot
+    and before creating the commit file changes nothing readers see,
+    and its orphan directory is pruned within two later commits."""
+    import os
+
+    import catalog_pii_scanner_spark.sinks.findings_store as FS
+    store = str(tmp_path_factory.mktemp("crash") / "findings")
+    part = os.path.join(store, "findings")
+    merge_findings(spark, _mk_findings(spark, PER_TYPE_ROWS[:1]), store)
+    before = sorted(r.column_ref for r in
+                    FS.read_merged_findings(spark, store).collect())
+    real_fs = FS._fs
+
+    class NoCreate:
+        def __init__(self, fs):
+            self._fs = fs
+
+        def create(self, *args):
+            raise OSError("injected crash before the commit file")
+
+        def __getattr__(self, name):
+            return getattr(self._fs, name)
+
+    def no_create(spark, path):
+        fs, p = real_fs(spark, path)
+        return NoCreate(fs), p
+
+    with monkeypatch.context() as m:
+        m.setattr(FS, "_fs", no_create)
+        with pytest.raises(OSError, match="injected"):
+            merge_findings(spark, _mk_findings(spark, PER_TYPE_ROWS[2:]),
+                           store)
+    orphans = {d for d in os.listdir(part) if d != "_commits"} - \
+        {os.path.basename(_committed(part))}
+    assert len(orphans) == 1  # written, never committed
+    assert sorted(r.column_ref for r in FS.read_merged_findings(
+        spark, store).collect()) == before
+    for rows in (PER_TYPE_ROWS[1:2], PER_TYPE_ROWS[2:]):
+        merge_findings(spark, _mk_findings(spark, rows), store)
+    assert orphans.isdisjoint(os.listdir(part))
+    assert FS.read_merged_findings(spark, store).count() == 2
+
+
+def test_store_stale_writer_loses_the_commit(spark, tmp_path_factory,
+                                            monkeypatch):
+    """A writer whose base version was already committed past fails its
+    commit, and the store keeps the winner's state — for both parts."""
+    import catalog_pii_scanner_spark.sinks.findings_store as FS
+    store = str(tmp_path_factory.mktemp("stale") / "findings")
+    merge_findings(spark, _mk_findings(spark, PER_TYPE_ROWS[:1]), store)
+    merge_findings(spark, _mk_findings(spark, PER_TYPE_ROWS[2:]), store)
+    fps = spark.createDataFrame([("spark://t/a", 3, 7)],
+                                "column_ref string, n_values bigint, "
+                                "fp_hash bigint")
+    FS.write_column_fingerprints(fps, store)
+    FS.write_column_fingerprints(fps, store)
+    winner = sorted(r.column_ref for r in
+                    FS.read_merged_findings(spark, store).collect())
+    with monkeypatch.context() as m:
+        m.setattr(FS, "_latest_version", lambda fs, root: 1)  # stale base
+        with pytest.raises(Exception, match="already exists"):
+            merge_findings(spark, _mk_findings(
+                spark, [("spark://t/late", "SSN", 1, 1, 0.7, 0.1)]), store)
+        with pytest.raises(Exception, match="already exists"):
+            FS.write_column_fingerprints(spark.createDataFrame(
+                [("spark://t/late", 1, 1)], "column_ref string, "
+                "n_values bigint, fp_hash bigint"), store)
+    assert sorted(r.column_ref for r in
+                  FS.read_merged_findings(spark, store).collect()) == winner
+    assert [r.column_ref for r in
+            FS.read_column_fingerprints(spark, store).collect()] == \
+        ["spark://t/a"]
+
+
+def test_older_layout_store_is_refused(spark, tmp_path_factory):
+    """A store directory of the older bucketed layout (hash-bucket
+    partitions, a ``_fingerprints`` sidecar) is refused with a clear
+    message by every reader and writer, not read as an empty store."""
+    import catalog_pii_scanner_spark.sinks.findings_store as FS
+    from catalog_pii_scanner_spark.operators.incremental import (
+        column_fingerprints)
+    vals = spark.createDataFrame([("spark://t/a", "v")],
+                                 "column_ref string, value string")
+    for old in ("key_bucket=3", "_fingerprints"):
+        store = tmp_path_factory.mktemp("old_layout") / "findings"
+        (store / old).mkdir(parents=True)
+        (store / old / "part-00000.parquet").write_bytes(b"PAR1")
+        for call in (
+                lambda: FS.read_merged_findings(spark, str(store)),
+                lambda: FS.recently_scanned_refs(spark, str(store), 24.0),
+                lambda: FS.read_column_fingerprints(spark, str(store)),
+                lambda: FS.merge_findings(
+                    spark, _mk_findings(spark, PER_TYPE_ROWS), str(store)),
+                lambda: FS.write_column_fingerprints(
+                    column_fingerprints(vals), str(store))):
+            with pytest.raises(ValueError, match="start a new store"):
+                call()
+
+
 def test_merge_findings_leaves_session_conf(spark, tmp_path_factory):
-    """Dynamic partition overwrite is the merge's own write option: the
-    session's partitionOverwriteMode, which every later overwrite in the
-    session reads, is the same before and after a merge."""
+    """A merge leaves the session's partitionOverwriteMode, which every
+    later overwrite in the session reads, as it found it."""
     from catalog_pii_scanner_spark.sinks.findings_store import (
         read_merged_findings)
     key = "spark.sql.sources.partitionOverwriteMode"
@@ -288,7 +396,7 @@ def test_merge_findings_leaves_session_conf(spark, tmp_path_factory):
             assert spark.conf.get(key) == "STATIC"
     finally:
         spark.conf.unset(key)
-    # the option still made the second merge a bucket-scoped rewrite
+    # the second merge kept the first merge's row
     assert read_merged_findings(spark, store).count() == 2
 
 
@@ -319,7 +427,7 @@ def test_column_fingerprint_sidecar_roundtrip(spark, tmp_path_factory):
     from catalog_pii_scanner_spark.operators.incremental import (
         column_fingerprints)
     from catalog_pii_scanner_spark.sinks.findings_store import (
-        FP_SUBDIR, changed_column_refs, read_column_fingerprints,
+        changed_column_refs, read_column_fingerprints,
         write_column_fingerprints)
     store = str(tmp_path_factory.mktemp("fps") / "findings")
     vals = spark.createDataFrame(
@@ -367,13 +475,17 @@ def test_column_fingerprint_sidecar_roundtrip(spark, tmp_path_factory):
     assert {r.column_ref for r in
             read_column_fingerprints(spark, store).collect()} \
         == {"spark://t/b"}
-    # a sidecar that exists but cannot be read raises: it must never
-    # pass for a first run, which would mask the damage
-    bad = tmp_path_factory.mktemp("fps_bad") / "findings"
-    (bad / FP_SUBDIR).mkdir(parents=True)
-    (bad / FP_SUBDIR / "part-00000.parquet").write_bytes(b"not parquet")
+    # a committed sidecar snapshot that cannot be read raises: it must
+    # never pass for a first run, which would mask the damage
+    import os
+    snap = _committed(os.path.join(store, "fingerprints"))
+    for f in os.listdir(snap):
+        if f.endswith(".parquet"):
+            os.remove(os.path.join(snap, f))
+            with open(os.path.join(snap, f), "wb") as out:
+                out.write(b"not parquet")
     with pytest.raises(Exception, match="parquet"):
-        changed_column_refs(spark, str(bad), fps)
+        changed_column_refs(spark, store, fps)
 
 
 def test_cli_scan_incremental_prunes_unchanged_columns(
@@ -384,10 +496,9 @@ def test_cli_scan_incremental_prunes_unchanged_columns(
     path can only prune columns that produced findings; the
     fingerprint path proves absence-of-change for the finding-less
     ones too) and refreshes the sidecar."""
-    import os
-
     import catalog_pii_scanner_spark.cli as cli
-    from catalog_pii_scanner_spark.sinks.findings_store import FP_SUBDIR
+    from catalog_pii_scanner_spark.sinks.findings_store import (
+        read_column_fingerprints)
     store = str(tmp_path_factory.mktemp("inc3") / "findings")
     monkeypatch.setattr(cli, "_spark", lambda app: spark)
     args = ["scan", "--sf-dir", "/root/testdata/sf0.001",
@@ -399,14 +510,17 @@ def test_cli_scan_incremental_prunes_unchanged_columns(
     assert [f["column_ref"] for f in first] \
         == ["spark://orders/o_orderdate"]
     assert '"first_run": true' in captured.err
-    assert os.path.isdir(os.path.join(store, FP_SUBDIR))
+    before = [r.scanned_at for r in
+              read_column_fingerprints(spark, store).collect()]
+    assert len(before) == 6
     # unchanged data -> all 6 orders columns pruned, sidecar refreshed
-    before = os.stat(os.path.join(store, FP_SUBDIR)).st_mtime
     assert cli.main(args) == 0
     captured = capsys.readouterr()
     assert json.loads(captured.out) == []
     assert '"skipped_columns": 6' in captured.err
-    assert os.stat(os.path.join(store, FP_SUBDIR)).st_mtime >= before
+    after = [r.scanned_at for r in
+             read_column_fingerprints(spark, store).collect()]
+    assert len(after) == 6 and min(after) > max(before)
 
 
 def test_failed_scan_never_marks_columns_fresh(
@@ -416,12 +530,10 @@ def test_failed_scan_never_marks_columns_fresh(
     scan. No fingerprint sidecar may be written, the store must still
     hold one row per column_ref, and the next --incremental run must
     rescan every column."""
-    import os
-
     import catalog_pii_scanner_spark.cli as cli
     import catalog_pii_scanner_spark.scan as scan
     from catalog_pii_scanner_spark.sinks.findings_store import (
-        FP_SUBDIR, read_column_fingerprints, read_merged_findings)
+        read_column_fingerprints, read_merged_findings)
     store = str(tmp_path_factory.mktemp("fault") / "findings")
     monkeypatch.setattr(cli, "_spark", lambda app: spark)
     args = ["scan", "--sf-dir", sf_dir, "--tables", "orders",
@@ -435,7 +547,7 @@ def test_failed_scan_never_marks_columns_fresh(
         with pytest.raises(RuntimeError, match="injected"):
             cli.main(args)
     capsys.readouterr()
-    assert not os.path.exists(os.path.join(store, FP_SUBDIR))
+    assert read_column_fingerprints(spark, store) is None
     stored = read_merged_findings(spark, store)
     assert stored.count() == 1
     assert stored.groupBy("column_ref").count() \
