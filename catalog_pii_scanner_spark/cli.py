@@ -73,7 +73,6 @@ def cmd_scan(args) -> int:
         since=args.since, incremental=args.incremental,
         jdbc_url=args.jdbc_url,
         client=FakeCatalogClient() if args.apply else None,
-        apply_sql=args.apply_sql,
         full_catalog=not (args.tables or args.target))
     for event in result.events:
         print(json.dumps(event), file=sys.stderr)
@@ -96,15 +95,15 @@ def cmd_scan_text(args) -> int:
     if args.ensemble or cfg.ai.mode in ("ensemble", "ensemble+llm"):
         # the reference's scan_text path: contexts -> N5 + E2 signals ->
         # fusion, gated by the P6 decision threshold (calibrated scale).
-        # mode ensemble+llm swaps the N5 provider for the (TTL-cached,
-        # worker-singleton) LLM stub — the declared-but-never-built
-        # reference mode, config-dispatched.
+        # the N5 provider is ai.ner.provider; mode ensemble+llm swaps
+        # it for the (TTL-cached, worker-singleton) LLM stub — the
+        # declared-but-never-built reference mode, config-dispatched.
         from .operators.ensemble import (EnsembleWeights,
                                          IDENTITY_CALIBRATION,
                                          REFERENCE_WEIGHTS)
         ner_provider = ("fake_llm"
                         if cfg.ai.mode == "ensemble+llm" and cfg.ai.llm.enabled
-                        else "regex")
+                        else cfg.ai.ner.provider)
         # SURVEY §7.6: the reference ships two disagreeing weight sets
         # (dataclass 0.6/0.2/0.4 actually used; config 0.4/0.3/0.3 never
         # wired). This engine is config-driven; --reference-compat selects
@@ -344,9 +343,6 @@ def build_parser() -> argparse.ArgumentParser:
                         "run (sidecar lives in --store)")
     s.add_argument("--apply", action="store_true",
                    help="tag write-back via the fake catalog client")
-    s.add_argument("--apply-sql", action="store_true",
-                   help="tag write-back via real ALTER TABLE statements "
-                        "against the session catalog")
     s.set_defaults(fn=cmd_scan)
 
     s = sub.add_parser("scan-text", help="detect PII in one text")

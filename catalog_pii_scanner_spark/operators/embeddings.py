@@ -102,27 +102,6 @@ def _sigmoid(z: np.ndarray) -> np.ndarray:
 EMBEDDERS = {"rand": embed_text, "md5hex": md5hex_embed}
 
 
-def register_sbert_embedder(model_name: str = "all-MiniLM-L6-v2") -> str:
-    """E1 with a REAL sentence-transformer (reference embeddings.py:63-70
-    ``encode`` with ``normalize_embeddings=True``): registers an 'sbert'
-    entry in :data:`EMBEDDERS` so ``EmbedModel(embedder='sbert')`` trains
-    and predicts over true SBERT vectors through the exact same fit/
-    predict code path as the offline embedders (the heads size to
-    whatever dimension the encoder emits). Import-gated: raises
-    ImportError when sentence-transformers is absent — tests use
-    skip-if-missing so the path runs the day the environment allows."""
-    from sentence_transformers import SentenceTransformer
-    model = SentenceTransformer(model_name)
-
-    def _embed(text: str) -> np.ndarray:
-        return np.asarray(
-            model.encode([text], normalize_embeddings=True,
-                         show_progress_bar=False))[0].astype(float)
-
-    EMBEDDERS["sbert"] = _embed
-    return "sbert"
-
-
 @dataclass
 class EmbedModel:
     """OvR logistic heads over an offline embedding space (E2/E3)."""

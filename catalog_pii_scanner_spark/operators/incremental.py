@@ -457,7 +457,8 @@ def writeback_diff_plan(values_df: DataFrame | None = None,
     - action 'insert' (no prior tag), 'update' (prior tag differs),
       'skip' (identical — the applier's skipped counter);
     - pii_types / prior_pii_types / comment pin the sink's exact
-      write payload (comment = 'PII:' + csv, truncated at 255).
+      write payload (comment = 'PII:' + csv, truncated at 255: the
+      text apply_writeback appends to a column's own comment).
 
     Idempotency is an oracle PROPERTY: when prior == current (apply
     then re-scan unchanged data) every row is 'skip' — pinned in

@@ -2786,38 +2786,6 @@ assign AS (
 cell_n AS (SELECT cid, COUNT(*) AS cn FROM assign GROUP BY cid)"""
 
 
-def semdedup_near_pairs_sql(dialect: str, rel: str = "embeddings",
-                            threshold: float = SEMDEDUP_T,
-                            n_cells: int = SEMDEDUP_CELLS,
-                            max_cell: int = SEMDEDUP_MAX_CELL) -> str:
-    """Within-cell semantic near-dup pairs. Output: vec_a, vec_b
-    (vec_a < vec_b)."""
-    return f"""
-WITH {_semdedup_cells_cte(dialect, rel, n_cells).lstrip()},
-assign_ok AS (
-  SELECT a.vec_id, a.cid FROM assign a
-  JOIN cell_n n ON n.cid = a.cid WHERE n.cn <= {max_cell}
-),
-pairs AS (
-  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
-  FROM assign_ok a JOIN assign_ok b
-    ON a.cid = b.cid AND a.vec_id < b.vec_id
-),
-dots AS (
-  SELECT p.vec_a, p.vec_b, SUM(q.val * c.val) AS dot
-  FROM pairs p
-  JOIN vecs q ON q.vec_id = p.vec_a
-  JOIN vecs c ON c.vec_id = p.vec_b AND c.pos = q.pos
-  GROUP BY p.vec_a, p.vec_b
-)
-SELECT d.vec_a, d.vec_b
-FROM dots d
-JOIN norms na ON na.vec_id = d.vec_a
-JOIN norms nb ON nb.vec_id = d.vec_b
-WHERE round(d.dot / (na.norm * nb.norm), 6) >= {threshold}
-"""
-
-
 def semdedup_keep_list_sql(dialect: str, rel: str = "embeddings",
                            threshold: float = SEMDEDUP_T,
                            n_cells: int = SEMDEDUP_CELLS,

@@ -27,8 +27,7 @@ from .sinks.findings_store import (changed_column_refs, merge_findings,
                                    recently_scanned_refs,
                                    to_findings_records,
                                    write_column_fingerprints)
-from .sinks.writeback import (FakeCatalogClient, apply_writeback,
-                              apply_writeback_sql)
+from .sinks.writeback import apply_writeback
 from .sources.melt import column_ref, melt_table
 
 #: table -> [(column, dtype)]: the scan's column set.
@@ -69,8 +68,7 @@ def scan_catalog(spark: SparkSession, sf_dir: str, table_cols: TableCols,
                  since: str = "",
                  incremental: bool = False,
                  jdbc_url: str = "",
-                 client: FakeCatalogClient | None = None,
-                 apply_sql: bool = False,
+                 client=None,
                  full_catalog: bool = False) -> ScanResult:
     """Scan ``table_cols`` of the parquet tables under ``sf_dir``.
 
@@ -80,8 +78,10 @@ def scan_catalog(spark: SparkSession, sf_dir: str, table_cols: TableCols,
     ``since`` a lookback window such as '24h' (``--since``),
     ``incremental`` content-fingerprint pruning (``--incremental``),
     ``jdbc_url`` a JDBC findings table (``--jdbc-url``), ``client`` the
-    catalog the tags are written back to (``--apply``; None skips it),
-    ``apply_sql`` write-back as ALTER TABLE statements (``--apply-sql``).
+    catalog the tags are written back to through
+    ``sinks.writeback.apply_writeback`` (``--apply`` passes a
+    ``FakeCatalogClient``; ``SessionCatalogClient(spark)`` tags the
+    session catalog; None skips write-back).
     ``full_catalog`` says ``table_cols`` is the whole catalog (no
     ``--tables``/``--target``): only then, and without ``since``, may
     the sidecar evict the fingerprints of dropped or renamed columns.
@@ -139,9 +139,6 @@ def scan_catalog(spark: SparkSession, sf_dir: str, table_cols: TableCols,
         merge_findings_jdbc(spark, findings, jdbc_url, "findings")
     if client is not None:
         events.append({"writeback": apply_writeback(findings, client)})
-    if apply_sql:
-        events.append(
-            {"writeback_sql": apply_writeback_sql(spark, findings)})
     if fps_cur is not None:
         # findings landed: NOW the columns count as freshly scanned
         write_column_fingerprints(fps_cur, store, evict_missing=evict)

@@ -60,8 +60,8 @@ def to_findings_records(per_type: DataFrame,
     column-level confidence = max over types.
 
     Materialized (eager ``localCheckpoint``): a scan's records are
-    computed ONCE, and the collect, the store and JDBC merges and both
-    write-backs read these rows instead of each re-running the rollup
+    computed ONCE, and the collect, the store and JDBC merges and the
+    write-back read these rows instead of each re-running the rollup
     and this groupBy (two jobs per consumer). Every consumer therefore
     sees the same ``scanned_at`` — one per scan — where a lazy
     ``current_timestamp()`` was re-evaluated by each action. The rows

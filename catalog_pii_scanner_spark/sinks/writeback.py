@@ -3,14 +3,12 @@ src/catalog_pii_scanner/glue.py:184-353, unity.py:246-345, hms.py:110-162).
 
 Write-back mutates external catalog APIs, so it stays DRIVER-SIDE and
 idempotent (reference invariant: a second apply run changes nothing and
-never duplicates comments — tests/test_hms_fake.py:120-140). The Spark
-part is the diff: desired state (findings) anti-joined against current
-state (catalog properties) so only real changes issue API calls.
-
-``FakeCatalogClient`` is the in-memory protocol double (the reference
-tests' approach) used by our tests; a real Glue/Unity/HMS client plugs in
-behind the same 3-method surface. For very large catalogs the per-table
-call loop batches via ``toLocalIterator`` to avoid collecting everything.
+never duplicates comments — tests/test_hms_fake.py:120-140). Spark
+computes the desired tags; :func:`apply_writeback` streams them with
+``toLocalIterator`` and alone decides what to write. Each catalog is a
+two-method client that only translates to its storage:
+:class:`FakeCatalogClient` (in memory, the reference tests' approach),
+:class:`SessionCatalogClient` and ``sources.glue.GlueEnumerator``.
 """
 
 from __future__ import annotations
@@ -47,11 +45,52 @@ class FakeCatalogClient:
             self.comments[key] = comment
 
 
+class SessionCatalogClient:
+    """Spark session catalog tags (reference unity.py:263-311,
+    hms.py:110-162): table properties ``cps.pii.col.<column>`` and
+    ``cps.pii_types.col.<column>`` plus ``ALTER COLUMN … COMMENT``. A
+    None schema addresses the bare table (current database)."""
+
+    #: write-back key -> table-property prefix (``<prefix>.col.<column>``)
+    KEYS = {PII_FLAG_KEY: "cps.pii", PII_TYPES_KEY: "cps.pii_types"}
+
+    def __init__(self, spark: SparkSession) -> None:
+        self.spark = spark
+
+    @staticmethod
+    def _table(schema: str | None, table: str) -> str:
+        return table if schema is None else f"{schema}.{table}"
+
+    def get_column(self, schema: str | None, table: str, column: str):
+        t = self._table(schema, table)
+        stored = {r.key: r.value for r in
+                  self.spark.sql(f"SHOW TBLPROPERTIES {t}").collect()}
+        props = {k: stored[f"{p}.col.{column}"]
+                 for k, p in self.KEYS.items()
+                 if f"{p}.col.{column}" in stored}
+        comment = next((c.description
+                        for c in self.spark.catalog.listColumns(t)
+                        if c.name == column), None)
+        return props, comment
+
+    def update_column(self, schema: str | None, table: str, column: str,
+                      props: dict[str, str], comment: str | None) -> None:
+        t = self._table(schema, table)
+        kv = ", ".join(f"'{self.KEYS[k]}.col.{column}'='{v}'"
+                       for k, v in sorted(props.items()))
+        self.spark.sql(f"ALTER TABLE {t} SET TBLPROPERTIES ({kv})")
+        if comment is not None:
+            # Spark string literals unescape backslashes too
+            escaped = comment.replace("\\", "\\\\").replace("'", "\\'")
+            self.spark.sql(f"ALTER TABLE {t} ALTER COLUMN {column} "
+                           f"COMMENT '{escaped}'")
+
+
 def ref_parts(ref_col: str = "column_ref") -> tuple[F.Column, F.Column,
                                                     F.Column]:
     """(schema, table, column) Columns from a ``column_ref`` URI — THE
     shared decomposition for every write-back consumer (this sink's
-    apply loops AND operators/incremental.writeback_diff_plan).
+    apply loop AND operators/incremental.writeback_diff_plan).
 
     Refs carry either 3 path segments (catalog enumerations:
     ``cat://schema/table/column``) or 2 (the engine's melt boundary:
@@ -87,79 +126,31 @@ def desired_tags(findings: DataFrame) -> DataFrame:
     )
 
 
-def update_column_tags_sql(spark: SparkSession, table: str, column: str,
-                           pii: bool, pii_types: list[str] | None = None,
-                           append_comment: str | None = None) -> bool:
-    """K3/K4 REAL path: idempotent tag write-back via actual
-    ``ALTER TABLE … SET TBLPROPERTIES`` / ``ALTER COLUMN … COMMENT``
-    statements against the Spark session catalog (reference
-    unity.py:263-311 SQL tag-back, hms.py:110-162 alter_table). The
-    reference's per-column table-property vocabulary is kept:
-    ``cps.pii.col.<column>`` and ``cps.pii_types.col.<column>``.
-    Diff-before-write: re-running with unchanged desired state issues NO
-    ALTER statements. Returns whether any statement was issued."""
-    props = {r.key: r.value
-             for r in spark.sql(f"SHOW TBLPROPERTIES {table}").collect()}
-    want = {f"cps.pii.col.{column}": str(bool(pii)).lower()}
-    if pii_types is not None:
-        want[f"cps.pii_types.col.{column}"] = ",".join(
-            sorted(t.strip() for t in pii_types if t.strip()))
-    delta = {k: v for k, v in want.items() if props.get(k) != v}
-    changed = False
-    if delta:
-        kv = ", ".join(f"'{k}'='{v}'" for k, v in sorted(delta.items()))
-        spark.sql(f"ALTER TABLE {table} SET TBLPROPERTIES ({kv})")
-        changed = True
-    if append_comment:
-        current = next(
-            (c.description for c in spark.catalog.listColumns(table)
-             if c.name == column), None) or ""
-        if append_comment not in current:
-            new = (current + (" " if current else "")
-                   + append_comment)[:MAX_COMMENT]
-            escaped = new.replace("'", "''")
-            spark.sql(f"ALTER TABLE {table} ALTER COLUMN {column} "
-                      f"COMMENT '{escaped}'")
-            changed = True
-    return changed
-
-
-def apply_writeback_sql(spark: SparkSession,
-                        findings: DataFrame) -> dict[str, int]:
-    """Diff-before-write apply loop over the session catalog: findings
-    refs ``cat://schema/table/column`` land as ALTER statements on
-    ``schema.table``. Idempotent like :func:`apply_writeback`."""
+def apply_writeback(findings: DataFrame, client) -> dict[str, int]:
+    """Diff-before-write apply loop: the one tag rule for every catalog
+    (reference K2-K4). Per column it wants the properties
+    ``{PII_FLAG_KEY: "true", PII_TYPES_KEY: <sorted csv>}`` and the
+    current comment with " PII:<types>" appended unless already present,
+    cut to ``MAX_COMMENT``; it calls ``update_column`` once, and only
+    when either differs. ``client`` translates to one catalog with two
+    methods: ``get_column(schema, table, column) -> (props, comment)``
+    (absent tags left out, comment None when unset) and
+    ``update_column(schema, table, column, props, comment)``; ``schema``
+    is None for 2-segment refs. Returns counters; a re-run over an
+    unchanged store makes 0 update calls."""
     applied = skipped = 0
     for row in desired_tags(findings).toLocalIterator():
-        # 2-segment melt refs parse with a NULL schema: the table is
-        # addressed bare (session current database), never "None.<t>"
-        table_ident = (f"{row['schema']}.{row['table']}"
-                       if row["schema"] is not None else row["table"])
-        changed = update_column_tags_sql(
-            spark, table_ident, row["column"],
-            pii=True, pii_types=row["pii_types"].split(","),
-            append_comment=row["comment"])
-        applied += int(changed)
-        skipped += int(not changed)
-    return {"applied": applied, "skipped": skipped}
-
-
-def apply_writeback(findings: DataFrame,
-                    client: FakeCatalogClient) -> dict[str, int]:
-    """Diff-before-write apply loop. Returns counters; re-running with an
-    unchanged store is a no-op (0 API calls)."""
-    applied = skipped = 0
-    for row in desired_tags(findings).toLocalIterator():
-        props_now, comment_now = client.get_column(
-            row["schema"], row["table"], row["column"])
+        col = (row["schema"], row["table"], row["column"])
+        props_now, comment_now = client.get_column(*col)
         want_props = {PII_FLAG_KEY: "true", PII_TYPES_KEY: row["pii_types"]}
-        unchanged = (
-            all(props_now.get(k) == v for k, v in want_props.items())
-            and comment_now == row["comment"])
-        if unchanged:
+        want_comment = comment_now
+        if row["comment"] not in (comment_now or ""):
+            want_comment = " ".join(
+                filter(None, (comment_now, row["comment"])))[:MAX_COMMENT]
+        if (want_props.items() <= props_now.items()
+                and want_comment == comment_now):
             skipped += 1
             continue
-        client.update_column(row["schema"], row["table"], row["column"],
-                             want_props, row["comment"])
+        client.update_column(*col, want_props, want_comment)
         applied += 1
     return {"applied": applied, "skipped": skipped}

@@ -14,8 +14,9 @@ Reference behaviors mirrored (connectors/glue.py):
   InvalidInputException; a strict whitelist prunes them. Here the
   whitelist is a declarative nested spec + one generic pruner instead of
   per-shape functions.
-- glue.py:184-238 — idempotent column tag update: diff params/comment
-  first, call update_table only when something changed.
+- glue.py:184-238 — column tag update: the diff and the comment rule
+  are sinks/writeback.apply_writeback's; ``GlueEnumerator`` is its
+  two-method client (column Parameters + Comment, sanitized update_table).
 
 All of this is driver-side protocol work (catalog APIs are not
 data-plane); the enumeration lands in the same canonical columns frame
@@ -32,6 +33,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..sinks.writeback import PII_FLAG_KEY, PII_TYPES_KEY
 from .catalog import COLUMNS_SCHEMA, column_ref
 from .melt import TESTDATA_SCHEMAS
 
@@ -40,6 +42,10 @@ THROTTLE_CODES = frozenset({
     "ThrottlingException", "TooManyRequestsException",
     "RequestLimitExceeded",
 })
+
+
+#: write-back key -> Glue column Parameters key (reference glue.py:210).
+GLUE_TAG_KEYS = {PII_FLAG_KEY: "pii", PII_TYPES_KEY: "pii_types"}
 
 
 class GlueClientError(RuntimeError):
@@ -139,6 +145,13 @@ def _drain(call: Callable[[str | None], dict], items_key: str) -> list:
             return out
 
 
+def _column(tbl: dict, name: str) -> dict:
+    for c in (tbl.get("StorageDescriptor") or {}).get("Columns") or []:
+        if c.get("Name") == name:
+            return c
+    raise KeyError(f"table {tbl.get('Name')!r} has no column {name!r}")
+
+
 def _any_match(name: str, patterns) -> bool:
     pats = [patterns] if isinstance(patterns, str) else list(patterns)
     return any(fnmatch.fnmatch(name, p) for p in pats)
@@ -190,41 +203,27 @@ class GlueEnumerator:
                                            Name=table),
             **self._retry)["Table"]
 
-    def update_column_tags(self, database: str, table: str, column: str,
-                           pii: bool, pii_types: list[str] | None = None,
-                           append_comment: str | None = None) -> bool:
-        """Idempotent tag write-back (reference glue.py:184-238): diff
-        the column's Parameters/Comment against the desired state; call
-        update_table (with the sanitized TableInput) only on change.
-        Returns whether an update was issued."""
+    def get_column(self, database: str, table: str, column: str):
+        """Write-back client (sinks/writeback.apply_writeback): the
+        column's ``Parameters{pii, pii_types}`` tags and Comment."""
+        c = _column(self.get_table(database, table), column)
+        params = c.get("Parameters") or {}
+        return ({k: params[g] for k, g in GLUE_TAG_KEYS.items()
+                 if g in params}, c.get("Comment"))
+
+    def update_column(self, database: str, table: str, column: str,
+                      props: dict[str, str], comment: str | None) -> None:
+        """Set the column's Parameters/Comment on the table's freshly
+        read, sanitized TableInput and ``update_table`` it (reference
+        glue.py:184-238)."""
         ti = table_to_input(self.get_table(database, table))
-        changed = False
-        for c in ti.get("StorageDescriptor", {}).get("Columns") or []:
-            if c.get("Name") != column:
-                continue
-            params = dict(c.get("Parameters") or {})
-            want = dict(params)
-            want["pii"] = str(bool(pii)).lower()
-            if pii_types is not None:
-                want["pii_types"] = ",".join(
-                    sorted(t.strip() for t in pii_types if t.strip()))
-            if want != params:
-                c["Parameters"] = want
-                changed = True
-            if append_comment and append_comment not in (c.get("Comment")
-                                                         or ""):
-                existing = c.get("Comment") or ""
-                c["Comment"] = (existing + (" " if existing else "")
-                                + append_comment)[:255]
-                changed = True
-            break
-        if not changed:
-            return False
-        with_backoff(
-            lambda: self._client.update_table(DatabaseName=database,
-                                              TableInput=ti),
-            **self._retry)
-        return True
+        c = _column(ti, column)
+        c["Parameters"] = {**(c.get("Parameters") or {}),
+                           **{GLUE_TAG_KEYS[k]: v for k, v in props.items()}}
+        if comment is not None:
+            c["Comment"] = comment
+        with_backoff(lambda: self._client.update_table(
+            DatabaseName=database, TableInput=ti), **self._retry)
 
 
 def glue_columns(spark: SparkSession, enumerator: GlueEnumerator,

@@ -516,50 +516,6 @@ def stream_events_sessions_oracle_sql(events_rel: str = "events") -> str:
     return events_sessions_oracle_sql(events_rel)
 
 
-#: EWMA smoothing for the custom stateful operator.
-EWMA_ALPHA = 0.3
-
-
-def stream_user_ewma(spark: SparkSession, events_path: str,
-                     alpha: float = EWMA_ALPHA):
-    """Custom stateful streaming operator via ``applyInPandasWithState``
-    (the escape hatch for semantics no built-in stateful op expresses):
-    a per-user exponentially-weighted running mean of event values —
-    the recursion ewma = a*x + (1-a)*ewma needs ordered stateful
-    accumulation, which windows/aggregations cannot express. State per
-    user: (n_seen, ewma), carried across microbatches; each batch emits
-    the user's updated running state (update mode).
-
-    Returns the streaming DataFrame (caller picks sink/trigger)."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import (GroupState,
-                                             GroupStateTimeout)
-
-    def update(key, pdfs, state: GroupState):
-        n, ewma = state.get if state.exists else (0, None)
-        for pdf in pdfs:
-            for v in pdf.sort_values("ts")["value"]:
-                v = float(v)
-                ewma = v if ewma is None else alpha * v + (1 - alpha) * ewma
-                n += 1
-        state.update((n, float(ewma)))
-        yield pd.DataFrame({"user_id": [key[0]], "n_seen": [n],
-                            "ewma": [ewma]})
-
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(events_path)
-    )
-    return stream.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType="user_id bigint, n_seen bigint, ewma double",
-        stateStructType="n bigint, ewma double",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
 def scan_stream(spark: SparkSession, values_dir: str, schema: str =
                 "column_ref string, value string") -> DataFrame:
     """Incremental PII scan over a stream of (column_ref, value) files —

@@ -155,3 +155,25 @@ def test_cli_scan_target_and_config(tmp_path, spark):
                "--target", "spark://testdata/nation",
                "--config", str(cfg)])
     assert rc == 0
+
+
+def test_scan_text_ensemble_honours_ner_provider(spark, capsys,
+                                                 monkeypatch):
+    """ai.ner.provider reaches scan-text --ensemble: with spaCy absent a
+    configured 'spacy' provider fails with the guided error instead of
+    silently running the regex provider."""
+    try:
+        import spacy  # noqa: F401
+        pytest.skip("spacy installed: the configured provider would run")
+    except ImportError:
+        pass
+    import catalog_pii_scanner_spark.cli as cli
+    monkeypatch.setattr(cli, "_spark", lambda app: spark)
+    monkeypatch.setenv("CPS_AI__NER__PROVIDER", '"spacy"')
+    # the provider loads on the executors, so the ImportError arrives
+    # wrapped in Spark's task-failure error
+    with pytest.raises(Exception, match=(
+            "ImportError: NER provider 'spacy' needs its model package, "
+            "which is not installed; use provider='regex'")):
+        cli.main(["scan-text", "mail a@b.io", "--ensemble"])
+    assert capsys.readouterr().out == ""

@@ -526,49 +526,3 @@ def test_semdedup_keep_list_verdict_shape(spark, sf_dir):
     assert all(r.in_capped_cell or r.cluster_rep == r.vec_id
                for r in capped)
     assert sum(r.in_capped_cell for r in capped) >= 0.9 * len(capped)
-
-
-def test_semdedup_pairs_complete_within_cells(spark, sf_dir):
-    """Brute-force differential for the SemDeDup pair stage: with the
-    cap unbound, the within-cell pair relation must contain EXACTLY the
-    brute-force >= threshold pairs among same-cell vectors (cell
-    blocking is the only recall loss, by design — pairs across cells
-    are out of scope per the paper's recipe)."""
-    import numpy as np
-
-    emb = {r.vec_id: np.array(r.embedding, dtype=np.float64)
-           for r in spark.read.parquet(
-               f"{sf_dir}/embeddings.parquet").collect()}
-    # cell assignment re-derived: argmax round(cos, 6) to prefix
-    # centroids, ties by cid asc
-    cents = {cid: v for cid, v in emb.items()
-             if cid < simsearch.SEMDEDUP_CELLS}
-    def cell_of(v):
-        best = None
-        for cid in sorted(cents):
-            c = cents[cid]
-            nc, nv = np.linalg.norm(c), np.linalg.norm(v)
-            if nc == 0 or nv == 0:
-                continue
-            cc = round(float(v @ c / (nv * nc)), 6)
-            if best is None or cc > best[0]:
-                best = (cc, cid)
-        return best[1] if best else None
-    cells = {vid: cell_of(v) for vid, v in emb.items()
-             if np.linalg.norm(v) > 0}
-    want = set()
-    for a in cells:
-        for b in cells:
-            if a < b and cells[a] is not None and cells[a] == cells[b]:
-                ca, cb = emb[a], emb[b]
-                cos = round(float(ca @ cb / (np.linalg.norm(ca)
-                                             * np.linalg.norm(cb))), 6)
-                if cos >= simsearch.SEMDEDUP_T:
-                    want.add((a, b))
-    spark.read.parquet(f"{sf_dir}/embeddings.parquet") \
-        .createOrReplaceTempView("cpss_embeddings")
-    got = {(r.vec_a, r.vec_b) for r in spark.sql(
-        simsearch.semdedup_near_pairs_sql(
-            "spark", "cpss_embeddings",
-            max_cell=10**9)).collect()}
-    assert got == want

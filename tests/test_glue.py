@@ -7,6 +7,9 @@ from __future__ import annotations
 
 import pytest
 
+from catalog_pii_scanner_spark.sinks.findings_store import \
+    to_findings_records
+from catalog_pii_scanner_spark.sinks.writeback import apply_writeback
 from catalog_pii_scanner_spark.sources.glue import (
     FakeGlueClient, GlueClientError, GlueEnumerator, glue_columns,
     stub_glue_client, table_to_input, with_backoff)
@@ -136,23 +139,27 @@ def test_table_to_input_fills_required_defaults():
 
 # --- idempotent write-back through the sanitizer -----------------------------
 
-def test_update_column_tags_idempotent_and_sanitized():
+def test_glue_writeback_idempotent_and_sanitized(spark):
     client = stub_glue_client()
     enum = _enum(client)
-    changed = enum.update_column_tags(
-        "testdata", "customer", "c_name", pii=True,
-        pii_types=["PERSON", "EMAIL"], append_comment="PII:PERSON")
-    assert changed is True
+    findings = to_findings_records(spark.createDataFrame(
+        [("glue://testdata/customer/c_name", t, 1, 1, 0.9, 0.5)
+         for t in ("PERSON", "EMAIL")],
+        "column_ref string, pii_type string, n_candidates bigint, "
+        "n_values_hit bigint, confidence double, hit_rate double"))
+    before = client.api_calls
+    assert apply_writeback(findings, enum) == {"applied": 1, "skipped": 0}
+    # the diff read, update_column's re-read and one update_table, which
+    # the strict fake accepts only with a sanitized TableInput
+    assert client.api_calls == before + 3
     tbl = enum.get_table("testdata", "customer")
     col = next(c for c in tbl["StorageDescriptor"]["Columns"]
                if c["Name"] == "c_name")
     assert col["Parameters"] == {"pii": "true", "pii_types": "EMAIL,PERSON"}
-    assert col["Comment"] == "PII:PERSON"
+    assert col["Comment"] == "PII:EMAIL,PERSON"
     # second apply: no change, no update_table call
     before = client.api_calls
-    assert enum.update_column_tags(
-        "testdata", "customer", "c_name", pii=True,
-        pii_types=["PERSON", "EMAIL"], append_comment="PII:PERSON") is False
+    assert apply_writeback(findings, enum) == {"applied": 0, "skipped": 1}
     assert client.api_calls == before + 1  # only the get_table diff read
 
 

@@ -1,4 +1,4 @@
-"""Real-model integration tests: N1 (spaCy), N2 (Presidio), E1 (SBERT).
+"""Real-model integration tests: N1 (spaCy), N2 (Presidio).
 
 Skip-by-default where the model packages are absent — the reference uses
 the same strategy for its heavy external deps (reference
@@ -60,19 +60,6 @@ def test_presidio_provider_through_mapinpandas(spark, vals):
     got = _rows(detect_ner_spans_model(vals, provider="presidio",
                                        confidence_min=0.0))
     assert any(g[1] == "EMAIL" for g in got)
-
-
-def test_sbert_embed_model_fit_predict():
-    pytest.importorskip("sentence_transformers")
-    from catalog_pii_scanner_spark.operators.embeddings import (
-        EmbedModel, register_sbert_embedder)
-    register_sbert_embedder()
-    m = EmbedModel(embedder="sbert").fit(
-        ["email me at x@y.io", "call 555-867-5309",
-         "mail a@b.co today", "phone (222) 555-0199"],
-        ["EMAIL", "PHONE_NUMBER", "EMAIL", "PHONE_NUMBER"])
-    probs = m.predict_proba(["write to c@d.org"])[0]
-    assert probs["EMAIL"] > probs["PHONE_NUMBER"]
 
 
 def test_real_providers_are_skipped_not_failed_without_packages():

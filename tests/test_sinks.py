@@ -152,21 +152,22 @@ def test_ref_decomposition_unified_across_sink_and_plan(spark):
         [("orders", "o_comment")]
 
 
-def test_apply_writeback_sql_two_segment_ref(spark):
+def test_session_catalog_two_segment_ref(spark):
     """A 2-segment melt ref addresses the bare table in the session
     catalog (current database) — never the broken 'None.<t>' ident."""
     from catalog_pii_scanner_spark.sinks.writeback import \
-        apply_writeback_sql
+        SessionCatalogClient
     spark.sql("CREATE TABLE IF NOT EXISTS cpss_wb2seg (notes STRING) "
               "USING parquet")
     try:
         findings = to_findings_records(spark.createDataFrame(
             [("spark://cpss_wb2seg/notes", "EMAIL", 1, 1, 0.9, 0.5)],
             SCHEMA))
-        assert apply_writeback_sql(spark, findings) == \
+        client = SessionCatalogClient(spark)
+        assert apply_writeback(findings, client) == \
             {"applied": 1, "skipped": 0}
         # idempotent re-run, same bare-table addressing
-        assert apply_writeback_sql(spark, findings) == \
+        assert apply_writeback(findings, client) == \
             {"applied": 0, "skipped": 1}
         props = {r.key: r.value for r in spark.sql(
             "SHOW TBLPROPERTIES cpss_wb2seg").collect()}

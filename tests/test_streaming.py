@@ -105,49 +105,6 @@ def test_scan_watcher_merges_store_incrementally(spark, tmp_path_factory):
     assert run_scan_watcher_once(spark, src, store, ckpt) == 0
 
 
-def test_stream_user_ewma_stateful(spark, tmp_path_factory):
-    """Custom stateful operator (applyInPandasWithState): per-user EWMA
-    state must carry ACROSS microbatches — the final emitted state for
-    each user equals the sequential recursion over all their events."""
-    from catalog_pii_scanner_spark.streaming.watcher import (
-        EWMA_ALPHA, stream_user_ewma)
-
-    d = tmp_path_factory.mktemp("ewma")
-    src = str(d / "in")
-    base = 1_700_000_000
-    batch1 = [(1, base + 0, 1, "a", 10.0, ""), (2, base + 1, 1, "a", 20.0, ""),
-              (3, base + 2, 2, "a", 5.0, "")]
-    batch2 = [(4, base + 3, 1, "a", 30.0, "")]
-    cols = ("event_id bigint, tsl bigint, user_id bigint, "
-            "event_type string, value double, props string")
-    for i, rows in enumerate((batch1, batch2)):
-        (spark.createDataFrame(rows, cols)
-         .selectExpr("event_id", "timestamp_seconds(tsl) AS ts", "user_id",
-                     "event_type", "value", "props")
-         .coalesce(1).write.mode("append").parquet(src))
-    q = (stream_user_ewma(spark, src)
-         .writeStream.format("memory").queryName("t_ewma")
-         .outputMode("update").trigger(availableNow=True).start())
-    q.awaitTermination()
-    rows = spark.table("t_ewma").collect()
-    # last emitted state per user
-    final = {}
-    for r in rows:
-        final[r.user_id] = max(final.get(r.user_id, (0, None)),
-                               (r.n_seen, r.ewma))
-    a = EWMA_ALPHA
-
-    def seq(vals):
-        e = None
-        for v in vals:
-            e = v if e is None else a * v + (1 - a) * e
-        return e
-
-    assert final[1][0] == 3
-    assert final[1][1] == pytest.approx(seq([10.0, 20.0, 30.0]), abs=1e-12)
-    assert final[2] == (1, 5.0)
-
-
 def test_outliers_degenerate_groups_filtered(spark, tmp_path):
     """A single-row event type (n-1 = 0) and a constant-valued type
     (var = 0) have no defined z-score; both engines must drop those
