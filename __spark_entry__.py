@@ -830,11 +830,12 @@ def _query_catalog() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "stream_cms_counters": stream_cms_counters,
         # disjoint-slice HLL sketches merged by register MAX — the
         # never-rescan union property, with exact audit per part.
-        # (The round-9 HLL stage diagnostics — sketch_hll_registers /
-        # rho_parts / state — were RETIRED from the registration in
-        # round 11 after r10 closed the divergence they existed to
-        # localize; their SQL builders and pytest oracle gates remain
-        # in operators/sketches.py + tests/test_sketches_dq_layout.py.)
+        # (The round-9 HLL stage diagnostics were RETIRED from the
+        # registration in round 11 after r10 closed the divergence they
+        # existed to localize; their SQL builders hll_registers_sql /
+        # hll_rho_parts_sql / hll_state_sql stay in
+        # operators/sketches.py, checked in
+        # tests/test_sketches_dq_layout.py.)
         "sketch_hll_union": sketch_hll_union,
         # KMV k-minimum-values distinct sketch (Bar-Yossef et al.):
         # the maximally-conservative mergeable distinct estimator —
@@ -901,9 +902,9 @@ def _query_catalog() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # packed per asset, fingerprint-keyed groups, MIN-id keep rule.
         "multimodal_audio_fingerprint":
             multimodal.multimodal_audio_fingerprint,
-        # (multimodal_audio_fp_bits — the round-10 fingerprint stage
-        # diagnostic — retired with the HLL diagnostics in round 11;
-        # builder + pytest gate remain in operators/multimodal.py.)
+        # (The round-10 fingerprint-bits stage diagnostic retired with
+        # the HLL diagnostics in round 11 and its builder was later
+        # deleted; _audio_fp_bits_rel stays as the packer's input.)
         # TPC-H Q5 analog: 5-way snowflake join, facts shuffle on the
         # order key, every dim broadcast, decimal-exact revenue.
         "tpch_local_supplier_volume": analytics.local_supplier_volume,

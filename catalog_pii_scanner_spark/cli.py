@@ -95,15 +95,18 @@ def cmd_scan_text(args) -> int:
     if args.ensemble or cfg.ai.mode in ("ensemble", "ensemble+llm"):
         # the reference's scan_text path: contexts -> N5 + E2 signals ->
         # fusion, gated by the P6 decision threshold (calibrated scale).
-        # the N5 provider is ai.ner.provider; mode ensemble+llm swaps
-        # it for the (TTL-cached, worker-singleton) LLM stub — the
+        # the N5 provider is ai.ner.provider, gated at
+        # ai.ner.confidence_min; ai.ner.enabled=false builds no N5 stage
+        # (None: a null ner_sig). mode ensemble+llm swaps the provider
+        # for the (TTL-cached, worker-singleton) LLM stub — the
         # declared-but-never-built reference mode, config-dispatched.
         from .operators.ensemble import (EnsembleWeights,
                                          IDENTITY_CALIBRATION,
                                          REFERENCE_WEIGHTS)
         ner_provider = ("fake_llm"
                         if cfg.ai.mode == "ensemble+llm" and cfg.ai.llm.enabled
-                        else cfg.ai.ner.provider)
+                        else cfg.ai.ner.provider if cfg.ai.ner.enabled
+                        else None)
         # SURVEY §7.6: the reference ships two disagreeing weight sets
         # (dataclass 0.6/0.2/0.4 actually used; config 0.4/0.3/0.3 never
         # wired). This engine is config-driven; --reference-compat selects
@@ -123,6 +126,7 @@ def cmd_scan_text(args) -> int:
             cands, model=model, weights=weights,
             decision_threshold=cfg.ai.ensemble.decision_threshold,
             ner_provider=ner_provider,
+            ner_confidence_min=cfg.ai.ner.confidence_min,
             calibration=IDENTITY_CALIBRATION, **llm_kw)
         print(json.dumps([
             {"type": r.label, "text": r.match_text,

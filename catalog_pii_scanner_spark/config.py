@@ -69,25 +69,15 @@ class RulesConfig:
 
 @dataclass(frozen=True)
 class LLMConfig:
-    """Reference config.py:67-78 — declared there, consumed nowhere; this
-    engine's operators/llm.py renders the cap/cache behaviors."""
+    """Reference config.py:67-78 — declared there, consumed nowhere. Here
+    mode ``ensemble+llm`` runs operators/llm.py's offline provider as the
+    N5 stage under the cost cap and cache TTL; the reference's model
+    knobs (provider, model, tokens, temperature, redact) drive nothing."""
     enabled: bool = False
-    provider: str = "local"
-    model: str = "offline-deterministic"
-    max_tokens: int = 256
-    temperature: float = 0.0
-    redact: bool = True
     cost_cap_usd_per_scan: float = 0.50
     cache_ttl_minutes: int = 1440
 
     def __post_init__(self) -> None:
-        if self.provider not in ("local",):
-            raise ConfigError(f"unknown llm.provider {self.provider!r} "
-                              f"(only 'local' runs offline)")
-        if self.max_tokens < 1:
-            raise ConfigError("llm.max_tokens must be >= 1")
-        if not 0.0 <= self.temperature <= 2.0:
-            raise ConfigError("llm.temperature must be in [0, 2]")
         if self.cost_cap_usd_per_scan < 0:
             raise ConfigError("llm.cost_cap_usd_per_scan must be >= 0")
         if self.cache_ttl_minutes < 0:
@@ -107,17 +97,16 @@ class AiConfig:
         if self.mode == "ensemble+llm" and not self.llm.enabled:
             raise ConfigError(
                 "ai.mode 'ensemble+llm' requires ai.llm.enabled=true")
+        if self.mode == "ensemble+llm" and not self.ner.enabled:
+            # the LLM stage IS the N5 stage in this mode
+            raise ConfigError(
+                "ai.mode 'ensemble+llm' requires ai.ner.enabled=true")
 
 
 @dataclass(frozen=True)
 class AppConfig:
     ai: AiConfig = field(default_factory=AiConfig)
     rules: RulesConfig = field(default_factory=RulesConfig)
-    sample_n: int = 20
-
-    def __post_init__(self) -> None:
-        if self.sample_n <= 0:
-            raise ConfigError("sample_n must be positive")
 
 
 _NESTED = {AppConfig: {"ai": AiConfig, "rules": RulesConfig},

@@ -29,8 +29,6 @@ Scale shapes:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -244,28 +242,6 @@ WHERE i.n_common / CAST(za.n + zb.n - i.n_common AS DOUBLE) >= {threshold}
 """
 
 
-def lsh_excluded_buckets(spark, sf_dir: str,
-                         max_bucket: int = MAX_BAND_BUCKET) -> DataFrame:
-    """Observability for the band-bucket cap: the (band, band_key) buckets
-    the candidate join EXCLUDES, with their doc counts. Callers tuning
-    thresholds should inspect this — see the recall caveat on
-    :func:`lsh_near_dup_pairs`. Output: band, band_key, n_docs."""
-    sigs = _signatures_from_shingles(doc_shingles_df(spark, sf_dir))
-    frames = []
-    for b in range(NUM_BANDS):
-        key = F.md5(F.concat(*[
-            F.col(f"mh{b * ROWS_PER_BAND + r}")
-            for r in range(ROWS_PER_BAND)]))
-        frames.append(sigs.select(F.lit(b).alias("band"),
-                                  key.alias("band_key")))
-    bands = frames[0]
-    for bf in frames[1:]:
-        bands = bands.unionByName(bf)
-    return (bands.groupBy("band", "band_key")
-            .agg(F.count("*").alias("n_docs"))
-            .where(F.col("n_docs") > max_bucket))
-
-
 def lsh_near_dup_pairs(spark, sf_dir: str, threshold: float = 0.5,
                        max_bucket: int = MAX_BAND_BUCKET,
                        shingles: DataFrame | None = None) -> DataFrame:
@@ -275,8 +251,9 @@ def lsh_near_dup_pairs(spark, sf_dir: str, threshold: float = 0.5,
     RECALL CAVEAT: the cap drops ALL candidate pairs from oversized
     buckets — including genuine near-dup (non-identical) pairs whose only
     shared band bucket is oversized. Exact-dedup recovers only the exact
-    duplicates among them. Inspect :func:`lsh_excluded_buckets` for the
-    excluded (band, band_key, n_docs) set when tuning ``max_bucket``.
+    duplicates among them. The excluded buckets are the (band, band_key)
+    groups of the band relation holding more than ``max_bucket`` docs;
+    count them when tuning ``max_bucket``.
 
     Scale shape: no forced broadcasts — AQE picks broadcast when the
     runtime pair/size relations are small and degrades to shuffle joins
@@ -649,9 +626,9 @@ def containment_pairs(spark, sf_dir: str, threshold: float = CONTAIN_T,
 
 def containment_excluded_grams(spark, sf_dir: str,
                                df_cap: int = MAX_GRAM_DF) -> DataFrame:
-    """Observability twin (same convention as ``lsh_excluded_buckets``):
-    how many grams the df-cap removed from the containment universe, and
-    the worst offenders — the recall caveat is measurable, not silent."""
+    """Observability twin of the df cap: the grams it removed from the
+    containment universe, worst offenders first — the recall caveat is
+    measurable, not silent."""
     shingles = doc_shingles_df(spark, sf_dir)
     freq = shingles.groupBy("shingle").agg(F.count("*").alias("df"))
     return (freq.where(F.col("df") > df_cap)
@@ -694,141 +671,6 @@ def simhash(spark, sf_dir: str) -> DataFrame:
     return spark.sql(simhash_sql("spark", "cpss_documents"))
 
 
-# --- simhash near-dup pairs (banded Hamming-distance blocking) --------------
-#
-# The join the signature operator above exists for: pairs of documents
-# whose 32-bit SimHashes differ in at most HAMMING_T bits. Blocking is
-# the standard band decomposition (Manku et al., WWW'07 "Detecting
-# near-duplicates for web crawling"): split the hash into
-# SIMHASH_BANDS byte-bands and bucket-join on band equality. With
-# 4 bands over 32 bits and HAMMING_T = 3, the pigeonhole principle
-# makes the blocking COMPLETE, not approximate — any pair within
-# Hamming 3 agrees exactly on at least one band — so banding is purely
-# an optimization over the quadratic all-pairs join (differential test
-# pins this). The only recall loss is the explicit MAX_BAND_BUCKET cap
-# (boilerplate corpora collapse a band bucket; dropped whole,
-# observable via simhash_excluded_buckets).
-#
-# Scale shape (100 TB): signatures are one doc-keyed aggregation; the
-# band explode is doc-local (4 rows/doc); the candidate join shuffles
-# on (band, band_value) with the bucket cap bounding every task's pair
-# fan-out; the Hamming verify is two hash joins back to the tiny
-# signature relation plus a JVM bit_count — no Python, no windows.
-
-#: Number of byte-wide bands over the 32-bit simhash.
-SIMHASH_BANDS = 4
-#: Maximum Hamming distance for a near-dup verdict. 3 <= SIMHASH_BANDS
-#: keeps the band blocking complete (pigeonhole).
-HAMMING_T = 3
-
-
-def simhash_pairs_sql(dialect: str, docs_rel: str = "documents",
-                      hamming_t: int = HAMMING_T,
-                      max_bucket: int = MAX_BAND_BUCKET) -> str:
-    """Dual-dialect near-dup pairs over banded simhash blocking.
-
-    Output: doc_a, doc_b (doc_a < doc_b), hamming BIGINT. Dialect
-    splits: integer xor is ``xor()`` in DuckDB but ``^`` in Spark SQL
-    (where DuckDB's ``^`` means POWER); band extraction uses pure-LONG
-    shift+mask on the non-negative 32-bit hash in both.
-
-    Completeness REQUIRES hamming_t < SIMHASH_BANDS (pigeonhole):
-    asserted here so a caller-raised radius cannot silently degrade the
-    advertised-exact blocking to approximate (r6 ADVICE).
-    """
-    assert hamming_t < SIMHASH_BANDS, (
-        f"banded blocking is complete only for hamming_t <"
-        f" {SIMHASH_BANDS}; got {hamming_t} (raise SIMHASH_BANDS or use"
-        f" the lossy LSH family for larger radii)")
-    xor = ("xor(sa.simhash, sb.simhash)" if dialect == "duckdb"
-           else "(sa.simhash ^ sb.simhash)")
-    shift = (lambda j: f"((sig.simhash >> {8 * j}) & 255)") \
-        if dialect == "duckdb" else \
-        (lambda j: f"(shiftright(sig.simhash, {8 * j}) & 255)")
-    band_rows = " UNION ALL ".join(
-        f"SELECT doc_id, {j} AS band, {shift(j)} AS band_val FROM sig sig"
-        for j in range(SIMHASH_BANDS))
-    return f"""
-WITH sig AS ({simhash_sql(dialect, docs_rel)}),
-bands AS ({band_rows}),
-bands_ok AS (
-  SELECT band, band_val FROM bands GROUP BY band, band_val
-  HAVING COUNT(*) <= {max_bucket}
-),
-bands_capped AS (
-  SELECT b.* FROM bands b
-  JOIN bands_ok o ON o.band = b.band AND o.band_val = b.band_val
-),
-cand_pairs AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands_capped a JOIN bands_capped b
-    ON a.band = b.band AND a.band_val = b.band_val
-   AND a.doc_id < b.doc_id
-)
-SELECT p.doc_a, p.doc_b,
-       CAST(bit_count({xor}) AS BIGINT) AS hamming
-FROM cand_pairs p
-JOIN sig sa ON sa.doc_id = p.doc_a
-JOIN sig sb ON sb.doc_id = p.doc_b
-WHERE bit_count({xor}) <= {hamming_t}
-"""
-
-
-def simhash_pairs(spark, sf_dir: str, hamming_t: int = HAMMING_T,
-                  max_bucket: int = MAX_BAND_BUCKET) -> DataFrame:
-    """DataFrame-step twin of :func:`simhash_pairs_sql` (the oracle).
-
-    The signature relation feeds three consumers (band explode + both
-    sides of the Hamming verify), so it is materialized once
-    (localCheckpoint discipline, PERF.md) instead of re-deriving the
-    token explode per consumer as the SQL template's CTE inlining
-    would. Reuses :func:`capped_band_pairs` for the bucket-capped
-    candidate join (band_val plays band_key). Like the SQL twin,
-    asserts hamming_t < SIMHASH_BANDS — the pigeonhole completeness
-    precondition the docstring and differential test promise."""
-    assert hamming_t < SIMHASH_BANDS, (
-        f"banded blocking is complete only for hamming_t <"
-        f" {SIMHASH_BANDS}; got {hamming_t}")
-    sigs = simhash(spark, sf_dir).localCheckpoint(eager=True)
-    keys = [
-        F.struct(F.lit(j).alias("band"),
-                 F.shiftright("simhash", 8 * j).bitwiseAND(F.lit(255))
-                 .alias("band_key"))
-        for j in range(SIMHASH_BANDS)
-    ]
-    bands = (sigs.select("doc_id", F.explode(F.array(*keys)).alias("bk"))
-             .select("doc_id", "bk.band", "bk.band_key"))
-    pairs = capped_band_pairs(bands, max_bucket)
-    hamming = F.bit_count(
-        F.col("sa.simhash").bitwiseXOR(F.col("sb.simhash")))
-    return (pairs
-            .join(sigs.alias("sa"), F.col("doc_a") == F.col("sa.doc_id"))
-            .join(sigs.alias("sb"), F.col("doc_b") == F.col("sb.doc_id"))
-            .where(hamming <= hamming_t)
-            .select("doc_a", "doc_b",
-                    hamming.cast("bigint").alias("hamming")))
-
-
-def simhash_excluded_buckets(spark, sf_dir: str,
-                             max_bucket: int = MAX_BAND_BUCKET
-                             ) -> DataFrame:
-    """Observability twin (``lsh_excluded_buckets`` convention): the
-    (band, band_val) buckets the candidate join excludes, with doc
-    counts."""
-    sigs = simhash(spark, sf_dir)
-    keys = [
-        F.struct(F.lit(j).alias("band"),
-                 F.shiftright("simhash", 8 * j).bitwiseAND(F.lit(255))
-                 .alias("band_val"))
-        for j in range(SIMHASH_BANDS)
-    ]
-    return (sigs.select(F.explode(F.array(*keys)).alias("bk"))
-            .select("bk.band", "bk.band_val")
-            .groupBy("band", "band_val")
-            .agg(F.count("*").alias("n_docs"))
-            .where(F.col("n_docs") > max_bucket))
-
-
 # --- duplicate clusters (connected components over the near-dup graph) ------
 
 #: Symmetric-edge-relation size (rows) under which connected components
@@ -841,8 +683,7 @@ def simhash_excluded_buckets(spark, sf_dir: str,
 #: default), production-scale graphs take the distributed path, and
 #: both paths compute the identical min-reachable fixpoint (pinned by
 #: test_connected_components_paths_agree).
-CC_DRIVER_MAX_EDGES = int(os.environ.get(
-    "CPSS_CC_DRIVER_MAX_EDGES", "1000000"))
+CC_DRIVER_MAX_EDGES = 1_000_000
 
 
 def _cc_driver(bidir: DataFrame, id_type: str) -> DataFrame:

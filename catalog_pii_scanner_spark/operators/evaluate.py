@@ -26,8 +26,6 @@ crutch: strings repeat and the oracle computes offsets arithmetically.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -250,9 +248,8 @@ rred AS (
 
 #: Overlap-graph size (rows) under which the greedy match runs as the
 #: reference's sequential loop on the driver (bounded collect) instead
-#: of the distributed commit rounds; env-tunable for production.
-GREEDY_DRIVER_MAX_OVERLAPS = int(os.environ.get(
-    "CPSS_GREEDY_DRIVER_MAX_OVERLAPS", "1000000"))
+#: of the distributed commit rounds.
+GREEDY_DRIVER_MAX_OVERLAPS = 1_000_000
 
 
 def _greedy_driver(overlaps: DataFrame) -> DataFrame:

@@ -21,9 +21,10 @@ Spark-first:
   executor-global pattern as the heavy NER providers), so repeat texts
   within the TTL never re-invoke the model. The cache is LRU-bounded and
   expired entries are swept each batch.
-- **Redaction invariant.** ``redact=True`` (the reference default) is the
-  caller's contract: the detection input must already be redacted
-  contexts, never raw values — identical to the N5/E2 stages.
+- **Redaction invariant.** The reference's ``redact=True`` default holds
+  by construction, not by a knob: the stage runs as the N5 provider over
+  the pipeline's redacted contexts, never raw values — identical to the
+  N5/E2 stages.
 
 The provider itself is deterministic and offline (``FakeLLMProvider`` —
 this environment ships no model, the same honest stub policy as
@@ -41,7 +42,7 @@ from pyspark.sql import functions as F
 from ..plans.prefix import running_total
 
 #: USD per 1k estimated tokens (typical hosted-model order of magnitude;
-#: config-overridable).
+#: a ``llm_budget_plan`` argument).
 LLM_PRICE_PER_1K_USD = 0.03
 #: Reference defaults (config.py:77-78).
 LLM_COST_CAP_USD = 0.50
@@ -168,35 +169,3 @@ class FakeLLMProvider:
                 self._cache.popitem(last=False)
             out.append(spans)
         return out
-
-
-def detect_llm_spans(values_df: DataFrame, value_col: str = "value",
-                     keep_cols: tuple[str, ...] = ("column_ref",),
-                     cost_cap_usd: float = LLM_COST_CAP_USD,
-                     price_per_1k: float = LLM_PRICE_PER_1K_USD
-                     ) -> DataFrame:
-    """The ``ensemble+llm`` detection stage: budget-gate the texts, run
-    the (cached, batched) provider over the in-budget subset only.
-
-    Output: keep_cols..., value, pii_type, match_text, ner_score —
-    the N-stage span shape, so the spans merge with rules via
-    :func:`ner.merge_with_rules` unchanged.
-    """
-    from .ner import detect_ner_spans_model
-    plan = llm_budget_plan(
-        values_df.select(F.col(value_col).alias("_t")).distinct()
-        .withColumn("_id", F.md5("_t")),
-        id_col="_id", text_col="_t",
-        cost_cap_usd=cost_cap_usd, price_per_1k=price_per_1k)
-    # the cap itself bounds the in-budget set (cap/price * 1000 tokens),
-    # so the semi-join side is small BY CONSTRUCTION at any corpus scale
-    # -> broadcast is always safe here.
-    allowed = plan.where("in_budget").select(F.col("_id").alias("_ok_id"))
-    gated = (
-        values_df.withColumn("_id", F.md5(F.col(value_col)))
-        .join(F.broadcast(allowed), F.col("_id") == F.col("_ok_id"),
-              "left_semi")
-        .drop("_id")
-    )
-    return detect_ner_spans_model(gated, value_col, keep_cols,
-                                  provider="fake_llm")

@@ -7,9 +7,9 @@ signatures — is real and tested. Decode is REAL for the dependency-free
 formats (netpbm PGM images and PCM16 WAV audio — numpy + stdlib only;
 see the real-decoders section below, exercised end-to-end in
 tests/test_multimodal.py), and STUBBED only for codec-library formats
-(png/jpeg/mp4): ``decode_image`` / ``real_features`` raise
-``NotImplementedError`` there, the loud PIL/librosa/ffmpeg integration
-point (mirroring the reference's CPS_OFFLINE model fallbacks).
+(png/jpeg/mp4): ``real_features`` raises ``NotImplementedError`` there,
+the loud PIL/librosa/ffmpeg integration point (mirroring the reference's
+CPS_OFFLINE model fallbacks).
 
 Operators:
 - ``media_assets``: build an assets frame (asset_id, media BINARY,
@@ -66,15 +66,6 @@ def _fake_features(payload: bytes) -> list[float]:
     the md5 digest bytes, scaled to [0, 1]."""
     digest = hashlib.md5(payload).digest()
     return [b / 255.0 for b in digest[:N_FEATURES]]
-
-
-def decode_image(payload: bytes):  # pragma: no cover - real-codec path
-    """Real decode is a deliberate stub: no codec libraries ship in this
-    environment. The call site (extract_features with fake=False) is the
-    single integration point for PIL/torchvision."""
-    raise NotImplementedError(
-        "image decoding requires a codec library not present in this "
-        "environment; use fake=True for the deterministic test decoder")
 
 
 def extract_features(assets: DataFrame, fake: bool = True) -> DataFrame:
@@ -362,7 +353,7 @@ FROM b GROUP BY asset_id, window_no, win_len
 # numpy + the stdlib ONLY — so this environment exercises a genuinely
 # decoded media path end-to-end (parse -> pixels/samples -> features /
 # resize -> re-encode), not just the fake. Codec-library formats
-# (png/jpeg/mp4) remain the decode_image integration stub.
+# (png/jpeg/mp4) raise in real_features, the codec integration point.
 
 def sniff_media(payload: bytes) -> str:
     if payload[:2] in (b"P2", b"P5"):
@@ -747,8 +738,7 @@ PHASH_TWEAK_STEP = 3
 #: ham <= 8 would need >= 9 bands of ~7 bits, paying 9/4 the band-join
 #: volume). This is the standard banded-LSH recall/cost trade, shared
 #: verbatim by the oracle so the cross-engine gate pins the SAME lossy
-#: semantics; simhash_pairs (dedup.py) is the pigeonhole-COMPLETE
-#: counterpart at its smaller radius.
+#: semantics.
 PHASH_HAM_MAX = 8
 #: Band-bucket cap — higher than dedup.MAX_BAND_BUCKET because the
 #: synthetic corpus packs whole identical-image classes into single
@@ -1299,11 +1289,10 @@ FP_BITS = 32
 def _audio_fp_bits_rel(assets: DataFrame,
                        window: int = FP_WINDOW) -> DataFrame:
     """The pre-packing delta-sign stage: per (asset_id, window_no),
-    the lag-pair and the cross-multiplied sign ``bit`` — shared by the
-    fingerprint packer and the round-10 stage diagnostic
-    multimodal_audio_fp_bits (which gates exactly this relation so a
-    driver artifact can separate lag + integer cross-multiply from
-    the shiftleft packing and census downstream of it)."""
+    the lag-pair and the cross-multiplied sign ``bit`` — the input of
+    the fingerprint packer, kept a named stage so lag + integer
+    cross-multiply stay separable from the shiftleft packing and census
+    downstream of it."""
     e = audio_window_energy(assets, window) \
         .select("asset_id", "window_no", "win_len", "byte_sum")
     w = Window.partitionBy("asset_id").orderBy("window_no")
@@ -1430,26 +1419,3 @@ SELECT asset_id, fingerprint,
        asset_id = MIN(asset_id) OVER (PARTITION BY fingerprint) AS keep
 FROM fps
 """
-
-
-def multimodal_audio_fp_bits(spark: SparkSession,
-                             sf_dir: str) -> DataFrame:
-    """Stage diagnostic (round 10): the PRE-packing delta-sign rows
-    (asset_id, window_no, bit) for the packed window range — gated so
-    a driver artifact separates the lag + integer-cross-multiply stage
-    from the shiftleft packing / fingerprint census downstream (the
-    stage-localization playbook that pinned the HLL divergence in
-    round 9, applied here after the round-8 pow() theory was
-    falsified). Every output value is a small BIGINT, so the query is
-    also immune to the HUGEINT/>2^31 driver rendering class the
-    round-10 census identified."""
-    assets = media_assets(spark, sf_dir).where(
-        F.col("n_bytes") == F.length(F.decode(F.col("media"), "utf-8")))
-    bits = _audio_fp_bits_rel(assets)
-    return (bits
-            .where((F.col("window_no") >= 1)
-                   & (F.col("window_no") <= FP_BITS))
-            .select("asset_id",
-                    F.col("window_no").cast("bigint").alias("window_no"),
-                    F.col("bit").cast("bigint").alias("bit")))
-

@@ -11,8 +11,9 @@ Providers:
   is the oracle-checkable path.
 - ``spacy`` / ``presidio``: gated behind import-try; load lazily ONCE per
   Python worker (executor-global singleton, the standard heavy-model
-  pattern), batch via Arrow in mapInPandas. Absent in this environment —
-  selecting them without the package raises ImportError at plan time.
+  pattern), batch via Arrow in mapInPandas. Selecting one whose package
+  is not installed raises ImportError on the driver while the plan is
+  built (``require_provider``), before any Spark job runs.
 
 Scale notes: the regex provider is a projection (no shuffle, codegen). The
 model providers are mapInPandas stages whose cost is bounded by Arrow
@@ -89,7 +90,7 @@ class SpacyProvider:
     those two families even with the model loaded). Same ``detect_batch``
     contract as FakeHeavyProvider, so it plugs into the identical
     mapInPandas stage. Import-gated: constructing without spaCy raises
-    ImportError (dispatch wraps it with guidance); a missing model
+    ImportError (``require_provider`` guides first); a missing model
     package degrades to a blank pipeline (no entities), exactly like the
     reference's ``_load_spacy`` fallback."""
 
@@ -158,6 +159,22 @@ class PresidioProvider:
         return out
 
 
+#: Model package each import-gated provider loads on the workers.
+_PROVIDER_PACKAGES = {"spacy": "spacy", "presidio": "presidio_analyzer"}
+
+
+def require_provider(name: str | None) -> None:
+    """Check that an import-gated provider's package is installed. Called
+    on the driver while the plan is built, so a missing package fails
+    before any job instead of inside ``mapInPandas`` on the executors."""
+    import importlib.util
+    pkg = _PROVIDER_PACKAGES.get(name)
+    if pkg is not None and importlib.util.find_spec(pkg) is None:
+        raise ImportError(
+            f"NER provider '{name}' needs its model package, which is "
+            f"not installed; use provider='regex' or 'fake_heavy'")
+
+
 def _get_provider(name: str, opts: dict | None = None):
     """Lazy once-per-worker provider construction. ``opts`` are provider
     constructor kwargs (e.g. the LLM provider's ``cache_ttl_minutes`` from
@@ -171,14 +188,9 @@ def _get_provider(name: str, opts: dict | None = None):
             from .llm import FakeLLMProvider
             _PROVIDER_SINGLETONS[key] = FakeLLMProvider(**(opts or {}))
         elif name in ("spacy", "presidio"):
+            require_provider(name)  # a worker may lack what the driver has
             cls = SpacyProvider if name == "spacy" else PresidioProvider
-            try:
-                _PROVIDER_SINGLETONS[key] = cls(**(opts or {}))
-            except ImportError as e:  # pragma: no cover - pkg present/absent
-                raise ImportError(
-                    f"NER provider '{name}' needs its model package, "
-                    f"which is not installed; use provider='regex' or "
-                    f"'fake_heavy'") from e
+            _PROVIDER_SINGLETONS[key] = cls(**(opts or {}))
         else:
             raise ValueError(f"unknown NER provider {name!r}")
     return _PROVIDER_SINGLETONS[key]
@@ -194,6 +206,7 @@ def detect_ner_spans_model(values_df: DataFrame, value_col: str = "value",
     executor-global singleton. Partition-preserving (no shuffle); batch
     size governed by spark.sql.execution.arrow.maxRecordsPerBatch."""
     import pandas as pd
+    require_provider(provider)
     from pyspark.sql.types import (DoubleType, StringType, StructField,
                                    StructType)
 
@@ -333,7 +346,9 @@ def ner_context_signals(contexts: DataFrame,
                         keep_cols: tuple[str, ...] = ("column_ref",
                                                       "match_text"),
                         provider: str = "regex",
-                        provider_opts: dict | None = None) -> DataFrame:
+                        provider_opts: dict | None = None,
+                        confidence_min: float = NER_CONFIDENCE_MIN
+                        ) -> DataFrame:
     """N5: entity-label histogram over redacted contexts -> normalized
     soft signals per context. With the regex provider the entities are the
     provider's three families detected in the (redacted) context; counts
@@ -351,6 +366,7 @@ def ner_context_signals(contexts: DataFrame,
     safe_keep = tuple(alias[k] for k in keep_cols)
     spans = detect_ner_spans(ctx, context_col, safe_keep,
                              provider=provider,
+                             confidence_min=confidence_min,
                              provider_opts=provider_opts)
     counts = spans.groupBy(*safe_keep, "pii_type").agg(
         F.count("*").alias("n"))

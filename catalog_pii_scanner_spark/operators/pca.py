@@ -61,8 +61,7 @@ from .simsearch import DIMS, _exploded_cte
 #: input size above which the partial-Gram relation is checkpointed so
 #: its two merge consumers do not each re-scan the corpus; below it the
 #: fused single job is cheaper (local default measured at sf0.1)
-GRAM_CKPT_MIN_BYTES = int(os.environ.get("CPSS_GRAM_CKPT_MIN_BYTES",
-                                         str(256 << 20)))
+GRAM_CKPT_MIN_BYTES = 256 << 20
 
 
 def _local_input_bytes(path: str) -> int:
@@ -264,7 +263,7 @@ def embed_spectrum_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # local bench input the fused single job beats the extra
     # checkpoint+merge jobs (measured 0.9 s vs 2.9 s at sf0.1 — the
     # pass is 2000 rows and the cost is job fixed overhead). Decide by
-    # input size, threshold env-tunable (CPSS_GRAM_CKPT_MIN_BYTES).
+    # input size.
     if _local_input_bytes(f"{sf_dir}/embeddings.parquet") \
             >= GRAM_CKPT_MIN_BYTES:
         parts = parts.localCheckpoint(eager=True)

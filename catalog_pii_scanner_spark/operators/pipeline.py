@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from .embeddings import EmbedModel, deterministic_model, embed_probs
 from .ensemble import EnsembleWeights, REFERENCE_WEIGHTS, fuse_predictions
-from .ner import ner_context_signals
+from .ner import NER_CONFIDENCE_MIN, ner_context_signals, require_provider
 from .redaction import candidate_contexts
 
 #: fusion input key columns.
@@ -34,11 +34,12 @@ def full_scan_predictions(
     model: EmbedModel | None = None,
     weights: EnsembleWeights = REFERENCE_WEIGHTS,
     decision_threshold: float | None = None,
-    ner_provider: str = "regex",
+    ner_provider: str | None = "regex",
     calibration: dict[str, tuple[float, float]] | None = None,
     llm_cost_cap_usd: float | None = None,
     llm_cache_ttl_minutes: int | None = None,
     precomputed_enriched: DataFrame | None = None,
+    ner_confidence_min: float = NER_CONFIDENCE_MIN,
 ) -> DataFrame:
     """Scored candidates (CAND_COLS + rule_confidence + validated) ->
     fused predictions with the REAL signal path bound. ``model`` defaults
@@ -52,6 +53,10 @@ def full_scan_predictions(
     that fit AND predict (the trained eval) analyze the context/NER/
     embed tree once instead of twice; semantics are unchanged.
 
+    ``ner_provider=None`` builds no N5 stage: every context takes the
+    fusion's missing-signal path (null ``ner_sig``). Otherwise
+    ``ner_confidence_min`` is the provider's N3 gate.
+
     With ``ner_provider='fake_llm'`` the declared LLM runtime knobs are
     ENFORCED, not just validated: ``llm_cost_cap_usd`` budget-gates the
     distinct-context relation through ``llm.llm_budget_plan`` before any
@@ -61,19 +66,22 @@ def full_scan_predictions(
     construction."""
     if precomputed_enriched is not None and (
             ner_provider != "regex" or llm_cost_cap_usd is not None
-            or llm_cache_ttl_minutes is not None):
+            or llm_cache_ttl_minutes is not None
+            or ner_confidence_min != NER_CONFIDENCE_MIN):
         # the enrichment branch is the ONLY consumer of these knobs —
         # a precomputed relation was built under its caller's knobs, so
         # accepting both would silently drop the budget gate / TTL /
-        # provider the caller asked for here.
+        # provider / gate the caller asked for here.
         raise ValueError(
             "precomputed_enriched already fixes the signal path; pass "
-            "ner_provider/llm_cost_cap_usd/llm_cache_ttl_minutes to the "
-            "enrichment that builds it, not alongside it")
+            "ner_provider/llm_cost_cap_usd/llm_cache_ttl_minutes/"
+            "ner_confidence_min to the enrichment that builds it, not "
+            "alongside it")
     enriched = (precomputed_enriched if precomputed_enriched is not None
                 else _enriched_candidates(cands, model, ner_provider,
                                           llm_cost_cap_usd,
-                                          llm_cache_ttl_minutes))
+                                          llm_cache_ttl_minutes,
+                                          ner_confidence_min))
     return fuse_predictions(
         enriched,
         weights=weights,
@@ -87,13 +95,16 @@ def full_scan_predictions(
 def _enriched_candidates(
     cands: DataFrame,
     model: EmbedModel | None,
-    ner_provider: str,
+    ner_provider: str | None,
     llm_cost_cap_usd: float | None = None,
     llm_cache_ttl_minutes: int | None = None,
+    ner_confidence_min: float = NER_CONFIDENCE_MIN,
 ) -> DataFrame:
     """Shared signal plumbing: distinct candidates + context -> N5 signal
     map + E2 probability map joined back by context hash."""
     model = model or deterministic_model()
+    # a missing model package fails here, before the checkpoint job
+    require_provider(ner_provider)
     cands = (
         candidate_contexts(cands)
         .select(*CAND_COLS, "rule_confidence", "validated", "context")
@@ -102,13 +113,18 @@ def _enriched_candidates(
         .localCheckpoint(eager=True)
     )
     ctxs = cands.select("ckey", "context").distinct()
+    emb_map = embed_probs(ctxs, model).select("ckey", "embed_probs")
+    if ner_provider is None:
+        return cands.withColumn(
+            "ner_sig", F.lit(None).cast("map<string,double>")) \
+            .join(emb_map, "ckey", "left")
     ner_ctxs, provider_opts = ctxs, None
     if ner_provider == "fake_llm":
         from .llm import llm_budget_plan
         if llm_cost_cap_usd is not None:
             # cap/price bounds the in-budget set regardless of corpus
             # size, so the semi-join side is broadcast-safe by
-            # construction (same argument as llm.detect_llm_spans).
+            # construction.
             plan = llm_budget_plan(ctxs, id_col="ckey",
                                    text_col="context",
                                    cost_cap_usd=llm_cost_cap_usd)
@@ -122,13 +138,13 @@ def _enriched_candidates(
     ner_map = (
         ner_context_signals(ner_ctxs, keep_cols=("ckey",),
                             provider=ner_provider,
-                            provider_opts=provider_opts)
+                            provider_opts=provider_opts,
+                            confidence_min=ner_confidence_min)
         .groupBy("ckey")
         .agg(F.map_from_entries(
             F.collect_list(F.struct("pii_type", "signal")))
             .alias("ner_sig"))
     )
-    emb_map = embed_probs(ctxs, model).select("ckey", "embed_probs")
     return cands.join(ner_map, "ckey", "left") \
                 .join(emb_map, "ckey", "left")
 

@@ -31,8 +31,9 @@ bit-identical registers and estimates:
   divergence class (the round-7 driver gate proved a double
   ``floor()`` quotient is NOT build-stable even without
   transcendentals). The round-9 stage diagnostics then LOCALIZED the
-  remaining driver divergence: ``sketch_hll_registers`` and
-  ``sketch_hll_rho_parts`` gated green while every query emitting the
+  remaining driver divergence: the registers and rho-parts stages
+  (``hll_registers_sql``, ``hll_rho_parts_sql``) gated green while every
+  query emitting the
   raw ``z_scaled`` accumulator gated red (hash-only; rows+schema
   green), and a census of all 139 oracles showed the red/green
   boundary is exactly "DuckDB HUGEINT output column whose values
@@ -238,7 +239,7 @@ def _hll_reg_ctes(tag: str, rel: str, colexpr: str,
     """vals -> digit split -> (nz, fd) parts -> rho -> per-register
     max, shared by the batch template, the streaming per-batch
     extraction, and the stage-level diagnostics (``{tag}_parts`` is
-    deliberately a named stage so sketch_hll_rho_parts can gate it)."""
+    deliberately a named stage so hll_rho_parts_sql can gate it)."""
     m = HLL_M
     hexd = lambda e: f"(instr({_HEX}, {e}) - 1)"
     return f"""
@@ -353,21 +354,23 @@ def sketch_hll_distinct_oracle_sql() -> str:
 # specifically (rho_parts red), or merge/finalize (registers green,
 # state or the main queries red):
 #
-#   sketch_hll_rho_parts   (col_ref, nz, fd)     value histogram
-#   sketch_hll_registers   (col_ref, register, mrho)   <= 64/m rows
-#   sketch_hll_state       (col_ref, v_zero, z_hi, z_lo, filled)
+#   hll_rho_parts_sql   (col_ref, nz, fd)     value histogram
+#   hll_registers_sql   (col_ref, register, mrho)   <= 64/m rows
+#   hll_state_sql       (col_ref, v_zero, z_hi, z_lo, filled)
 #
 # Round-9 driver artifact: registers + rho_parts GREEN, state RED —
 # extraction and merge are byte-identical on the driver build; the
 # divergence was confined to the raw >2^53 z_scaled OUTPUT, which the
 # round-10 census pinned to the driver fetch path degrading HUGEINT
 # values above 2^31 (module docstring). state now emits the split
-# pair like every other Z consumer.
+# pair like every other Z consumer. Round 11 retired the three
+# queries from the driver contract; the builders stay, checked in
+# tests against an independent Python register reference.
 #
 # Coverage: the four batch-tracked columns plus events.event_id — every
-# column any red HLL query hashes. All three are metadata-sized outputs
+# column any red HLL query hashed. All three are metadata-sized outputs
 # of the same scan/shuffle shape as the sketch itself (<= 64 groups per
-# column), so gating them costs one extra pruned scan per column.
+# column).
 
 #: Batch-tracked columns + the streaming drain's high-cardinality key.
 HLL_DIAG_TRACKED = HLL_TRACKED + (
@@ -441,33 +444,6 @@ def hll_state_sql(dialect: str, rel_prefix: str = "") -> str:
     body = "\nUNION ALL\n".join(rows)
     return (f"WITH {','.join(ctes)}\nSELECT * FROM ({body}) allrows"
             f" ORDER BY col_ref")
-
-
-def _hll_diag_views(spark: SparkSession, sf_dir: str) -> None:
-    for suffix in {s for s, _, _, _ in HLL_DIAG_TRACKED}:
-        spark.read.parquet(f"{sf_dir}/{suffix}.parquet") \
-            .createOrReplaceTempView(f"cpss_hlldg_{suffix}")
-
-
-def sketch_hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Diagnostic: raw (col_ref, register, mrho) sketch state; see
-    hll_registers_sql."""
-    _hll_diag_views(spark, sf_dir)
-    return spark.sql(hll_registers_sql("spark", rel_prefix="cpss_hlldg_"))
-
-
-def sketch_hll_rho_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Diagnostic: (col_ref, nz, fd) value histogram; see
-    hll_rho_parts_sql."""
-    _hll_diag_views(spark, sf_dir)
-    return spark.sql(hll_rho_parts_sql("spark", rel_prefix="cpss_hlldg_"))
-
-
-def sketch_hll_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Diagnostic: merged (col_ref, v_zero, z_hi, z_lo, filled) Z
-    state, estimator division excluded; see hll_state_sql."""
-    _hll_diag_views(spark, sf_dir)
-    return spark.sql(hll_state_sql("spark", rel_prefix="cpss_hlldg_"))
 
 
 #: The streaming drains (HLL + KMV) track two events columns (one

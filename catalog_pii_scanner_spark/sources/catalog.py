@@ -13,8 +13,9 @@ hms.py:76-106). Spark-first equivalent: enumeration stays driver-side
   scale with 1e5+ tables the per-database listing parallelizes via
   ``spark.sparkContext.parallelize(dbs).flatMap(list_tables)``; footers
   here are few and read driver-side.
-- ``spark_catalog_columns``: Spark's own catalog (the HMS analog — Spark
-  embeds a Hive Metastore client, so reference S4 is native).
+- ``hms_catalog_columns``: the tables registered in, and enumerated back
+  through, Spark's own catalog (the HMS analog — Spark embeds a Hive
+  Metastore client, so reference S4 is native).
 - Glue/Unity REST walks would land in the identical schema; their
   protocol-level behaviors (pagination, retry/backoff, TableInput
   sanitization) are driver-side and covered by the fake clients in
@@ -156,20 +157,4 @@ def hms_catalog_columns(spark: SparkSession, sf_dir: str,
                 catalog, schema, base, c.name, dt, c.description,
                 column_ref(catalog, schema, base, c.name),
             ))
-    return spark.createDataFrame(rows, COLUMNS_SCHEMA)
-
-
-def spark_catalog_columns(spark: SparkSession,
-                          catalog: str = "spark") -> DataFrame:
-    """Enumerate Spark's own catalog (databases -> tables -> columns) —
-    the native HMS path (reference S4)."""
-    rows = []
-    for db in spark.catalog.listDatabases():
-        for t in spark.catalog.listTables(db.name):
-            for c in spark.catalog.listColumns(t.name, t.database):
-                rows.append((
-                    catalog, db.name, t.name, c.name, c.dataType,
-                    c.description,
-                    column_ref(catalog, db.name, t.name, c.name),
-                ))
     return spark.createDataFrame(rows, COLUMNS_SCHEMA)

@@ -11,9 +11,9 @@ Spark replaces the whole ladder:
   oracle-checkable; pass ``deterministic=False`` for the reference's random
   flavor (rand(seed) ordering — still reproducible under a fixed seed and
   partitioning, but not engine-portable).
-- ``tablesample_values``: the built-in TABLESAMPLE path for when a fraction
-  of the *rows* (not distinct values) is wanted — maps to a parquet scan
-  that never reads the unsampled row groups.
+- ``athena_sample_column``: the Athena sampler's semantics — WHERE pushed
+  to the scan, a deterministic value-hash fraction as the byte-cap
+  analog, LIMIT n distinct values.
 
 At 100 TB: the melt is a projection (column-pruned parquet scan); the
 distinct shuffle is the dominating cost and is exactly the work requested.
@@ -86,33 +86,11 @@ SELECT column_ref, value FROM (
 """
 
 
-def tablesample_values(spark, sf_dir: str, table: str, column: str,
-                       fraction: float = 0.1, seed: int = 42) -> DataFrame:
-    """Row-level sampling via the native sampler (pushed to the scan)."""
-    return (
-        spark.read.parquet(f"{sf_dir}/{table}.parquet")
-        .sample(fraction=fraction, seed=seed)
-        .select(F.col(column).cast("string").alias("value"))
-        .where(F.col("value").isNotNull())
-    )
-
-
 # --- Athena-analog cost-capped sampler (S6) ---------------------------------
 
 _HEX = "0123456789abcdef"
 #: hash-fraction granularity: 4 md5 hex digits -> [0, 65536).
 _FRACTION_SPACE = 16 ** 4
-
-
-def fraction_for_byte_cap(path: str, bytes_cap: int) -> float:
-    """Translate the reference's BytesScannedCutoffPerQuery workgroup cap
-    (athena.py:138-154) into a scan fraction from parquet FOOTER metadata
-    only: cap / total_compressed_bytes, clamped to (0, 1]."""
-    import pyarrow.parquet as pq
-    md = pq.ParquetFile(path).metadata
-    total = sum(md.row_group(i).total_byte_size
-                for i in range(md.num_row_groups))
-    return max(min(bytes_cap / max(total, 1), 1.0), 0.0)
 
 
 def _hash_bucket_sql(expr: str, dialect: str, salt: str) -> str:
@@ -137,11 +115,9 @@ def athena_sample_column(spark, sf_dir: str, table: str, column: str,
     - ``where`` + IS NOT NULL push down to the parquet scan (the Athena
       WHERE clause; asserted by plan test).
     - ``sample_fraction`` is the BytesScannedCutoffPerQuery analog — a
-      deterministic value-hash fraction predicate (use
-      :func:`fraction_for_byte_cap` to derive it from a byte budget).
-      Deterministic instead of Athena's bucket-random so the oracle
-      checks it; at cluster scale the same predicate prunes work before
-      the distinct shuffle.
+      deterministic value-hash fraction predicate. Deterministic instead
+      of Athena's bucket-random so the oracle checks it; at cluster scale
+      the same predicate prunes work before the distinct shuffle.
     - distinct values, pseudo-random deterministic order (md5 of the
       value — the engine-portable ORDER BY rand()), LIMIT n.
 

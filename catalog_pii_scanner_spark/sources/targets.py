@@ -8,19 +8,15 @@ glue.py:152-159 / unity.py:110-115 / hms.py:83-88 filters).
 Spark-first shape: the same fnmatch semantics in two places —
 driver-side (``match_names``) to prune the table list BEFORE any scan
 job is planned (the cheapest possible filter: unread tables cost
-nothing), and data-plane (``filter_columns``) as an ``rlike`` predicate
-over the canonical columns DataFrame so catalog-frame pipelines keep the
-filter inside the plan (Catalyst pushes it into the enumeration scan
-where the source supports it).
+nothing), and data-plane (``glob_to_rlike``) as an ``rlike`` predicate
+so catalog-frame pipelines keep the filter inside the plan (Catalyst
+pushes it into the enumeration scan where the source supports it).
 """
 
 from __future__ import annotations
 
 import fnmatch
 import re
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
 def parse_target(uri: str) -> tuple[str, str, str]:
@@ -60,15 +56,3 @@ def glob_to_rlike(pattern: str) -> str:
         else:
             out.append(re.escape(ch))
     return "^" + "".join(out) + "$"
-
-
-def filter_columns(cols_df: DataFrame, db_pattern: str = "*",
-                   table_pattern: str = "*") -> DataFrame:
-    """Glob-filter the canonical columns frame on (schema, table) — the
-    data-plane rendering of the reference's enumeration filters."""
-    out = cols_df
-    if db_pattern != "*":
-        out = out.where(F.col("schema").rlike(glob_to_rlike(db_pattern)))
-    if table_pattern != "*":
-        out = out.where(F.col("table").rlike(glob_to_rlike(table_pattern)))
-    return out

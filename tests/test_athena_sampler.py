@@ -1,12 +1,10 @@
 """Athena-analog cost-capped sampler (reference S6, athena.py:97-154):
-WHERE pushdown must reach the parquet scan, the byte cap must translate
-to a scan fraction from footer metadata only, and the fraction + limit
+WHERE pushdown must reach the parquet scan, and the fraction + limit
 must bound the output deterministically."""
 
 from __future__ import annotations
 
-from catalog_pii_scanner_spark.sources.sampler import (
-    athena_sample_column, fraction_for_byte_cap)
+from catalog_pii_scanner_spark.sources.sampler import athena_sample_column
 
 
 def test_where_predicate_pushed_to_scan(spark, sf_dir):
@@ -17,15 +15,6 @@ def test_where_predicate_pushed_to_scan(spark, sf_dir):
     assert "PushedFilters" in plan
     # both the explicit WHERE and the IS NOT NULL reach the scan
     assert "l_quantity" in plan.split("PushedFilters")[1][:300]
-
-
-def test_fraction_for_byte_cap_footer_only(sf_dir):
-    path = f"{sf_dir}/lineitem.parquet"
-    assert fraction_for_byte_cap(path, 10**12) == 1.0
-    frac = fraction_for_byte_cap(path, 10_000)
-    assert 0.0 < frac < 1.0
-    # linear in the cap
-    assert abs(fraction_for_byte_cap(path, 20_000) - 2 * frac) < 1e-9
 
 
 def test_fraction_prunes_and_limit_caps(spark, sf_dir):

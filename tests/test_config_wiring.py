@@ -1,7 +1,8 @@
 """P1/P5/P6 wiring: enabled_types gates rule families end-to-end, the
-decision threshold gates ensemble predictions, and glob targets prune
-tables/columns — the reference's test_rules_advanced.py type-disable case
-(lines 54-69) and cli.py:85-95 target semantics, as Spark pipelines."""
+decision threshold gates ensemble predictions, the ai.ner block shapes
+scan-text's N5 stage, and glob targets prune tables/columns — the
+reference's test_rules_advanced.py type-disable case (lines 54-69) and
+cli.py:85-95 target semantics, as Spark pipelines."""
 
 from __future__ import annotations
 
@@ -11,8 +12,7 @@ from catalog_pii_scanner_spark.config import ConfigError, load_config
 from catalog_pii_scanner_spark.operators.ensemble import fuse_predictions
 from catalog_pii_scanner_spark.operators.findings import scan_values
 from catalog_pii_scanner_spark.operators.rules import RULES, rules_for_types
-from catalog_pii_scanner_spark.sources.targets import (filter_columns,
-                                                       glob_to_rlike,
+from catalog_pii_scanner_spark.sources.targets import (glob_to_rlike,
                                                        match_names,
                                                        parse_target)
 
@@ -91,11 +91,12 @@ def test_match_names_glob():
 
 
 def test_glob_to_rlike_filters_columns(spark):
+    from pyspark.sql import functions as F
     from catalog_pii_scanner_spark.sources.catalog import \
         parquet_catalog_columns
     cols = parquet_catalog_columns(spark, "/root/testdata/sf0.001")
     got = {r.table for r in
-           filter_columns(cols, table_pattern="c*").collect()}
+           cols.where(F.col("table").rlike(glob_to_rlike("c*"))).collect()}
     assert got == {"customer"}
     assert glob_to_rlike("tbl?x") == "^tbl.x$"
     # regex metacharacters in names are escaped, not interpreted
@@ -161,7 +162,9 @@ def test_scan_text_ensemble_honours_ner_provider(spark, capsys,
                                                  monkeypatch):
     """ai.ner.provider reaches scan-text --ensemble: with spaCy absent a
     configured 'spacy' provider fails with the guided error instead of
-    silently running the regex provider."""
+    silently running the regex provider — on the driver, before any
+    Spark job (not inside mapInPandas after the contexts were
+    checkpointed)."""
     try:
         import spacy  # noqa: F401
         pytest.skip("spacy installed: the configured provider would run")
@@ -170,10 +173,80 @@ def test_scan_text_ensemble_honours_ner_provider(spark, capsys,
     import catalog_pii_scanner_spark.cli as cli
     monkeypatch.setattr(cli, "_spark", lambda app: spark)
     monkeypatch.setenv("CPS_AI__NER__PROVIDER", '"spacy"')
-    # the provider loads on the executors, so the ImportError arrives
-    # wrapped in Spark's task-failure error
-    with pytest.raises(Exception, match=(
-            "ImportError: NER provider 'spacy' needs its model package, "
-            "which is not installed; use provider='regex'")):
-        cli.main(["scan-text", "mail a@b.io", "--ensemble"])
+    sc = spark.sparkContext
+    group = "scan-text-missing-ner-package"
+    sc.setJobGroup(group, "scan-text with a missing NER package")
+    try:
+        with pytest.raises(ImportError, match=(
+                "NER provider 'spacy' needs its model package, which is "
+                "not installed; use provider='regex'")):
+            cli.main(["scan-text", "mail a@b.io", "--ensemble"])
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
     assert capsys.readouterr().out == ""
+
+
+def _spy_fusion(monkeypatch):
+    """Record each (enriched relation, keyword arguments) the pipeline
+    hands to the fusion, then fuse as usual."""
+    from catalog_pii_scanner_spark.operators import pipeline
+    calls = []
+    real = pipeline.fuse_predictions
+
+    def spy(enriched, **kw):
+        calls.append((enriched, kw))
+        return real(enriched, **kw)
+
+    monkeypatch.setattr(pipeline, "fuse_predictions", spy)
+    return calls, real
+
+
+def _scan_text_ensemble(spark, capsys, monkeypatch, environ):
+    import json
+    import catalog_pii_scanner_spark.cli as cli
+    monkeypatch.setattr(cli, "_spark", lambda app: spark)
+    for key, value in environ.items():
+        monkeypatch.setenv(key, value)
+    assert cli.main(["scan-text", TEXT, "--ensemble"]) == 0
+    return json.loads(capsys.readouterr().out)
+
+
+def _ner_families(enriched):
+    return {t for r in enriched.select("ner_sig").collect()
+            for t in (r.ner_sig or {})}
+
+
+def test_scan_text_honours_ner_confidence_min(spark, capsys, monkeypatch):
+    """ai.ner.confidence_min is the N5 provider's N3 gate: at 0.95 the
+    regex provider's PHONE_NUMBER (0.90) and PERSON (0.85) spans drop out
+    of every context's ner_sig and EMAIL (0.99) stays."""
+    calls, _ = _spy_fusion(monkeypatch)
+    _scan_text_ensemble(spark, capsys, monkeypatch, {})
+    assert _ner_families(calls[-1][0]) == {"EMAIL", "PHONE_NUMBER",
+                                           "PERSON"}
+    _scan_text_ensemble(spark, capsys, monkeypatch,
+                        {"CPS_AI__NER__CONFIDENCE_MIN": "0.95"})
+    assert _ner_families(calls[-1][0]) == {"EMAIL"}
+
+
+def test_scan_text_ner_disabled_is_null_signal(spark, capsys, monkeypatch):
+    """ai.ner.enabled=false builds no N5 stage: the predictions equal the
+    fusion of the default run's enriched candidates with ner_sig null —
+    the fusion's missing-signal path."""
+    from pyspark.sql import functions as F
+    calls, real_fuse = _spy_fusion(monkeypatch)
+    _scan_text_ensemble(spark, capsys, monkeypatch, {})
+    enriched, kw = calls[-1]
+    want = real_fuse(
+        enriched.withColumn("ner_sig",
+                            F.lit(None).cast("map<string,double>")),
+        **kw).collect()
+    got = _scan_text_ensemble(spark, capsys, monkeypatch,
+                              {"CPS_AI__NER__ENABLED": "false"})
+    assert _ner_families(calls[-1][0]) == set()
+    assert sorted((p["type"], p["text"], p["score"]) for p in got) == \
+        sorted((r.label, r.match_text, round(r.score, 6)) for r in want)
+    assert len(got) == 4

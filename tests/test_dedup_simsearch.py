@@ -463,45 +463,6 @@ def test_ann_ivfpq_matmul_equals_declarative(spark, sf_dir):
         assert mm[key][1] == pytest.approx(cos, abs=2e-6)
 
 
-def test_simhash_pairs_banding_is_complete_vs_bruteforce(spark, tmp_path):
-    """4 byte-bands over the 32-bit simhash with HAMMING_T=3 must find
-    EXACTLY the all-pairs Hamming<=3 set (pigeonhole: <=3 differing bits
-    cannot touch all 4 bands) — banding is blocking, never semantics."""
-    texts = [
-        "the quick brown fox jumps over the lazy dog today",
-        "the quick brown fox jumps over the lazy cat today",   # near-dup
-        "a completely different document about spark engines",
-        "the quick brown fox jumps over the lazy dog today",   # exact dup
-        "spark engines need a completely different document",
-        "alpha beta gamma delta epsilon zeta eta theta iota",
-        "alpha beta gamma delta epsilon zeta eta theta kappa",  # near-dup
-    ]
-    d = _write_docs(spark, tmp_path, texts)
-    sig = {r.doc_id: r.simhash for r in dedup.simhash(spark, d).collect()}
-    want = {}
-    for a, b in itertools.combinations(sorted(sig), 2):
-        h = bin(sig[a] ^ sig[b]).count("1")
-        if h <= dedup.HAMMING_T:
-            want[(a, b)] = h
-    got = {(r.doc_a, r.doc_b): r.hamming
-           for r in dedup.simhash_pairs(spark, d).collect()}
-    assert got == want
-    assert (0, 3) in got and got[(0, 3)] == 0       # exact dup: distance 0
-
-
-def test_simhash_pairs_bucket_cap_drops_whole_buckets(spark, tmp_path):
-    """An identical-text corpus collapses every band bucket past the cap:
-    the candidate join must drop them whole (observable via
-    simhash_excluded_buckets), yielding zero pairs — the recall caveat
-    is explicit, never a partial bucket."""
-    texts = ["same boilerplate text here"] * 6
-    d = _write_docs(spark, tmp_path, texts)
-    assert dedup.simhash_pairs(spark, d, max_bucket=5).count() == 0
-    excl = dedup.simhash_excluded_buckets(spark, d, max_bucket=5).collect()
-    assert len(excl) == dedup.SIMHASH_BANDS
-    assert all(r.n_docs == 6 for r in excl)
-
-
 def test_semdedup_keep_list_verdict_shape(spark, sf_dir):
     """SemDeDup verdict invariants: one row per vector, rep = MIN id of
     the component, reps self-map and are kept, drops exist on the

@@ -104,9 +104,9 @@ MUST_FRONT_BY_ROUND: dict[int, set[str]] = {
     },
     # Round 12 fronts the 43 entries whose latest driver row is r9 —
     # the r9 artifact's 45 rows minus the two retired instruments
-    # (sketch_hll_registers / sketch_hll_rho_parts left queries() in
-    # round 11 with sketch_hll_state and multimodal_audio_fp_bits,
-    # per the PERF.md retirement playbook). The round-11 window held
+    # (the HLL registers and rho-parts stage queries left queries() in
+    # round 11 with the HLL state and audio fingerprint-bits stage
+    # queries, per the PERF.md retirement playbook). The round-11 window held
     # the full 46-entry r8 cohort + the 4 new never-gated entries, so
     # none of these could also be fronted. 43 + up-to-7 r11 reds fit
     # the 50-slot window.
@@ -131,7 +131,7 @@ MUST_FRONT_BY_ROUND: dict[int, set[str]] = {
     },
     # Round 13 fronts the 45 entries whose latest driver row is r10 —
     # the r10 artifact's 50 rows minus the two instruments retired in
-    # round 11 (sketch_hll_state, multimodal_audio_fp_bits) minus the
+    # round 11 (the HLL state and audio fingerprint-bits stages) minus the
     # 3 that round 12's fill slots early-refreshed
     # (eval_trained_metrics, stream_quality_classifier,
     # multimodal_audio_fingerprint). 45 + up-to-5 r12 reds fit the

@@ -1,13 +1,13 @@
 """The ensemble+llm surface (operators/llm.py): cost-cap metering as a
-deterministic plan, TTL response cache, budget-gated detection, and the
-config block the reference declares but never consumes."""
+deterministic plan, TTL response cache, LLM spans merged with rules, and
+the LLM config block, which the reference declares but never consumes."""
 
 from __future__ import annotations
 
 import pytest
 
 from catalog_pii_scanner_spark.operators.llm import (
-    FakeLLMProvider, detect_llm_spans, llm_budget_plan)
+    FakeLLMProvider, llm_budget_plan)
 
 
 def _texts(spark, rows):
@@ -48,29 +48,15 @@ def test_provider_ttl_cache():
     assert (p.model_calls, p.cache_hits) == (2, 1)
 
 
-def test_detect_llm_spans_budget_gated(spark):
-    # two values: the cheap one fits a tiny budget, the expensive one
-    # (500 tokens) exceeds it -> its spans are never produced
-    big = "b@c.org " + " ".join(["pad"] * 499)
-    vals = spark.createDataFrame(
-        [("c1", "a@b.io"), ("c2", big)],
-        "column_ref string, value string")
-    spans = detect_llm_spans(vals, cost_cap_usd=0.0001, price_per_1k=0.03)
-    got = [(r.column_ref, r.pii_type, r.match_text) for r in spans.collect()]
-    assert got == [("c1", "EMAIL", "a@b.io")]
-    # a budget that covers both finds both emails
-    spans_all = detect_llm_spans(vals, cost_cap_usd=1.0)
-    assert sorted(r.match_text for r in spans_all.collect()
-                  if r.pii_type == "EMAIL") == ["a@b.io", "b@c.org"]
-
-
 def test_llm_spans_merge_with_rules(spark):
     from catalog_pii_scanner_spark.operators.findings import scan_values
-    from catalog_pii_scanner_spark.operators.ner import merge_with_rules
+    from catalog_pii_scanner_spark.operators.ner import (detect_ner_spans,
+                                                         merge_with_rules)
     vals = spark.createDataFrame(
         [("c1", "ssn 123-45-6789 mail a@b.io")],
         "column_ref string, value string")
-    merged = merge_with_rules(scan_values(vals), detect_llm_spans(vals))
+    merged = merge_with_rules(scan_values(vals),
+                              detect_ner_spans(vals, provider="fake_llm"))
     by_type = {r.pii_type: r for r in merged.collect()}
     # the LLM stage's 0.95 lifts SSN above its 0.90 rule confidence
     assert by_type["SSN"].merged_score == pytest.approx(0.95)
@@ -122,7 +108,7 @@ def test_llm_config_block():
         load_config(environ={"CPS_AI__MODE": "ensemble+llm"})
     with pytest.raises(ConfigError):  # ranged field
         load_config(environ={"CPS_AI__LLM__ENABLED": "true",
-                             "CPS_AI__LLM__TEMPERATURE": "3.0"})
+                             "CPS_AI__LLM__CACHE_TTL_MINUTES": "-1"})
 
 
 def test_provider_cache_lru_bound_and_sweep():
@@ -190,9 +176,9 @@ def test_full_pipeline_llm_ttl_reaches_provider(spark):
 
 def test_precomputed_enriched_rejects_signal_knobs(spark):
     """r13 review: the enrichment branch is the only consumer of the
-    LLM knobs, so passing precomputed_enriched together with a
-    non-default provider / budget cap / TTL would silently drop the
-    knobs the caller asked for — the contract now fails loudly."""
+    signal knobs, so passing precomputed_enriched together with a
+    non-default provider / budget cap / TTL / NER gate would silently
+    drop the knobs the caller asked for — the contract fails loudly."""
     from catalog_pii_scanner_spark.operators.pipeline import (
         _enriched_candidates, full_scan_predictions, full_scan_raw_scores)
     cands = spark.createDataFrame(
@@ -200,9 +186,10 @@ def test_precomputed_enriched_rejects_signal_knobs(spark):
         "column_ref string, value string, pii_type string, "
         "match_text string, rule_confidence double, validated boolean")
     enriched = _enriched_candidates(cands, None, "regex")
-    for kw in ({"ner_provider": "fake_llm"},
+    for kw in ({"ner_provider": "fake_llm"}, {"ner_provider": None},
                {"llm_cost_cap_usd": 1.0},
-               {"llm_cache_ttl_minutes": 5}):
+               {"llm_cache_ttl_minutes": 5},
+               {"ner_confidence_min": 0.9}):
         with pytest.raises(ValueError, match="precomputed_enriched"):
             full_scan_predictions(cands, precomputed_enriched=enriched,
                                   **kw)

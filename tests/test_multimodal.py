@@ -1,12 +1,12 @@
 """Multimodal binary-column plumbing: schema, Arrow batch shape, fake
-decoder determinism, frame fan-out; the real decoder is an explicit stub."""
+decoder determinism, frame fan-out."""
 
 from __future__ import annotations
 
 import pytest
 
 from catalog_pii_scanner_spark.operators.multimodal import (
-    N_FEATURES, decode_image, extract_features, frame_sample, media_assets)
+    N_FEATURES, extract_features, frame_sample, media_assets)
 
 
 @pytest.fixture(scope="module")
@@ -30,11 +30,6 @@ def test_fake_feature_extraction_deterministic(assets):
     any_vec = next(iter(f1.values()))
     assert len(any_vec) == N_FEATURES
     assert all(0.0 <= v <= 1.0 for v in any_vec)
-
-
-def test_real_decoder_is_stubbed():
-    with pytest.raises(NotImplementedError):
-        decode_image(b"\x89PNG...")
 
 
 def test_frame_sample_fanout(assets):
