@@ -103,8 +103,7 @@ def cmd_scan_text(args) -> int:
         from .operators.ensemble import (EnsembleWeights,
                                          IDENTITY_CALIBRATION,
                                          REFERENCE_WEIGHTS)
-        ner_provider = ("fake_llm"
-                        if cfg.ai.mode == "ensemble+llm" and cfg.ai.llm.enabled
+        ner_provider = ("fake_llm" if cfg.ai.mode == "ensemble+llm"
                         else cfg.ai.ner.provider if cfg.ai.ner.enabled
                         else None)
         # SURVEY §7.6: the reference ships two disagreeing weight sets

@@ -73,7 +73,6 @@ class LLMConfig:
     mode ``ensemble+llm`` runs operators/llm.py's offline provider as the
     N5 stage under the cost cap and cache TTL; the reference's model
     knobs (provider, model, tokens, temperature, redact) drive nothing."""
-    enabled: bool = False
     cost_cap_usd_per_scan: float = 0.50
     cache_ttl_minutes: int = 1440
 
@@ -94,9 +93,6 @@ class AiConfig:
     def __post_init__(self) -> None:
         if self.mode not in ("rules", "ensemble", "ensemble+llm"):
             raise ConfigError(f"unknown ai.mode {self.mode!r}")
-        if self.mode == "ensemble+llm" and not self.llm.enabled:
-            raise ConfigError(
-                "ai.mode 'ensemble+llm' requires ai.llm.enabled=true")
         if self.mode == "ensemble+llm" and not self.ner.enabled:
             # the LLM stage IS the N5 stage in this mode
             raise ConfigError(
@@ -147,13 +143,12 @@ def _deep_merge(base: dict, extra: dict) -> dict:
     return out
 
 
-def _env_overrides(environ: dict[str, str],
-                   prefix: str = ENV_PREFIX) -> dict:
+def _env_overrides(environ: dict[str, str]) -> dict:
     out: dict = {}
     for key, raw in environ.items():
-        if not key.startswith(prefix + "_"):
+        if not key.startswith(ENV_PREFIX + "_"):
             continue
-        path = key[len(prefix) + 1:].lower().split("__")
+        path = key[len(ENV_PREFIX) + 1:].lower().split("__")
         try:
             value: Any = json.loads(raw)
         except json.JSONDecodeError:

@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..oracles import ratio_round_halfup, ratio_round_halfup_guarded
+from ..oracles import ratio_round_halfup_guarded
 
 #: Q1-style cutoff inside the synthetic data's 1995..2001 shipdate range
 #: (prunes ~1/3 of lineitem, so the pushed filter is observable).
@@ -42,10 +42,10 @@ PRICING_CUTOFF = "2000-01-01"
 TOP_CUSTOMERS_K = 25
 
 
-def tpch_pricing_summary(spark: SparkSession, sf_dir: str,
-                         cutoff: str = PRICING_CUTOFF) -> DataFrame:
+def tpch_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = (spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-          .where(F.col("l_shipdate") <= F.lit(cutoff).cast("timestamp")))
+          .where(F.col("l_shipdate")
+                 <= F.lit(PRICING_CUTOFF).cast("timestamp")))
     dec = lambda c: F.col(c).cast("decimal(18,2)")
     disc_price = dec("l_extendedprice") * (F.lit(1).cast("decimal(18,2)")
                                            - dec("l_discount"))
@@ -82,8 +82,7 @@ def tpch_pricing_summary(spark: SparkSession, sf_dir: str,
     )
 
 
-def tpch_pricing_summary_oracle_sql(li_rel: str = "lineitem",
-                                    cutoff: str = PRICING_CUTOFF) -> str:
+def tpch_pricing_summary_oracle_sql() -> str:
     dec = lambda c: f"CAST({c} AS DECIMAL(18,2))"
     disc = (f"({dec('l_extendedprice')} * (CAST(1 AS DECIMAL(18,2)) "
             f"- {dec('l_discount')}))")
@@ -100,8 +99,8 @@ SELECT l_returnflag, l_linestatus,
        {ratio_round_halfup_guarded("duckdb", f"SUM({dec('l_extendedprice')})", "COUNT(*)", num_scale=2)}
          AS avg_price,
        CAST(COUNT(*) AS BIGINT) AS count_order
-FROM {li_rel}
-WHERE l_shipdate <= TIMESTAMP '{cutoff} 00:00:00'
+FROM lineitem
+WHERE l_shipdate <= TIMESTAMP '{PRICING_CUTOFF} 00:00:00'
 GROUP BY l_returnflag, l_linestatus
 """
 
@@ -128,7 +127,7 @@ def top_customers_by_revenue(spark: SparkSession, sf_dir: str,
     return (out.orderBy(F.desc("revenue"), F.asc("custkey")).limit(k))
 
 
-def top_customers_oracle_sql(k: int = TOP_CUSTOMERS_K) -> str:
+def top_customers_oracle_sql() -> str:
     return f"""
 WITH rev AS (
   SELECT o_custkey, SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS r,
@@ -143,7 +142,7 @@ FROM rev v
 JOIN customer c ON c.c_custkey = v.o_custkey
 JOIN nation n ON n.n_nationkey = c.c_nationkey
 ORDER BY revenue DESC, custkey ASC
-LIMIT {k}
+LIMIT {TOP_CUSTOMERS_K}
 """
 
 
@@ -229,8 +228,7 @@ FROM orders GROUP BY o_orderpriority
 CHURN_SINCE = "2001-01-01"
 
 
-def churned_customers(spark: SparkSession, sf_dir: str,
-                      since: str = CHURN_SINCE) -> DataFrame:
+def churned_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Churn report: customers with NO order since the cutoff — the
     LEFT ANTI join shape (Spark's NOT EXISTS). The anti-join's right
     side is the distinct recent-customer set (already reduced before the
@@ -239,7 +237,7 @@ def churned_customers(spark: SparkSession, sf_dir: str,
     nation dim is broadcast.
 
     Output: custkey, c_name, nation, last_order."""
-    cut = F.lit(since).cast("timestamp")
+    cut = F.lit(CHURN_SINCE).cast("timestamp")
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
     cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
     nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
@@ -257,7 +255,7 @@ def churned_customers(spark: SparkSession, sf_dir: str,
                     "last_order"))
 
 
-def churned_customers_oracle_sql(since: str = CHURN_SINCE) -> str:
+def churned_customers_oracle_sql() -> str:
     return f"""
 SELECT CAST(c.c_custkey AS BIGINT) AS custkey, c.c_name,
        n.n_name AS nation, l.last_order
@@ -269,7 +267,7 @@ LEFT JOIN (SELECT o_custkey, MAX(o_orderdate) AS last_order
 WHERE NOT EXISTS (
   SELECT 1 FROM orders o
   WHERE o.o_custkey = c.c_custkey
-    AND o.o_orderdate >= TIMESTAMP '{since} 00:00:00')
+    AND o.o_orderdate >= TIMESTAMP '{CHURN_SINCE} 00:00:00')
 """
 
 
@@ -350,7 +348,7 @@ BASKET_MIN_SUPPORT = 3
 _LIFT_GUARD_N = 2_147_483
 
 
-def basket_pairs_segments(dialect: str, li_rel: str = "lineitem",
+def basket_pairs_segments(dialect: str,
                           min_support: int = BASKET_MIN_SUPPORT
                           ) -> tuple[str, str]:
     """(the ``op`` CTE, the metric CTEs + final SELECT consuming
@@ -359,8 +357,8 @@ def basket_pairs_segments(dialect: str, li_rel: str = "lineitem",
     pair_orders, a_orders, b_orders, confidence_ab (pair/a), lift
     (pair * n_orders / (a * b)). The only dialect split is the
     integer-division token inside the tie-exact confidence ratio."""
-    op_segment = f"""op AS (
-  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM {li_rel}
+    op_segment = """op AS (
+  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem
   WHERE l_orderkey IS NOT NULL AND l_partkey IS NOT NULL
 )"""
     metric_segment = f"""n_ord AS (SELECT COUNT(DISTINCT o) AS n FROM op),
@@ -400,10 +398,9 @@ CROSS JOIN n_ord n
     return op_segment, metric_segment
 
 
-def basket_pairs_sql(dialect: str, li_rel: str = "lineitem",
+def basket_pairs_sql(dialect: str,
                      min_support: int = BASKET_MIN_SUPPORT) -> str:
-    op, metric = basket_pairs_segments(dialect, li_rel,
-                                       min_support=min_support)
+    op, metric = basket_pairs_segments(dialect, min_support=min_support)
     return f"WITH {op},\n{metric}"
 
 

@@ -131,11 +131,10 @@ bpe_vocab_{k} AS (
     return ctes
 
 
-def bpe_merges_sql(dialect: str, docs_rel: str = "documents",
-                   n_merges: int = BPE_MERGES) -> str:
+def bpe_merges_sql(dialect: str, n_merges: int = BPE_MERGES) -> str:
     """Fully-unrolled dual-dialect template: one row per learned merge,
     (it, pa, pb, merged, pair_count), ordered by it."""
-    ctes = _train_ctes(dialect, docs_rel, n_merges)
+    ctes = _train_ctes(dialect, "documents", n_merges)
     rows = [f"""
 SELECT {k} AS it, pa, pb, pa || pb AS merged,
        CAST(cnt AS BIGINT) AS pair_count
@@ -146,20 +145,18 @@ FROM bpe_best_{k}""" for k in range(1, n_merges + 1)]
             f" WHERE pa IS NOT NULL ORDER BY it")
 
 
-def corpus_bpe_merges(spark: SparkSession, sf_dir: str,
-                      n_merges: int = BPE_MERGES) -> DataFrame:
+def corpus_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE merge training, Spark path; the loop itself lives in
     _train_merges (shared with corpus_bpe_encode). Semantics identical
     to bpe_merges_sql (the oracle); see module docstring."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    out = _train_merges(spark, docs, n_merges)
+    out = _train_merges(spark, docs)
     return spark.createDataFrame(
         out, "it int, pa string, pb string, merged string,"
              " pair_count bigint").orderBy("it")
 
 
-def _train_merges(spark: SparkSession, docs: DataFrame,
-                  n_merges: int = BPE_MERGES) -> list[tuple]:
+def _train_merges(spark: SparkSession, docs: DataFrame) -> list[tuple]:
     """The distributed training loop: the corpus collapses to the
     (symbols, count) vocabulary once; each iteration counts pairs
     distributed, collects the ONE best row (bounded driver collect —
@@ -176,7 +173,7 @@ def _train_merges(spark: SparkSession, docs: DataFrame,
                      .alias("s"), "c")
              .localCheckpoint(eager=True))
     out = []
-    for k in range(1, n_merges + 1):
+    for k in range(1, BPE_MERGES + 1):
         arr = F.split("s", " ")
         pairs = (vocab.select(arr.alias("a"), "c")
                  .select("a", "c",
@@ -233,8 +230,7 @@ def _sql_str(s: str) -> str:
 # doc-keyed shuffle. The training loop's collects stay bounded (one
 # row per merge).
 
-def bpe_encode_sql(dialect: str, docs_rel: str = "documents",
-                   n_merges: int = BPE_MERGES) -> str:
+def bpe_encode_sql(dialect: str) -> str:
     """Per-document BPE budget: doc_id, n_tokens (all whitespace
     tokens), n_enc (tokens in the trainer's universe), n_bpe (total
     BPE symbols over encoded tokens). Trains and encodes in one
@@ -250,18 +246,18 @@ def bpe_encode_sql(dialect: str, docs_rel: str = "documents",
                if dialect == "duckdb" else "tok RLIKE '^[a-z0-9]+$'")
     nsym = ("len(string_split(s, ' '))" if dialect == "duckdb"
             else "size(split(s, ' '))")
-    ctes = _train_ctes(dialect, docs_rel, n_merges)
+    ctes = _train_ctes(dialect, "documents", BPE_MERGES)
     ctes.append(f"""
 doc_toks AS (
   SELECT doc_id, tok FROM (
-    SELECT doc_id, {unnest}({split}) AS tok FROM {docs_rel}
+    SELECT doc_id, {unnest}({split}) AS tok FROM documents
   ) _e WHERE tok <> ''
 ),
 encv_0 AS (
   SELECT tok, trim({spaced}) || ' {BPE_EOW}' AS s
   FROM (SELECT DISTINCT tok FROM doc_toks WHERE {matches}) _u
 )""")
-    for k in range(1, n_merges + 1):
+    for k in range(1, BPE_MERGES + 1):
         ctes.append(f"""
 encv_{k} AS (
   SELECT e.tok,
@@ -274,7 +270,7 @@ encv_{k} AS (
 )""")
     ctes.append(f"""
 enc_final AS (
-  SELECT tok, {nsym} AS n_sym FROM encv_{n_merges}
+  SELECT tok, {nsym} AS n_sym FROM encv_{BPE_MERGES}
 )""")
     return (f"WITH {','.join(ctes)}\n"
             f"""SELECT d.doc_id,
@@ -285,14 +281,13 @@ FROM doc_toks d LEFT JOIN enc_final e ON e.tok = d.tok
 GROUP BY d.doc_id""")
 
 
-def corpus_bpe_encode(spark: SparkSession, sf_dir: str,
-                      n_merges: int = BPE_MERGES) -> DataFrame:
+def corpus_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark path: _train_merges once, then the encode map as ONE
     projection over distinct tokens (merge literals chained — Catalyst
     folds the 6 replaces into a single whole-stage-codegen expression),
     broadcast into the per-doc aggregation."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    merges = _train_merges(spark, docs, n_merges)
+    merges = _train_merges(spark, docs)
     doc_toks = (docs.select(
         "doc_id", F.explode(F.split("text", " +")).alias("tok"))
         .where(F.col("tok") != ""))
@@ -312,14 +307,13 @@ def corpus_bpe_encode(spark: SparkSession, sf_dir: str,
                  .alias("n_bpe")))
 
 
-def _merge_chain_expr(pairs: list[tuple[str, str]],
-                      base: str = "s") -> str:
+def _merge_chain_expr(pairs: list[tuple[str, str]]) -> str:
     """The N merge rules folded into ONE chained-replace SQL expression
-    over the spaced symbol column ``base`` — replace/trim/|| are
+    over the spaced symbol column ``s`` — replace/trim/|| are
     dialect-shared, so the same text serves Spark and DuckDB. Shared by
     corpus_bpe_encode (trained merges) and corpus_bpe_apply (frozen
     merges) so the two apply paths can never drift."""
-    expr = base
+    expr = "s"
     for pa, pb in pairs:
         expr = (f"trim(replace(' ' || {expr} || ' ', "
                 f"' ' || {_sql_str(pa)} || ' ' || {_sql_str(pb)} || ' ', "
@@ -352,9 +346,7 @@ FROZEN_MERGES: tuple[tuple[str, str], ...] = (
 )
 
 
-def bpe_apply_sql(dialect: str, docs_rel: str = "documents",
-                  merges: tuple[tuple[str, str], ...] = FROZEN_MERGES
-                  ) -> str:
+def bpe_apply_sql(dialect: str, docs_rel: str = "documents") -> str:
     """Frozen-merges encode template: per-document token budget under
     the pinned tokenizer. Output: doc_id, n_tokens, n_enc, n_bpe —
     the corpus_bpe_encode contract, with the merge table a literal
@@ -370,7 +362,7 @@ def bpe_apply_sql(dialect: str, docs_rel: str = "documents",
                if dialect == "duckdb" else "tok RLIKE '^[a-z0-9]+$'")
     nsym = ("len(string_split(s2, ' '))" if dialect == "duckdb"
             else "size(split(s2, ' '))")
-    chain = _merge_chain_expr(list(merges))
+    chain = _merge_chain_expr(list(FROZEN_MERGES))
     return f"""
 WITH doc_toks AS (
   SELECT doc_id, tok FROM (
@@ -393,9 +385,7 @@ FROM doc_toks d LEFT JOIN enc_final e ON e.tok = d.tok
 GROUP BY d.doc_id"""
 
 
-def corpus_bpe_apply(spark: SparkSession, sf_dir: str,
-                     merges: tuple[tuple[str, str], ...] = FROZEN_MERGES
-                     ) -> DataFrame:
+def corpus_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark path: encode-only under FROZEN_MERGES — the distinct-token
     encode map with the merge chain folded into one whole-stage-codegen
     projection, broadcast into the per-doc aggregation. No training
@@ -410,7 +400,7 @@ def corpus_bpe_apply(spark: SparkSession, sf_dir: str,
            .select("tok").distinct()
            .select("tok", F.concat(F.trim(spaced),
                                    F.lit(f" {BPE_EOW}")).alias("s")))
-    expr = _merge_chain_expr(list(merges))
+    expr = _merge_chain_expr(list(FROZEN_MERGES))
     enc = enc.selectExpr("tok", f"size(split({expr}, ' ')) AS n_sym")
     return (doc_toks.join(F.broadcast(enc), "tok", "left")
             .groupBy("doc_id")

@@ -48,36 +48,34 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
-def doc_kgrams(docs: DataFrame, k: int,
-               cap: int = MAX_SHINGLE_TOKENS) -> DataFrame:
-    """(doc_id, gram) word k-grams over the first ``cap`` tokens, via
+def doc_kgrams(docs: DataFrame, k: int) -> DataFrame:
+    """(doc_id, gram) word k-grams over the first MAX_SHINGLE_TOKENS
+    tokens, via
     posexplode + lead window (see module docstring for why not HOF).
     Delegates to :func:`doc_kgrams_pos` (Catalyst prunes the unused pos
     column) so the kgram semantics have a single definition."""
-    return doc_kgrams_pos(docs, k, cap).select("doc_id", "gram")
+    return doc_kgrams_pos(docs, k).select("doc_id", "gram")
 
 
-def _kgram_sql_duckdb(k: int, text_col: str = "text",
-                      cap: int = MAX_SHINGLE_TOKENS) -> str:
+def _kgram_sql_duckdb(k: int) -> str:
     """DuckDB ARRAY of word k-grams (mirrors dedup._shingles_sql)."""
     gram = " || ' ' || ".join(
         f"list_extract(t, CAST(i + {j + 1} AS INT))" for j in range(k))
-    toks = f"(regexp_split_to_array({text_col}, ' +'))[1:{cap}]"
+    toks = f"(regexp_split_to_array(text, ' +'))[1:{MAX_SHINGLE_TOKENS}]"
     return (f"(SELECT list_transform(range(0, greatest(len(t) - {k - 1},"
             f" 0)), i -> {gram}) FROM (SELECT {toks} AS t) _s)")
 
 
 # --- benchmark decontamination ----------------------------------------------
 
-def decontaminate_docs(docs: DataFrame, k: int = DECON_K,
-                       bench_mod: int = DECON_BENCH_MOD) -> DataFrame:
+def decontaminate_docs(docs: DataFrame) -> DataFrame:
     """Flag training documents sharing any k-gram with the benchmark set
-    (docs whose doc_id % bench_mod == 0). Output one row per TRAINING
+    (docs whose doc_id % DECON_BENCH_MOD == 0). Output one row per TRAINING
     doc: (doc_id, n_hits, contaminated) where n_hits counts the distinct
     shared k-grams. The benchmark-gram relation is small at any corpus
     scale, so the hit join broadcasts it (AQE)."""
-    grams = doc_kgrams(docs, k).distinct()
-    is_bench = (F.col("doc_id") % bench_mod) == 0
+    grams = doc_kgrams(docs, DECON_K).distinct()
+    is_bench = (F.col("doc_id") % DECON_BENCH_MOD) == 0
     bench = grams.where(is_bench).select("gram").distinct()
     hits = (grams.where(~is_bench).join(bench, "gram")
             .groupBy("doc_id").agg(F.count("*").alias("hits")))
@@ -98,8 +96,7 @@ def decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 NOVELTY_K = 8
 
 
-def ngram_novelty_docs(docs: DataFrame, k: int = NOVELTY_K,
-                       bench_mod: int = DECON_BENCH_MOD) -> DataFrame:
+def ngram_novelty_docs(docs: DataFrame, k: int = NOVELTY_K) -> DataFrame:
     """Per-BENCHMARK-doc novelty audit — the inverse direction of
     :func:`decontaminate_docs` (which flags training docs): for each
     eval doc, how many of its distinct k-grams already appear anywhere
@@ -122,7 +119,7 @@ def ngram_novelty_docs(docs: DataFrame, k: int = NOVELTY_K,
     FRONT_50 is exactly full and a never-gated entry may not be
     parked — tests/test_entry_contract.py rule 1)."""
     grams = doc_kgrams(docs, k).distinct()
-    is_bench = (F.col("doc_id") % bench_mod) == 0
+    is_bench = (F.col("doc_id") % DECON_BENCH_MOD) == 0
     bench = grams.where(is_bench)
     train = grams.where(~is_bench).select("gram").distinct()
     per_doc = bench.groupBy("doc_id").agg(
@@ -147,19 +144,19 @@ def corpus_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ngram_novelty_docs(_docs(spark, sf_dir))
 
 
-def ngram_novelty_oracle_sql(docs_rel: str = "documents",
-                             k: int = NOVELTY_K,
-                             bench_mod: int = DECON_BENCH_MOD) -> str:
+def ngram_novelty_oracle_sql() -> str:
     novelty = ratio_round_halfup_guarded(
         "duckdb", "p.n_grams - COALESCE(s.n_seen, 0)", "p.n_grams")
     return f"""
 WITH grams AS (
   SELECT DISTINCT doc_id, gram FROM (
-    SELECT doc_id, unnest({_kgram_sql_duckdb(k)}) AS gram
-    FROM {docs_rel}) _e
+    SELECT doc_id, unnest({_kgram_sql_duckdb(NOVELTY_K)}) AS gram
+    FROM documents) _e
 ),
-bench AS (SELECT doc_id, gram FROM grams WHERE doc_id % {bench_mod} = 0),
-train AS (SELECT DISTINCT gram FROM grams WHERE doc_id % {bench_mod} <> 0),
+bench AS (SELECT doc_id, gram FROM grams
+          WHERE doc_id % {DECON_BENCH_MOD} = 0),
+train AS (SELECT DISTINCT gram FROM grams
+          WHERE doc_id % {DECON_BENCH_MOD} <> 0),
 per_doc AS (
   SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_grams
   FROM bench GROUP BY doc_id
@@ -176,25 +173,24 @@ FROM per_doc p LEFT JOIN seen s ON s.doc_id = p.doc_id
 """
 
 
-def decontaminate_oracle_sql(docs_rel: str = "documents",
-                             k: int = DECON_K,
-                             bench_mod: int = DECON_BENCH_MOD) -> str:
+def decontaminate_oracle_sql(docs_rel: str = "documents") -> str:
     return f"""
 WITH grams AS (
   SELECT DISTINCT doc_id, gram FROM (
-    SELECT doc_id, unnest({_kgram_sql_duckdb(k)}) AS gram
+    SELECT doc_id, unnest({_kgram_sql_duckdb(DECON_K)}) AS gram
     FROM {docs_rel}) _e
 ),
-bench AS (SELECT DISTINCT gram FROM grams WHERE doc_id % {bench_mod} = 0),
+bench AS (SELECT DISTINCT gram FROM grams
+          WHERE doc_id % {DECON_BENCH_MOD} = 0),
 hits AS (
   SELECT g.doc_id, COUNT(*) AS hits
   FROM grams g JOIN bench b USING (gram)
-  WHERE g.doc_id % {bench_mod} <> 0 GROUP BY g.doc_id
+  WHERE g.doc_id % {DECON_BENCH_MOD} <> 0 GROUP BY g.doc_id
 )
 SELECT d.doc_id, CAST(COALESCE(h.hits, 0) AS BIGINT) AS n_hits,
        COALESCE(h.hits, 0) > 0 AS contaminated
 FROM {docs_rel} d LEFT JOIN hits h ON d.doc_id = h.doc_id
-WHERE d.doc_id % {bench_mod} <> 0
+WHERE d.doc_id % {DECON_BENCH_MOD} <> 0
 """
 
 
@@ -278,16 +274,15 @@ def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stratified_sample_docs(_docs(spark, sf_dir))
 
 
-def stratified_sample_oracle_sql(docs_rel: str = "documents",
-                                 quota: int = STRATA_QUOTA) -> str:
+def stratified_sample_oracle_sql() -> str:
     return f"""
 SELECT lang, CAST(rk AS BIGINT) AS rk, doc_id FROM (
   SELECT lang, doc_id,
          row_number() OVER (PARTITION BY lang
                             ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id)
            AS rk
-  FROM {docs_rel}
-) WHERE rk <= {quota}
+  FROM documents
+) WHERE rk <= {STRATA_QUOTA}
 """
 
 
@@ -331,19 +326,18 @@ def tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tfidf_keywords_docs(_docs(spark, sf_dir))
 
 
-def tfidf_keywords_oracle_sql(docs_rel: str = "documents",
-                              k: int = TFIDF_TOPK) -> str:
+def tfidf_keywords_oracle_sql() -> str:
     return f"""
 WITH toks AS (
   SELECT doc_id,
          unnest(regexp_split_to_array(lower(text), ' +')) AS token
-  FROM {docs_rel}
+  FROM documents
 ),
 tf AS (SELECT doc_id, token, COUNT(*) AS tf FROM toks
        WHERE token <> '' GROUP BY doc_id, token),
 dl AS (SELECT doc_id, SUM(tf) AS n_tok FROM tf GROUP BY doc_id),
 dfq AS (SELECT token, COUNT(*) AS df FROM tf GROUP BY token),
-nd AS (SELECT COUNT(*) AS n_docs FROM {docs_rel}),
+nd AS (SELECT COUNT(*) AS n_docs FROM documents),
 scored AS (
   SELECT t.doc_id, t.token,
          round((t.tf / CAST(d.n_tok AS DOUBLE))
@@ -358,7 +352,7 @@ SELECT doc_id, CAST(rk AS BIGINT) AS rk, token, tfidf FROM (
   SELECT *, row_number() OVER (PARTITION BY doc_id
                                ORDER BY tfidf DESC, token ASC) AS rk
   FROM scored
-) WHERE rk <= {k}
+) WHERE rk <= {TFIDF_TOPK}
 """
 
 
@@ -402,8 +396,7 @@ def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pack_sequences_docs(_docs(spark, sf_dir))
 
 
-def pack_sequences_oracle_sql(docs_rel: str = "documents",
-                              budget: int = TOKEN_BUDGET) -> str:
+def pack_sequences_oracle_sql() -> str:
     """Oracle = the semantic definition: ONE global running sum over the
     md5 order (fine at oracle scale; the engine's two-level bucket sum is
     the distributed evaluation of this exact expression)."""
@@ -411,7 +404,7 @@ def pack_sequences_oracle_sql(docs_rel: str = "documents",
 WITH base AS (
   SELECT doc_id, md5(CAST(doc_id AS VARCHAR)) AS h,
          CAST(len(regexp_split_to_array(text, ' +')) AS BIGINT) AS n_tokens
-  FROM {docs_rel}
+  FROM documents
 ),
 cum AS (
   SELECT doc_id, n_tokens,
@@ -421,10 +414,10 @@ cum AS (
   FROM base
 )
 SELECT doc_id, CAST(start_tok AS BIGINT) AS start_tok, n_tokens,
-       CAST(floor(start_tok / {budget}) AS BIGINT) AS seq_id,
+       CAST(floor(start_tok / {TOKEN_BUDGET}) AS BIGINT) AS seq_id,
        CASE WHEN n_tokens > 0
-            THEN floor(start_tok / {budget})
-                 <> floor((start_tok + n_tokens - 1) / {budget})
+            THEN floor(start_tok / {TOKEN_BUDGET})
+                 <> floor((start_tok + n_tokens - 1) / {TOKEN_BUDGET})
             ELSE FALSE END AS straddles
 FROM cum
 """
@@ -469,22 +462,21 @@ def temperature_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return temperature_sample_docs(_docs(spark, sf_dir))
 
 
-def temperature_sample_oracle_sql(docs_rel: str = "documents",
-                                  scale: float = MIXTURE_SCALE) -> str:
+def temperature_sample_oracle_sql() -> str:
     return f"""
 WITH quotas AS (
   SELECT source,
          greatest(CAST(1 AS BIGINT),
-                  CAST(floor(sqrt(CAST(COUNT(*) AS DOUBLE)) * {scale})
+                  CAST(floor(sqrt(CAST(COUNT(*) AS DOUBLE)) * {MIXTURE_SCALE})
                        AS BIGINT)) AS quota
-  FROM {docs_rel} GROUP BY source
+  FROM documents GROUP BY source
 ),
 ranked AS (
   SELECT source, doc_id,
          row_number() OVER (PARTITION BY source
                             ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id)
            AS rk
-  FROM {docs_rel}
+  FROM documents
 )
 SELECT r.source, CAST(r.rk AS BIGINT) AS rk, r.doc_id, q.quota
 FROM ranked r JOIN quotas q USING (source)
@@ -500,9 +492,7 @@ MIN_QUALITY = 0.65
 MAX_DUP_FRAC = 0.05
 
 
-def curate_docs(docs: DataFrame, spark: SparkSession,
-                min_quality: float = MIN_QUALITY,
-                max_dup_frac: float = MAX_DUP_FRAC) -> DataFrame:
+def curate_docs(docs: DataFrame, spark: SparkSession) -> DataFrame:
     """The corpus-level flagship composition (the curation analog of the
     scan family's pii_full_pipeline): quality scoring + within-doc
     repetition + benchmark decontamination fused into one keep/drop
@@ -521,8 +511,8 @@ def curate_docs(docs: DataFrame, spark: SparkSession,
     out = (decon.join(quality, "doc_id").join(rep, "doc_id"))
     reason = (
         F.when(F.col("contaminated"), F.lit("contaminated"))
-        .when(F.col("dup_gram_frac") > max_dup_frac, F.lit("repetitive"))
-        .when(F.col("quality_score") < min_quality, F.lit("low_quality")))
+        .when(F.col("dup_gram_frac") > MAX_DUP_FRAC, F.lit("repetitive"))
+        .when(F.col("quality_score") < MIN_QUALITY, F.lit("low_quality")))
     return out.select(
         "doc_id", "quality_score", "dup_gram_frac", "contaminated",
         reason.isNull().alias("keep"), reason.alias("drop_reason"))
@@ -532,9 +522,7 @@ def curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return curate_docs(_docs(spark, sf_dir), spark)
 
 
-def curate_oracle_sql(docs_rel: str = "documents",
-                      min_quality: float = MIN_QUALITY,
-                      max_dup_frac: float = MAX_DUP_FRAC) -> str:
+def curate_oracle_sql(docs_rel: str = "documents") -> str:
     from .textstats import doc_quality_sql
     return f"""
 WITH quality AS (
@@ -549,8 +537,8 @@ decon AS (
 fused AS (
   SELECT d.doc_id, q.quality_score, r.dup_gram_frac, d.contaminated,
          CASE WHEN d.contaminated THEN 'contaminated'
-              WHEN r.dup_gram_frac > {max_dup_frac} THEN 'repetitive'
-              WHEN q.quality_score < {min_quality} THEN 'low_quality'
+              WHEN r.dup_gram_frac > {MAX_DUP_FRAC} THEN 'repetitive'
+              WHEN q.quality_score < {MIN_QUALITY} THEN 'low_quality'
               END AS drop_reason
   FROM decon d JOIN quality q USING (doc_id) JOIN rep r USING (doc_id)
 )
@@ -573,9 +561,9 @@ def _avg_cost_halfup(n_col: str):
                                      num_scale=6))
 
 
-def _avg_cost_halfup_sql(n_expr: str = "COUNT(*)") -> str:
+def _avg_cost_halfup_sql() -> str:
     """DuckDB twin of _avg_cost_halfup over SUM(cost)."""
-    return ratio_round_halfup("duckdb", "SUM(cost)", n_expr, num_scale=6)
+    return ratio_round_halfup("duckdb", "SUM(cost)", "COUNT(*)", num_scale=6)
 
 
 def unigram_logprob_docs(docs: DataFrame) -> DataFrame:
@@ -612,12 +600,12 @@ def unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     return unigram_logprob_docs(_docs(spark, sf_dir))
 
 
-def unigram_logprob_oracle_sql(docs_rel: str = "documents") -> str:
+def unigram_logprob_oracle_sql() -> str:
     return f"""
 WITH toks AS (
   SELECT doc_id,
          unnest(regexp_split_to_array(lower(text), ' +')) AS token
-  FROM {docs_rel}
+  FROM documents
 ),
 toks_ok AS (SELECT doc_id, token FROM toks WHERE token <> ''),
 vocab AS (SELECT token, COUNT(*) AS tok_n FROM toks_ok GROUP BY token),
@@ -681,12 +669,12 @@ def bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bigram_logprob_docs(_docs(spark, sf_dir))
 
 
-def bigram_logprob_oracle_sql(docs_rel: str = "documents") -> str:
+def bigram_logprob_oracle_sql() -> str:
     return f"""
 WITH toks0 AS (
   SELECT doc_id, generate_subscripts(toks, 1) AS pos, unnest(toks) AS token
   FROM (SELECT doc_id, regexp_split_to_array(lower(text), ' +') AS toks
-        FROM {docs_rel}) _t
+        FROM documents) _t
 ),
 toks AS (SELECT doc_id, pos, token FROM toks0 WHERE token <> ''),
 big0 AS (
@@ -733,17 +721,16 @@ def vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return vocab_topk_docs(_docs(spark, sf_dir))
 
 
-def vocab_topk_oracle_sql(docs_rel: str = "documents",
-                          k: int = VOCAB_TOPK) -> str:
+def vocab_topk_oracle_sql() -> str:
     return f"""
 SELECT row_number() OVER (ORDER BY n DESC, token ASC) AS rk, token, n
 FROM (
   SELECT token, COUNT(*) AS n FROM (
     SELECT unnest(regexp_split_to_array(lower(text), ' +')) AS token
-    FROM {docs_rel}) _e
+    FROM documents) _e
   WHERE token <> '' GROUP BY token
 )
-QUALIFY rk <= {k}
+QUALIFY rk <= {VOCAB_TOPK}
 """
 
 
@@ -753,20 +740,20 @@ QUALIFY rk <= {k}
 SPLIT_FRACS = (("train", 0.90), ("val", 0.05), ("test", 0.05))
 
 
-def _split_bounds(fracs=SPLIT_FRACS) -> list[tuple[str, str]]:
+def _split_bounds() -> list[tuple[str, str]]:
     """Cumulative fraction boundaries as 8-hex-digit strings: a doc goes
     to the first split whose boundary exceeds the doc's md5-prefix. Hex
     STRING comparison avoids any cross-engine numeric parsing — both
     engines produce the identical lowercase digest."""
     out, acc = [], 0.0
-    for name, frac in fracs:
+    for name, frac in SPLIT_FRACS:
         acc += frac
         out.append((name, format(min(int(acc * 16 ** 8), 16 ** 8 - 1),
                                  "08x")))
     return out
 
 
-def split_docs(docs: DataFrame, fracs=SPLIT_FRACS) -> DataFrame:
+def split_docs(docs: DataFrame) -> DataFrame:
     """Reproducible corpus split: doc -> split by the first 8 hex chars
     of md5(doc_id) against cumulative-fraction boundaries. Hash-range
     (not row_number) assignment: stable under corpus growth — adding
@@ -776,7 +763,7 @@ def split_docs(docs: DataFrame, fracs=SPLIT_FRACS) -> DataFrame:
     Output: doc_id, bucket (the hex prefix), split."""
     h = F.substring(F.md5(F.col("doc_id").cast("string")
                           .cast("binary")), 1, 8)
-    bounds = _split_bounds(fracs)
+    bounds = _split_bounds()
     # CASE chain in declaration order (first matching boundary wins)
     case = None
     for name, bound in bounds[:-1]:
@@ -792,9 +779,8 @@ def corpus_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     return split_docs(_docs(spark, sf_dir))
 
 
-def corpus_split_oracle_sql(docs_rel: str = "documents",
-                            fracs=SPLIT_FRACS) -> str:
-    bounds = _split_bounds(fracs)
+def corpus_split_oracle_sql() -> str:
+    bounds = _split_bounds()
     whens = " ".join(
         f"WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) < '{b}' "
         f"THEN '{n}'" for n, b in bounds[:-1])
@@ -802,7 +788,7 @@ def corpus_split_oracle_sql(docs_rel: str = "documents",
 SELECT doc_id,
        substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) AS bucket,
        CASE {whens} ELSE '{bounds[-1][0]}' END AS split
-FROM {docs_rel}
+FROM documents
 """
 
 
@@ -850,11 +836,11 @@ def corpus_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     return char_entropy_docs(_docs(spark, sf_dir))
 
 
-def char_entropy_oracle_sql(docs_rel: str = "documents") -> str:
-    return f"""
+def char_entropy_oracle_sql() -> str:
+    return """
 WITH chars AS (
   SELECT doc_id, substr(text, CAST(i AS INT), 1) AS ch
-  FROM {docs_rel}, LATERAL (
+  FROM documents, LATERAL (
     SELECT unnest(range(1, length(text) + 1)) AS i) _u
   WHERE substr(text, CAST(i AS INT), 1) <> ''
 ),
@@ -890,15 +876,14 @@ FROM terms GROUP BY doc_id
 SUBSTR_W = 8
 
 
-def doc_kgrams_pos(docs: DataFrame, k: int,
-                   cap: int = MAX_SHINGLE_TOKENS) -> DataFrame:
+def doc_kgrams_pos(docs: DataFrame, k: int) -> DataFrame:
     """(doc_id, pos, gram): the kgram construction with the window's
     start-token position kept (needed for run merging).
     :func:`doc_kgrams` delegates here so the tokenization/cap semantics
     live in exactly one place."""
     toks = docs.select(
         "doc_id", F.posexplode(F.split("text", " +")).alias("pos", "tok"))
-    toks = toks.where(F.col("pos") < cap)
+    toks = toks.where(F.col("pos") < MAX_SHINGLE_TOKENS)
     w = Window.partitionBy("doc_id").orderBy("pos")
     leads = [F.lead("tok", i).over(w).alias(f"_t{i}") for i in range(1, k)]
     out = toks.select("doc_id", "pos", "tok", *leads)
@@ -909,8 +894,7 @@ def doc_kgrams_pos(docs: DataFrame, k: int,
                       F.concat_ws(" ", *parts).alias("gram"))
 
 
-def substring_dup_docs(docs: DataFrame, w: int = SUBSTR_W,
-                       cap: int = MAX_SHINGLE_TOKENS) -> DataFrame:
+def substring_dup_docs(docs: DataFrame, w: int = SUBSTR_W) -> DataFrame:
     """Per-doc cross-document exact-substring stats: over all W-token
     windows, count those whose text occurs in at least one OTHER
     document, plus the longest consecutive duplicated run (in windows;
@@ -941,7 +925,7 @@ def substring_dup_docs(docs: DataFrame, w: int = SUBSTR_W,
     # pre-window filter defeats ReusedExchange), so it stays persisted.
     wg = Window.partitionBy("g")
     flagged = (doc_kgrams_pos(docs.where(F.col("text").isNotNull()),
-                              w, cap)
+                              w)
                .select("doc_id", "pos", F.md5("gram").alias("g"))
                .select("doc_id", "pos",
                        (F.min("doc_id").over(wg)
@@ -973,21 +957,21 @@ def substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return substring_dup_docs(_docs(spark, sf_dir))
 
 
-def substring_dedup_oracle_sql(docs_rel: str = "documents",
-                               w: int = SUBSTR_W,
-                               cap: int = MAX_SHINGLE_TOKENS) -> str:
+def substring_dedup_oracle_sql() -> str:
     gram = " || ' ' || ".join(
-        f"list_extract(t, CAST(pos + {j + 1} AS INT))" for j in range(w))
+        f"list_extract(t, CAST(pos + {j + 1} AS INT))"
+        for j in range(SUBSTR_W))
     return f"""
 WITH base AS (
-  SELECT doc_id, (regexp_split_to_array(text, ' +'))[1:{cap}] AS t
-  FROM {docs_rel} WHERE text IS NOT NULL
+  SELECT doc_id,
+         (regexp_split_to_array(text, ' +'))[1:{MAX_SHINGLE_TOKENS}] AS t
+  FROM documents WHERE text IS NOT NULL
 ),
 wnd AS (
   SELECT doc_id, pos, md5({gram}) AS g
   FROM (
     SELECT doc_id, t,
-           unnest(range(0, greatest(len(t) - {w - 1}, 0))) AS pos
+           unnest(range(0, greatest(len(t) - {SUBSTR_W - 1}, 0))) AS pos
     FROM base
   )
 ),
@@ -1057,9 +1041,7 @@ BM25_QUERIES: tuple[tuple[int, str], ...] = (
 
 def bm25_topk_docs(docs: DataFrame,
                    queries: tuple[tuple[int, str], ...] = BM25_QUERIES,
-                   k: int = BM25_TOPK, k1: float = BM25_K1,
-                   b: float = BM25_B,
-                   salt: int = BM25_SALT) -> DataFrame:
+                   k: int = BM25_TOPK) -> DataFrame:
     """Top-k docs per query by BM25 (Lucene-style non-negative IDF:
     ln(1 + (N - df + 0.5)/(df + 0.5))). Determinism across engines: each
     term's contribution is rounded to 1e-6 and summed as DECIMAL(28,6)
@@ -1090,11 +1072,11 @@ def bm25_topk_docs(docs: DataFrame,
     idf = F.log(F.lit(1.0)
                 + (F.col("n_docs") - F.col("df") + 0.5)
                 / (F.col("df") + 0.5))
-    norm = (F.col("tf") + F.lit(k1)
-            * (F.lit(1.0 - b)
-               + F.lit(b) * F.col("dl")
+    norm = (F.col("tf") + F.lit(BM25_K1)
+            * (F.lit(1.0 - BM25_B)
+               + F.lit(BM25_B) * F.col("dl")
                / (F.col("dl_sum") / F.col("n_docs").cast("double"))))
-    contrib = F.round(idf * F.col("tf") * F.lit(k1 + 1.0) / norm, 6) \
+    contrib = F.round(idf * F.col("tf") * F.lit(BM25_K1 + 1.0) / norm, 6) \
         .cast("decimal(28,6)")
     scored = (
         tf.join(F.broadcast(terms), "token")
@@ -1105,9 +1087,9 @@ def bm25_topk_docs(docs: DataFrame,
         .agg(F.sum(contrib).alias("s"))
         .select("query_id", "doc_id",
                 F.round(F.col("s").cast("double"), 6).alias("score")))
-    # two-phase top-k: partial per (query, doc_id % salt), then global
+    # two-phase top-k: partial per (query, doc_id % BM25_SALT), then global
     wpart = Window.partitionBy("query_id",
-                               F.pmod(F.col("doc_id"), F.lit(salt))) \
+                               F.pmod(F.col("doc_id"), F.lit(BM25_SALT))) \
         .orderBy(F.desc("score"), F.asc("doc_id"))
     part = (scored.withColumn("pr", F.row_number().over(wpart))
             .where(F.col("pr") <= k).drop("pr"))
@@ -1122,18 +1104,14 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bm25_topk_docs(_docs(spark, sf_dir))
 
 
-def bm25_topk_oracle_sql(docs_rel: str = "documents",
-                         queries: tuple[tuple[int, str], ...]
-                         = BM25_QUERIES,
-                         k: int = BM25_TOPK, k1: float = BM25_K1,
-                         b: float = BM25_B) -> str:
-    terms = sorted({(qid, t) for qid, q in queries for t in q.split()})
+def bm25_topk_oracle_sql() -> str:
+    terms = sorted({(qid, t) for qid, q in BM25_QUERIES for t in q.split()})
     values = ", ".join(f"({qid}, '{t}')" for qid, t in terms)
     return f"""
 WITH toks AS (
   SELECT doc_id,
          unnest(regexp_split_to_array(lower(text), ' +')) AS token
-  FROM {docs_rel}
+  FROM documents
 ),
 tf AS (SELECT doc_id, token, COUNT(*) AS tf FROM toks
        WHERE token <> '' GROUP BY doc_id, token),
@@ -1146,8 +1124,8 @@ scored AS (
          round(CAST(SUM(
            CAST(round(
              ln(1.0 + (s.n_docs - q.df + 0.5) / (q.df + 0.5))
-             * f.tf * {k1 + 1.0}
-             / (f.tf + {k1} * ({1.0 - b} + {b} * d.dl
+             * f.tf * {BM25_K1 + 1.0}
+             / (f.tf + {BM25_K1} * ({1.0 - BM25_B} + {BM25_B} * d.dl
                 / (s.dl_sum / CAST(s.n_docs AS DOUBLE)))), 6)
            AS DECIMAL(28,6))) AS DOUBLE), 6) AS score
   FROM tf f
@@ -1163,7 +1141,7 @@ FROM (
   SELECT *, row_number() OVER (PARTITION BY query_id
                                ORDER BY score DESC, doc_id ASC) AS rank
   FROM scored
-) WHERE rank <= {k}
+) WHERE rank <= {BM25_TOPK}
 """
 
 
@@ -1183,15 +1161,14 @@ CHUNK_STRIDE = 48
 
 
 def chunk_overlap_docs(docs: DataFrame, size: int = CHUNK_TOKENS,
-                       stride: int = CHUNK_STRIDE,
-                       cap: int = MAX_SHINGLE_TOKENS) -> DataFrame:
+                       stride: int = CHUNK_STRIDE) -> DataFrame:
     """(doc_id, chunk_no, n_tokens, chunk_text): token windows
-    [c*stride, c*stride + size) over the first ``cap`` whitespace
-    tokens; the last window may be short; empty/NULL docs emit no
+    [c*stride, c*stride + size) over the first MAX_SHINGLE_TOKENS
+    whitespace tokens; the last window may be short; empty/NULL docs emit no
     chunks. chunk_no is 0-based."""
     toks = F.slice(
         F.filter(F.split(F.col("text"), " +"), lambda x: x != ""),
-        1, cap)
+        1, MAX_SHINGLE_TOKENS)
     starts = F.sequence(
         F.lit(0), F.greatest(F.size("toks") - 1, F.lit(0)),
         F.lit(stride))
@@ -1214,16 +1191,14 @@ def chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     return chunk_overlap_docs(_docs(spark, sf_dir))
 
 
-def chunk_overlap_oracle_sql(docs_rel: str = "documents",
-                             size: int = CHUNK_TOKENS,
-                             stride: int = CHUNK_STRIDE,
-                             cap: int = MAX_SHINGLE_TOKENS) -> str:
+def chunk_overlap_oracle_sql(size: int = CHUNK_TOKENS,
+                             stride: int = CHUNK_STRIDE) -> str:
     return f"""
 WITH base AS (
   SELECT doc_id,
          (list_filter(regexp_split_to_array(text, ' +'),
-                      x -> x <> ''))[1:{cap}] AS toks
-  FROM {docs_rel} WHERE text IS NOT NULL
+                      x -> x <> ''))[1:{MAX_SHINGLE_TOKENS}] AS toks
+  FROM documents WHERE text IS NOT NULL
 ),
 nz AS (SELECT doc_id, toks, len(toks) AS n FROM base WHERE len(toks) > 0),
 starts AS (
@@ -1274,14 +1249,13 @@ def _cdc_bucket16(g: str) -> str:
             f" ({hexpos.format(i=4)})))")
 
 
-def cdc_dedup_sql(dialect: str, docs_rel: str = "documents",
-                  w: int = CDC_W, divisor: int = CDC_DIVISOR,
-                  cap: int = CDC_CHAR_CAP) -> str:
+def cdc_dedup_sql(dialect: str, docs_rel: str = "documents") -> str:
     """Per-doc cross-corpus duplication stats over content-defined
     chunks.
 
-    Chunking: position p (1-based, p <= len-w+1) starts a new chunk iff
-    bucket16(md5(substr(text, p, w))) % divisor == 0; p = 1 always
+    Chunking: position p (1-based, p <= len-w+1, w = CDC_W) starts a
+    new chunk iff bucket16(md5(substr(text, p, w))) % CDC_DIVISOR == 0;
+    p = 1 always
     starts chunk 0. Chunk text runs to the next boundary (or end of the
     capped text); fingerprint = md5(chunk). A chunk is DUPLICATED when
     its fingerprint occurs in >= 2 distinct docs.
@@ -1290,22 +1264,22 @@ def cdc_dedup_sql(dialect: str, docs_rel: str = "documents",
     dup_ratio (rounded 1e-6; 0.0 for empty docs, which chunk to zero
     rows but keep their verdict row via the left join)."""
     if dialect == "duckdb":
-        pos = (f"SELECT doc_id, t, unnest(range(1, length(t) - {w} + 2))"
-               f" AS p FROM capped WHERE length(t) >= {w}")
+        pos = (f"SELECT doc_id, t, unnest(range(1, length(t) - {CDC_W} + 2))"
+               f" AS p FROM capped WHERE length(t) >= {CDC_W}")
     else:
-        pos = (f"SELECT doc_id, t, explode(sequence(1, length(t) - {w}"
-               f" + 1)) AS p FROM capped WHERE length(t) >= {w}")
-    b16 = _cdc_bucket16(f"substr(t, p, {w})")
+        pos = (f"SELECT doc_id, t, explode(sequence(1, length(t) - {CDC_W}"
+               f" + 1)) AS p FROM capped WHERE length(t) >= {CDC_W}")
+    b16 = _cdc_bucket16(f"substr(t, p, {CDC_W})")
     return f"""
 WITH capped AS (
-  SELECT doc_id, substr(text, 1, {cap}) AS t
+  SELECT doc_id, substr(text, 1, {CDC_CHAR_CAP}) AS t
   FROM {docs_rel} WHERE text IS NOT NULL
 ),
 pos AS ({pos}),
 starts AS (
   SELECT DISTINCT doc_id, 1 AS start FROM capped WHERE length(t) >= 1
   UNION
-  SELECT doc_id, p AS start FROM pos WHERE {b16} % {divisor} = 0
+  SELECT doc_id, p AS start FROM pos WHERE {b16} % {CDC_DIVISOR} = 0
 ),
 bounds AS (
   SELECT s.doc_id, s.start,
@@ -1387,21 +1361,20 @@ LINE_DUP_MIN_DOCS = 2
 LINE_SEG_MIN_TOKENS = 8
 
 
-def line_dedup_docs(docs: DataFrame, seg: int = LINE_SEG_TOKENS,
-                    min_docs: int = LINE_DUP_MIN_DOCS,
-                    min_tokens: int = LINE_SEG_MIN_TOKENS) -> DataFrame:
+def line_dedup_docs(docs: DataFrame) -> DataFrame:
     """Per-document line-dedup verdict: (doc_id, n_segments, n_dropped,
     kept_tokens, dropped_tokens). A segment occurrence is dropped when
-    it has >= ``min_tokens`` tokens (short-trailing-segment chance
+    it has >= LINE_SEG_MIN_TOKENS tokens (short-trailing-segment chance
     collisions are not boilerplate), its hash appears in >=
-    ``min_docs`` distinct documents, AND this doc is not the
+    LINE_DUP_MIN_DOCS distinct documents, AND this doc is not the
     minimum-doc_id carrier (keep-first). Verdicts are at doc
     granularity: a segment repeated WITHIN one document is kept or
     dropped as a whole (no within-doc position tiebreak — vanishingly
     rare at 16-token width and irrelevant to the cross-doc boilerplate
     this operator targets). Docs that emit no segments (NULL/empty
     text) report all-zero counts."""
-    segs = (chunk_overlap_docs(docs, size=seg, stride=seg)
+    segs = (chunk_overlap_docs(docs, size=LINE_SEG_TOKENS,
+                               stride=LINE_SEG_TOKENS)
             .select("doc_id", "n_tokens",
                     F.md5("chunk_text").alias("seg_hash")))
     freq = (segs.select("doc_id", "seg_hash").distinct()
@@ -1410,8 +1383,8 @@ def line_dedup_docs(docs: DataFrame, seg: int = LINE_SEG_TOKENS,
                  F.min("doc_id").alias("keeper")))
     judged = (segs.join(freq, "seg_hash")
               .withColumn("dropped",
-                          (F.col("n_tokens") >= min_tokens)
-                          & (F.col("df") >= min_docs)
+                          (F.col("n_tokens") >= LINE_SEG_MIN_TOKENS)
+                          & (F.col("df") >= LINE_DUP_MIN_DOCS)
                           & (F.col("doc_id") != F.col("keeper"))))
     per_doc = (judged.groupBy("doc_id").agg(
         F.count("*").alias("n_segments"),
@@ -1434,11 +1407,9 @@ def line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return line_dedup_docs(_docs(spark, sf_dir))
 
 
-def line_dedup_oracle_sql(docs_rel: str = "documents",
-                          seg: int = LINE_SEG_TOKENS,
-                          min_docs: int = LINE_DUP_MIN_DOCS,
-                          min_tokens: int = LINE_SEG_MIN_TOKENS) -> str:
-    chunks = chunk_overlap_oracle_sql(docs_rel, size=seg, stride=seg)
+def line_dedup_oracle_sql() -> str:
+    chunks = chunk_overlap_oracle_sql(size=LINE_SEG_TOKENS,
+                                      stride=LINE_SEG_TOKENS)
     return f"""
 WITH segs AS (
   SELECT doc_id, n_tokens, md5(chunk_text) AS seg_hash
@@ -1451,7 +1422,7 @@ freq AS (
 ),
 judged AS (
   SELECT s.doc_id, s.n_tokens,
-         (s.n_tokens >= {min_tokens} AND f.df >= {min_docs}
+         (s.n_tokens >= {LINE_SEG_MIN_TOKENS} AND f.df >= {LINE_DUP_MIN_DOCS}
           AND s.doc_id <> f.keeper) AS dropped
   FROM segs s JOIN freq f USING (seg_hash)
 ),
@@ -1468,7 +1439,7 @@ SELECT d.doc_id,
        CAST(COALESCE(p.n_dropped, 0) AS BIGINT) AS n_dropped,
        CAST(COALESCE(p.kept_tokens, 0) AS BIGINT) AS kept_tokens,
        CAST(COALESCE(p.dropped_tokens, 0) AS BIGINT) AS dropped_tokens
-FROM {docs_rel} d LEFT JOIN per_doc p ON p.doc_id = d.doc_id
+FROM documents d LEFT JOIN per_doc p ON p.doc_id = d.doc_id
 """
 
 
@@ -1494,13 +1465,10 @@ FROM {docs_rel} d LEFT JOIN per_doc p ON p.doc_id = d.doc_id
 MINHASH_DECON_T = 0.5
 
 
-def minhash_decontaminate_docs(docs: DataFrame,
-                               bench_mod: int = DECON_BENCH_MOD,
-                               threshold: float = MINHASH_DECON_T
-                               ) -> DataFrame:
+def minhash_decontaminate_docs(docs: DataFrame) -> DataFrame:
     """Per-TRAINING-doc fuzzy-contamination verdict: (doc_id,
     n_bench_hits, max_jaccard, contaminated). n_bench_hits counts
-    benchmark docs with verified Jaccard >= threshold; max_jaccard is
+    benchmark docs with verified Jaccard >= MINHASH_DECON_T; max_jaccard is
     0.0 for clean docs (rounded 1e-6 after the max, exact integer
     division in IEEE doubles before it — cross-engine stable)."""
     from .dedup import (_signatures_from_shingles, band_keys,
@@ -1512,7 +1480,7 @@ def minhash_decontaminate_docs(docs: DataFrame,
     # persist it or the signature aggregation runs twice (the
     # dedup.band_keys lesson)
     bands = band_keys(_signatures_from_shingles(shingles)).persist()
-    is_bench = (F.col("doc_id") % bench_mod) == 0
+    is_bench = (F.col("doc_id") % DECON_BENCH_MOD) == 0
     cand = (bands.where(~is_bench).alias("t")
             .join(F.broadcast(bands.where(is_bench).alias("b")),
                   ["band", "band_key"])
@@ -1539,7 +1507,7 @@ def minhash_decontaminate_docs(docs: DataFrame,
                     / (F.col("za.n") + F.col("zb.n")
                        - F.col("i.n_common")).cast("double"))
                    .alias("jaccard"))
-           .where(F.col("jaccard") >= threshold))
+           .where(F.col("jaccard") >= MINHASH_DECON_T))
     hits = (jac.groupBy("doc_id")
             .agg(F.count("*").alias("n_bench_hits"),
                  F.round(F.max("jaccard"), 6).alias("max_jaccard")))
@@ -1559,10 +1527,7 @@ def minhash_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return minhash_decontaminate_docs(_docs(spark, sf_dir))
 
 
-def minhash_decontaminate_oracle_sql(docs_rel: str = "documents",
-                                     bench_mod: int = DECON_BENCH_MOD,
-                                     threshold: float = MINHASH_DECON_T
-                                     ) -> str:
+def minhash_decontaminate_oracle_sql() -> str:
     from .dedup import (NUM_BANDS, NUM_HASHES, ROWS_PER_BAND,
                         _doc_shingles_cte)
     band_rows = " UNION ALL ".join(
@@ -1573,7 +1538,7 @@ def minhash_decontaminate_oracle_sql(docs_rel: str = "documents",
     mins = ", ".join(f"MIN(md5('{h}:' || shingle)) AS mh{h}"
                      for h in range(NUM_HASHES))
     return f"""
-WITH {_doc_shingles_cte("duckdb", docs_rel)},
+WITH {_doc_shingles_cte("duckdb", 'documents')},
 sigs AS (
   SELECT doc_id, {mins} FROM doc_shingles GROUP BY doc_id
 ),
@@ -1582,7 +1547,7 @@ cand AS (
   SELECT DISTINCT t.doc_id AS doc_id, b.doc_id AS bench_id
   FROM bands t JOIN bands b
     ON t.band = b.band AND t.band_key = b.band_key
-  WHERE t.doc_id % {bench_mod} <> 0 AND b.doc_id % {bench_mod} = 0
+  WHERE t.doc_id % {DECON_BENCH_MOD} <> 0 AND b.doc_id % {DECON_BENCH_MOD} = 0
 ),
 sizes AS (SELECT doc_id, COUNT(*) AS n FROM doc_shingles GROUP BY doc_id),
 inter AS (
@@ -1600,7 +1565,7 @@ jac AS (
   JOIN sizes za ON za.doc_id = i.doc_id
   JOIN sizes zb ON zb.doc_id = i.bench_id
   WHERE i.n_common / CAST(za.n + zb.n - i.n_common AS DOUBLE)
-        >= {threshold}
+        >= {MINHASH_DECON_T}
 ),
 hits AS (
   SELECT doc_id, COUNT(*) AS n_bench_hits,
@@ -1611,8 +1576,8 @@ SELECT d.doc_id,
        CAST(COALESCE(h.n_bench_hits, 0) AS BIGINT) AS n_bench_hits,
        COALESCE(h.max_jaccard, 0.0) AS max_jaccard,
        COALESCE(h.n_bench_hits, 0) > 0 AS contaminated
-FROM {docs_rel} d LEFT JOIN hits h ON h.doc_id = d.doc_id
-WHERE d.doc_id % {bench_mod} <> 0
+FROM documents d LEFT JOIN hits h ON h.doc_id = d.doc_id
+WHERE d.doc_id % {DECON_BENCH_MOD} <> 0
 """
 
 
@@ -1724,8 +1689,7 @@ def normalize_text_oracle_sql() -> str:
 COLLOC_MIN_COUNT = 5
 
 
-def collocations_docs(docs: DataFrame,
-                      min_count: int = COLLOC_MIN_COUNT) -> DataFrame:
+def collocations_docs(docs: DataFrame) -> DataFrame:
     from .analytics import _LIFT_GUARD_N
     toks = (docs.select(
                 "doc_id",
@@ -1747,7 +1711,7 @@ def collocations_docs(docs: DataFrame,
     # consumer.
     pc = (big.groupBy("w1", "w2").agg(F.count("*").alias("n_ab"))
           .localCheckpoint(eager=True))
-    pairs = pc.where(F.col("n_ab") >= min_count)
+    pairs = pc.where(F.col("n_ab") >= COLLOC_MIN_COUNT)
     m1 = pc.groupBy("w1").agg(F.sum("n_ab").alias("n_a1"))
     m2 = pc.groupBy("w2").agg(F.sum("n_ab").alias("n_b2"))
     n = pc.groupBy().agg(F.sum("n_ab").alias("n_bigrams"))
@@ -1766,8 +1730,7 @@ def corpus_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     return collocations_docs(_docs(spark, sf_dir))
 
 
-def collocations_oracle_sql(docs_rel: str = "documents",
-                            min_count: int = COLLOC_MIN_COUNT) -> str:
+def collocations_oracle_sql() -> str:
     from .analytics import _LIFT_GUARD_N
     lift = ratio_round_halfup_guarded(
         "duckdb", "p.n_ab * n.n_bigrams", "a.n_a1 * b.n_b2",
@@ -1778,7 +1741,7 @@ def collocations_oracle_sql(docs_rel: str = "documents",
 WITH toks0 AS (
   SELECT doc_id, generate_subscripts(toks, 1) AS pos, unnest(toks) AS token
   FROM (SELECT doc_id, regexp_split_to_array(lower(text), ' +') AS toks
-        FROM {docs_rel}) _t
+        FROM documents) _t
 ),
 toks AS (SELECT doc_id, pos, token FROM toks0 WHERE token <> ''),
 big0 AS (
@@ -1789,7 +1752,7 @@ big0 AS (
 big AS (SELECT w1, w2 FROM big0 WHERE w2 IS NOT NULL),
 pairs AS (
   SELECT w1, w2, COUNT(*) AS n_ab FROM big GROUP BY w1, w2
-  HAVING COUNT(*) >= {min_count}
+  HAVING COUNT(*) >= {COLLOC_MIN_COUNT}
 ),
 m1 AS (SELECT w1, COUNT(*) AS n_a1 FROM big GROUP BY w1),
 m2 AS (SELECT w2, COUNT(*) AS n_b2 FROM big GROUP BY w2),

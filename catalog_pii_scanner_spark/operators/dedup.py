@@ -66,19 +66,18 @@ def _tokens_sql(dialect: str, text_col: str = "text") -> str:
     return f"split({text_col}, ' +')"
 
 
-def _shingles_sql(dialect: str, text_col: str = "text",
-                  cap: int = MAX_SHINGLE_TOKENS) -> str:
-    """ARRAY of word 3-grams over the first ``cap`` tokens; empty when
-    fewer than 3 tokens (see MAX_SHINGLE_TOKENS).
+def _shingles_sql(dialect: str) -> str:
+    """ARRAY of word 3-grams over the first MAX_SHINGLE_TOKENS tokens;
+    empty when fewer than 3 tokens.
 
     List element access: DuckDB's element_at is map-only, so lists use
     list_extract; Spark's element_at is the array accessor (1-based in
     both).
     """
     at = "list_extract" if dialect == "duckdb" else "element_at"
-    toks = _tokens_sql(dialect, text_col)
-    toks = (f"({toks})[1:{cap}]" if dialect == "duckdb"
-            else f"slice({toks}, 1, {cap})")
+    toks = _tokens_sql(dialect, "text")
+    toks = (f"({toks})[1:{MAX_SHINGLE_TOKENS}]" if dialect == "duckdb"
+            else f"slice({toks}, 1, {MAX_SHINGLE_TOKENS})")
     gram = (f"{at}(t, CAST(i + 1 AS INT)) || ' ' || "
             f"{at}(t, CAST(i + 2 AS INT)) || ' ' || "
             f"{at}(t, CAST(i + 3 AS INT))")
@@ -93,9 +92,9 @@ def _shingles_sql(dialect: str, text_col: str = "text",
             f"ELSE CAST(array() AS ARRAY<STRING>) END)")
 
 
-def norm_text_sql(dialect: str, text_col: str = "text") -> str:
+def norm_text_sql(dialect: str) -> str:
     g = ", 'g'" if dialect == "duckdb" else ""
-    return f"lower(trim(regexp_replace({text_col}, ' +', ' '{g})))"
+    return f"lower(trim(regexp_replace(text, ' +', ' '{g})))"
 
 
 # --- exact dedup ------------------------------------------------------------
@@ -130,13 +129,12 @@ doc_shingles AS (
 )"""
 
 
-def minhash_signatures_sql(dialect: str,
-                           docs_rel: str = "documents") -> str:
+def minhash_signatures_sql(dialect: str) -> str:
     """Output: doc_id, mh0..mh{NUM_HASHES-1} (md5-hex minhash strings)."""
     mins = ", ".join(
         f"MIN(md5('{h}:' || shingle)) AS mh{h}" for h in range(NUM_HASHES))
     return f"""
-WITH {_doc_shingles_cte(dialect, docs_rel)}
+WITH {_doc_shingles_cte(dialect, 'documents')}
 SELECT doc_id, {mins} FROM doc_shingles GROUP BY doc_id
 """
 
@@ -187,12 +185,10 @@ def minhash_signatures(spark, sf_dir: str,
     return _signatures_from_shingles(shingles)
 
 
-def lsh_near_dup_pairs_sql(dialect: str, docs_rel: str = "documents",
-                           threshold: float = 0.5,
-                           max_bucket: int = MAX_BAND_BUCKET) -> str:
-    """LSH candidate pairs verified with exact Jaccard >= threshold.
-    Band buckets larger than ``max_bucket`` are excluded (see
-    MAX_BAND_BUCKET — quadratic-blowup guard, mirrored in the engine).
+def lsh_near_dup_pairs_sql(dialect: str) -> str:
+    """LSH candidate pairs verified with exact Jaccard >= 0.5.
+    Band buckets larger than MAX_BAND_BUCKET are excluded
+    (quadratic-blowup guard, mirrored in the engine).
 
     Output: doc_a, doc_b (doc_a < doc_b), jaccard (rounded 1e-6).
     """
@@ -202,7 +198,7 @@ def lsh_near_dup_pairs_sql(dialect: str, docs_rel: str = "documents",
             f"mh{b * ROWS_PER_BAND + r}" for r in range(ROWS_PER_BAND)))
         for b in range(NUM_BANDS))
     return f"""
-WITH {_doc_shingles_cte(dialect, docs_rel)},
+WITH {_doc_shingles_cte(dialect, 'documents')},
 sigs AS (
   SELECT doc_id, {", ".join(f"MIN(md5('{h}:' || shingle)) AS mh{h}"
                             for h in range(NUM_HASHES))}
@@ -211,7 +207,7 @@ sigs AS (
 bands AS ({band_rows}),
 bands_ok AS (
   SELECT band, band_key FROM bands GROUP BY band, band_key
-  HAVING COUNT(*) <= {max_bucket}
+  HAVING COUNT(*) <= {MAX_BAND_BUCKET}
 ),
 bands_capped AS (
   SELECT b.* FROM bands b
@@ -238,12 +234,11 @@ SELECT i.doc_a AS doc_a, i.doc_b AS doc_b,
 FROM inter i
 JOIN sizes za ON za.doc_id = i.doc_a
 JOIN sizes zb ON zb.doc_id = i.doc_b
-WHERE i.n_common / CAST(za.n + zb.n - i.n_common AS DOUBLE) >= {threshold}
+WHERE i.n_common / CAST(za.n + zb.n - i.n_common AS DOUBLE) >= 0.5
 """
 
 
 def lsh_near_dup_pairs(spark, sf_dir: str, threshold: float = 0.5,
-                       max_bucket: int = MAX_BAND_BUCKET,
                        shingles: DataFrame | None = None) -> DataFrame:
     """DataFrame-step implementation; semantics identical to
     lsh_near_dup_pairs_sql (the oracle), including the band-bucket cap.
@@ -252,8 +247,8 @@ def lsh_near_dup_pairs(spark, sf_dir: str, threshold: float = 0.5,
     buckets — including genuine near-dup (non-identical) pairs whose only
     shared band bucket is oversized. Exact-dedup recovers only the exact
     duplicates among them. The excluded buckets are the (band, band_key)
-    groups of the band relation holding more than ``max_bucket`` docs;
-    count them when tuning ``max_bucket``.
+    groups of the band relation holding more than MAX_BAND_BUCKET docs;
+    count them when tuning MAX_BAND_BUCKET.
 
     Scale shape: no forced broadcasts — AQE picks broadcast when the
     runtime pair/size relations are small and degrades to shuffle joins
@@ -269,7 +264,7 @@ def lsh_near_dup_pairs(spark, sf_dir: str, threshold: float = 0.5,
         shingles = doc_shingles_df(spark, sf_dir).persist()
     sigs = _signatures_from_shingles(shingles)
     bands = band_keys(sigs).persist()
-    pairs = capped_band_pairs(bands, max_bucket)
+    pairs = capped_band_pairs(bands)
     out = _jaccard_verify(pairs, shingles, threshold, sizes_attached=False)
     # a handed-over (entry-memo) shingle relation belongs to the caller
     return checkpoint_release(out, *((shingles, bands) if own
@@ -327,8 +322,7 @@ def capped_band_pairs(bands: DataFrame,
 JACCARD_T = 0.5
 
 
-def ngram_jaccard_pairs_sql(dialect: str, docs_rel: str = "documents",
-                            threshold: float = JACCARD_T) -> str:
+def ngram_jaccard_pairs_sql(dialect: str) -> str:
     """Exact n-gram-set Jaccard similarity join via prefix filtering
     (PPJoin-style): under a global shingle order (document frequency asc,
     then shingle), any pair with J >= t must share a shingle within each
@@ -339,7 +333,7 @@ def ngram_jaccard_pairs_sql(dialect: str, docs_rel: str = "documents",
     Output: doc_a, doc_b (doc_a < doc_b), jaccard (rounded 1e-6).
     """
     return f"""
-WITH {_doc_shingles_cte(dialect, docs_rel)},
+WITH {_doc_shingles_cte(dialect, 'documents')},
 sizes AS (SELECT doc_id, COUNT(*) AS n FROM doc_shingles GROUP BY doc_id),
 freq AS (SELECT shingle, COUNT(*) AS df FROM doc_shingles GROUP BY shingle),
 ranked AS (
@@ -352,14 +346,14 @@ ranked AS (
 ),
 prefix AS (
   SELECT doc_id, shingle, n FROM ranked
-  WHERE rn <= n - CAST(ceil({threshold} * n) AS BIGINT) + 1
+  WHERE rn <= n - CAST(ceil({JACCARD_T} * n) AS BIGINT) + 1
 ),
 cand_pairs AS (
   -- PPJoin length filter: J >= t forces t*|A| <= |B| <= |A|/t
   SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
   FROM prefix a JOIN prefix b
     ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-   AND b.n >= ceil({threshold} * a.n) AND b.n * {threshold} <= a.n
+   AND b.n >= ceil({JACCARD_T} * a.n) AND b.n * {JACCARD_T} <= a.n
 ),
 inter AS (
   SELECT p.doc_a, p.doc_b, COUNT(*) AS n_common
@@ -375,7 +369,7 @@ SELECT i.doc_a AS doc_a, i.doc_b AS doc_b,
 FROM inter i
 JOIN sizes za ON za.doc_id = i.doc_a
 JOIN sizes zb ON zb.doc_id = i.doc_b
-WHERE i.n_common / CAST(za.n + zb.n - i.n_common AS DOUBLE) >= {threshold}
+WHERE i.n_common / CAST(za.n + zb.n - i.n_common AS DOUBLE) >= {JACCARD_T}
 """
 
 
@@ -512,9 +506,7 @@ CONTAIN_T = 0.6
 MAX_GRAM_DF = 200
 
 
-def containment_pairs_sql(dialect: str, docs_rel: str = "documents",
-                          threshold: float = CONTAIN_T,
-                          df_cap: int = MAX_GRAM_DF) -> str:
+def containment_pairs_sql(dialect: str) -> str:
     """Exact n-gram containment join. Since max(C(A,B), C(B,A)) is always
     achieved by the smaller gram set, a pair qualifies iff the SMALLER
     side's containment >= t — so the candidate join probes only the
@@ -525,12 +517,12 @@ def containment_pairs_sql(dialect: str, docs_rel: str = "documents",
     Output: doc_a, doc_b (doc_a < doc_b), n_common, contain_a,
     contain_b (rounded 1e-6)."""
     return f"""
-WITH {_doc_shingles_cte(dialect, docs_rel)},
+WITH {_doc_shingles_cte(dialect, 'documents')},
 freq AS (SELECT shingle, COUNT(*) AS df FROM doc_shingles GROUP BY shingle),
 kept AS (
   SELECT s.doc_id, s.shingle, f.df
   FROM doc_shingles s JOIN freq f ON f.shingle = s.shingle
-  WHERE f.df <= {df_cap}
+  WHERE f.df <= {MAX_GRAM_DF}
 ),
 sizes AS (SELECT doc_id, COUNT(*) AS n FROM kept GROUP BY doc_id),
 ranked AS (
@@ -541,7 +533,7 @@ ranked AS (
 ),
 prefix AS (
   SELECT doc_id, shingle, n FROM ranked
-  WHERE rn <= n - CAST(ceil({threshold} * n) AS BIGINT) + 1
+  WHERE rn <= n - CAST(ceil({CONTAIN_T} * n) AS BIGINT) + 1
 ),
 full_k AS (
   SELECT k.doc_id, k.shingle, z.n
@@ -566,7 +558,7 @@ SELECT i.doc_a AS doc_a, i.doc_b AS doc_b, i.n_common AS n_common,
 FROM inter i
 JOIN sizes za ON za.doc_id = i.doc_a
 JOIN sizes zb ON zb.doc_id = i.doc_b
-WHERE i.n_common / CAST(LEAST(za.n, zb.n) AS DOUBLE) >= {threshold}
+WHERE i.n_common / CAST(LEAST(za.n, zb.n) AS DOUBLE) >= {CONTAIN_T}
 """
 
 
@@ -640,19 +632,18 @@ def containment_excluded_grams(spark, sf_dir: str,
 _HEX = "0123456789abcdef"
 
 
-def simhash_sql(dialect: str, docs_rel: str = "documents",
-                bits: int = 32) -> str:
+def simhash_sql(dialect: str, docs_rel: str = "documents") -> str:
     """32-bit SimHash over DISTINCT tokens. Bit j votes +1 when the j-th
     hex digit of md5(token) is odd. Output: doc_id, simhash BIGINT."""
     unnest = "unnest" if dialect == "duckdb" else "explode"
     votes = ", ".join(
         f"SUM(CASE WHEN (instr('{_HEX}', substr(h, {j + 1}, 1)) - 1) % 2 "
         f"= 1 THEN 1 ELSE -1 END) AS v{j}"
-        for j in range(bits))
+        for j in range(32))
     recompose = " + ".join(
         f"(CASE WHEN v{j} > 0 THEN CAST({1 << j} AS BIGINT) "
         f"ELSE CAST(0 AS BIGINT) END)"
-        for j in range(bits))
+        for j in range(32))
     return f"""
 WITH toks AS (
   SELECT DISTINCT doc_id, tok FROM (
@@ -719,7 +710,7 @@ def _cc_driver(bidir: DataFrame, id_type: str) -> DataFrame:
         out, schema=f"doc_id {id_type}, cluster_rep {id_type}")
 
 
-def connected_components(edges: DataFrame, max_iters: int = 50) -> DataFrame:
+def connected_components(edges: DataFrame) -> DataFrame:
     """Connected components by iterative graph CONTRACTION: label every
     node with the MIN of its closed neighborhood (one groupBy — labels
     start as the identity, so round 1 is this closed form), then
@@ -784,7 +775,7 @@ def connected_components(edges: DataFrame, max_iters: int = 50) -> DataFrame:
     # class-id -> its OWN class, which the union-find pin test catches.
     lab = mapping
     cur = bidir
-    for _ in range(max_iters - 1):
+    for _ in range(50 - 1):
         la = lab.select(F.col("doc_id").alias("src"),
                         F.col("label").alias("_ls"))
         lb = lab.select(F.col("doc_id").alias("dst"),
@@ -818,24 +809,17 @@ def connected_components(edges: DataFrame, max_iters: int = 50) -> DataFrame:
     return mapping.select("doc_id", F.col("label").alias("cluster_rep"))
 
 
-def dedup_clusters(spark, sf_dir: str, threshold: float = 0.5,
-                   max_bucket: int = MAX_BAND_BUCKET,
-                   pairs: DataFrame | None = None) -> DataFrame:
+def dedup_clusters(spark, sf_dir: str, threshold: float = 0.5) -> DataFrame:
     """Duplicate-cluster resolution for the training-data pipeline: LSH
     near-dup pairs -> connected components -> one canonical doc per
     cluster (MIN doc_id). A corpus keep-list is then
     ``all docs - (clustered docs - representatives)``. Output:
-    (doc_id, cluster_rep) for every doc in a near-dup cluster.
-    ``pairs`` lets a caller hand over an already-materialized near-dup
-    pair relation (the entry-level chain memo: pairs -> clusters ->
-    keep_list are three registered queries over one derivation)."""
-    if pairs is None:
-        pairs = lsh_near_dup_pairs(spark, sf_dir, threshold, max_bucket)
-    return connected_components(pairs)
+    (doc_id, cluster_rep) for every doc in a near-dup cluster."""
+    return connected_components(
+        lsh_near_dup_pairs(spark, sf_dir, threshold))
 
 
 def dedup_keep_list(spark, sf_dir: str, threshold: float = 0.5,
-                    max_bucket: int = MAX_BAND_BUCKET,
                     clusters: DataFrame | None = None) -> DataFrame:
     """The dedup family's actual product: one row per corpus document
     with the keep/drop verdict. A doc is dropped iff it sits in a
@@ -847,7 +831,7 @@ def dedup_keep_list(spark, sf_dir: str, threshold: float = 0.5,
     the verdict join broadcasts it under AQE. ``clusters`` as in
     :func:`dedup_clusters` (the entry-level chain memo)."""
     if clusters is None:
-        clusters = dedup_clusters(spark, sf_dir, threshold, max_bucket)
+        clusters = dedup_clusters(spark, sf_dir, threshold)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet") \
         .select("doc_id")
     out = docs.join(clusters, "doc_id", "left")
@@ -857,28 +841,22 @@ def dedup_keep_list(spark, sf_dir: str, threshold: float = 0.5,
         (rep == F.col("doc_id")).alias("keep"))
 
 
-def dedup_keep_list_sql(dialect: str, docs_rel: str = "documents",
-                        threshold: float = 0.5,
-                        max_bucket: int = MAX_BAND_BUCKET) -> str:
-    clusters = dedup_clusters_sql(dialect, docs_rel, threshold,
-                                  max_bucket).strip()
+def dedup_keep_list_sql(dialect: str) -> str:
+    clusters = dedup_clusters_sql(dialect).strip()
     return f"""
 WITH clusters AS ({clusters})
 SELECT d.doc_id,
        COALESCE(c.cluster_rep, d.doc_id) AS cluster_rep,
        COALESCE(c.cluster_rep, d.doc_id) = d.doc_id AS keep
-FROM {docs_rel} d LEFT JOIN clusters c ON c.doc_id = d.doc_id
+FROM documents d LEFT JOIN clusters c ON c.doc_id = d.doc_id
 """
 
 
-def dedup_clusters_sql(dialect: str, docs_rel: str = "documents",
-                       threshold: float = 0.5,
-                       max_bucket: int = MAX_BAND_BUCKET) -> str:
+def dedup_clusters_sql(dialect: str) -> str:
     """DuckDB rendering: min reachable doc id per node via a RECURSIVE
     CTE over the (bidirected) near-dup pair graph — the declarative twin
     of the label-propagation fixpoint."""
-    pairs = lsh_near_dup_pairs_sql(dialect, docs_rel, threshold,
-                                   max_bucket).strip()
+    pairs = lsh_near_dup_pairs_sql(dialect).strip()
     return f"""
 WITH RECURSIVE pairs AS ({pairs}),
 edges AS (

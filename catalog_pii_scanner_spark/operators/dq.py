@@ -327,17 +327,16 @@ def dq_referential_oracle_sql() -> str:
 K_ANON_K = 10
 
 
-def dq_k_anonymity_sql(dialect: str, rel: str = "customer",
-                       k_min: int = K_ANON_K) -> str:
+def dq_k_anonymity_sql(dialect: str, rel: str = "customer") -> str:
     """One row per generalization level: level, n_classes, min_k,
-    rows_at_risk (rows in classes with k < k_min), risk_bp (exact
+    rows_at_risk (rows in classes with k < K_ANON_K), risk_bp (exact
     integer basis points of total — counts are integers, so no double
     floor()), min_l (distinct sensitive values in the least-diverse
     class)."""
     from ..oracles import exact_int_div
     bp = exact_int_div(
         dialect,
-        f"SUM(CASE WHEN c.k < {k_min} THEN c.k ELSE 0 END)"
+        f"SUM(CASE WHEN c.k < {K_ANON_K} THEN c.k ELSE 0 END)"
         f" * CAST(10000 AS BIGINT)",
         "t.n")
     return f"""
@@ -364,7 +363,7 @@ totals AS (SELECT COUNT(*) AS n FROM base)
 SELECT CAST(c.level AS BIGINT) AS level,
        CAST(COUNT(*) AS BIGINT) AS n_classes,
        CAST(MIN(c.k) AS BIGINT) AS min_k,
-       CAST(COALESCE(SUM(CASE WHEN c.k < {k_min} THEN c.k ELSE 0 END),
+       CAST(COALESCE(SUM(CASE WHEN c.k < {K_ANON_K} THEN c.k ELSE 0 END),
                      0) AS BIGINT) AS rows_at_risk,
        CASE WHEN t.n = 0 THEN CAST(0 AS BIGINT)
             ELSE {bp} END AS risk_bp,

@@ -107,14 +107,13 @@ bigrams AS (
 )"""
 
 
-def dsir_select_sql(dialect: str, docs_rel: str = "documents",
-                    k: int = DSIR_K, nb: int = DSIR_NB) -> str:
+def dsir_select_sql(dialect: str, k: int = DSIR_K) -> str:
     """Full dual-dialect template: marginals -> micro log-ratios ->
     integer-exact doc weights -> global top-k (the oracle ranks with
     one window; the Spark entry point uses the salted DataFrame form
     below, result-identical by construction)."""
     return f"""
-WITH {dsir_bigrams_cte(dialect, docs_rel).lstrip()},
+WITH {dsir_bigrams_cte(dialect, 'documents').lstrip()},
 doc_b AS (
   SELECT doc_id, is_target, b, COUNT(*) AS cnt
   FROM bigrams GROUP BY doc_id, is_target, b
@@ -132,14 +131,14 @@ tots AS (
 -- every bucket 0..NB-1 gets a ratio (smoothing covers empty buckets)
 buckets AS (
   SELECT b, COALESCE(t.t_b, 0) AS t_b, COALESCE(r.r_b, 0) AS r_b
-  FROM (SELECT {"unnest(range(0, " + str(nb) + "))" if dialect == "duckdb"
-                else "explode(sequence(0, " + str(nb - 1) + "))"} AS b) _b
+  FROM (SELECT {"unnest(range(0, " + str(DSIR_NB) + "))" if dialect == "duckdb"
+                else "explode(sequence(0, " + str(DSIR_NB - 1) + "))"} AS b) _b
   LEFT JOIN tgt t USING (b) LEFT JOIN raww r USING (b)
 ),
 wmap AS (
   SELECT b.b,
-         CAST(floor(ln(CAST((b.t_b + 1) * (t.rt + {nb}) AS DOUBLE)
-                       / CAST((b.r_b + 1) * (t.tt + {nb}) AS DOUBLE))
+         CAST(floor(ln(CAST((b.t_b + 1) * (t.rt + {DSIR_NB}) AS DOUBLE)
+                       / CAST((b.r_b + 1) * (t.tt + {DSIR_NB}) AS DOUBLE))
                     * 1000000 + 0.5) AS BIGINT) AS lb_micro
   FROM buckets b CROSS JOIN tots t
 ),
@@ -161,7 +160,7 @@ FROM (
 """
 
 
-def dsir_doc_buckets(docs: DataFrame, nb: int = DSIR_NB) -> DataFrame:
+def dsir_doc_buckets(docs: DataFrame) -> DataFrame:
     """DOC-LOCAL featurization: (doc_id, is_target, b, cnt) hashed
     bigram-bucket counts. Needs nothing beyond the row, so a streaming
     microbatch can run it per slice and the union of slices equals the
@@ -183,9 +182,7 @@ def dsir_doc_buckets(docs: DataFrame, nb: int = DSIR_NB) -> DataFrame:
             .agg(F.count("*").alias("cnt")))
 
 
-def dsir_select_docs(docs: DataFrame, k: int = DSIR_K,
-                     nb: int = DSIR_NB,
-                     salt: int = DSIR_SALT) -> DataFrame:
+def dsir_select_docs(docs: DataFrame, k: int = DSIR_K) -> DataFrame:
     """Spark entry: DataFrame form of the template. The (doc, bucket)
     count relation feeds THREE consumers (both marginals + the scored
     join), so it is materialized once (the bm25 localCheckpoint
@@ -193,13 +190,11 @@ def dsir_select_docs(docs: DataFrame, k: int = DSIR_K,
     consumer); the global top-k is the salted two-phase window so no
     single partition holds the whole raw pool (each global top-k row
     survives its salt's partial top-k by construction)."""
-    doc_b = dsir_doc_buckets(docs, nb).localCheckpoint(eager=True)
-    return dsir_resolve(doc_b, k, nb, salt)
+    doc_b = dsir_doc_buckets(docs).localCheckpoint(eager=True)
+    return dsir_resolve(doc_b, k)
 
 
-def dsir_resolve(doc_b: DataFrame, k: int = DSIR_K,
-                 nb: int = DSIR_NB,
-                 salt: int = DSIR_SALT) -> DataFrame:
+def dsir_resolve(doc_b: DataFrame, k: int = DSIR_K) -> DataFrame:
     """Marginals -> micro log-ratio weight map -> integer-exact doc
     weights -> salted top-k, over a MATERIALIZED (doc_id, is_target,
     b, cnt) relation (batch doc_b or a streaming spool — identical
@@ -214,14 +209,14 @@ def dsir_resolve(doc_b: DataFrame, k: int = DSIR_K,
                    F.lit(0)).alias("tt"),
         F.coalesce(F.sum(F.when(~F.col("is_target"), F.col("cnt"))),
                    F.lit(0)).alias("rt"))
-    wmap = (spark.range(nb).select(F.col("id").cast("int").alias("b"))
+    wmap = (spark.range(DSIR_NB).select(F.col("id").cast("int").alias("b"))
             .join(tgt, "b", "left").join(raww, "b", "left")
             .crossJoin(F.broadcast(tots))
             .select("b", F.expr(
                 # byte-identical arithmetic to dsir_select_sql's wmap
                 "CAST(floor(ln(CAST((coalesce(t_b, 0) + 1) * (rt + "
-                f"{nb}) AS DOUBLE) / CAST((coalesce(r_b, 0) + 1) * "
-                f"(tt + {nb}) AS DOUBLE)) * 1000000 + 0.5) AS BIGINT)"
+                f"{DSIR_NB}) AS DOUBLE) / CAST((coalesce(r_b, 0) + 1) * "
+                f"(tt + {DSIR_NB}) AS DOUBLE)) * 1000000 + 0.5) AS BIGINT)"
             ).alias("lb_micro")))
     scored = (doc_b.where("NOT is_target")
               .join(F.broadcast(wmap), "b")
@@ -229,7 +224,7 @@ def dsir_resolve(doc_b: DataFrame, k: int = DSIR_K,
               .agg(F.sum("cnt").alias("n_feats"),
                    F.sum(F.col("cnt") * F.col("lb_micro"))
                    .alias("w_micro")))
-    wpart = Window.partitionBy(F.pmod(F.col("doc_id"), F.lit(salt))) \
+    wpart = Window.partitionBy(F.pmod(F.col("doc_id"), F.lit(DSIR_SALT))) \
         .orderBy(F.desc("w_micro"), F.asc("doc_id"))
     part = (scored.withColumn("pr", F.row_number().over(wpart))
             .where(F.col("pr") <= k).drop("pr"))

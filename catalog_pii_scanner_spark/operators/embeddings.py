@@ -34,7 +34,6 @@ from dataclasses import dataclass, field
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..pii_types import ALL_PII_TYPES
 
@@ -113,8 +112,7 @@ class EmbedModel:
     def _embed(self, text: str) -> np.ndarray:
         return EMBEDDERS[self.embedder](text)
 
-    def fit(self, texts: list[str], labels: list[str],
-            lr: float = 0.5, iters: int = 300) -> "EmbedModel":
+    def fit(self, texts: list[str], labels: list[str]) -> "EmbedModel":
         X = np.stack([self._embed(t) for t in texts])
         Xb = np.hstack([X, np.ones((len(X), 1))])
         for t in sorted(set(labels) & set(ALL_PII_TYPES)):
@@ -127,9 +125,9 @@ class EmbedModel:
             w_neg = len(y) / (2.0 * (len(y) - y.sum()))
             sw = np.where(y == 1.0, w_pos, w_neg)
             w = np.zeros(Xb.shape[1])
-            for _ in range(iters):
+            for _ in range(300):
                 p = _sigmoid(Xb @ w)
-                w -= lr * (Xb.T @ ((p - y) * sw)) / len(y)
+                w -= 0.5 * (Xb.T @ ((p - y) * sw)) / len(y)
             self.heads[t] = ("logistic", w)
         return self
 
@@ -172,9 +170,7 @@ class EmbedModel:
         return model
 
 
-def embed_probs(df: DataFrame, model: EmbedModel,
-                text_col: str = "context",
-                out_col: str = "embed_probs") -> DataFrame:
+def embed_probs(df: DataFrame, model: EmbedModel) -> DataFrame:
     """E1+E2 as one Arrow-batched stage. The model rides the closure (tiny
     — per-type weight vectors); heavyweight models would ship via
     SparkContext.addFile + executor-global lazy load instead."""
@@ -182,14 +178,14 @@ def embed_probs(df: DataFrame, model: EmbedModel,
     fields = [f.name for f in df.schema.fields]
     out_schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-    ) + f", {out_col} map<string,double>"
+    ) + ", embed_probs map<string,double>"
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         local = EmbedModel(heads, embedder)
         for pdf in batches:
-            probs = local.predict_proba(list(pdf[text_col]))
+            probs = local.predict_proba(list(pdf["context"]))
             pdf = pdf.copy()
-            pdf[out_col] = probs
-            yield pdf[fields + [out_col]]
+            pdf["embed_probs"] = probs
+            yield pdf[fields + ["embed_probs"]]
 
     return df.mapInPandas(run, out_schema)

@@ -113,7 +113,6 @@ def _raw_expr(t: str, weights: EnsembleWeights,
 
 def raw_type_scores(
     cands: DataFrame,
-    weights: EnsembleWeights = REFERENCE_WEIGHTS,
     ner_signal: Column | None = None,
     embed_signal: Column | None = None,
 ) -> DataFrame:
@@ -125,7 +124,7 @@ def raw_type_scores(
     fuse_predictions)."""
     rows = F.array(*[
         F.struct(F.lit(t).alias("t"),
-                 _raw_expr(t, weights, ner_signal, embed_signal)
+                 _raw_expr(t, REFERENCE_WEIGHTS, ner_signal, embed_signal)
                  .alias("raw"))
         for t in ALL_PII_TYPES])
     return (cands.withColumn("_tr", F.explode(rows))
@@ -202,10 +201,6 @@ def fuse_predictions(
 
 
 def ensemble_oracle_sql(cands_rel: str,
-                        weights: EnsembleWeights = REFERENCE_WEIGHTS,
-                        calibration: dict[str, tuple[float, float]] | None = None,
-                        out_cols: str = "column_ref, value, pii_type, "
-                                        "match_text",
                         decision_threshold: float | None = None,
                         ner_rel: str | None = None,
                         embed_hash_col: str | None = None) -> str:
@@ -222,8 +217,6 @@ def ensemble_oracle_sql(cands_rel: str,
       (embeddings.deterministic_head_weights) per type — the exact
       arithmetic the mapInPandas embed stage computes.
     """
-    calibration = calibration or CALIBRATION
-
     def embed_vals(t: str) -> str:
         from .embeddings import EMBED_DIM, deterministic_head_weights
         w = deterministic_head_weights(t)
@@ -238,8 +231,8 @@ def ensemble_oracle_sql(cands_rel: str,
         extra_names = ", eb, " + ", ".join(
             f"w{j}" for j in range(EMBED_DIM))
     type_rows = ", ".join(
-        f"('{t}', {i}, CAST({calibration[t][0]} AS DOUBLE), "
-        f"CAST({calibration[t][1]} AS DOUBLE)"
+        f"('{t}', {i}, CAST({CALIBRATION[t][0]} AS DOUBLE), "
+        f"CAST({CALIBRATION[t][1]} AS DOUBLE)"
         + (embed_vals(t) if embed_hash_col is not None else "") + ")"
         for i, t in enumerate(ALL_PII_TYPES))
 
@@ -260,18 +253,18 @@ def ensemble_oracle_sql(cands_rel: str,
             for j in range(EMBED_DIM))
         emb = f"(1.0 / (1.0 + exp(-(t.eb + {digits}))))"
 
-    raw = (f"({weights.w_rule} * c.rule_confidence * "
+    raw = (f"({REFERENCE_WEIGHTS.w_rule} * c.rule_confidence * "
            f"(CASE WHEN c.pii_type = t.t_type THEN 1.0 ELSE 0.0 END) + "
-           f"{weights.validation_bonus} * "
+           f"{REFERENCE_WEIGHTS.validation_bonus} * "
            f"(CASE WHEN c.validated AND c.pii_type = t.t_type THEN 1.0 "
-           f"ELSE 0.0 END) + {weights.w_ner} * {ner} + "
-           f"{weights.w_embed} * {emb})")
+           f"ELSE 0.0 END) + {REFERENCE_WEIGHTS.w_ner} * {ner} + "
+           f"{REFERENCE_WEIGHTS.w_embed} * {emb})")
     cal = f"(1.0 / (1.0 + exp(-(t.a * {raw} + t.b))))"
     part = "c.column_ref, c.value, c.pii_type, c.match_text"
     gate = ("" if decision_threshold is None
             else f" AND cal_best >= {decision_threshold}")
     return f"""
-SELECT {out_cols}, label, score FROM (
+SELECT column_ref, value, pii_type, match_text, label, score FROM (
   SELECT {part}, t.t_type AS label, round({cal}, 6) AS cal_best,
          round({cal} / SUM({cal}) OVER (PARTITION BY {part}), 6) AS score,
          row_number() OVER (PARTITION BY {part}

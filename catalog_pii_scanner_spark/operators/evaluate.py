@@ -203,7 +203,7 @@ def repeated_span_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def repeated_span_oracle_sql(customer_rel: str = "customer") -> str:
+def repeated_span_oracle_sql() -> str:
     """Pure-arithmetic oracle: positions, confidences, and contexts are
     COMPUTED from the template layout (no regex anywhere) — an independent
     derivation the engine can only match with true per-occurrence offsets.
@@ -231,7 +231,7 @@ def repeated_span_oracle_sql(customer_rel: str = "customer") -> str:
             f"       substr(redtext, greatest({p} - 48, 1),\n"
             f"              length({piece}) + 96) AS context\n"
             f"FROM rred")
-    return ("WITH " + repeated_entities_sql("duckdb", customer_rel).lstrip()
+    return ("WITH " + repeated_entities_sql("duckdb").lstrip()
             + f""",
 rred AS (
   SELECT text_id, ssn, email, phone, dt,
@@ -503,11 +503,11 @@ def eval_metrics_trained(spark: SparkSession, labeled: DataFrame,
 
 # --- oracle -----------------------------------------------------------------
 
-def eval_metrics_oracle_sql(customer_rel: str = "customer") -> str:
+def eval_metrics_oracle_sql() -> str:
     from ..oracles import candidates_cte
     all_types = ", ".join(f"('{t}')" for t in ALL_PII_TYPES)
     return f"""
-WITH {eval_entities_sql('duckdb', customer_rel)},
+WITH {eval_entities_sql('duckdb')},
 {candidates_cte('texts', key_col='text_id', value_col='text').lstrip()},
 preds AS (
   SELECT text_id, pii_type, match_text,

@@ -71,14 +71,14 @@ def candidates_rollup(cands: DataFrame) -> DataFrame:
     )
 
 
-def candidates_rollup_oracle_sql(scored_rel: str = "scored") -> str:
-    return f"""
+def candidates_rollup_oracle_sql() -> str:
+    return """
 SELECT COALESCE(pii_type, 'ALL') AS pii_type,
        COALESCE(CAST(validated AS VARCHAR), 'ALL') AS validated,
        COUNT(*) AS n_candidates,
        COUNT(DISTINCT column_ref) AS n_columns,
        round(MAX(prob), 6) AS max_prob
-FROM {scored_rel}
+FROM scored
 GROUP BY ROLLUP(pii_type, validated)
 HAVING COUNT(*) > 0
 """

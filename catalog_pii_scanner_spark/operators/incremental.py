@@ -84,12 +84,16 @@ _SPARK_H48 = ("cast(conv(substr(md5(coalesce(value, '')), 1, 12), "
               "16, 10) as bigint)")
 
 
-def _distinct_basis(values_df: DataFrame
-                    ) -> tuple[DataFrame, list[str], str | None]:
+def distinct_basis(values_df: DataFrame
+                   ) -> tuple[DataFrame, list[str], str | None]:
     """(checkpointed distinct non-null value basis + is_new, the value
-    columns, the value-class column name) — shared by the incremental
-    scan and the two store-relation twins so their snapshots cannot
-    drift.
+    columns, the value-class column name) — the one input of the
+    incremental scan and the two store-relation twins, so their
+    snapshots cannot drift. Callers share it across queries (the
+    entry-level memo: pii_scan_catalog_tables, sample_columns_topn and
+    the three fingerprint/store queries all derive the identical
+    relation from the same melted catalog, so a suite re-derived it
+    five times — ~16 % of the r12 bench).
 
     Eager localCheckpoint, NOT persist (round-11 verdict item: cold
     46 s vs 10 s warm on the driver map, the suite-worst spread): with
@@ -110,18 +114,6 @@ def _distinct_basis(values_df: DataFrame
             .withColumn("is_new", F.expr(NEW_ROW_GATE))
             .localCheckpoint(eager=True))
     return vals, vcols, class_col
-
-
-def distinct_basis(values_df: DataFrame
-                   ) -> tuple[DataFrame, list[str], str | None]:
-    """Public hook for callers that SHARE the checkpointed basis across
-    queries (the entry-level memo: pii_scan_catalog_tables,
-    sample_columns_topn, and the three fingerprint/store queries all
-    derive the identical relation from the same melted catalog, so a
-    suite re-derived it five times — ~16 % of the r12 bench). The
-    returned triple is exactly what the ``basis=`` parameters below
-    accept."""
-    return _distinct_basis(values_df)
 
 
 def _snapshot_fingerprints(vals: DataFrame) -> DataFrame:
@@ -152,31 +144,17 @@ def _changed_pred():
             | (F.col("h") != F.col("o_h")))
 
 
-def _require_exactly_one(fn: str, values_df, basis) -> None:
-    """The values_df/basis parameters are alternatives, not layers:
-    neither given would crash opaquely inside _distinct_basis, and both
-    given would silently discard values_df (r13 review finding)."""
-    if (values_df is None) == (basis is None):
-        raise ValueError(
-            f"{fn}() takes exactly one of values_df or basis")
-
-
-def incremental_findings(values_df: DataFrame | None = None,
-                         basis=None) -> DataFrame:
-    """Spark path over a melted (column_ref, value[, vclass]) relation.
+def incremental_findings(basis) -> DataFrame:
+    """Spark path over a :func:`distinct_basis` of a melted
+    (column_ref, value[, vclass]) relation.
 
     Plan: ONE distinct shuffle (checkpointed — it feeds the
     fingerprint pass and the pruned scan, the findings_rollup
     discipline), one conditional-aggregate fingerprint pass producing
     the checkpointed metadata-scale per-column relation WITH the
     totals, then extraction over the broadcast-pruned value set only.
-    ``basis`` (a :func:`distinct_basis` triple) lets the caller hand
-    over an already-materialized shared basis instead of
-    ``values_df``; the derived relation is identical by construction.
     """
-    _require_exactly_one("incremental_findings", values_df, basis)
-    vals, vcols, class_col = (basis if basis is not None
-                              else _distinct_basis(values_df))
+    vals, vcols, class_col = basis
     fps = _snapshot_fingerprints(vals)
     # the action relation is a trivial projection over the checkpointed
     # fingerprints — no second checkpoint needed
@@ -291,8 +269,7 @@ GROUP BY s.column_ref, s.pii_type, a.n_values, a.scan_action
 # parquet input on both engines.
 
 
-def findings_merge_upsert(values_df: DataFrame | None = None,
-                          basis=None) -> DataFrame:
+def findings_merge_upsert(basis) -> DataFrame:
     """MERGE-result relation: one row per column_ref after upserting
     the incremental rescan's findings into the prior store.
 
@@ -312,9 +289,7 @@ def findings_merge_upsert(values_df: DataFrame | None = None,
     relations. 100 TB: everything after extraction is metadata-scale.
     ``basis`` as in :func:`incremental_findings`.
     """
-    _require_exactly_one("findings_merge_upsert", values_df, basis)
-    vals, vcols, class_col = (basis if basis is not None
-                              else _distinct_basis(values_df))
+    vals, vcols, class_col = basis
     fps = _snapshot_fingerprints(vals)
     cands = (extract_candidates(vals.select(*vcols), class_col=class_col)
              .withColumn("prob", candidate_score())
@@ -448,8 +423,7 @@ from ..sinks.writeback import COMMENT_PREFIX as _WB_PREFIX  # noqa: E402
 from ..sinks.writeback import MAX_COMMENT as _WB_MAX  # noqa: E402
 
 
-def writeback_diff_plan(values_df: DataFrame | None = None,
-                        basis=None) -> DataFrame:
+def writeback_diff_plan(basis) -> DataFrame:
     """The K2-K4 diff-before-write as a relation: desired tags from the
     CURRENT scan anti-diffed against the catalog state the PRIOR run's
     apply left behind. One row per column the current scan tags:
@@ -465,27 +439,12 @@ def writeback_diff_plan(values_df: DataFrame | None = None,
     tests. Fingerprints are irrelevant here: the diff is on tag
     CONTENT, exactly like the sink (writeback.py apply_writeback).
 
-    Unlike the fingerprinting queries this one has a SINGLE consumer
-    of the value basis (the extraction), so materializing the full
-    distinct value set would be pure waste — the checkpoint sits on
-    the (small, post-extraction) candidate set instead, which the two
-    per-column aggregates both consume (A/B at sf0.1: cold 17.5 ->
-    13.2 s, warm level; one full-value-set disk write removed).
-    ``basis`` as in :func:`incremental_findings` — when a shared basis
-    already exists (entry-level memo) the single-consumer argument
-    above no longer applies and the melt+distinct is skipped outright
-    (is_new is dropped: the extraction output re-derives it)."""
-    _require_exactly_one("writeback_diff_plan", values_df, basis)
-    if basis is not None:
-        bvals, vcols, class_col = basis
-        vals = bvals.select(*vcols)
-    else:
-        vcols = ["column_ref", "value"] + (
-            ["vclass"] if "vclass" in values_df.columns else [])
-        class_col = "vclass" if "vclass" in values_df.columns else None
-        vals = (values_df.select(*vcols)
-                .where(F.col("value").isNotNull()).distinct())
-    cands = (extract_candidates(vals, class_col=class_col)
+    ``basis`` as in :func:`incremental_findings` (its is_new is dropped:
+    the extraction output re-derives it). The checkpoint sits on the
+    (small, post-extraction) candidate set, which the two per-column
+    aggregates both consume."""
+    bvals, vcols, class_col = basis
+    cands = (extract_candidates(bvals.select(*vcols), class_col=class_col)
              .withColumn("is_new", F.expr(NEW_ROW_GATE))
              .localCheckpoint(eager=True))
     cur_t = cands.groupBy("column_ref").agg(

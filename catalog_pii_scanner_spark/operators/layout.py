@@ -208,10 +208,10 @@ def layout_zorder_oracle_sql() -> str:
 COMPACT_TARGET_BYTES = 4096
 
 
-def compaction_plan_sql(dialect: str, docs_rel: str = "documents",
-                        target: int = COMPACT_TARGET_BYTES) -> str:
+def compaction_plan_sql(dialect: str, docs_rel: str = "documents") -> str:
     """Dual-dialect plan rollup: one row per (source, bin_id) with
-    n_files, total_bytes, and fill_bp = total_bytes * 10000 / target
+    n_files, total_bytes, and fill_bp = total_bytes * 10000 /
+    COMPACT_TARGET_BYTES
     (exact integer division — byte counts are integers, and a double
     floor() quotient is not engine-build-stable; the HLL lesson) —
     >= 10000 flags the one-file overflow bins.
@@ -224,9 +224,9 @@ def compaction_plan_sql(dialect: str, docs_rel: str = "documents",
                                       ORDER BY file_id
                                       ROWS BETWEEN UNBOUNDED PRECEDING
                                       AND CURRENT ROW) - bytes""",
-        f"CAST({target} AS BIGINT)")
+        f"CAST({COMPACT_TARGET_BYTES} AS BIGINT)")
     fill = exact_int_div(dialect, "SUM(bytes) * CAST(10000 AS BIGINT)",
-                         f"CAST({target} AS BIGINT)")
+                         f"CAST({COMPACT_TARGET_BYTES} AS BIGINT)")
     return f"""
 WITH inv AS (
   SELECT source, doc_id AS file_id, CAST(n_chars AS BIGINT) AS bytes
@@ -285,12 +285,10 @@ SKEW_EDGES = (
 
 
 def partition_skew_sql(dialect: str, rel_prefix: str = "",
-                       edges=SKEW_EDGES,
-                       target: int = SKEW_TARGET_ROWS,
-                       heavy_x: int = SKEW_HEAVY_X) -> str:
+                       target: int = SKEW_TARGET_ROWS) -> str:
     """One row per audited edge: rel_key, n_rows, n_keys,
     max_key_rows, skew_x (max / mean, rounded 1e-6), n_heavy_keys
-    (keys above heavy_x * mean), rec_salt (ceil(max_key_rows /
+    (keys above SKEW_HEAVY_X * mean), rec_salt (ceil(max_key_rows /
     target) as exact integer arithmetic — a double ceil() quotient is
     not engine-build-stable, the HLL lesson; 1 = no salting needed).
     NULL keys are excluded (they shuffle to one partition by
@@ -300,7 +298,7 @@ def partition_skew_sql(dialect: str, rel_prefix: str = "",
                          f"s.max_k + CAST({target - 1} AS BIGINT)",
                          f"CAST({target} AS BIGINT)")
     parts = []
-    for rel, key in edges:
+    for rel, key in SKEW_EDGES:
         r = rel_prefix + rel
         parts.append(f"""
 SELECT '{rel}.{key}' AS rel_key,
@@ -325,7 +323,7 @@ CROSS JOIN (
   CROSS JOIN (SELECT SUM(cnt2) * 1.0 / COUNT(*) AS mean_k
               FROM (SELECT COUNT(*) AS cnt2 FROM {r}
                     WHERE {key} IS NOT NULL GROUP BY {key}) _m) _mm
-  WHERE _c2.cnt > {heavy_x} * _mm.mean_k
+  WHERE _c2.cnt > {SKEW_HEAVY_X} * _mm.mean_k
 ) h""")
     body = "\nUNION ALL".join(parts)
     return f"SELECT * FROM ({body}) allrows ORDER BY rel_key"

@@ -76,29 +76,26 @@ def llm_budget_plan(df: DataFrame, id_col: str = "doc_id",
         (cum_usd <= F.lit(cost_cap_usd)).alias("in_budget"))
 
 
-def llm_budget_plan_sql(rel: str = "documents", id_col: str = "doc_id",
-                        text_col: str = "text",
-                        cost_cap_usd: float = LLM_COST_CAP_USD,
-                        price_per_1k: float = LLM_PRICE_PER_1K_USD) -> str:
+def llm_budget_plan_sql() -> str:
     """DuckDB oracle: the semantic single-window rendering of the
     two-level prefix sum."""
     return f"""
 WITH base AS (
-  SELECT {id_col},
-         CAST(COALESCE(len(regexp_split_to_array({text_col}, ' +')), 0)
+  SELECT doc_id,
+         CAST(COALESCE(len(regexp_split_to_array(text, ' +')), 0)
               AS BIGINT) AS est_tokens,
-         md5(CAST({id_col} AS VARCHAR)) AS h
-  FROM {rel}
+         md5(CAST(doc_id AS VARCHAR)) AS h
+  FROM documents
 ),
 cum AS (
-  SELECT {id_col}, est_tokens,
-         SUM(est_tokens) OVER (ORDER BY h, {id_col}
+  SELECT doc_id, est_tokens,
+         SUM(est_tokens) OVER (ORDER BY h, doc_id
                                ROWS UNBOUNDED PRECEDING) AS cum_tokens
   FROM base
 )
-SELECT {id_col}, est_tokens,
-       round(cum_tokens * {price_per_1k / 1000.0!r}, 6) AS cum_usd,
-       cum_tokens * {price_per_1k / 1000.0!r} <= {cost_cap_usd}
+SELECT doc_id, est_tokens,
+       round(cum_tokens * {LLM_PRICE_PER_1K_USD / 1000.0!r}, 6) AS cum_usd,
+       cum_tokens * {LLM_PRICE_PER_1K_USD / 1000.0!r} <= {LLM_COST_CAP_USD}
          AS in_budget
 FROM cum
 """

@@ -105,7 +105,7 @@ def media_features_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     return feats.select("asset_id", "media_type", "n_bytes", *cols)
 
 
-def media_features_oracle_sql(docs_rel: str = "documents") -> str:
+def media_features_oracle_sql() -> str:
     """DuckDB-arithmetic equivalent of the fake decoder: byte i of
     md5(payload) decoded from hex digits, / 255."""
     def byte_expr(i: int) -> str:
@@ -123,37 +123,33 @@ SELECT doc_id AS asset_id,
             ELSE 'video/mp4' END AS media_type,
        octet_length(encode(text)) AS n_bytes,
        {feats}
-FROM {docs_rel} WHERE text IS NOT NULL
+FROM documents WHERE text IS NOT NULL
 """
 
 
-def frame_sample_query(spark: SparkSession, sf_dir: str,
-                       every: int = 256, frame_bytes: int = 64) -> DataFrame:
+def frame_sample_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-contract query: video-path frame sampling over real binary
     payloads; output drops the raw bytes (frame_size proves the slicing)
     so the oracle can verify arithmetically."""
-    return frame_sample(media_assets(spark, sf_dir), every,
-                        frame_bytes).select(
+    return frame_sample(media_assets(spark, sf_dir)).select(
         "asset_id", F.col("frame_no").cast("bigint").alias("frame_no"),
         F.col("frame_size").cast("bigint").alias("frame_size"))
 
 
-def frame_sample_oracle_sql(docs_rel: str = "documents",
-                            every: int = 256,
-                            frame_bytes: int = 64) -> str:
-    return f"""
+def frame_sample_oracle_sql() -> str:
+    return """
 WITH a AS (
   SELECT doc_id AS asset_id, octet_length(encode(text)) AS n_bytes
-  FROM {docs_rel} WHERE doc_id % 3 = 2 AND text IS NOT NULL
+  FROM documents WHERE doc_id % 3 = 2 AND text IS NOT NULL
 ),
 f AS (
   SELECT asset_id, n_bytes,
-         unnest(range(0, CAST(floor(n_bytes / {every}.0) AS BIGINT) + 1))
+         unnest(range(0, CAST(floor(n_bytes / 256.0) AS BIGINT) + 1))
            AS frame_no
   FROM a
 )
 SELECT asset_id, frame_no,
-       greatest(least({frame_bytes}, n_bytes - frame_no * {every}),
+       greatest(least(64, n_bytes - frame_no * 256),
                 0) AS frame_size
 FROM f
 """
@@ -197,29 +193,27 @@ def resize_media(assets: DataFrame, target_bytes: int = 32,
              "resized binary, resized_bytes bigint")
 
 
-def media_resize_query(spark: SparkSession, sf_dir: str,
-                       target_bytes: int = 32) -> DataFrame:
+def media_resize_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-contract query: resize plumbing over real binary payloads;
     the oracle verifies the size arithmetic (stride subsample length),
     byte content is pinned by the unit test."""
-    return resize_media(media_assets(spark, sf_dir), target_bytes).select(
+    return resize_media(media_assets(spark, sf_dir)).select(
         "asset_id", "media_type", "n_bytes", "resized_bytes")
 
 
-def media_resize_oracle_sql(docs_rel: str = "documents",
-                            target_bytes: int = 32) -> str:
+def media_resize_oracle_sql() -> str:
     n = "octet_length(encode(text))"
-    stride = f"CAST(ceil({n} / {target_bytes}.0) AS BIGINT)"
+    stride = f"CAST(ceil({n} / 32.0) AS BIGINT)"
     return f"""
 SELECT doc_id AS asset_id,
        CASE WHEN doc_id % 3 = 0 THEN 'image/png'
             WHEN doc_id % 3 = 1 THEN 'audio/wav'
             ELSE 'video/mp4' END AS media_type,
        {n} AS n_bytes,
-       CASE WHEN {n} <= {target_bytes} THEN {n}
+       CASE WHEN {n} <= 32 THEN {n}
             ELSE CAST(ceil({n} / CAST({stride} AS DOUBLE)) AS BIGINT)
        END AS resized_bytes
-FROM {docs_rel} WHERE text IS NOT NULL
+FROM documents WHERE text IS NOT NULL
 """
 
 
@@ -298,8 +292,7 @@ def audio_window_energy(assets: DataFrame,
                               "energy double"))
 
 
-def audio_energy_query(spark: SparkSession, sf_dir: str,
-                       window: int = AUDIO_WINDOW) -> DataFrame:
+def audio_energy_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ASCII-payload gate: the oracle's ord(substr(text, ...)) arithmetic
     # is byte-exact only where byte count == codepoint count, so BOTH
     # sides restrict to that domain explicitly — a non-ASCII corpus
@@ -308,11 +301,10 @@ def audio_energy_query(spark: SparkSession, sf_dir: str,
     # byte-indexing to make the oracle byte-exact beyond ASCII).
     assets = media_assets(spark, sf_dir).where(
         F.col("n_bytes") == F.length(F.decode(F.col("media"), "utf-8")))
-    return audio_window_energy(assets, window)
+    return audio_window_energy(assets)
 
 
-def audio_energy_oracle_sql(docs_rel: str = "documents",
-                            window: int = AUDIO_WINDOW) -> str:
+def audio_energy_oracle_sql() -> str:
     """Byte arithmetic over the payload, valid on the ASCII domain the
     query pins (char position == byte position, ord == byte value); the
     identical ascii gate keeps both sides' row sets equal on any corpus.
@@ -320,29 +312,32 @@ def audio_energy_oracle_sql(docs_rel: str = "documents",
     return f"""
 WITH a AS (
   SELECT doc_id AS asset_id, text, octet_length(encode(text)) AS n
-  FROM {docs_rel} WHERE doc_id % 3 = 1 AND text IS NOT NULL
+  FROM documents WHERE doc_id % 3 = 1 AND text IS NOT NULL
     AND octet_length(encode(text)) = length(text)
 ),
 w AS (
   SELECT asset_id, text, n,
-         unnest(range(0, CAST(ceil(n / {window}.0) AS BIGINT)))
+         unnest(range(0, CAST(ceil(n / {AUDIO_WINDOW}.0) AS BIGINT)))
            AS window_no
   FROM a WHERE n > 0
 ),
 b AS (
   SELECT asset_id, window_no,
-         CAST(least({window}, n - window_no * {window}) AS BIGINT)
+         CAST(least({AUDIO_WINDOW}, n - window_no * {AUDIO_WINDOW}) AS BIGINT)
            AS win_len,
-         unnest(range(0, least({window}, n - window_no * {window}))) AS j,
+         unnest(range(0, least({AUDIO_WINDOW},
+                               n - window_no * {AUDIO_WINDOW}))) AS j,
          text
   FROM w
 )
 SELECT asset_id, window_no, win_len,
        CAST(SUM(ord(substr(text,
-                           CAST(window_no * {window} + j + 1 AS INT), 1)))
+                           CAST(window_no * {AUDIO_WINDOW} + j + 1 AS INT),
+                           1)))
             AS BIGINT) AS byte_sum,
        floor(SUM(ord(substr(text,
-                            CAST(window_no * {window} + j + 1 AS INT), 1)))
+                            CAST(window_no * {AUDIO_WINDOW} + j + 1 AS INT),
+                            1)))
              / (win_len * 255.0) * 1000000 + 0.5) / 1000000 AS energy
 FROM b GROUP BY asset_id, window_no, win_len
 """
@@ -560,16 +555,16 @@ def real_pgm_features_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     return feats.select("asset_id", "n_bytes", *cols)
 
 
-def real_pgm_features_oracle_sql(docs_rel: str = "documents") -> str:
+def real_pgm_features_oracle_sql() -> str:
     """Pure-arithmetic oracle: pixel stats from the generator formula.
     std is the two-pass sqrt(avg((p - mean)^2)) — numpy's algorithm —
     not the cancellation-prone E[x^2]-E[x]^2 form; percentiles are
     quantile_cont (numpy's linear interpolation)."""
-    return f"""
+    return """
 WITH d AS (
   SELECT doc_id, CAST(doc_id % 5 + 4 AS BIGINT) AS w,
          CAST(doc_id % 7 + 3 AS BIGINT) AS h
-  FROM {docs_rel}
+  FROM documents
 ),
 px AS (
   SELECT doc_id, w, h, unnest(range(0, h * w)) AS i FROM d
@@ -662,14 +657,14 @@ def real_wav_features_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     return feats.select("asset_id", "n_bytes", *cols)
 
 
-def real_wav_features_oracle_sql(docs_rel: str = "documents") -> str:
+def real_wav_features_oracle_sql() -> str:
     """Arithmetic oracle for the WAV feature vector [n, rate, mean, std,
     min, max, rms, zcr] over amplitudes s/32768 — std two-pass, zcr =
     share of adjacent sign(bit) flips (negative-only, matching numpy
     signbit on integer-derived floats)."""
     return f"""
 WITH d AS (
-  SELECT doc_id, CAST(doc_id % 13 + 20 AS BIGINT) AS n FROM {docs_rel}
+  SELECT doc_id, CAST(doc_id % 13 + 20 AS BIGINT) AS n FROM documents
 ),
 ix AS (SELECT doc_id, n, unnest(range(0, n)) AS i FROM d),
 sv AS (
@@ -900,8 +895,6 @@ def phash_band_rows(hashes: DataFrame) -> DataFrame:
 
 
 def phash_dedup_query(spark: SparkSession, sf_dir: str,
-                      ham_max: int = PHASH_HAM_MAX,
-                      max_bucket: int = PHASH_MAX_BUCKET,
                       hashes: DataFrame | None = None) -> DataFrame:
     """Banded aHash near-dup pairs over the SQL-built PGM corpus.
     Output: doc_a, doc_b, hamming (doc_a < doc_b). ``hashes`` lets a
@@ -914,7 +907,7 @@ def phash_dedup_query(spark: SparkSession, sf_dir: str,
     bands = phash_band_rows(hashes)
     bands_ok = (bands.groupBy("band", "val")
                 .agg(F.count("*").alias("_bn"))
-                .where(F.col("_bn") <= max_bucket)
+                .where(F.col("_bn") <= PHASH_MAX_BUCKET)
                 .select("band", "val"))
     capped = bands.join(bands_ok, ["band", "val"])
     a, b_ = capped.alias("a"), capped.alias("b")
@@ -932,31 +925,27 @@ def phash_dedup_query(spark: SparkSession, sf_dir: str,
     return (pairs.join(ha, "doc_a").join(hb, "doc_b")
             .select("doc_a", "doc_b",
                     ham.cast("bigint").alias("hamming"))
-            .where(F.col("hamming") <= ham_max))
+            .where(F.col("hamming") <= PHASH_HAM_MAX))
 
 
-def phash_excluded_buckets(spark: SparkSession, sf_dir: str,
-                           max_bucket: int = PHASH_MAX_BUCKET
-                           ) -> DataFrame:
+def phash_excluded_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Observability twin: the (band, val, n_docs) buckets the cap
     dropped (empty on the synthetic corpus at gate scales)."""
     bands = phash_band_rows(ahash_bands(
         synthetic_pgm_neardup_assets(spark, sf_dir)))
     return (bands.groupBy("band", "val")
             .agg(F.count("*").alias("n_docs"))
-            .where(F.col("n_docs") > max_bucket))
+            .where(F.col("n_docs") > PHASH_MAX_BUCKET))
 
 
-def phash_dedup_oracle_sql(docs_rel: str = "documents",
-                           ham_max: int = PHASH_HAM_MAX,
-                           max_bucket: int = PHASH_MAX_BUCKET) -> str:
+def phash_dedup_oracle_sql() -> str:
     """Pure-arithmetic oracle: hash bits re-derived from the generator
     formula (nearest-neighbor index r*h//8, c*w//8; exact mean)."""
     return f"""
 WITH d AS (
   SELECT doc_id, doc_id % {PHASH_BASES} AS base,
          (doc_id // {PHASH_BASES}) % {PHASH_TWEAKS} AS tweak
-  FROM {docs_rel}
+  FROM documents
 ),
 dim AS (
   SELECT doc_id, base, tweak,
@@ -989,7 +978,7 @@ bands AS (
 ),
 bands_ok AS (
   SELECT band, val FROM bands GROUP BY band, val
-  HAVING COUNT(*) <= {max_bucket}
+  HAVING COUNT(*) <= {PHASH_MAX_BUCKET}
 ),
 capped AS (SELECT b.* FROM bands b JOIN bands_ok USING (band, val)),
 pairs AS (
@@ -1017,7 +1006,7 @@ JOIN hx c ON c.doc_id = p.doc_b
 WHERE bit_count(CAST(xor(a.b0, c.b0) AS BIGINT))
     + bit_count(CAST(xor(a.b1, c.b1) AS BIGINT))
     + bit_count(CAST(xor(a.b2, c.b2) AS BIGINT))
-    + bit_count(CAST(xor(a.b3, c.b3) AS BIGINT)) <= {ham_max}
+    + bit_count(CAST(xor(a.b3, c.b3) AS BIGINT)) <= {PHASH_HAM_MAX}
 """
 
 
@@ -1119,10 +1108,7 @@ def _phash_resolve(spark: SparkSession, bands: DataFrame | None,
 
 
 def phash_keep_list_query(spark: SparkSession, sf_dir: str,
-                          ham_max: int = PHASH_HAM_MAX,
-                          max_bucket: int = PHASH_MAX_BUCKET,
-                          hashes: DataFrame | None = None
-                          ) -> DataFrame:
+                          hashes: DataFrame | None = None) -> DataFrame:
     """The image-dedup product verdict (the dedup_keep_list shape for
     the multimodal corpus): one decode pass -> aHash band rows ->
     _phash_resolve (banded pairs, hamming verify, connected components
@@ -1143,14 +1129,11 @@ def phash_keep_list_query(spark: SparkSession, sf_dir: str,
             synthetic_pgm_neardup_assets(spark, sf_dir)) \
             .localCheckpoint(eager=True)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return _phash_resolve(spark, None, docs, ham_max, max_bucket,
+    return _phash_resolve(spark, None, docs, PHASH_HAM_MAX, PHASH_MAX_BUCKET,
                           hashes=hashes)
 
 
-def phash_keep_list_oracle_sql(docs_rel: str = "documents",
-                               ham_max: int = PHASH_HAM_MAX,
-                               max_bucket: int = PHASH_MAX_BUCKET
-                               ) -> str:
+def phash_keep_list_oracle_sql() -> str:
     """Min reachable doc per node via a RECURSIVE CTE over the phash
     pair graph (the dedup_keep_list_sql pattern), with the hash bits
     re-derived arithmetically from the generator formula (the
@@ -1160,7 +1143,7 @@ def phash_keep_list_oracle_sql(docs_rel: str = "documents",
 WITH RECURSIVE d AS (
   SELECT doc_id, doc_id % {PHASH_BASES} AS base,
          (doc_id // {PHASH_BASES}) % {PHASH_TWEAKS} AS tweak
-  FROM {docs_rel}
+  FROM documents
 ),
 dim AS (
   SELECT doc_id, base, tweak,
@@ -1196,7 +1179,7 @@ bcnt AS (
 ),
 capped AS (
   SELECT b.* FROM bands b
-  JOIN bcnt USING (band, val) WHERE _bn <= {max_bucket}
+  JOIN bcnt USING (band, val) WHERE _bn <= {PHASH_MAX_BUCKET}
 ),
 pairs0 AS (
   SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -1219,7 +1202,7 @@ phash_pairs AS (
   WHERE bit_count(CAST(xor(a.b0, c.b0) AS BIGINT))
       + bit_count(CAST(xor(a.b1, c.b1) AS BIGINT))
       + bit_count(CAST(xor(a.b2, c.b2) AS BIGINT))
-      + bit_count(CAST(xor(a.b3, c.b3) AS BIGINT)) <= {ham_max}
+      + bit_count(CAST(xor(a.b3, c.b3) AS BIGINT)) <= {PHASH_HAM_MAX}
 ),
 edges AS (
   SELECT doc_a AS src, doc_b AS dst FROM phash_pairs
@@ -1237,13 +1220,13 @@ clusters AS (
 ),
 flagged AS (
   SELECT DISTINCT b.doc_id FROM bands b
-  JOIN bcnt USING (band, val) WHERE _bn > {max_bucket}
+  JOIN bcnt USING (band, val) WHERE _bn > {PHASH_MAX_BUCKET}
 )
 SELECT d.doc_id,
        COALESCE(c.cluster_rep, d.doc_id) AS cluster_rep,
        COALESCE(c.cluster_rep, d.doc_id) = d.doc_id AS keep,
        f.doc_id IS NOT NULL AS in_capped_bucket
-FROM {docs_rel} d
+FROM documents d
 LEFT JOIN clusters c ON c.doc_id = d.doc_id
 LEFT JOIN flagged f ON f.doc_id = d.doc_id
 """
@@ -1348,8 +1331,7 @@ def multimodal_audio_fingerprint(spark: SparkSession,
                     "group_n", "keep"))
 
 
-def _audio_fp_cte_prefix(docs_rel: str = "documents",
-                         window: int = FP_WINDOW) -> str:
+def _audio_fp_cte_prefix() -> str:
     """The shared oracle CTE chain up to the lag-pair relation ``d``
     (same byte arithmetic as audio_energy_oracle_sql, ASCII-domain
     gate identical) — used by both the fingerprint oracle and the
@@ -1357,27 +1339,28 @@ def _audio_fp_cte_prefix(docs_rel: str = "documents",
     return f"""
 WITH a AS (
   SELECT doc_id AS asset_id, text, octet_length(encode(text)) AS n
-  FROM {docs_rel} WHERE doc_id % 3 = 1 AND text IS NOT NULL
+  FROM documents WHERE doc_id % 3 = 1 AND text IS NOT NULL
     AND octet_length(encode(text)) = length(text)
 ),
 w AS (
   SELECT asset_id, text, n,
-         unnest(range(0, CAST(ceil(n / {window}.0) AS BIGINT)))
+         unnest(range(0, CAST(ceil(n / {FP_WINDOW}.0) AS BIGINT)))
            AS window_no
   FROM a WHERE n > 0
 ),
 b AS (
   SELECT asset_id, window_no,
-         CAST(least({window}, n - window_no * {window}) AS BIGINT)
+         CAST(least({FP_WINDOW}, n - window_no * {FP_WINDOW}) AS BIGINT)
            AS win_len,
-         unnest(range(0, least({window}, n - window_no * {window}))) AS j,
+         unnest(range(0, least({FP_WINDOW},
+                               n - window_no * {FP_WINDOW}))) AS j,
          text
   FROM w
 ),
 e AS (
   SELECT asset_id, window_no, win_len,
          CAST(SUM(ord(substr(text,
-                             CAST(window_no * {window} + j + 1 AS INT),
+                             CAST(window_no * {FP_WINDOW} + j + 1 AS INT),
                              1))) AS BIGINT) AS byte_sum
   FROM b GROUP BY asset_id, window_no, win_len, text
 ),
@@ -1391,12 +1374,10 @@ d AS (
 )"""
 
 
-def audio_fingerprint_oracle_sql(docs_rel: str = "documents",
-                                 window: int = FP_WINDOW,
-                                 bits: int = FP_BITS) -> str:
+def audio_fingerprint_oracle_sql() -> str:
     """Lag-delta sign bits packed per asset over the shared CTE chain
     (_audio_fp_cte_prefix); exact-match group census + MIN-id keep."""
-    return f"""{_audio_fp_cte_prefix(docs_rel, window)},
+    return f"""{_audio_fp_cte_prefix()},
 fps AS (
   -- the SUM is CAST back to BIGINT: DuckDB's SUM(BIGINT) widens to
   -- HUGEINT, and the round-10 census pinned the driver hash failures
@@ -1404,7 +1385,7 @@ fps AS (
   -- bit-31 fingerprints here were 5 of the suite's only such values
   -- (operators/sketches.py module docstring has the full finding)
   SELECT asset_id,
-         CAST(COALESCE(SUM(CASE WHEN window_no BETWEEN 1 AND {bits}
+         CAST(COALESCE(SUM(CASE WHEN window_no BETWEEN 1 AND {FP_BITS}
                            AND byte_sum * prev_len > prev_sum * win_len
                       THEN (CAST(1 AS BIGINT)
                             << CAST(window_no - 1 AS INTEGER))

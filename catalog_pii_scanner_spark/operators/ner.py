@@ -260,25 +260,21 @@ def detect_ner_spans(values_df: DataFrame, value_col: str = "value",
     )
 
 
-def merge_with_rules(rule_cands: DataFrame, ner_spans: DataFrame,
-                     keys: tuple[str, ...] = ("column_ref", "value"),
-                     w_rule_signal: float = 1.0) -> DataFrame:
-    """N4/A1: per (keys, pii_type) MAX over rule confidences and NER
-    scores — the union-then-max merge the reference applies
-    (ner.py:202-228). One union + one aggregation."""
-    r = rule_cands.select(*keys, "pii_type",
-                          (F.col("rule_confidence")
-                           * F.lit(w_rule_signal)).alias("signal"))
-    n = ner_spans.select(*keys, "pii_type",
-                         F.col("ner_score").alias("signal"))
+def merge_with_rules(rule_cands: DataFrame, ner_spans: DataFrame) -> DataFrame:
+    """N4/A1: per (column_ref, value, pii_type) MAX over rule
+    confidences and NER scores — the union-then-max merge the reference
+    applies (ner.py:202-228). One union + one aggregation."""
+    keys = ("column_ref", "value", "pii_type")
+    r = rule_cands.select(*keys, F.col("rule_confidence").alias("signal"))
+    n = ner_spans.select(*keys, F.col("ner_score").alias("signal"))
     return (
         r.unionByName(n)
-        .groupBy(*keys, "pii_type")
+        .groupBy(*keys)
         .agg(F.round(F.max("signal"), 6).alias("merged_score"))
     )
 
 
-def merge_with_rules_oracle_sql(scored_rel: str = "scored") -> str:
+def merge_with_rules_oracle_sql() -> str:
     """DuckDB rendering over the shared scored-candidates CTE: re-derive
     the NER spans from the same relation (EMAIL/PHONE/PERSON matches at
     provider scores), union with rule confidences, group-max."""
@@ -288,11 +284,11 @@ def merge_with_rules_oracle_sql(scored_rel: str = "scored") -> str:
     return f"""
 merged_in AS (
   SELECT column_ref, value, pii_type, rule_confidence AS signal
-  FROM {scored_rel}
+  FROM scored
   UNION ALL
   SELECT column_ref, value, pii_type,
          (CASE pii_type {score_case} END) AS signal
-  FROM {scored_rel}
+  FROM scored
   WHERE pii_type IN ({", ".join(f"'{t}'" for t in NER_SCORES)})
     AND (CASE pii_type {score_case} END) >= {NER_CONFIDENCE_MIN}
 )
@@ -342,7 +338,6 @@ totals AS (
 
 
 def ner_context_signals(contexts: DataFrame,
-                        context_col: str = "context",
                         keep_cols: tuple[str, ...] = ("column_ref",
                                                       "match_text"),
                         provider: str = "regex",
@@ -364,7 +359,7 @@ def ner_context_signals(contexts: DataFrame,
         if a != k:
             ctx = ctx.withColumnRenamed(k, a)
     safe_keep = tuple(alias[k] for k in keep_cols)
-    spans = detect_ner_spans(ctx, context_col, safe_keep,
+    spans = detect_ner_spans(ctx, "context", safe_keep,
                              provider=provider,
                              confidence_min=confidence_min,
                              provider_opts=provider_opts)

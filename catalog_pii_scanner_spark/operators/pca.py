@@ -56,7 +56,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .simsearch import DIMS, _exploded_cte
+from .simsearch import _exploded_cte
 
 #: input size above which the partial-Gram relation is checkpointed so
 #: its two merge consumers do not each re-scan the corpus; below it the
@@ -143,12 +143,12 @@ FROM diag d CROSS JOIN tr t CROSS JOIN fro f
 """
 
 
-def spectrum_stats_oracle_sql(rel: str = "embeddings") -> str:
+def spectrum_stats_oracle_sql() -> str:
     """One-statement ORACLE form: the Gram as a MATERIALIZED CTE
     (DuckDB's auto-materialization does not always reach a CTE
     referenced from multiple consumers, and an inlined Gram would
     re-run the D^2 aggregation per reference)."""
-    gram = pca_gram_sql("duckdb", rel).strip()
+    gram = pca_gram_sql("duckdb").strip()
     body = spectrum_stats_sql("spec_gram")
     prefix = "\nWITH "
     assert body.startswith(prefix)

@@ -72,7 +72,7 @@ def augment_docs(docs: DataFrame) -> DataFrame:
         .withColumn("n_chars", F.length("text").cast("bigint"))
 
 
-def augmented_docs_sql(docs_rel: str = "documents") -> str:
+def augmented_docs_sql() -> str:
     """The identical augmentation as a DuckDB relation body."""
     contact = ("' contact user' || CAST(doc_id AS VARCHAR) || "
                "'@example.com phone 555-867-' || "
@@ -90,7 +90,7 @@ def augmented_docs_sql(docs_rel: str = "documents") -> str:
                           WHEN doc_id % {CONTACT_MOD} = 0
                           THEN text || {contact}
                           ELSE text END) AS BIGINT) AS n_chars
-  FROM {docs_rel}"""
+  FROM documents"""
 
 
 # --- per-document PII density ------------------------------------------------
@@ -129,9 +129,9 @@ def doc_pii_density(spark: SparkSession, sf_dir: str) -> DataFrame:
     return doc_pii_density_docs(augment_docs(_docs(spark, sf_dir)))
 
 
-def doc_pii_density_oracle_sql(docs_rel: str = "documents") -> str:
+def doc_pii_density_oracle_sql() -> str:
     return f"""
-WITH docs AS ({augmented_docs_sql(docs_rel)}),
+WITH docs AS ({augmented_docs_sql()}),
 {candidates_cte('docs', key_col='doc_id', value_col='text')},
 dist AS (SELECT DISTINCT doc_id, pii_type FROM cand_ok),
 types AS (
@@ -191,10 +191,10 @@ def corpus_anonymize(spark: SparkSession, sf_dir: str) -> DataFrame:
     return anonymize_docs(augment_docs(_docs(spark, sf_dir)))
 
 
-def corpus_anonymize_oracle_sql(docs_rel: str = "documents") -> str:
+def corpus_anonymize_oracle_sql() -> str:
     fold_mask = mask_sql("x", "duckdb")
     return f"""
-WITH docs AS ({augmented_docs_sql(docs_rel)}),
+WITH docs AS ({augmented_docs_sql()}),
 {candidates_cte('docs', key_col='doc_id', value_col='text')},
 dist AS (SELECT DISTINCT doc_id, match_text FROM cand_ok),
 ms AS (
@@ -220,8 +220,7 @@ FROM docs d LEFT JOIN ms m USING (doc_id)
 MAX_PII_DENSITY = 0.1
 
 
-def curate_pii_docs(docs: DataFrame, spark: SparkSession,
-                    max_pii_density: float = MAX_PII_DENSITY) -> DataFrame:
+def curate_pii_docs(docs: DataFrame, spark: SparkSession) -> DataFrame:
     """The full curation verdict with the PII budget fused in: quality +
     repetition + decontamination (corpus.curate_docs) AND per-doc PII
     density, with 'pii_heavy' as the lowest-precedence drop reason
@@ -235,7 +234,7 @@ def curate_pii_docs(docs: DataFrame, spark: SparkSession,
     dens = F.coalesce(F.col("pii_density"), F.lit(0.0))
     reason = F.coalesce(
         F.col("drop_reason"),
-        F.when(dens > max_pii_density, F.lit("pii_heavy")))
+        F.when(dens > MAX_PII_DENSITY, F.lit("pii_heavy")))
     return (base.join(pii, "doc_id")
             .select("doc_id", "quality_score", "dup_gram_frac",
                     "contaminated", "pii_density",
@@ -247,21 +246,19 @@ def corpus_curate_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
     return curate_pii_docs(augment_docs(_docs(spark, sf_dir)), spark)
 
 
-def corpus_curate_pii_oracle_sql(docs_rel: str = "documents",
-                                 max_pii_density: float = MAX_PII_DENSITY
-                                 ) -> str:
+def corpus_curate_pii_oracle_sql() -> str:
     from .corpus import curate_oracle_sql
     return f"""
-WITH aug AS ({augmented_docs_sql(docs_rel)}),
+WITH aug AS ({augmented_docs_sql()}),
 base AS ({curate_oracle_sql('aug')}),
 pii AS (
-  SELECT doc_id, pii_density FROM ({doc_pii_density_oracle_sql(docs_rel)})
+  SELECT doc_id, pii_density FROM ({doc_pii_density_oracle_sql()})
 ),
 fused AS (
   SELECT b.doc_id, b.quality_score, b.dup_gram_frac, b.contaminated,
          p.pii_density,
          COALESCE(b.drop_reason,
-                  CASE WHEN COALESCE(p.pii_density, 0) > {max_pii_density}
+                  CASE WHEN COALESCE(p.pii_density, 0) > {MAX_PII_DENSITY}
                        THEN 'pii_heavy' END) AS drop_reason
   FROM base b JOIN pii p USING (doc_id)
 )

@@ -152,7 +152,6 @@ def _enriched_candidates(
 def full_scan_raw_scores(
     cands: DataFrame,
     model: EmbedModel | None = None,
-    weights: EnsembleWeights = REFERENCE_WEIGHTS,
     ner_provider: str = "regex",
     precomputed_enriched: DataFrame | None = None,
 ) -> DataFrame:
@@ -170,8 +169,7 @@ def full_scan_raw_scores(
     enriched = (precomputed_enriched if precomputed_enriched is not None
                 else _enriched_candidates(cands, model, ner_provider))
     return raw_type_scores(
-        enriched, weights=weights,
-        ner_signal=F.col("ner_sig"),
+        enriched, ner_signal=F.col("ner_sig"),
         embed_signal=F.col("embed_probs"),
     ).select(*CAND_COLS, "rule_confidence", "validated",
              "score_type", "raw")

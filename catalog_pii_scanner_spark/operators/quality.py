@@ -63,16 +63,15 @@ QC_VOCAB = (
 QC_STOP_TOKENS = ("the", "a")
 
 
-def synthetic_quality_docs(n: int = QC_TRAIN_N,
-                           seed: int = QC_TRAIN_SEED) -> list[str]:
+def synthetic_quality_docs() -> list[str]:
     """Seeded word-salad corpus mimicking the documents table's
     generating process (10-99 tokens, stopword share mostly < 0.15 with
     a 10% heavy tail — matched to the real table's stop-ratio
     quantiles)."""
-    rng = random.Random(seed)
+    rng = random.Random(QC_TRAIN_SEED)
     content = [w for w in QC_VOCAB if w not in QC_STOP_TOKENS]
     docs = []
-    for _ in range(n):
+    for _ in range(QC_TRAIN_N):
         length = rng.randint(10, 99)
         p = (rng.uniform(0.0, 0.15) if rng.random() < 0.9
              else rng.uniform(0.15, 0.25))
@@ -82,28 +81,28 @@ def synthetic_quality_docs(n: int = QC_TRAIN_N,
     return docs
 
 
-def _bucket(gram: str, nb: int = QC_NB) -> int:
+def _bucket(gram: str) -> int:
     """First 4 hex digits of md5 -> bucket; the SQL renders the same
     arithmetic from substr(md5(g), 1..4)."""
-    return int(hashlib.md5(gram.encode()).hexdigest()[:4], 16) % nb
+    return int(hashlib.md5(gram.encode()).hexdigest()[:4], 16) % QC_NB
 
 
-def doc_features(text: str, nb: int = QC_NB):
+def doc_features(text: str):
     """(normalized bucket counts, length feature) — the exact serving
     features: char 3-grams over the raw text, T = max(#grams, 1),
     length = min(n_tokens, 100)/100 with n_tokens = split(' +')."""
     import numpy as np
     n_tokens = len(re.split(" +", text))
     grams = [text[i:i + 3] for i in range(max(len(text) - 2, 0))]
-    cnt = np.zeros(nb)
+    cnt = np.zeros(QC_NB)
     for g in grams:
-        cnt[_bucket(g, nb)] += 1
+        cnt[_bucket(g)] += 1
     t = max(len(grams), 1)
     return (np.concatenate([cnt / t, [min(n_tokens, 100) / 100.0]]),
             n_tokens, len(grams))
 
 
-def quality_label(text: str, thresh: float = QC_THRESH) -> bool:
+def quality_label(text: str) -> bool:
     """The textstats doc_quality formula verbatim (digit/punct ratios,
     full STOPWORDS list, round 1e-6) — the training label AND the
     ``label`` column the serving SQL re-derives engine-side."""
@@ -116,29 +115,28 @@ def quality_label(text: str, thresh: float = QC_THRESH) -> bool:
            if ln else 0.0)
     q = (0.25 * min(nt / 100.0, 1.0) + 0.25 * (1 - dig)
          + 0.25 * (1 - pun) + 0.25 * min(4.0 * ns / nt, 1.0))
-    return round(q, 6) >= thresh
+    return round(q, 6) >= QC_THRESH
 
 
-def fit_quality_classifier(n: int = QC_TRAIN_N, seed: int = QC_TRAIN_SEED,
-                           nb: int = QC_NB, lr: float = QC_LR,
-                           iters: int = QC_ITERS, l2: float = QC_L2):
-    """Deterministic full-batch logistic GD -> (w_micro tuple[nb],
+def fit_quality_classifier():
+    """Deterministic full-batch logistic GD -> (w_micro tuple[QC_NB],
     w_len_micro, b_micro) integer micro-unit weights. Pure numpy, no
     Spark — training is an offline job whose artifact is the pinned
     constants below."""
     import numpy as np
-    docs = synthetic_quality_docs(n, seed)
-    X = np.array([doc_features(t, nb)[0] for t in docs])
+    docs = synthetic_quality_docs()
+    X = np.array([doc_features(t)[0] for t in docs])
     y = np.array([1.0 if quality_label(t) else 0.0 for t in docs])
     w = np.zeros(X.shape[1])
     b = 0.0
-    for _ in range(iters):
+    for _ in range(QC_ITERS):
         p = 1.0 / (1.0 + np.exp(-(X @ w + b)))
         g = p - y
-        w -= lr * (X.T @ g / len(y) + l2 * w)
-        b -= lr * g.mean()
+        w -= QC_LR * (X.T @ g / len(y) + QC_L2 * w)
+        b -= QC_LR * g.mean()
     wm = np.round(w * 1e6).astype(np.int64)
-    return tuple(int(v) for v in wm[:nb]), int(wm[nb]), int(round(b * 1e6))
+    return (tuple(int(v) for v in wm[:QC_NB]), int(wm[QC_NB]),
+            int(round(b * 1e6)))
 
 
 #: Pinned fit of fit_quality_classifier() with the defaults above —
@@ -169,8 +167,7 @@ QC_W_LEN_MICRO: int = 10634433
 QC_B_MICRO: int = -4573836
 
 
-def quality_classifier_sql(dialect: str, docs_rel: str = "documents",
-                           thresh: float = QC_THRESH) -> str:
+def quality_classifier_sql(dialect: str, docs_rel: str = "documents") -> str:
     """Serving SQL, rendered per dialect from one template.
 
     Output: doc_id, n_tokens, ngram_total, score (DOUBLE, rounded 1e-6),
@@ -246,7 +243,7 @@ SELECT doc_id, n_tokens, ngram_total,
              + 0.25 * (1.0 - digit_ratio)
              + 0.25 * (1.0 - punct_ratio)
              + 0.25 * LEAST(4.0 * n_stop / CAST(n_tokens AS DOUBLE),
-                            1.0), 6) >= {thresh} AS label
+                            1.0), 6) >= {QC_THRESH} AS label
 FROM scored
 """
 

@@ -4,8 +4,9 @@
   punctuation/whitespace kept, length preserved (redaction.py:16-26).
 - R2 ``redact``: replace candidate spans in the text with their masks
   (redaction.py:29-45).
-- R4 ``context``: slice +/-``window`` chars around the (redacted) span
-  (redaction.py:57-72; the ensemble uses window=48, ensemble.py:71).
+- R4 ``context``: slice +/-CONTEXT_WINDOW (48) chars around the
+  (redacted) span (redaction.py:57-72; the ensemble's window,
+  ensemble.py:71).
 - R3 redaction guarantee: no raw span text survives into model inputs —
   enforced here by construction (contexts are built from the redacted text)
   and asserted in tests/test_redaction.py.
@@ -37,8 +38,7 @@ def mask_sql(col: str, dialect: str) -> str:
     return f"regexp_replace({m}, '[A-Z]', 'X'{g})"
 
 
-def redact_candidates(cands: DataFrame, value_col: str = "value",
-                      match_col: str = "match_text") -> DataFrame:
+def redact_candidates(cands: DataFrame) -> DataFrame:
     """Add ``masked_match`` and ``redacted_value`` columns (R1+R2).
 
     Replaces every occurrence of the matched span text in the value —
@@ -46,32 +46,29 @@ def redact_candidates(cands: DataFrame, value_col: str = "value",
     spans, and a pure projection (no shuffle).
     """
     return cands.withColumn(
-        "masked_match", mask(F.col(match_col))
+        "masked_match", mask(F.col("match_text"))
     ).withColumn(
         "redacted_value",
-        F.replace(F.col(value_col), F.col(match_col), F.col("masked_match")),
+        F.replace(F.col("value"), F.col("match_text"), F.col("masked_match")),
     )
 
 
-def candidate_contexts(cands: DataFrame, window: int = CONTEXT_WINDOW,
-                       value_col: str = "value",
-                       match_col: str = "match_text") -> DataFrame:
-    """Add a ``context`` column: +/-window chars of redacted text around the
-    span (R4). Position from first occurrence (instr); the pandas-UDF
-    detection pipeline carries exact offsets instead.
+def candidate_contexts(cands: DataFrame) -> DataFrame:
+    """Add a ``context`` column: +/-CONTEXT_WINDOW chars of redacted text
+    around the ``match_text`` span of ``value`` (R4). Position from first
+    occurrence (instr); the pandas-UDF detection pipeline carries exact
+    offsets instead.
     """
-    with_redacted = redact_candidates(cands, value_col, match_col)
-    pos = F.instr(F.col(value_col), F.col(match_col))
-    start = F.greatest(pos - F.lit(window), F.lit(1))
-    length = F.length(F.col("masked_match")) + F.lit(2 * window)
+    with_redacted = redact_candidates(cands)
+    pos = F.instr(F.col("value"), F.col("match_text"))
+    start = F.greatest(pos - F.lit(CONTEXT_WINDOW), F.lit(1))
+    length = F.length(F.col("masked_match")) + F.lit(2 * CONTEXT_WINDOW)
     return with_redacted.withColumn(
         "context", F.substring(F.col("redacted_value"), start, length)
     )
 
 
-def suppress_and_redact(texts: DataFrame, spans: DataFrame,
-                        id_col: str = "text_id",
-                        text_col: str = "text") -> DataFrame:
+def suppress_and_redact(texts: DataFrame, spans: DataFrame) -> DataFrame:
     """P7 overlap suppression + whole-text redaction (reference
     redaction.py:29-45 ``redact_text``): spans sorted by start; a span
     whose start precedes the cursor (the end of the last KEPT span) is
@@ -93,21 +90,21 @@ def suppress_and_redact(texts: DataFrame, spans: DataFrame,
     """
     packed = (
         spans.select(
-            F.col(id_col),
+            F.col("text_id"),
             F.col("pstart").cast("int").alias("s"),
             F.col("pend").cast("int").alias("e"),
             F.col("pii_type").cast("string").alias("t"),
             F.col("match_text").cast("string").alias("m"))
-        .groupBy(id_col)
+        .groupBy("text_id")
         .agg(F.array_sort(F.collect_list(
             F.struct("s", "e", "t", "m"))).alias("spans"))
     )
     empty = F.array().cast("array<struct<s:int,e:int,t:string,m:string>>")
-    df = (texts.select(id_col, text_col)
-          .join(packed, id_col, "left")
+    df = (texts.select("text_id", "text")
+          .join(packed, "text_id", "left")
           .withColumn("spans", F.coalesce(F.col("spans"), empty)))
 
-    text = F.col(text_col)
+    text = F.col("text")
     init = F.struct(F.lit(1).alias("cur"), F.lit("").alias("out"),
                     F.lit(0).alias("kept"))
 
@@ -128,15 +125,13 @@ def suppress_and_redact(texts: DataFrame, spans: DataFrame,
             acc["kept"].alias("kept"))
 
     return (df.withColumn("fold", F.aggregate("spans", init, merge, finish))
-            .select(F.col(id_col),
+            .select(F.col("text_id"),
                     F.size("spans").cast("bigint").alias("n_spans"),
                     F.col("fold.kept").cast("bigint").alias("n_kept"),
                     F.col("fold.redacted_text").alias("redacted_text")))
 
 
-def suppress_redact_oracle_cte(texts_rel: str, spans_rel: str,
-                               id_col: str = "text_id",
-                               text_col: str = "text") -> str:
+def suppress_redact_oracle_cte(texts_rel: str, spans_rel: str) -> str:
     """DuckDB rendering of :func:`suppress_and_redact` as CTEs ending in
     relation ``osupp(id, n_spans, n_kept, redacted_text)``.
 
@@ -147,54 +142,53 @@ def suppress_redact_oracle_cte(texts_rel: str, spans_rel: str,
     masked = mask_sql("s.match_text", "duckdb")
     return f"""
 ospans AS (
-  SELECT {id_col}, pstart, pend, match_text,
-         row_number() OVER (PARTITION BY {id_col}
+  SELECT text_id, pstart, pend, match_text,
+         row_number() OVER (PARTITION BY text_id
                             ORDER BY pstart, pend, pii_type, match_text)
            AS rn
   FROM {spans_rel}
 ),
 orec AS (
-  SELECT {id_col}, 0 AS rn, CAST(1 AS BIGINT) AS cur, '' AS acc_out,
+  SELECT text_id, 0 AS rn, CAST(1 AS BIGINT) AS cur, '' AS acc_out,
          0 AS kept
   FROM {texts_rel}
   UNION ALL
-  SELECT r.{id_col}, s.rn,
+  SELECT r.text_id, s.rn,
          CASE WHEN s.pstart >= r.cur THEN s.pend ELSE r.cur END,
          CASE WHEN s.pstart >= r.cur
               THEN r.acc_out
-                   || substr(t.{text_col}, CAST(r.cur AS INT),
+                   || substr(t.text, CAST(r.cur AS INT),
                              CAST(s.pstart - r.cur AS INT))
                    || {masked}
               ELSE r.acc_out END,
          r.kept + CASE WHEN s.pstart >= r.cur THEN 1 ELSE 0 END
   FROM orec r
-  JOIN ospans s ON s.{id_col} = r.{id_col} AND s.rn = r.rn + 1
-  JOIN {texts_rel} t ON t.{id_col} = r.{id_col}
+  JOIN ospans s ON s.text_id = r.text_id AND s.rn = r.rn + 1
+  JOIN {texts_rel} t ON t.text_id = r.text_id
 ),
 osupp AS (
-  SELECT r.{id_col},
+  SELECT r.text_id,
          CAST(COALESCE(ns.n, 0) AS BIGINT) AS n_spans,
          CAST(r.kept AS BIGINT) AS n_kept,
-         r.acc_out || substr(t.{text_col}, CAST(r.cur AS INT))
+         r.acc_out || substr(t.text, CAST(r.cur AS INT))
            AS redacted_text
   FROM orec r
-  JOIN {texts_rel} t ON t.{id_col} = r.{id_col}
-  LEFT JOIN (SELECT {id_col}, COUNT(*) AS n
-             FROM ospans GROUP BY {id_col}) ns
-    ON ns.{id_col} = r.{id_col}
-  QUALIFY row_number() OVER (PARTITION BY r.{id_col}
+  JOIN {texts_rel} t ON t.text_id = r.text_id
+  LEFT JOIN (SELECT text_id, COUNT(*) AS n
+             FROM ospans GROUP BY text_id) ns
+    ON ns.text_id = r.text_id
+  QUALIFY row_number() OVER (PARTITION BY r.text_id
                              ORDER BY r.rn DESC) = 1
 )"""
 
 
-def redaction_oracle_exprs(dialect: str = "duckdb",
-                           window: int = CONTEXT_WINDOW) -> dict[str, str]:
+def redaction_oracle_exprs(dialect: str = "duckdb") -> dict[str, str]:
     """SQL renderings of the three derived columns over (value, match_text)."""
     masked = mask_sql("match_text", dialect)
     redacted = f"replace(value, match_text, {masked})"
     pos = "instr(value, match_text)"
-    start = f"greatest({pos} - {window}, 1)"
-    length = f"length({masked}) + {2 * window}"
+    start = f"greatest({pos} - {CONTEXT_WINDOW}, 1)"
+    length = f"length({masked}) + {2 * CONTEXT_WINDOW}"
     return {
         "masked_match": masked,
         "redacted_value": redacted,

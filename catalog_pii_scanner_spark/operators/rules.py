@@ -37,6 +37,7 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass
+from functools import reduce
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -137,15 +138,14 @@ def bounded_pattern(rule: Rule) -> str:
     return rule.pattern
 
 
-def rules_for_types(enabled_types, rules: tuple[Rule, ...] = RULES
-                    ) -> tuple[Rule, ...]:
+def rules_for_types(enabled_types) -> tuple[Rule, ...]:
     """P5: gate rule families by ``RulesConfig.enabled_types`` (reference
     rules.py:93-103 — ``None``/empty enables every family; otherwise only
     the listed types' regexes run)."""
     if not enabled_types:
-        return rules
+        return RULES
     enabled = set(enabled_types)
-    return tuple(r for r in rules if r.pii_type in enabled)
+    return tuple(r for r in RULES if r.pii_type in enabled)
 
 
 def _ident(name: str) -> str:
@@ -171,6 +171,10 @@ def _luhn_udf(s: pd.Series) -> pd.Series:
 @F.pandas_udf(BooleanType())
 def _verhoeff_udf(s: pd.Series) -> pd.Series:
     return s.map(verhoeff_ok)
+
+
+#: ``Rule.validator`` -> its checksum UDF, in CASE order.
+_CHECKSUM_UDFS = (("luhn", _luhn_udf), ("verhoeff12", _verhoeff_udf))
 
 
 def extract_candidates(
@@ -248,11 +252,14 @@ def extract_candidates(
     # .where(checksum_ok ...) is pushed below this projection, which
     # duplicates the Luhn/Verhoeff ArrowEvalPython stage (two Python
     # round-trips per scan instead of one).
-    validated = (
-        F.when(F.expr("validator = 'luhn'"), _luhn_udf("match_text"))
-        .when(F.expr("validator = 'verhoeff12'"), _verhoeff_udf("match_text"))
-        .otherwise(F.expr("CAST(NULL AS BOOLEAN)"))
-    )
+    # Only the validators of ``rules`` get a branch: a rule set without
+    # one (the NER families) plans no Python stage at all.
+    checks = [(F.expr(f"validator = '{v}'"), udf("match_text"))
+              for v, udf in _CHECKSUM_UDFS
+              if v in {r.validator for r in rules}]
+    unchecked = F.expr("CAST(NULL AS BOOLEAN)")
+    validated = (reduce(lambda case, c: case.when(*c), checks, F)
+                 .otherwise(unchecked) if checks else unchecked)
     checked = exploded.withColumn("checksum_ok", validated)
     return (
         barrier_filter(checked, F.expr("checksum_ok IS NULL OR checksum_ok"))
@@ -312,7 +319,6 @@ def extract_candidates_pdf(
     df: DataFrame,
     value_col: str = "value",
     keep_cols: tuple[str, ...] = ("column_ref",),
-    rules: tuple[Rule, ...] = RULES,
 ) -> DataFrame:
     """Position-exact candidate extraction (reference Span semantics).
 
@@ -333,7 +339,7 @@ def extract_candidates_pdf(
     :func:`extract_candidates` remains the whole-stage-codegen scan path
     for offset-free rollups and the SQL-renderable oracle queries.
     """
-    find_spans = _find_spans_factory(rules)
+    find_spans = _find_spans_factory(RULES)
 
     @F.pandas_udf(_SPAN_DDL)
     def _spans_udf(s: pd.Series) -> pd.Series:
@@ -352,8 +358,7 @@ def extract_candidates_pdf(
     )
 
 
-def candidate_score(conf_col: str = "rule_confidence",
-                    validated_col: str = "validated") -> Column:
+def candidate_score() -> Column:
     """Rules-only ensemble score (reference F1/F2/F3/F4 closed form).
 
     Full ensemble fusion per candidate: raw[t] = w_rule*conf (for the rule's
@@ -363,16 +368,15 @@ def candidate_score(conf_col: str = "rule_confidence",
     sigmoid(0)=0.5, so the label's normalized probability collapses to
     ``sigmoid(raw) / (sigmoid(raw) + 5.0)`` — computed exactly, JVM-side.
     """
-    raw = (F.lit(W_RULE) * F.col(conf_col)
-           + F.lit(W_VALIDATION) * F.col(validated_col).cast("double"))
+    raw = (F.lit(W_RULE) * F.col("rule_confidence")
+           + F.lit(W_VALIDATION) * F.col("validated").cast("double"))
     calibrated = F.lit(1.0) / (F.lit(1.0) + F.exp(-raw))
     return calibrated / (calibrated + F.lit(5.0))
 
 
-def candidate_score_sql(dialect: str, conf_col: str = "rule_confidence",
-                        validated_col: str = "validated") -> str:
+def candidate_score_sql(dialect: str) -> str:
     """The exact SQL rendering of :func:`candidate_score` (both dialects)."""
-    raw = (f"({W_RULE} * {conf_col} + {W_VALIDATION} * "
-           f"(CASE WHEN {validated_col} THEN 1.0 ELSE 0.0 END))")
+    raw = (f"({W_RULE} * rule_confidence + {W_VALIDATION} * "
+           f"(CASE WHEN validated THEN 1.0 ELSE 0.0 END))")
     cal = f"(1.0 / (1.0 + exp(-{raw})))"
     return f"({cal} / ({cal} + 5.0))"

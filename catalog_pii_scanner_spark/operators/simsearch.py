@@ -220,14 +220,11 @@ def _brute_matmul_topk(spark, query_df, cand_df, k: int) -> DataFrame:
 FILTERED_LABELS = (0, 2, 5)
 
 
-def ann_filtered_topk_sql(dialect: str, rel: str = "embeddings",
-                          k: int = 5, query_mod: int = 50,
-                          labels: tuple[int, ...] = FILTERED_LABELS
-                          ) -> str:
+def ann_filtered_topk_sql(dialect: str, rel: str = "embeddings") -> str:
     """Declarative twin / oracle: cosine_topk_sql with the candidate
     side semi-joined to the predicate. Output: query_id, neighbor_id,
     rank, cosine (rounded 1e-6)."""
-    lab = ", ".join(str(x) for x in labels)
+    lab = ", ".join(str(x) for x in FILTERED_LABELS)
     return f"""
 WITH {_exploded_cte(dialect, rel)},
 allowed AS (
@@ -239,7 +236,7 @@ dots AS (
   FROM vecs q
   JOIN vecs c ON q.pos = c.pos AND q.vec_id <> c.vec_id
   JOIN allowed a ON a.vec_id = c.vec_id
-  WHERE q.vec_id % {query_mod} = 0
+  WHERE q.vec_id % 50 = 0
   GROUP BY q.vec_id, c.vec_id
 ),
 cos AS (
@@ -254,22 +251,19 @@ SELECT query_id, neighbor_id, rank, cosine FROM (
          row_number() OVER (PARTITION BY query_id
                             ORDER BY cosine DESC, neighbor_id) AS rank
   FROM cos
-) WHERE rank <= {k}
+) WHERE rank <= 5
 """
 
 
-def ann_filtered_topk(spark, sf_dir: str, k: int = 5,
-                      query_mod: int = 50,
-                      labels: tuple[int, ...] = FILTERED_LABELS
-                      ) -> DataFrame:
+def ann_filtered_topk(spark, sf_dir: str) -> DataFrame:
     """Serving path: the label predicate applied at the candidate
     parquet scan, then the shared broadcast-queries BLAS top-k body.
     Same contract as the declarative twin (1e-6 round, ties by
     neighbor_id), which therefore serves as its oracle."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     return _brute_matmul_topk(
-        spark, emb.where(F.col("vec_id") % query_mod == 0),
-        emb.where(F.col("label").isin(list(labels))), k)
+        spark, emb.where(F.col("vec_id") % 50 == 0),
+        emb.where(F.col("label").isin(list(FILTERED_LABELS))), 5)
 
 
 #: Semantic-decontamination split + flag threshold: bench membership
@@ -285,20 +279,18 @@ SEMDECON_BENCH_MOD = 37
 SEMDECON_THRESHOLD = 0.35
 
 
-def embed_semantic_decon_sql(dialect: str, rel: str = "embeddings",
-                             bench_mod: int = SEMDECON_BENCH_MOD,
-                             threshold: float = SEMDECON_THRESHOLD
-                             ) -> str:
+def embed_semantic_decon_sql(dialect: str) -> str:
     """Declarative twin (and oracle) for the semantic decontamination
     audit: for each BENCH vector, its nearest TRAIN vector by cosine.
     Output: query_id, neighbor_id, cosine, contaminated."""
     return f"""
-WITH {_exploded_cte(dialect, rel)},
+WITH {_exploded_cte(dialect, 'embeddings')},
 dots AS (
   SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
          SUM(q.val * c.val) AS dot
   FROM vecs q JOIN vecs c ON q.pos = c.pos
-  WHERE q.vec_id % {bench_mod} = 0 AND c.vec_id % {bench_mod} <> 0
+  WHERE q.vec_id % {SEMDECON_BENCH_MOD} = 0
+    AND c.vec_id % {SEMDECON_BENCH_MOD} <> 0
   GROUP BY q.vec_id, c.vec_id
 ),
 cos AS (
@@ -309,7 +301,7 @@ cos AS (
   JOIN norms nc ON nc.vec_id = d.neighbor_id
 )
 SELECT query_id, neighbor_id, cosine,
-       cosine >= {threshold} AS contaminated
+       cosine >= {SEMDECON_THRESHOLD} AS contaminated
 FROM (
   SELECT query_id, neighbor_id, cosine,
          row_number() OVER (PARTITION BY query_id
@@ -319,15 +311,13 @@ FROM (
 """
 
 
-def embed_semantic_decon(spark, sf_dir: str,
-                         bench_mod: int = SEMDECON_BENCH_MOD,
-                         threshold: float = SEMDECON_THRESHOLD
-                         ) -> DataFrame:
+def embed_semantic_decon(spark, sf_dir: str) -> DataFrame:
     """Embedding-space decontamination of an eval split against the
     training corpus — the semantic sibling of
     corpus.minhash_decontaminate (lexical overlap misses paraphrased
     leakage; SemDeDup-style cosine proximity catches it): each BENCH
-    vector's nearest TRAIN vector, flagged at cosine >= threshold.
+    vector's nearest TRAIN vector, flagged at cosine >=
+    SEMDECON_THRESHOLD.
 
     SERVING shape: the bench set is an eval suite (small at any corpus
     scale), so it broadcasts through the shared one-pass BLAS body
@@ -342,11 +332,11 @@ def embed_semantic_decon(spark, sf_dir: str,
     parked — tests/test_entry_contract.py rule 1)."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     top1 = _brute_matmul_topk(
-        spark, emb.where(F.col("vec_id") % bench_mod == 0),
-        emb.where(F.col("vec_id") % bench_mod != 0), k=1)
+        spark, emb.where(F.col("vec_id") % SEMDECON_BENCH_MOD == 0),
+        emb.where(F.col("vec_id") % SEMDECON_BENCH_MOD != 0), k=1)
     return top1.select(
         "query_id", "neighbor_id", "cosine",
-        (F.col("cosine") >= threshold).alias("contaminated"))
+        (F.col("cosine") >= SEMDECON_THRESHOLD).alias("contaminated"))
 
 
 def _planes_cte(n_planes: int = NUM_PLANES) -> str:
@@ -384,13 +374,9 @@ BITS_PER_TABLE = 4
 PROBE_BITS = 1
 
 
-def ann_lsh_topk_sql(dialect: str, rel: str = "embeddings", k: int = 5,
-                     query_mod: int = 50,
-                     num_tables: int = NUM_TABLES,
-                     bits_per_table: int = BITS_PER_TABLE,
-                     probe_bits: int = PROBE_BITS) -> str:
-    """Multi-table multi-probe LSH ANN: ``num_tables`` independent
-    ``bits_per_table``-bit hyperplane signatures; with ``probe_bits=1``
+def ann_lsh_topk_sql(dialect: str) -> str:
+    """Multi-table multi-probe LSH ANN: NUM_TABLES independent
+    BITS_PER_TABLE-bit hyperplane signatures; with PROBE_BITS = 1
     each query additionally probes every Hamming-1 signature per table
     (the standard multi-probe recall lever — probes cost bucket lookups,
     not extra tables). Candidates = DISTINCT union over tables+probes;
@@ -398,14 +384,14 @@ def ann_lsh_topk_sql(dialect: str, rel: str = "embeddings", k: int = 5,
 
     Output: query_id, neighbor_id, rank, cosine (candidate-local top-k).
     """
-    b = bits_per_table
-    planes = (_planes_cte(num_tables * b) if dialect == "duckdb"
-              else _planes_cte_spark(num_tables * b)).strip()
+    b = BITS_PER_TABLE
+    planes = (_planes_cte(NUM_TABLES * b) if dialect == "duckdb"
+              else _planes_cte_spark(NUM_TABLES * b)).strip()
     return f"""
-WITH {_exploded_cte(dialect, rel)},
+WITH {_exploded_cte(dialect, 'embeddings')},
 {planes},
 {_lsh_proj_sigs_cte(dialect, b, "vecs")},
-{_lsh_search_tail(dialect, k, query_mod, probe_bits, b,
+{_lsh_search_tail(dialect, 5, 50, PROBE_BITS, b,
                   "sigs", "vecs", "norms")}
 """
 
@@ -524,13 +510,11 @@ def _planes_matrix(n_planes: int):
     return P
 
 
-def ann_lsh_matmul(spark, sf_dir: str, k: int = 5, query_mod: int = 50,
-                   num_tables: int = NUM_TABLES,
-                   bits_per_table: int = BITS_PER_TABLE,
-                   probe_bits: int = PROBE_BITS) -> DataFrame:
+def ann_lsh_matmul(spark, sf_dir: str, k: int = 5,
+                   query_mod: int = 50) -> DataFrame:
     """Multi-probe LSH ANN as a ONE-PASS search (no exploded relation,
     no joins): the query subset's per-table signatures and their
-    Hamming-``probe_bits`` probes are computed driver-side and broadcast
+    Hamming-PROBE_BITS probes are computed driver-side and broadcast
     as a (table, signature) -> query-rows hash table; candidates stream
     through a single mapInPandas that signs each vector against the
     broadcast plane matrix (one matmul), looks its 8 table signatures up
@@ -543,16 +527,16 @@ def ann_lsh_matmul(spark, sf_dir: str, k: int = 5, query_mod: int = 50,
     Output: query_id, neighbor_id, rank, cosine."""
     import numpy as np
 
-    b = bits_per_table
-    P = _planes_matrix(num_tables * b)
+    b = BITS_PER_TABLE
+    P = _planes_matrix(NUM_TABLES * b)
 
     def sigs_of(vecs: np.ndarray) -> np.ndarray:
         """(n, num_tables) int64 signatures: bit j of table t set iff
         proj on plane t*b+j is > 0."""
         proj = vecs @ P.T
         bits = (proj > 0).astype(np.int64)
-        out = np.zeros((len(vecs), num_tables), dtype=np.int64)
-        for t in range(num_tables):
+        out = np.zeros((len(vecs), NUM_TABLES), dtype=np.int64)
+        for t in range(NUM_TABLES):
             for j in range(b):
                 out[:, t] |= bits[:, t * b + j] << j
         return out
@@ -570,12 +554,12 @@ def ann_lsh_matmul(spark, sf_dir: str, k: int = 5, query_mod: int = 50,
     q_norm = np.linalg.norm(Q, axis=1)
     ok = q_norm > 0            # zero-norm queries leave the universe
     q_ids, Q, q_norm = q_ids[ok], Q[ok], q_norm[ok]
-    flips = [0] + ([1 << j for j in range(b)] if probe_bits >= 1 else [])
+    flips = [0] + ([1 << j for j in range(b)] if PROBE_BITS >= 1 else [])
     probe: dict[tuple[int, int], list[int]] = {}
     if len(q_ids):
         qs = sigs_of(Q)
         for qi in range(len(q_ids)):
-            for t in range(num_tables):
+            for t in range(NUM_TABLES):
                 for f_ in flips:
                     probe.setdefault((t, int(qs[qi, t]) ^ f_),
                                      []).append(qi)
@@ -640,9 +624,7 @@ COSINE_DUP_T = 0.3
 MAX_SIG_BUCKET = 200
 
 
-def embed_cosine_pairs_sql(dialect: str, rel: str = "embeddings",
-                           threshold: float = COSINE_DUP_T,
-                           max_bucket: int = MAX_SIG_BUCKET) -> str:
+def embed_cosine_pairs_sql(dialect: str) -> str:
     """Embedding-cosine near-duplicate pairs, LSH-blocked: exact cosine is
     computed only for vector pairs sharing the 8-bit hyperplane signature
     (same deterministic planes as ann_lsh_topk), never all pairs — the
@@ -656,7 +638,7 @@ def embed_cosine_pairs_sql(dialect: str, rel: str = "embeddings",
     planes = (_planes_cte() if dialect == "duckdb"
               else _planes_cte_spark()).strip()
     return f"""
-WITH {_exploded_cte(dialect, rel)},
+WITH {_exploded_cte(dialect, 'embeddings')},
 {planes},
 proj AS (
   SELECT v.vec_id, p.plane, SUM(v.val * p.sign) AS proj
@@ -671,7 +653,7 @@ sigs AS (
   FROM proj GROUP BY vec_id
 ),
 sigs_ok AS (
-  SELECT sig FROM sigs GROUP BY sig HAVING COUNT(*) <= {max_bucket}
+  SELECT sig FROM sigs GROUP BY sig HAVING COUNT(*) <= {MAX_SIG_BUCKET}
 ),
 sigs_capped AS (
   SELECT s.* FROM sigs s JOIN sigs_ok o ON o.sig = s.sig
@@ -693,7 +675,7 @@ SELECT d.vec_a AS vec_a, d.vec_b AS vec_b,
 FROM dots d
 JOIN norms na ON na.vec_id = d.vec_a
 JOIN norms nb ON nb.vec_id = d.vec_b
-WHERE d.dot / (na.norm * nb.norm) >= {threshold}
+WHERE d.dot / (na.norm * nb.norm) >= {COSINE_DUP_T}
 """
 
 
@@ -772,8 +754,7 @@ def _pair_cosines(vecs: DataFrame, norms: DataFrame,
 
 
 def embed_cosine_pairs(spark, sf_dir: str,
-                       threshold: float = COSINE_DUP_T,
-                       max_bucket: int = MAX_SIG_BUCKET) -> DataFrame:
+                       threshold: float = COSINE_DUP_T) -> DataFrame:
     """DataFrame-step implementation; semantics identical to
     embed_cosine_pairs_sql (the oracle), including the signature-bucket
     cap. The persisted vector relation is released before returning
@@ -783,7 +764,7 @@ def embed_cosine_pairs(spark, sf_dir: str,
     sigs = _sigs_df(vecs, _planes_df(spark))
     sigs_ok = (
         sigs.groupBy("sig").agg(F.count("*").alias("_bn"))
-        .where(F.col("_bn") <= max_bucket).select("sig")
+        .where(F.col("_bn") <= MAX_SIG_BUCKET).select("sig")
     )
     sigs = sigs.join(sigs_ok, "sig")
     a, b = sigs.alias("a"), sigs.alias("b")
@@ -806,8 +787,8 @@ NUM_CENTROIDS = 16
 NPROBE = 2
 
 
-def ann_ivf_matmul(spark, sf_dir: str, k: int = 5, query_mod: int = 50,
-                   nprobe: int = NPROBE) -> DataFrame:
+def ann_ivf_matmul(spark, sf_dir: str, k: int = 5,
+                   query_mod: int = 50) -> DataFrame:
     """IVF + BLAS serving path (the FAISS IVF-flat shape on Spark):
     centroids and the query subset are tiny by construction, so both are
     computed driver-side and broadcast; candidates stream through ONE
@@ -859,9 +840,9 @@ def ann_ivf_matmul(spark, sf_dir: str, k: int = 5, query_mod: int = 50,
             out[i] = c_ids[np.lexsort((c_ids, -cc[i]))[:n]]
         return out
 
-    # driver-side: nq x nprobe probe table -> cell -> query-row indices
-    qcells = probe_cells(Q, q_norm, nprobe) if len(q_ids) else \
-        np.empty((0, nprobe), dtype=np.int64)
+    # driver-side: nq x NPROBE probe table -> cell -> query-row indices
+    qcells = probe_cells(Q, q_norm, NPROBE) if len(q_ids) else \
+        np.empty((0, NPROBE), dtype=np.int64)
     cell_to_qidx: dict[int, list[int]] = {}
     for qi in range(len(q_ids)):
         for cell in qcells[qi]:
@@ -924,8 +905,7 @@ def ann_ivf_matmul(spark, sf_dir: str, k: int = 5, query_mod: int = 50,
             .select("query_id", "neighbor_id", "rank", "cosine"))
 
 
-def ann_ivf_topk_sql(dialect: str, rel: str = "embeddings", k: int = 5,
-                     query_mod: int = 50) -> str:
+def ann_ivf_topk_sql(dialect: str) -> str:
     """IVF-style ANN: a deterministic coarse quantizer (centroids = the
     first NUM_CENTROIDS vec_ids) partitions vectors into cells by nearest
     centroid; each query searches only its NPROBE nearest cells. This is
@@ -938,7 +918,7 @@ def ann_ivf_topk_sql(dialect: str, rel: str = "embeddings", k: int = 5,
     Output: query_id, neighbor_id, rank, cosine (rounded 1e-6).
     """
     return f"""
-WITH {_exploded_cte(dialect, rel)},
+WITH {_exploded_cte(dialect, 'embeddings')},
 cents AS (
   SELECT vec_id AS cid, pos, val FROM vecs WHERE vec_id < {NUM_CENTROIDS}
 ),
@@ -959,7 +939,7 @@ ranked_cells AS (
 assign AS (SELECT vec_id, cid FROM ranked_cells WHERE crank = 1),
 probes AS (
   SELECT vec_id AS query_id, cid FROM ranked_cells
-  WHERE crank <= {NPROBE} AND vec_id % {query_mod} = 0
+  WHERE crank <= {NPROBE} AND vec_id % 50 = 0
 ),
 pairs AS (
   SELECT p.query_id, a.vec_id AS neighbor_id
@@ -985,12 +965,11 @@ SELECT query_id, neighbor_id, rank, cosine FROM (
          row_number() OVER (PARTITION BY query_id
                             ORDER BY cosine DESC, neighbor_id) AS rank
   FROM cos
-) WHERE rank <= {k}
+) WHERE rank <= 5
 """
 
 
-def kmeans_centroid_frames(spark, sf_dir: str, k: int = NUM_CENTROIDS,
-                           seed: int = 7, max_iter: int = 20):
+def kmeans_centroid_frames(spark, sf_dir: str):
     """Learned coarse quantizer: MLlib KMeans|| over the embedding
     column, returned as the same (cid, pos, cval) / (cid, cnorm) frame
     pair the prefix quantizer produces — the IVF plan is identical, only
@@ -1004,7 +983,7 @@ def kmeans_centroid_frames(spark, sf_dir: str, k: int = NUM_CENTROIDS,
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
         array_to_vector(F.col("embedding").cast("array<double>"))
         .alias("features"))
-    model = KMeans(k=k, seed=seed, maxIter=max_iter).fit(emb)
+    model = KMeans(k=NUM_CENTROIDS, seed=7, maxIter=20).fit(emb)
     centers = model.clusterCenters()
     cents = spark.createDataFrame(
         [(cid, pos + 1, float(v)) for cid, c in enumerate(centers)
@@ -1017,8 +996,7 @@ def kmeans_centroid_frames(spark, sf_dir: str, k: int = NUM_CENTROIDS,
     return cents, nc
 
 
-def ann_ivf_topk(spark, sf_dir: str, k: int = 5,
-                 query_mod: int = 50, nprobe: int = NPROBE,
+def ann_ivf_topk(spark, sf_dir: str, k: int = 5, query_mod: int = 50,
                  quantizer: str = "prefix") -> DataFrame:
     """DataFrame-step implementation. Broadcast hints only on the provably
     tiny centroid-side relations (NUM_CENTROIDS rows); the per-vector
@@ -1032,7 +1010,7 @@ def ann_ivf_topk(spark, sf_dir: str, k: int = 5,
     the oracle-parity path, semantics identical to ann_ivf_topk_sql;
     ``'kmeans'`` swaps in MLlib-learned centroids (not SQL-expressible —
     covered by the recall test instead; measured recall@5 0.46 vs 0.30
-    at nprobe=2 on the testdata vectors)."""
+    at NPROBE = 2 on the testdata vectors)."""
     vecs = _vecs_df(spark, sf_dir).persist()
     norms = _norms_df(vecs)
     if quantizer == "kmeans":
@@ -1059,7 +1037,7 @@ def ann_ivf_topk(spark, sf_dir: str, k: int = 5,
     ranked = cell_cos.withColumn("crank", F.row_number().over(w))
     assign = ranked.where(F.col("crank") == 1).select("vec_id", "cid")
     probes = ranked.where(
-        (F.col("crank") <= nprobe) & (F.col("vec_id") % query_mod == 0)
+        (F.col("crank") <= NPROBE) & (F.col("vec_id") % query_mod == 0)
     ).select(F.col("vec_id").alias("query_id"), "cid")
     pairs = (
         probes.join(assign, "cid")
@@ -1080,7 +1058,7 @@ def ann_ivf_topk(spark, sf_dir: str, k: int = 5,
 
 # --- embedding-space cluster mixture ----------------------------------------
 
-def embed_cluster_mix_sql(dialect: str, rel: str = "embeddings") -> str:
+def embed_cluster_mix_sql(dialect: str) -> str:
     """Topic/domain mixture of the corpus in embedding space: every
     vector assigned to its nearest centroid by cosine (deterministic
     prefix quantizer — centroids are the first NUM_CENTROIDS vec_ids,
@@ -1094,7 +1072,7 @@ def embed_cluster_mix_sql(dialect: str, rel: str = "embeddings") -> str:
 
     Output: cluster_id, n_vecs, share, avg_cos (rounded 1e-6)."""
     return f"""
-WITH {_exploded_cte(dialect, rel)},
+WITH {_exploded_cte(dialect, 'embeddings')},
 cents AS (
   SELECT vec_id AS cid, pos, val FROM vecs WHERE vec_id < {NUM_CENTROIDS}
 ),
@@ -1189,8 +1167,7 @@ def embed_cluster_mix(spark, sf_dir: str,
 LLOYD_ITERS = 2
 
 
-def kmeans_lloyd_sql(dialect: str, rel: str = "embeddings",
-                     iters: int = LLOYD_ITERS) -> str:
+def kmeans_lloyd_sql(dialect: str) -> str:
     """Lloyd's algorithm, unrolled: seed centroids are the first
     NUM_CENTROIDS vectors; each iteration assigns every vector to its
     nearest centroid by cosine (rounded 1e-6, ties to smaller cid) and
@@ -1204,7 +1181,7 @@ def kmeans_lloyd_sql(dialect: str, rel: str = "embeddings",
     identically).
 
     Output: cid, pos, cval (final centroids), n_assigned."""
-    cte = [_exploded_cte(dialect, rel).strip().rstrip(")") + ")"]
+    cte = [_exploded_cte(dialect, "embeddings").strip().rstrip(")") + ")"]
     cte.append(f"""
 cent0 AS (
   SELECT vec_id AS cid, pos, val AS cval FROM vecs
@@ -1214,7 +1191,7 @@ cnorm0 AS (
   SELECT cid, sqrt(SUM(cval * cval)) AS cnorm FROM cent0
   GROUP BY cid HAVING SUM(cval * cval) > 0
 )""")
-    for i in range(iters):
+    for i in range(LLOYD_ITERS):
         cte.append(f"""
 cc{i} AS (
   SELECT v.vec_id, c.cid,
@@ -1244,20 +1221,18 @@ cnorm{i + 1} AS (
   SELECT cid, sqrt(SUM(cval * cval)) AS cnorm
   FROM cent{i + 1} GROUP BY cid HAVING SUM(cval * cval) > 0
 )""")
-    last = iters
     return f"""
 WITH {','.join(cte)},
 sizes AS (
   SELECT cid, CAST(COUNT(*) AS BIGINT) AS n_assigned
-  FROM asg{last - 1} GROUP BY cid
+  FROM asg{LLOYD_ITERS - 1} GROUP BY cid
 )
 SELECT c.cid AS cid, c.pos AS pos, c.cval AS cval, s.n_assigned
-FROM cent{last} c JOIN sizes s ON s.cid = c.cid
+FROM cent{LLOYD_ITERS} c JOIN sizes s ON s.cid = c.cid
 """
 
 
-def embed_kmeans_lloyd(spark, sf_dir: str,
-                       iters: int = LLOYD_ITERS) -> DataFrame:
+def embed_kmeans_lloyd(spark, sf_dir: str) -> DataFrame:
     """DataFrame-step Lloyd loop, same math as kmeans_lloyd_sql. Each
     iteration: one broadcast join against the (tiny) centroid relation,
     one (vec_id, cid)-keyed partial agg, one per-vector argmax window,
@@ -1271,7 +1246,7 @@ def embed_kmeans_lloyd(spark, sf_dir: str,
     cents = vecs.where(F.col("vec_id") < NUM_CENTROIDS).select(
         F.col("vec_id").alias("cid"), "pos", F.col("val").alias("cval"))
     assign = None
-    for _ in range(iters):
+    for _ in range(LLOYD_ITERS):
         cnorm = cents.groupBy("cid").agg(
             F.sqrt(F.sum(F.col("cval") * F.col("cval"))).alias("cnorm")) \
             .where(F.col("cnorm") > 0)
@@ -1378,18 +1353,16 @@ qlut AS (
 )"""
 
 
-def ann_pq_topk_sql(dialect: str, rel: str = "embeddings", k: int = 5,
-                    query_mod: int = 50, rerank: int = PQ_RERANK,
-                    corpus_mod: int = PQ_TWIN_CORPUS_MOD) -> str:
+def ann_pq_topk_sql(dialect: str, corpus_mod: int = PQ_TWIN_CORPUS_MOD) -> str:
     """PQ/ADC search with exact re-rank (the IVFADC+R recipe): the ADC
-    lookup-table scan shortlists the top-``rerank`` candidates per query
+    lookup-table scan shortlists the top-PQ_RERANK candidates per query
     by approximate score, then ONLY those pairs get an exact cosine and
     the final top-k. Output: query_id, neighbor_id, rank, cosine
     (exact, rounded 1e-6 — directly comparable with the brute-force
     ground truth; recall gate in tests/test_ann_recall.py)."""
     return f"""
-WITH {_exploded_cte(dialect, rel)},
-{_pq_cte(query_mod, corpus_mod).lstrip()},
+WITH {_exploded_cte(dialect, 'embeddings')},
+{_pq_cte(50, corpus_mod).lstrip()},
 adot AS (
   SELECT l.query_id, x.vec_id AS neighbor_id, SUM(l.dot) AS dot
   FROM codes x JOIN qlut l ON l.m = x.m AND l.code = x.code
@@ -1412,7 +1385,7 @@ shortr AS (
 ),
 short AS (
   -- SLACK cut (r9 fix for the one sf0.1 shortlist-boundary flip): keep
-  -- every candidate within 1e-6 of the rank-{rerank} ADC score instead
+  -- every candidate within 1e-6 of the rank-{PQ_RERANK} ADC score instead
   -- of cutting on rank alone, so a last-ulp cross-engine difference at
   -- a 0.5e-6 rounding boundary cannot flip shortlist MEMBERSHIP — the
   -- exact re-rank, not the ADC tie, decides. 1.5e-6 admits exactly one
@@ -1424,7 +1397,7 @@ short AS (
   -- (measured: +4 s on the trained-IVFADC template).
   SELECT query_id, neighbor_id FROM (
     SELECT query_id, neighbor_id, pq_cosine,
-           MIN(CASE WHEN prank <= {rerank} THEN pq_cosine END)
+           MIN(CASE WHEN prank <= {PQ_RERANK} THEN pq_cosine END)
              OVER (PARTITION BY query_id) AS cutc
     FROM shortr
   ) _s WHERE pq_cosine >= cutc - 1.5e-6
@@ -1450,25 +1423,23 @@ SELECT query_id, neighbor_id, rank, cosine FROM (
          row_number() OVER (PARTITION BY query_id
                             ORDER BY cosine DESC, neighbor_id) AS rank
   FROM rcos
-) WHERE rank <= {k}
+) WHERE rank <= 5
 """
 
 
-def ann_pq_topk(spark, sf_dir: str, k: int = 5, query_mod: int = 50,
-                rerank: int = PQ_RERANK,
-                corpus_mod: int = PQ_TWIN_CORPUS_MOD) -> DataFrame:
+def ann_pq_topk(spark, sf_dir: str, k: int = 5,
+                query_mod: int = 50) -> DataFrame:
     """DataFrame-step implementation (oracle-parity twin of
     ann_pq_topk_sql). Shuffle shape: encoding is a join against the
     (tiny, PQ_CODES x DIMS) broadcast codebook + one (vec, m)-keyed
     aggregation; the ADC join carries PQ_M rows per (query, candidate)
     pair instead of DIMS, and the exact re-rank touches only
-    nq x rerank pairs. The serving path (ann_pq_matmul) replaces even
+    nq x PQ_RERANK pairs. The serving path (ann_pq_matmul) replaces even
     the ADC join with an in-batch LUT gather.
 
-    ``corpus_mod`` (default PQ_TWIN_CORPUS_MOD) gates the parity twin
-    on a candidate subset — the semantics gate needs enough rows to
-    prove the algebra, not the full corpus; the serving path runs
-    corpus_mod=1."""
+    PQ_TWIN_CORPUS_MOD gates the parity twin on a candidate subset —
+    the semantics gate needs enough rows to prove the algebra, not the
+    full corpus; the serving path runs corpus_mod=1."""
     vecs = _vecs_df(spark, sf_dir).persist()
     norms = _norms_df(vecs)
     sub = vecs.withColumn(
@@ -1476,7 +1447,7 @@ def ann_pq_topk(spark, sf_dir: str, k: int = 5, query_mod: int = 50,
     cb = (sub.where(F.col("vec_id") < PQ_CODES)
           .select(F.col("vec_id").alias("code"), "m", "pos",
                   F.col("val").alias("cval")))
-    enc = (sub.where(F.col("vec_id") % corpus_mod == 0)
+    enc = (sub.where(F.col("vec_id") % PQ_TWIN_CORPUS_MOD == 0)
            .join(F.broadcast(cb), ["m", "pos"])
            .groupBy("vec_id", "m", "code")
            .agg(F.sum((F.col("val") - F.col("cval"))
@@ -1511,7 +1482,7 @@ def ann_pq_topk(spark, sf_dir: str, k: int = 5, query_mod: int = 50,
     wshort = Window.partitionBy("query_id").orderBy(
         F.col("pq_cosine").desc(), F.col("neighbor_id"))
     short = (pqcos.withColumn("prank", F.row_number().over(wshort))
-             .where(F.col("prank") <= rerank)
+             .where(F.col("prank") <= PQ_RERANK)
              .select("query_id", "neighbor_id"))
     qv = vecs.select(F.col("vec_id").alias("query_id"), "pos",
                      F.col("val").alias("qval"))
@@ -1619,20 +1590,20 @@ def _pq_encode(X, cbm, cn2, pres):
 
 
 def ann_pq_matmul(spark, sf_dir: str, k: int = 5, query_mod: int = 50,
-                  rerank: int = PQ_RERANK,
                   corpus_mod: int = 1) -> DataFrame:
     """The PQ serving path — true ADC table scan with in-batch exact
     re-rank: codebooks (PQ_CODES x DIMS floats, tiny) and the per-query
     lookup tables LUT[q][m][code] = q_m . c_code (nq x PQ_M x PQ_CODES)
     broadcast once; candidates stream through mapInPandas where encoding
     is a small per-subspace distance matrix (_pq_encode), ADC scoring is
-    a pure LUT gather, and each batch emits its ADC top-``rerank`` per
+    a pure LUT gather, and each batch emits its ADC top-PQ_RERANK per
     query WITH the exact cosine computed ONLY for those shortlist rows
-    (a per-query matvec over <= rerank in-batch raw vectors — the float
-    math is nq x rerank x DIMS per batch, not nq x batch x DIMS).
-    The merge window takes the global ADC top-``rerank`` (identical
-    shortlist to the declarative twin), then ranks by exact cosine — so
-    the shuffle carries partitions x nq x rerank rows and no second pass
+    (a per-query matvec over <= PQ_RERANK in-batch raw vectors — the
+    float math is nq x PQ_RERANK x DIMS per batch, not nq x batch x
+    DIMS). The merge window takes the global ADC top-PQ_RERANK
+    (identical shortlist to the declarative twin), then ranks by exact
+    cosine — so the shuffle carries partitions x nq x PQ_RERANK rows
+    and no second pass
     over the corpus is needed. Equal to ann_pq_topk up to 1e-6
     rounding-boundary ties: both sides round(cos, 6) before comparison,
     but SQL-vs-BLAS summation order can differ in the last ulp, so an
@@ -1648,7 +1619,6 @@ def ann_pq_matmul(spark, sf_dir: str, k: int = 5, query_mod: int = 50,
            for m in range(PQ_M)]
     bc = spark.sparkContext.broadcast(
         (q_ids, Q, q_norm, LUT, CBm, cb_norm2, present))
-    rr = rerank
 
     def part_topk(batches):
         import numpy as np
@@ -1678,9 +1648,9 @@ def ann_pq_matmul(spark, sf_dir: str, k: int = 5, query_mod: int = 50,
             for j in range(qi.size):
                 keep_idx = np.flatnonzero(x_ids != qi[j])
                 ids, vals = x_ids[keep_idx], pq[keep_idx, j]
-                order = np.lexsort((ids, -vals))[:rr]
+                order = np.lexsort((ids, -vals))[:PQ_RERANK]
                 # exact cosine ONLY for the shortlist rows: a
-                # rerank x DIMS matvec, not the full batch matmul —
+                # PQ_RERANK x DIMS matvec, not the full batch matmul —
                 # this is what makes PQ serving cheaper than brute force
                 sel = keep_idx[order]
                 den = np.where(c_norm[sel] > 0, c_norm[sel], np.nan)
@@ -1705,7 +1675,7 @@ def ann_pq_matmul(spark, sf_dir: str, k: int = 5, query_mod: int = 50,
     # guards are required (the micro edge-corpus sweep caught the
     # NULL-only leak: a rank-2 row with cosine NULL)
     short = (cand.withColumn("prank", F.row_number().over(wshort))
-             .where((F.col("prank") <= rerank)
+             .where((F.col("prank") <= PQ_RERANK)
                     & F.col("cosine").isNotNull()
                     & ~F.isnan(F.col("cosine"))))
     w = Window.partitionBy("query_id").orderBy(
@@ -1727,7 +1697,6 @@ def ann_pq_matmul(spark, sf_dir: str, k: int = 5, query_mod: int = 50,
 
 def ann_ivfpq_topk_sql(dialect: str, rel: str = "embeddings", k: int = 5,
                        query_mod: int = 50,
-                       rerank: int = PQ_RERANK,
                        corpus_mod: int = PQ_TWIN_CORPUS_MOD) -> str:
     """Output: query_id, neighbor_id, rank, cosine (exact, rounded 1e-6
     — comparable with brute force; recall gate in
@@ -1789,7 +1758,7 @@ shortr AS (
 ),
 short AS (
   -- SLACK cut (r9 fix for the one sf0.1 shortlist-boundary flip): keep
-  -- every candidate within 1e-6 of the rank-{rerank} ADC score instead
+  -- every candidate within 1e-6 of the rank-{PQ_RERANK} ADC score instead
   -- of cutting on rank alone, so a last-ulp cross-engine difference at
   -- a 0.5e-6 rounding boundary cannot flip shortlist MEMBERSHIP — the
   -- exact re-rank, not the ADC tie, decides. 1.5e-6 admits exactly one
@@ -1801,7 +1770,7 @@ short AS (
   -- (measured: +4 s on the trained-IVFADC template).
   SELECT query_id, neighbor_id FROM (
     SELECT query_id, neighbor_id, pq_cosine,
-           MIN(CASE WHEN prank <= {rerank} THEN pq_cosine END)
+           MIN(CASE WHEN prank <= {PQ_RERANK} THEN pq_cosine END)
              OVER (PARTITION BY query_id) AS cutc
     FROM shortr
   ) _s WHERE pq_cosine >= cutc - 1.5e-6
@@ -1830,28 +1799,25 @@ SELECT query_id, neighbor_id, rank, cosine FROM (
 
 
 def ann_ivfpq_topk(spark, sf_dir: str, k: int = 5,
-                   query_mod: int = 50,
-                   rerank: int = PQ_RERANK,
-                   corpus_mod: int = PQ_TWIN_CORPUS_MOD) -> DataFrame:
+                   query_mod: int = 50) -> DataFrame:
     """Dual-dialect template execution (oracle-parity; the serving path
     is ann_ivfpq_matmul, which runs the FULL corpus — see
     PQ_TWIN_CORPUS_MOD)."""
     spark.read.parquet(f"{sf_dir}/embeddings.parquet") \
         .createOrReplaceTempView("cpss_embeddings")
     return spark.sql(ann_ivfpq_topk_sql("spark", "cpss_embeddings", k,
-                                        query_mod, rerank, corpus_mod))
+                                        query_mod))
 
 
 def ann_ivfpq_matmul(spark, sf_dir: str, k: int = 5, query_mod: int = 50,
-                     rerank: int = PQ_RERANK,
                      corpus_mod: int = 1) -> DataFrame:
     """IVFADC serving path: centroids, PQ codebooks, per-query probe
     sets, and ADC lookup tables all broadcast; candidates stream through
     ONE mapInPandas doing cell assignment (small matmul), probe-set
     membership, PQ encode (_pq_encode) + LUT gather, and in-batch exact
     cosine computed ONLY for the per-batch ADC top-R shortlist (a
-    per-query matvec over <= rerank rows — the exact float math is
-    bounded by nq x rerank x DIMS per batch, as IVFADC promises). One
+    per-query matvec over <= PQ_RERANK rows — the exact float math is
+    bounded by nq x PQ_RERANK x DIMS per batch, as IVFADC promises). One
     merge window -> global shortlist -> exact rank. Equal to
     ann_ivfpq_topk up to 1e-6 rounding-boundary ties (SQL-vs-BLAS
     summation order can differ in the last ulp at an exact .5e-6
@@ -1893,7 +1859,6 @@ def ann_ivfpq_matmul(spark, sf_dir: str, k: int = 5, query_mod: int = 50,
     bc = spark.sparkContext.broadcast(
         (q_ids, Q, q_norm, probe_arrs, c_ids, C, c_norm, LUT, CBm,
          cb_norm2, present))
-    rr = rerank
 
     def part_topk(batches):
         import numpy as np
@@ -1934,7 +1899,7 @@ def ann_ivfpq_matmul(spark, sf_dir: str, k: int = 5, query_mod: int = 50,
                 keep_idx = np.flatnonzero(
                     (x_ids != qi[j]) & np.isin(x_cell, probes[j]))
                 ids, vals = x_ids[keep_idx], pq[keep_idx, j]
-                order_j = np.lexsort((ids, -vals))[:rr]
+                order_j = np.lexsort((ids, -vals))[:PQ_RERANK]
                 # exact cosine ONLY for shortlist rows (xn > 0 by okx
                 # above, so it is always finite here)
                 sel = keep_idx[order_j]
@@ -1955,7 +1920,7 @@ def ann_ivfpq_matmul(spark, sf_dir: str, k: int = 5, query_mod: int = 50,
     # unlike ann_pq_matmul, every emitted cosine is finite (zero-norm
     # candidates were dropped before scoring), so no NaN/NULL guard
     short = (cand.withColumn("prank", F.row_number().over(wshort))
-             .where(F.col("prank") <= rerank))
+             .where(F.col("prank") <= PQ_RERANK))
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id"))
     return (short.withColumn("rank", F.row_number().over(w))
@@ -2217,11 +2182,8 @@ def trained_ivfpq_cent_df(spark, sf_dir: str,
         .localCheckpoint(eager=True)
 
 
-def ann_pq_trained_topk(spark, sf_dir: str, k: int = 5,
-                        query_mod: int = 50,
-                        rerank: int = PQ_RERANK,
+def ann_pq_trained_topk(spark, sf_dir: str, k: int = 5, query_mod: int = 50,
                         corpus_mod: int = PQ_TWIN_CORPUS_MOD,
-                        codes: int = PQT_CODES,
                         iters: int = PQT_ITERS,
                         cb: DataFrame | None = None) -> DataFrame:
     """Dual-dialect template execution of the trained-codebook PQ.
@@ -2232,11 +2194,11 @@ def ann_pq_trained_topk(spark, sf_dir: str, k: int = 5,
     spark.read.parquet(f"{sf_dir}/embeddings.parquet") \
         .createOrReplaceTempView("cpss_embeddings")
     if cb is None:
-        cb = trained_pq_cb_df(spark, sf_dir, corpus_mod, codes, iters)
+        cb = trained_pq_cb_df(spark, sf_dir, corpus_mod, PQT_CODES, iters)
     cb.createOrReplaceTempView("cpss_pqt_cb")
     return spark.sql(ann_pq_trained_topk_sql(
-        "spark", "cpss_embeddings", k, query_mod, rerank, corpus_mod,
-        codes, iters, cb_rel="cpss_pqt_cb"))
+        "spark", "cpss_embeddings", k, query_mod, PQ_RERANK, corpus_mod,
+        PQT_CODES, iters, cb_rel="cpss_pqt_cb"))
 
 
 def ann_ivfpq_trained_cent_sql(dialect: str, rel: str = "embeddings",
@@ -2485,15 +2447,9 @@ SELECT query_id, neighbor_id, rank, cosine FROM (
 """
 
 
-def ann_ivfpq_trained_topk(spark, sf_dir: str, k: int = 5,
-                           query_mod: int = 50,
-                           rerank: int = PQ_RERANK,
+def ann_ivfpq_trained_topk(spark, sf_dir: str,
                            corpus_mod: int = PQ_TWIN_CORPUS_MOD,
-                           codes: int = PQT_CODES,
-                           iters: int = PQT_ITERS,
-                           n_cells: int = NUM_CENTROIDS,
-                           nprobe: int = NPROBE,
-                           km_iters: int = LLOYD_ITERS,
+                           iters: int = PQT_ITERS, km_iters: int = LLOYD_ITERS,
                            cent: DataFrame | None = None,
                            cb: DataFrame | None = None) -> DataFrame:
     """Dual-dialect template execution of the fully-trained IVFADC.
@@ -2507,14 +2463,14 @@ def ann_ivfpq_trained_topk(spark, sf_dir: str, k: int = 5,
         .createOrReplaceTempView("cpss_embeddings")
     if cent is None:
         cent = trained_ivfpq_cent_df(spark, sf_dir, corpus_mod,
-                                     n_cells, km_iters)
+                                     NUM_CENTROIDS, km_iters)
     cent.createOrReplaceTempView("cpss_ivfpqt_cent")
     if cb is None:
-        cb = trained_pq_cb_df(spark, sf_dir, corpus_mod, codes, iters)
+        cb = trained_pq_cb_df(spark, sf_dir, corpus_mod, PQT_CODES, iters)
     cb.createOrReplaceTempView("cpss_ivfpqt_cb")
     return spark.sql(ann_ivfpq_trained_topk_sql(
-        "spark", "cpss_embeddings", k, query_mod, rerank, corpus_mod,
-        codes, iters, n_cells, nprobe, km_iters,
+        "spark", "cpss_embeddings", 5, 50, PQ_RERANK, corpus_mod,
+        PQT_CODES, iters, NUM_CENTROIDS, NPROBE, km_iters,
         trained_rels=("cpss_ivfpqt_cent", "cpss_ivfpqt_cb")))
 
 
@@ -2530,9 +2486,7 @@ def ann_ivfpq_trained_topk(spark, sf_dir: str, k: int = 5,
 # job touches each candidate exactly once with no joins.
 
 def trained_pq_codebook_sql(dialect: str, rel: str = "embeddings",
-                            corpus_mod: int = PQ_TWIN_CORPUS_MOD,
-                            codes: int = PQT_CODES,
-                            iters: int = PQT_ITERS) -> str:
+                            corpus_mod: int = PQ_TWIN_CORPUS_MOD) -> str:
     """JUST the per-subspace Lloyd training chain of
     ann_pq_trained_topk_sql, projected to the fitted codebook
     (m, code, pos, cval). The CTE text mirrors the trained template
@@ -2543,7 +2497,7 @@ def trained_pq_codebook_sql(dialect: str, rel: str = "embeddings",
     test_trained_pq_serving_twin_equality."""
     steps = []
     prev = "cb0"
-    for i in range(1, iters + 1):
+    for i in range(1, PQT_ITERS + 1):
         steps.append(f"""
 enc{i} AS (
   SELECT s.vec_id, s.m, c.code,
@@ -2579,20 +2533,18 @@ sub AS (
 scand AS (SELECT * FROM sub WHERE vec_id % {corpus_mod} = 0),
 cb0 AS (
   SELECT vec_id AS code, m, pos, val AS cval FROM sub
-  WHERE vec_id < {codes}
+  WHERE vec_id < {PQT_CODES}
 ){train}
 SELECT m, code, pos, cval FROM {prev}
 """
 
 
 def _trained_pq_codebooks(spark, rel: str,
-                          train_mod: int = PQ_TWIN_CORPUS_MOD,
-                          codes: int = PQT_CODES,
-                          iters: int = PQT_ITERS):
+                          train_mod: int = PQ_TWIN_CORPUS_MOD):
     """Run the (bounded: train_mod sample) training job once and collect
-    the fitted codebook — codes x DIMS doubles, a few KB. Returns
-    (CBm list of (codes, PQ_SUB) arrays, cb_norm2 (PQ_M, codes),
-    present (PQ_M, codes) bool mask): the _pq_codebooks contract, so
+    the fitted codebook — PQT_CODES x DIMS doubles, a few KB. Returns
+    (CBm list of (PQT_CODES, PQ_SUB) arrays, cb_norm2 (PQ_M, PQT_CODES),
+    present (PQ_M, PQT_CODES) bool mask): the _pq_codebooks contract, so
     the serving kernel is shared with the prefix-codebook path.
     Codewords that lose every vector during an iteration drop out of
     the fitted codebook exactly as in the SQL template (GROUP BY over
@@ -2602,9 +2554,9 @@ def _trained_pq_codebooks(spark, rel: str,
     cause)."""
     import numpy as np
     rows = spark.sql(trained_pq_codebook_sql(
-        "spark", rel, train_mod, codes, iters)).collect()
-    CB = np.zeros((codes, DIMS), dtype=np.float64)
-    present = np.zeros((PQ_M, codes), dtype=bool)
+        "spark", rel, train_mod)).collect()
+    CB = np.zeros((PQT_CODES, DIMS), dtype=np.float64)
+    present = np.zeros((PQ_M, PQT_CODES), dtype=bool)
     for r in rows:
         CB[r.code, r.m * PQ_SUB + (r.pos - 1) % PQ_SUB] = r.cval
         present[r.m, r.code] = True
@@ -2613,16 +2565,12 @@ def _trained_pq_codebooks(spark, rel: str,
     return CBm, cb_norm2, present
 
 
-def ann_pq_trained_matmul(spark, sf_dir: str, k: int = 5,
-                          query_mod: int = 50,
-                          rerank: int = PQ_RERANK,
+def ann_pq_trained_matmul(spark, sf_dir: str, k: int = 5, query_mod: int = 50,
                           corpus_mod: int = PQ_TWIN_CORPUS_MOD,
-                          train_mod: int | None = None,
-                          codes: int = PQT_CODES,
-                          iters: int = PQT_ITERS) -> DataFrame:
+                          train_mod: int | None = None) -> DataFrame:
     """Trained-codebook PQ serving path: the ann_pq_matmul one-pass
     mapInPandas kernel (in-batch ADC-LUT gather, shortlist-only exact
-    re-rank, partitions x nq x rerank shuffle rows) fed by the
+    re-rank, partitions x nq x PQ_RERANK shuffle rows) fed by the
     Lloyd-TRAINED codebooks instead of the vec_id-prefix ones.
 
     Train/serve split: ``train_mod`` bounds the training sample
@@ -2641,13 +2589,12 @@ def ann_pq_trained_matmul(spark, sf_dir: str, k: int = 5,
     if train_mod is None:
         train_mod = corpus_mod
     CBm, cb_norm2, present = _trained_pq_codebooks(
-        spark, "cpss_embeddings", train_mod, codes, iters)
+        spark, "cpss_embeddings", train_mod)
     q_ids, Q, q_norm = _collect_queries(emb, query_mod)
     LUT = [Q[:, m * PQ_SUB:(m + 1) * PQ_SUB] @ CBm[m].T
            for m in range(PQ_M)]
     bc = spark.sparkContext.broadcast(
         (q_ids, Q, q_norm, LUT, CBm, cb_norm2, present))
-    rr = rerank
 
     def part_topk(batches):
         import numpy as np
@@ -2678,11 +2625,11 @@ def ann_pq_trained_matmul(spark, sf_dir: str, k: int = 5,
                 keep_idx = np.flatnonzero(x_ids != qi[j])
                 ids, vals = x_ids[keep_idx], pq[keep_idx, j]
                 order = np.lexsort((ids, -vals))
-                if order.size > rr:
+                if order.size > PQ_RERANK:
                     # per-partition SLACK cut (mirrors the template's
                     # 1.5e-6 shortlist slack): keep everything within
-                    # one 1e-6 grid step of the rank-rr ADC score
-                    cut = vals[order[rr - 1]] - 1.5e-6
+                    # one 1e-6 grid step of the rank-PQ_RERANK ADC score
+                    cut = vals[order[PQ_RERANK - 1]] - 1.5e-6
                     order = order[vals[order] >= cut]
                 sel = keep_idx[order]
                 den = np.where(c_norm[sel] > 0, c_norm[sel], np.nan)
@@ -2702,14 +2649,14 @@ def ann_pq_trained_matmul(spark, sf_dir: str, k: int = 5,
     wshort = Window.partitionBy("query_id").orderBy(
         F.col("pq_cosine").desc(), F.col("neighbor_id"))
     # global SLACK cut (r9 fix, mirrors the template): the threshold is
-    # the rank-`rerank` ADC score; keep everything within one 1e-6 grid
+    # the rank-PQ_RERANK ADC score; keep everything within one 1e-6 grid
     # step of it so shortlist membership cannot flip on a last-ulp
-    # cross-engine difference. MIN over the prank<=rerank rows is that
-    # threshold; when a query has fewer than `rerank` candidates the
+    # cross-engine difference. MIN over the prank<=PQ_RERANK rows is that
+    # threshold; when a query has fewer than PQ_RERANK candidates the
     # MIN spans them all and the filter keeps them all.
     # zero-true-norm candidates: NaN may arrive as NaN OR NULL through
     # Arrow; both guards required (see ann_pq_matmul)
-    cutc = F.min(F.when(F.col("prank") <= rerank,
+    cutc = F.min(F.when(F.col("prank") <= PQ_RERANK,
                         F.col("pq_cosine"))).over(
         Window.partitionBy("query_id"))
     short = (cand.withColumn("prank", F.row_number().over(wshort))
@@ -2786,20 +2733,18 @@ assign AS (
 cell_n AS (SELECT cid, COUNT(*) AS cn FROM assign GROUP BY cid)"""
 
 
-def semdedup_keep_list_sql(dialect: str, rel: str = "embeddings",
-                           threshold: float = SEMDEDUP_T,
-                           n_cells: int = SEMDEDUP_CELLS,
-                           max_cell: int = SEMDEDUP_MAX_CELL) -> str:
+def semdedup_keep_list_sql(dialect: str) -> str:
     """The full verdict as ONE statement (the DuckDB oracle rendering;
     component resolution via RECURSIVE CTE). Output: vec_id,
     cluster_rep, keep, in_capped_cell. Zero-norm vectors have no cell
     (no cosine) and keep themselves, like every other universe
     exclusion in this module."""
+    cells = _semdedup_cells_cte(dialect, "embeddings", SEMDEDUP_CELLS)
     return f"""
-WITH RECURSIVE {_semdedup_cells_cte(dialect, rel, n_cells).lstrip()},
+WITH RECURSIVE {cells.lstrip()},
 assign_ok AS (
   SELECT a.vec_id, a.cid FROM assign a
-  JOIN cell_n n ON n.cid = a.cid WHERE n.cn <= {max_cell}
+  JOIN cell_n n ON n.cid = a.cid WHERE n.cn <= {SEMDEDUP_MAX_CELL}
 ),
 pairs AS (
   SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
@@ -2818,7 +2763,7 @@ near AS (
   FROM dots d
   JOIN norms na ON na.vec_id = d.vec_a
   JOIN norms nb ON nb.vec_id = d.vec_b
-  WHERE round(d.dot / (na.norm * nb.norm), 6) >= {threshold}
+  WHERE round(d.dot / (na.norm * nb.norm), 6) >= {SEMDEDUP_T}
 ),
 edges AS (
   SELECT vec_a AS src, vec_b AS dst FROM near
@@ -2836,9 +2781,9 @@ clusters AS (
 ),
 flagged AS (
   SELECT a.vec_id FROM assign a
-  JOIN cell_n n ON n.cid = a.cid WHERE n.cn > {max_cell}
+  JOIN cell_n n ON n.cid = a.cid WHERE n.cn > {SEMDEDUP_MAX_CELL}
 ),
-universe AS (SELECT DISTINCT vec_id FROM {rel})
+universe AS (SELECT DISTINCT vec_id FROM embeddings)
 SELECT u.vec_id,
        COALESCE(c.cluster_rep, u.vec_id) AS cluster_rep,
        COALESCE(c.cluster_rep, u.vec_id) = u.vec_id AS keep,
@@ -2895,8 +2840,6 @@ def _cells_assign_matmul(spark, emb: DataFrame,
 
 
 def semdedup_keep_list(spark, sf_dir: str,
-                       threshold: float = SEMDEDUP_T,
-                       n_cells: int = SEMDEDUP_CELLS,
                        max_cell: int = SEMDEDUP_MAX_CELL) -> DataFrame:
     """Spark execution. Engine split (see the module comment): the cell
     ASSIGNMENT runs the shared CTE text once and is checkpointed (three
@@ -2912,7 +2855,7 @@ def semdedup_keep_list(spark, sf_dir: str,
     # r13: the assignment runs through the BLAS twin instead of the
     # template's 64x pos-join explode (identical semantics, see
     # _cells_assign_matmul; the oracle keeps the template CTE)
-    assign = _cells_assign_matmul(spark, emb, n_cells) \
+    assign = _cells_assign_matmul(spark, emb, SEMDEDUP_CELLS) \
         .localCheckpoint(eager=True)
     cell_n = assign.groupBy("cid").agg(F.count("*").alias("cn"))
     assign_ok = (assign.join(cell_n.where(F.col("cn") <= max_cell)
@@ -2939,7 +2882,7 @@ def semdedup_keep_list(spark, sf_dir: str,
             .withColumn("_nb", F.sqrt(n2(F.col("eb"))))
             .where((F.col("_na") > 0) & (F.col("_nb") > 0))
             .where(F.round(dot / (F.col("_na") * F.col("_nb")), 6)
-                   >= threshold)
+                   >= SEMDEDUP_T)
             .select(F.col("vec_a").alias("doc_a"),
                     F.col("vec_b").alias("doc_b")))
     clusters = connected_components(near) \
@@ -3018,18 +2961,16 @@ proj AS (
 )"""
 
 
-def jl_topk_sql(dialect: str, rel: str = "embeddings", k: int = 5,
-                query_mod: int = 50,
-                shortlist: int = JL_SHORTLIST) -> str:
+def jl_topk_sql(dialect: str, rel: str = "embeddings") -> str:
     """Two-stage JL search: reduced-space shortlist, exact re-rank.
 
     Stage 1 scores every candidate in the 32-dim reduced space and
-    keeps the top ``shortlist`` per query; stage 2 computes the TRUE
-    64-dim cosine ONLY for shortlist pairs and emits the final top-k.
+    keeps the top JL_SHORTLIST per query; stage 2 computes the TRUE
+    64-dim cosine ONLY for shortlist pairs and emits the final top-5.
     Output: query_id, neighbor_id, rank, cosine (exact, rounded 1e-6),
     in_exact (1 iff the unrestricted full-dim exact top-k for the same
     query also contains this neighbor — the recall audit; SUM(in_exact)
-    / (queries * k) is recall@k, measured not claimed)."""
+    / (queries * 5) is recall@5, measured not claimed)."""
     return f"""
 WITH {_exploded_cte(dialect, rel)},
 {_jl_proj_cte(dialect).lstrip()},
@@ -3046,7 +2987,7 @@ rdots AS (
   SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
          SUM(q.rval * c.rval) AS dot
   FROM red q JOIN red c ON q.kk = c.kk AND q.vec_id <> c.vec_id
-  WHERE q.vec_id % {query_mod} = 0
+  WHERE q.vec_id % 50 = 0
   GROUP BY q.vec_id, c.vec_id
 ),
 short AS (
@@ -3059,7 +3000,7 @@ short AS (
     FROM rdots d
     JOIN rnorms nq ON nq.vec_id = d.query_id
     JOIN rnorms nc ON nc.vec_id = d.neighbor_id
-  ) _s WHERE srank <= {shortlist}
+  ) _s WHERE srank <= {JL_SHORTLIST}
 ),
 sdots AS (
   -- exact cosine ONLY for shortlist pairs: Q x S x D work instead of
@@ -3081,13 +3022,13 @@ stop AS (
     FROM sdots d
     JOIN norms nq ON nq.vec_id = d.query_id
     JOIN norms nc ON nc.vec_id = d.neighbor_id
-  ) _t WHERE rank <= {k}
+  ) _t WHERE rank <= 5
 ),
 edots AS (
   SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
          SUM(q.val * c.val) AS dot
   FROM vecs q JOIN vecs c ON q.pos = c.pos AND q.vec_id <> c.vec_id
-  WHERE q.vec_id % {query_mod} = 0
+  WHERE q.vec_id % 50 = 0
   GROUP BY q.vec_id, c.vec_id
 ),
 etop AS (
@@ -3100,7 +3041,7 @@ etop AS (
     FROM edots d
     JOIN norms nq ON nq.vec_id = d.query_id
     JOIN norms nc ON nc.vec_id = d.neighbor_id
-  ) _e WHERE rank <= {k}
+  ) _e WHERE rank <= 5
 )
 SELECT r.query_id, r.neighbor_id, r.rank, r.cosine,
        CASE WHEN e.neighbor_id IS NOT NULL THEN 1 ELSE 0 END AS in_exact
@@ -3121,8 +3062,7 @@ def embed_jl_topk(spark, sf_dir: str) -> DataFrame:
 
 # --- hard-negative mining (contrastive embedding training, r8) ---------------
 
-def hard_negatives_sql(dialect: str, rel: str = "embeddings",
-                       k: int = 5, query_mod: int = 50) -> str:
+def hard_negatives_sql(dialect: str, rel: str = "embeddings") -> str:
     """Top-k most-similar OTHER-LABEL neighbors per query vector — the
     hard negatives an embedding-training pipeline mines for contrastive
     loss (in-batch negatives are easy; the valuable ones are near the
@@ -3144,7 +3084,7 @@ dots AS (
   SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
          SUM(q.val * c.val) AS dot
   FROM vecs q JOIN vecs c ON q.pos = c.pos AND q.vec_id <> c.vec_id
-  WHERE q.vec_id % {query_mod} = 0
+  WHERE q.vec_id % 50 = 0
   GROUP BY q.vec_id, c.vec_id
 ),
 cos AS (
@@ -3164,23 +3104,20 @@ FROM (
          row_number() OVER (PARTITION BY query_id
                             ORDER BY cosine DESC, neighbor_id) AS rank
   FROM cos
-) _r WHERE rank <= {k}
+) _r WHERE rank <= 5
 """
 
 
-def embed_hard_negatives(spark, sf_dir: str, k: int = 5,
-                         query_mod: int = 50) -> DataFrame:
+def embed_hard_negatives(spark, sf_dir: str) -> DataFrame:
     spark.read.parquet(f"{sf_dir}/embeddings.parquet") \
         .createOrReplaceTempView("cpss_hardneg_embeddings")
     return spark.sql(hard_negatives_sql("spark",
-                                        "cpss_hardneg_embeddings",
-                                        k, query_mod))
+                                        "cpss_hardneg_embeddings"))
 
 
 # --- kNN label eval (embedding-quality metric) -------------------------------
 
 def knn_eval_sql(dialect: str, rel: str = "embeddings",
-                 k: int = 5, query_mod: int = 10,
                  topk_rel: str | None = None) -> str:
     """k-NN label prediction accuracy — THE embedding-quality probe
     (public: the standard kNN evaluation protocol for representation
@@ -3211,7 +3148,7 @@ dots AS (
   SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
          SUM(q.val * c.val) AS dot
   FROM vecs q JOIN vecs c ON q.pos = c.pos AND q.vec_id <> c.vec_id
-  WHERE q.vec_id % {query_mod} = 0
+  WHERE q.vec_id % 10 = 0
   GROUP BY q.vec_id, c.vec_id
 ),
 cos AS (
@@ -3228,7 +3165,7 @@ topk AS (
                               ORDER BY cosine DESC, neighbor_id)
              AS rank
     FROM cos
-  ) _r WHERE rank <= {k}
+  ) _r WHERE rank <= 5
 ),"""
     return head + f"""
 votes AS (
@@ -3252,8 +3189,7 @@ FROM pred p JOIN lab lq ON lq.vec_id = p.query_id
 """
 
 
-def embed_knn_eval(spark, sf_dir: str, k: int = 5,
-                   query_mod: int = 10) -> DataFrame:
+def embed_knn_eval(spark, sf_dir: str) -> DataFrame:
     """Spark execution (r13): the top-k derivation runs through the
     _brute_matmul_topk BLAS kernel — identical semantics to the
     template's exploded dots (round 1e-6, neighbor_id tiebreak,
@@ -3265,8 +3201,8 @@ def embed_knn_eval(spark, sf_dir: str, k: int = 5,
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     emb.createOrReplaceTempView("cpss_embeddings_knn")
     topk = _brute_matmul_topk(
-        spark, emb.where(F.col("vec_id") % query_mod == 0), emb, k) \
+        spark, emb.where(F.col("vec_id") % 10 == 0), emb, 5) \
         .select("query_id", "neighbor_id")
     topk.createOrReplaceTempView("cpss_knn_topk")
-    return spark.sql(knn_eval_sql("spark", "cpss_embeddings_knn", k,
-                                  query_mod, topk_rel="cpss_knn_topk"))
+    return spark.sql(knn_eval_sql("spark", "cpss_embeddings_knn",
+                                  topk_rel="cpss_knn_topk"))

@@ -392,10 +392,10 @@ def _hll_diag_blocks(dialect: str, rel_prefix: str):
     return out
 
 
-def hll_registers_sql(dialect: str, rel_prefix: str = "") -> str:
+def hll_registers_sql(dialect: str) -> str:
     """The raw mergeable sketch state itself: one (col_ref, register,
     mrho) row per occupied register."""
-    blocks = _hll_diag_blocks(dialect, rel_prefix)
+    blocks = _hll_diag_blocks(dialect, "")
     rows = "\nUNION ALL\n".join(
         f"SELECT '{colref}' AS col_ref, CAST(register AS BIGINT)"
         f" AS register, CAST(mrho AS BIGINT) AS mrho FROM {tag}_regs"
@@ -405,12 +405,12 @@ def hll_registers_sql(dialect: str, rel_prefix: str = "") -> str:
             f" ORDER BY col_ref, register")
 
 
-def hll_rho_parts_sql(dialect: str, rel_prefix: str = "") -> str:
+def hll_rho_parts_sql(dialect: str) -> str:
     """Histogram of the rho decomposition inputs: how many values per
     column split into each (leading-zero count, first nonzero digit)
     pair. Isolates the nz ladder + digit extraction from everything
     downstream of it."""
-    blocks = _hll_diag_blocks(dialect, rel_prefix)
+    blocks = _hll_diag_blocks(dialect, "")
     rows = "\nUNION ALL\n".join(
         f"SELECT '{colref}' AS col_ref, CAST(nz AS BIGINT) AS nz,"
         f" CAST(fd AS BIGINT) AS fd,"
@@ -422,13 +422,13 @@ def hll_rho_parts_sql(dialect: str, rel_prefix: str = "") -> str:
             f" ORDER BY col_ref, nz, fd")
 
 
-def hll_state_sql(dialect: str, rel_prefix: str = "") -> str:
+def hll_state_sql(dialect: str) -> str:
     """The merged Z accumulator per column, WITHOUT the estimator
     division: registers green + state green + main query red would pin
     the divergence to the single wide-integer division in
     _hll_est_expr."""
     m = HLL_M
-    blocks = _hll_diag_blocks(dialect, rel_prefix)
+    blocks = _hll_diag_blocks(dialect, "")
     ctes, rows = [], []
     for tag, colref, c in blocks:
         ctes.append(f"""{c},
@@ -501,8 +501,7 @@ def _kmv_h_expr(hexpr: str = "h16") -> str:
     return f"({terms})"
 
 
-def kmv_distinct_sql(dialect: str, rel_prefix: str = "",
-                     k: int = KMV_K) -> str:
+def kmv_distinct_sql(dialect: str, rel_prefix: str = "") -> str:
     """Dual-dialect KMV template: one row per tracked column with the
     sketch state (n_k, h_k), the estimate, the exact twin, and the
     integer basis-point error. n_k < k means the k-set holds EVERY
@@ -525,14 +524,14 @@ def kmv_distinct_sql(dialect: str, rel_prefix: str = "",
   SELECT DISTINCT {_kmv_h_expr()} AS h FROM {tag}_m
 ),
 {tag}_topk AS (
-  SELECT h FROM {tag}_h ORDER BY h LIMIT {k}
+  SELECT h FROM {tag}_h ORDER BY h LIMIT {KMV_K}
 ),
 {tag}_st AS (
   SELECT COUNT(*) AS n_k, COALESCE(MAX(h), CAST(0 AS BIGINT)) AS h_k
   FROM {tag}_topk
 ),
 {tag}_ex AS (SELECT COUNT(DISTINCT v) AS exact_d FROM {tag}_vals)""")
-        est = (f"CASE WHEN s.n_k < {k} THEN CAST(s.n_k AS BIGINT) "
+        est = (f"CASE WHEN s.n_k < {KMV_K} THEN CAST(s.n_k AS BIGINT) "
                f"ELSE {exact_int_div(dialect, str(_KMV_EST_NUM), 's.h_k')}"
                f" END")
         # err_bp stays BIGINT end to end (no DECIMAL/HUGEINT widening
@@ -548,7 +547,7 @@ def kmv_distinct_sql(dialect: str, rel_prefix: str = "",
                    "CAST(1 AS BIGINT))")
         err_bp = exact_int_div(dialect, err_num, err_den)
         rows.append(f"""
-SELECT '{colref}' AS col_ref, {k} AS k,
+SELECT '{colref}' AS col_ref, {KMV_K} AS k,
        CAST(s.n_k AS BIGINT) AS n_k,
        CAST(s.h_k AS BIGINT) AS h_k,
        {est} AS est_distinct,
@@ -575,8 +574,7 @@ def sketch_kmv_distinct_oracle_sql() -> str:
     return kmv_distinct_sql("duckdb")
 
 
-def kmv_topk_rows_sql(dialect: str, rel: str, k: int = KMV_K,
-                      tracked=HLL_STREAM_TRACKED) -> str:
+def kmv_topk_rows_sql(dialect: str, rel: str) -> str:
     """(col_ref, h) min-k rows for one slice of ``rel`` — the
     per-microbatch spool extraction for the streaming drain. min-k is
     associative, commutative and idempotent over set union, so
@@ -585,7 +583,7 @@ def kmv_topk_rows_sql(dialect: str, rel: str, k: int = KMV_K,
     order-statistic form)."""
     str_t = _str_type(dialect)
     ctes, rows = [], []
-    for i, (_, colexpr, notnull, colref) in enumerate(tracked):
+    for i, (_, colexpr, notnull, colref) in enumerate(HLL_STREAM_TRACKED):
         tag = f"ks{i}"
         ce = colexpr.format(STR=str_t)
         ctes.append(f"""
@@ -597,22 +595,21 @@ def kmv_topk_rows_sql(dialect: str, rel: str, k: int = KMV_K,
 ),
 {tag}_topk AS (
   SELECT DISTINCT {_kmv_h_expr()} AS h FROM {tag}_m
-  ORDER BY h LIMIT {k}
+  ORDER BY h LIMIT {KMV_K}
 )""")
         rows.append(f"SELECT '{colref}' AS col_ref, h FROM {tag}_topk")
     body = "\nUNION ALL\n".join(rows)
     return f"WITH {','.join(ctes)}\n{body}"
 
 
-def kmv_finalize_sql(dialect: str, spool_rel: str, k: int = KMV_K,
-                     tracked=HLL_STREAM_TRACKED) -> str:
+def kmv_finalize_sql(dialect: str, spool_rel: str) -> str:
     """Merged (col_ref, h) spool -> one sketch row per col_ref: min-k
     over the distinct union, then the SAME pure-BIGINT estimator as
     the batch template. The spool is bounded (<= k rows per column
     per microbatch), so the per-column window here runs over a
     metadata-sized relation."""
     del dialect  # fully portable
-    refs = ", ".join(f"'{colref}'" for _, _, _, colref in tracked)
+    refs = ", ".join(f"'{colref}'" for _, _, _, colref in HLL_STREAM_TRACKED)
     return f"""
 WITH merged AS (
   SELECT DISTINCT col_ref, h FROM {spool_rel}
@@ -626,32 +623,29 @@ ranked AS (
 st AS (
   SELECT col_ref, COUNT(*) AS n_k,
          COALESCE(MAX(h), CAST(0 AS BIGINT)) AS h_k
-  FROM ranked WHERE rn <= {k} GROUP BY col_ref
+  FROM ranked WHERE rn <= {KMV_K} GROUP BY col_ref
 )
-SELECT col_ref, {k} AS k, CAST(n_k AS BIGINT) AS n_k,
+SELECT col_ref, {KMV_K} AS k, CAST(n_k AS BIGINT) AS n_k,
        CAST(h_k AS BIGINT) AS h_k,
-       CASE WHEN n_k < {k} THEN CAST(n_k AS BIGINT)
+       CASE WHEN n_k < {KMV_K} THEN CAST(n_k AS BIGINT)
             ELSE CAST({_KMV_EST_NUM} AS BIGINT) {{div}} h_k END
          AS est_distinct
 FROM st ORDER BY col_ref
 """
 
 
-def kmv_finalize_rendered(dialect: str, spool_rel: str, k: int = KMV_K,
-                          tracked=HLL_STREAM_TRACKED) -> str:
+def kmv_finalize_rendered(dialect: str, spool_rel: str) -> str:
     div = "//" if dialect == "duckdb" else "div"
-    return kmv_finalize_sql(dialect, spool_rel, k, tracked).replace(
+    return kmv_finalize_sql(dialect, spool_rel).replace(
         "{div}", div)
 
 
-def kmv_sketch_only_sql(dialect: str, rel: str,
-                        tracked=HLL_STREAM_TRACKED) -> str:
+def kmv_sketch_only_sql(dialect: str, rel: str) -> str:
     """Batch oracle for the STREAMING drain: sketch columns only (no
     exact twin — the stream never spools raw values), composed from
     the same extraction + finalize the drain runs."""
-    inner = kmv_topk_rows_sql(dialect, rel, KMV_K, tracked)
-    fin = kmv_finalize_rendered(dialect, "kmv_spool_all",
-                                KMV_K, tracked).lstrip("\n")
+    inner = kmv_topk_rows_sql(dialect, rel)
+    fin = kmv_finalize_rendered(dialect, "kmv_spool_all").lstrip("\n")
     assert fin.startswith("WITH merged")
     return fin.replace(
         "WITH merged",
@@ -893,15 +887,14 @@ def sketch_histogram_quantiles_oracle_sql() -> str:
 # --- Streaming HLL support ---------------------------------------------------
 
 
-def hll_register_rows_sql(dialect: str, rel: str,
-                          tracked=HLL_STREAM_TRACKED) -> str:
+def hll_register_rows_sql(dialect: str, rel: str) -> str:
     """(col_ref, register, mrho) rows for one slice of ``rel`` — the
     per-microbatch spool extraction. MAX(rho) is associative and
     commutative, so spooled slices merge to exactly the batch
     registers regardless of how files split into microbatches."""
     str_t = _str_type(dialect)
     ctes, rows = [], []
-    for i, (_, colexpr, notnull, colref) in enumerate(tracked):
+    for i, (_, colexpr, notnull, colref) in enumerate(HLL_STREAM_TRACKED):
         tag = f"s{i}"
         ctes.append(_hll_reg_ctes(tag, rel, colexpr.format(STR=str_t),
                                   notnull))
@@ -937,17 +930,15 @@ ORDER BY z.col_ref
 """
 
 
-def hll_sketch_only_sql(dialect: str, rel_prefix: str = "",
-                        tracked=HLL_STREAM_TRACKED,
-                        rel: str | None = None) -> str:
+def hll_sketch_only_sql(dialect: str, rel: str | None = None) -> str:
     """Batch oracle for the STREAMING drain: the sketch columns only
     (no exact twin — the stream never spools raw values, which is the
     whole point of a mergeable sketch), composed from the same
     register extraction + finalize the drain runs."""
     if rel is None:
-        rel = rel_prefix + tracked[0][0]
-    inner = hll_register_rows_sql(dialect, rel, tracked)
-    fin = hll_finalize_rendered(dialect, "regs_all", tracked).lstrip("\n")
+        rel = "" + HLL_STREAM_TRACKED[0][0]
+    inner = hll_register_rows_sql(dialect, rel)
+    fin = hll_finalize_rendered(dialect, "regs_all").lstrip("\n")
     assert fin.startswith("WITH merged")
     # splice the extraction in as the first CTE of the finalize query
     return fin.replace("WITH merged",
@@ -1009,23 +1000,22 @@ cms_sketch AS (
 )"""
 
 
-def cms_heavy_hitters_sql(dialect: str, docs_rel: str = "documents",
-                          topk: int = CMS_TOPK) -> str:
+def cms_heavy_hitters_sql(dialect: str) -> str:
     """Dual-dialect CMS point-query demo with the exact audit twin:
-    the top-``topk`` tokens by EXACT count (ties broken by token) are
+    the top-CMS_TOPK tokens by EXACT count (ties broken by token) are
     probed against the sketch; ``cms_est >= exact_count`` is the CMS
     one-sided error guarantee (asserted in tests), ``over_bp`` makes
     the collision overestimate visible.
 
     Output: token, exact_count, cms_est, over_bp."""
     return f"""
-WITH {_cms_tokens_cte(dialect, docs_rel).lstrip()},
+WITH {_cms_tokens_cte(dialect, 'documents').lstrip()},
 {_cms_probes_cte(dialect).lstrip()},
 cms_cand AS (
   SELECT tok, c, row_number() OVER (ORDER BY c DESC, tok) AS rn
   FROM cms_tc
 ),
-cms_top AS (SELECT tok, c FROM cms_cand WHERE rn <= {topk}),
+cms_top AS (SELECT tok, c FROM cms_cand WHERE rn <= {CMS_TOPK}),
 cms_est AS (
   SELECT t.tok, t.c, MIN(s.total) AS est
   FROM cms_top t

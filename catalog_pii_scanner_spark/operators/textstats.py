@@ -267,12 +267,12 @@ def length_quantiles(spark, sf_dir: str, approx: bool = False) -> DataFrame:
     )
 
 
-def length_quantiles_oracle_sql(docs_rel: str = "documents") -> str:
+def length_quantiles_oracle_sql() -> str:
     cols = ", ".join(
         f"round(quantile_cont(n_chars, {q}), 6) AS p{int(q * 100)}"
         for q in QUANTILES)
     return (f"SELECT lang, COUNT(*) AS n, {cols} "
-            f"FROM {docs_rel} GROUP BY lang")
+            f"FROM documents GROUP BY lang")
 
 
 # --- winnowing fingerprints (partial-overlap detection) ----------------------
@@ -321,7 +321,6 @@ WINNOW_H_EXPR = (f"(({_HEXD.format(p=1)}) * 4096 + ({_HEXD.format(p=2)})"
 
 
 def winnow_pairs_segments(dialect: str, docs_rel: str = "documents",
-                          k: int = WINNOW_K, w: int = WINNOW_W,
                           df_cap: int = WINNOW_DF_CAP,
                           min_shared: int = WINNOW_MIN_SHARED
                           ) -> tuple[str, str]:
@@ -331,13 +330,13 @@ def winnow_pairs_segments(dialect: str, docs_rel: str = "documents",
     if dialect == "duckdb":
         norm = (f"substr(regexp_replace(lower(text), '[^a-z0-9]', '',"
                 f" 'g'), 1, {WINNOW_MAX_CHARS})")
-        gi = (f"FROM norm, unnest(range(1, length(s) - {k} + 2)) _u(i)"
-              f" WHERE length(s) >= {k}")
+        gi = (f"FROM norm, unnest(range(1, length(s) - {WINNOW_K} + 2)) _u(i)"
+              f" WHERE length(s) >= {WINNOW_K}")
     else:
         norm = (f"substr(regexp_replace(lower(text), '[^a-z0-9]', ''),"
                 f" 1, {WINNOW_MAX_CHARS})")
         gi = (f"FROM norm LATERAL VIEW explode(sequence(1, length(s)"
-              f" - {k} + 1)) _u AS i WHERE length(s) >= {k}")
+              f" - {WINNOW_K} + 1)) _u AS i WHERE length(s) >= {WINNOW_K}")
     h = WINNOW_H_EXPR
     # Two segments, composed (never re-parsed) by the callers: the
     # Spark runner materializes the selection segment once and splices
@@ -348,8 +347,8 @@ def winnow_pairs_segments(dialect: str, docs_rel: str = "documents",
   SELECT doc_id, {norm} AS s FROM {docs_rel} WHERE text IS NOT NULL
 ),
 gm AS (
-  SELECT doc_id, i, md5(substr(s, CAST(i AS INT), {k})) AS m,
-         length(s) - {k} + 1 AS ng
+  SELECT doc_id, i, md5(substr(s, CAST(i AS INT), {WINNOW_K})) AS m,
+         length(s) - {WINNOW_K} + 1 AS ng
   {gi}
 ),
 keyed AS (
@@ -362,13 +361,13 @@ winmin AS (
   SELECT doc_id, i, ng,
          MIN(wkey) OVER (PARTITION BY doc_id ORDER BY i
                          ROWS BETWEEN CURRENT ROW
-                         AND {w - 1} FOLLOWING) AS kmin
+                         AND {WINNOW_W - 1} FOLLOWING) AS kmin
   FROM keyed
 ),
 sel AS (
   SELECT DISTINCT doc_id,
          CAST(floor(kmin / 1073741824.0) AS BIGINT) AS h
-  FROM winmin WHERE i <= ng - {w} + 1
+  FROM winmin WHERE i <= ng - {WINNOW_W} + 1
 )"""
     pair_segment = f"""df AS (SELECT h, COUNT(*) AS d FROM sel GROUP BY h),
 kept AS (
@@ -392,18 +391,14 @@ JOIN doc_n nb ON nb.doc_id = p.doc_b
     return sel_segment, pair_segment
 
 
-def winnow_pairs_sql(dialect: str, docs_rel: str = "documents",
-                     k: int = WINNOW_K, w: int = WINNOW_W,
-                     df_cap: int = WINNOW_DF_CAP,
+def winnow_pairs_sql(dialect: str, df_cap: int = WINNOW_DF_CAP,
                      min_shared: int = WINNOW_MIN_SHARED) -> str:
-    sel, pair = winnow_pairs_segments(dialect, docs_rel, k=k, w=w,
-                                      df_cap=df_cap,
+    sel, pair = winnow_pairs_segments(dialect, df_cap=df_cap,
                                       min_shared=min_shared)
     return f"WITH {sel},\n{pair}"
 
 
-def winnow_selected_chars(docs: DataFrame, k: int = WINNOW_K,
-                          w: int = WINNOW_W) -> DataFrame:
+def winnow_selected_chars(docs: DataFrame) -> DataFrame:
     """The template's ``sel`` relation (DISTINCT doc_id, h) built from a
     per-doc CHAR explode + (k-1) LEADs instead of
     ``substr(s, i, k)`` per exploded position.
@@ -431,15 +426,15 @@ def winnow_selected_chars(docs: DataFrame, k: int = WINNOW_K,
                     F.expr(f"substr(regexp_replace(lower(text),"
                            f" '[^a-z0-9]', ''), 1, {WINNOW_MAX_CHARS})")
                     .alias("s"))
-            .where(F.length("s") >= k))
+            .where(F.length("s") >= WINNOW_K))
     chars = (norm.select("doc_id",
-                         (F.length("s") - k + 1).alias("ng"),
+                         (F.length("s") - WINNOW_K + 1).alias("ng"),
                          F.posexplode(F.split("s", "")).alias("pos", "c"))
              .where(F.col("c") != "")
              .select("doc_id", "ng", (F.col("pos") + 1).alias("i"), "c"))
     win = Window.partitionBy("doc_id").orderBy("i")
     gram = F.concat(F.col("c"),
-                    *[F.lead("c", j).over(win) for j in range(1, k)])
+                    *[F.lead("c", j).over(win) for j in range(1, WINNOW_K)])
     grams = (chars.select("doc_id", "ng", "i", F.md5(gram).alias("m"))
              .where(F.col("i") <= F.col("ng")))
     keyed = grams.selectExpr(
@@ -447,10 +442,10 @@ def winnow_selected_chars(docs: DataFrame, k: int = WINNOW_K,
         f"CAST({WINNOW_H_EXPR} AS BIGINT) * 1073741824"
         f" + (1073741823 - i) AS wkey")
     amin = Window.partitionBy("doc_id").orderBy("i") \
-        .rowsBetween(Window.currentRow, w - 1)
+        .rowsBetween(Window.currentRow, WINNOW_W - 1)
     return (keyed.select("doc_id", "i", "ng",
                          F.min("wkey").over(amin).alias("kmin"))
-            .where(F.col("i") <= F.col("ng") - w + 1)
+            .where(F.col("i") <= F.col("ng") - WINNOW_W + 1)
             .selectExpr("doc_id",
                         "CAST(floor(kmin / 1073741824.0) AS BIGINT) AS h")
             .distinct())

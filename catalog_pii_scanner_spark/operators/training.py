@@ -51,9 +51,9 @@ def labeled_candidates(labeled: DataFrame) -> DataFrame:
     )
 
 
-def gold_contexts(labeled: DataFrame,
-                  window: int = CONTEXT_WINDOW) -> DataFrame:
-    """(type, context) training rows: span masked, +/-window chars."""
+def gold_contexts(labeled: DataFrame) -> DataFrame:
+    """(type, context) training rows: span masked, +/-CONTEXT_WINDOW
+    chars."""
     spans = labeled.select(
         "text_id", "text", F.explode("labels").alias("l"))
     masked_span = mask(F.col("l.text"))
@@ -64,8 +64,8 @@ def gold_contexts(labeled: DataFrame,
         masked_span,
         F.substring(F.col("text"), F.col("l.end") + 1,
                     F.length("text")))
-    start = F.greatest(F.col("l.start") + 1 - window, F.lit(1))
-    length = (F.col("l.end") - F.col("l.start")) + F.lit(2 * window)
+    start = F.greatest(F.col("l.start") + 1 - CONTEXT_WINDOW, F.lit(1))
+    length = (F.col("l.end") - F.col("l.start")) + F.lit(2 * CONTEXT_WINDOW)
     return spans.select(
         F.col("l.type").alias("pii_type"),
         F.col("l.text").alias("gold_text"),
@@ -87,29 +87,26 @@ class Calibrator:
     def get(self, t: str) -> tuple[float, float]:
         return self.params.get(t, (1.0, 0.0))
 
-    def apply(self, df: DataFrame, score_col: str = "raw_score",
-              type_col: str = "pii_type",
-              out_col: str = "calibrated") -> DataFrame:
+    def apply(self, df: DataFrame, score_col: str = "raw_score") -> DataFrame:
         a = F.lit(None).cast("double")
         b = F.lit(None).cast("double")
         for t in ALL_PII_TYPES:
             pa, pb = self.get(t)
-            a = F.when(F.col(type_col) == t, F.lit(pa)).otherwise(a)
-            b = F.when(F.col(type_col) == t, F.lit(pb)).otherwise(b)
+            a = F.when(F.col("pii_type") == t, F.lit(pa)).otherwise(a)
+            b = F.when(F.col("pii_type") == t, F.lit(pb)).otherwise(b)
         z = a * F.col(score_col) + b
         return df.withColumn(
-            out_col, F.lit(1.0) / (F.lit(1.0) + F.exp(-z)))
+            "calibrated", F.lit(1.0) / (F.lit(1.0) + F.exp(-z)))
 
 
-def _fit_platt_1d(scores: np.ndarray, y: np.ndarray,
-                  lr: float = 1.0, iters: int = 500) -> tuple[float, float]:
+def _fit_platt_1d(scores: np.ndarray, y: np.ndarray) -> tuple[float, float]:
     a, b = 1.0, 0.0
     n = len(y)
-    for _ in range(iters):
+    for _ in range(500):
         p = 1.0 / (1.0 + np.exp(-(a * scores + b)))
         g = p - y
-        a -= lr * float(g @ scores) / n
-        b -= lr * float(g.sum()) / n
+        a -= float(g @ scores) / n
+        b -= float(g.sum()) / n
     return a, b
 
 
@@ -141,8 +138,6 @@ def calibration_pairs(labeled: DataFrame) -> DataFrame:
 
 
 def fit_calibrator_ensemble(labeled: DataFrame, model=None,
-                            weights=None,
-                            ner_provider: str = "regex",
                             precomputed_lc: DataFrame | None = None,
                             precomputed_enriched: DataFrame | None = None
                             ) -> Calibrator:
@@ -173,11 +168,8 @@ def fit_calibrator_ensemble(labeled: DataFrame, model=None,
         F.col("text_id").cast("string").alias("column_ref"),
         F.col("text").alias("value"),
         "pii_type", "match_text", "rule_confidence", "validated")
-    kw = {} if weights is None else {"weights": weights}
     raw = full_scan_raw_scores(cands, model=model,
-                               ner_provider=ner_provider,
-                               precomputed_enriched=precomputed_enriched,
-                               **kw)
+                               precomputed_enriched=precomputed_enriched)
     pos = lc.select(
         F.col("text_id").cast("string").alias("column_ref"),
         F.col("text").alias("value"), "pii_type", "match_text",

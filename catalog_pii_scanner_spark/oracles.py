@@ -99,36 +99,30 @@ cand_ok AS (
 )"""
 
 
-def scored_candidates_cte(melted_sql: str,
-                          class_col: str | None = None,
-                          rules: tuple[Rule, ...] = RULES,
-                          prefix: str = "") -> str:
+def scored_candidates_cte(melted_sql: str, class_col: str | None = None,
+                          rules: tuple[Rule, ...] = RULES) -> str:
     """CTE chain: melted -> distinct vals -> candidates -> checksum filter
-    -> rules-only ensemble score. Ends defining relations ``{prefix}vals``
-    and ``{prefix}scored``. ``prefix`` namespaces the chain so two
-    instances can coexist in one statement (the incremental scan's
-    fresh/carried branches); the default renders byte-identical to the
-    historical unprefixed text."""
+    -> rules-only ensemble score. Ends defining relations ``vals`` and
+    ``scored``."""
     vcols = "column_ref, value" + (f", {class_col}" if class_col else "")
-    p = prefix
     return f"""
-{p}vals AS (
+vals AS (
   SELECT DISTINCT {vcols} FROM {melted_sql} m
   WHERE value IS NOT NULL
 ),
-{p}cand0 AS ({_cand_union_sql(f'{p}vals', rules, class_col=class_col)}),
-{p}cand AS (
+cand0 AS ({_cand_union_sql('vals', rules, class_col=class_col)}),
+cand AS (
   SELECT *,
     CASE WHEN validator = 'luhn' THEN {luhn_sql('match_text', 'duckdb')}
          WHEN validator = 'verhoeff12' THEN {verhoeff12_sql('match_text', 'duckdb')}
          ELSE NULL END AS checksum_ok
-  FROM {p}cand0
+  FROM cand0
 ),
-{p}scored AS (
+scored AS (
   SELECT column_ref, value, pii_type, match_text, rule_confidence,
          COALESCE(checksum_ok, FALSE) AS validated,
          {candidate_score_sql('duckdb')} AS prob
-  FROM {p}cand
+  FROM cand
   WHERE checksum_ok IS NULL OR checksum_ok
 )"""
 
@@ -223,8 +217,7 @@ def halfup_den_bound(scale: int = 6, num_scale: int = 0) -> int:
 
 
 def ratio_round_halfup_guarded(dialect: str, num: str, den: str,
-                               scale: int = 6, num_scale: int = 0,
-                               guard: str | None = None,
+                               num_scale: int = 0, guard: str | None = None,
                                fallback_num: str | None = None,
                                fallback_den: str | None = None) -> str:
     """ratio_round_halfup with its overflow precondition ENFORCED at
@@ -238,7 +231,7 @@ def ratio_round_halfup_guarded(dialect: str, num: str, den: str,
     cliff with an explicit SAME-BRANCH-ON-BOTH-ENGINES fallback to the
     plain double round. The fallback reintroduces the half-tie
     rounding ambiguity ONLY where a tie needs den to divide
-    2 * num * 10^scale with den > 4.6e12 — vanishingly unlikely for
+    2 * num * 10^6 with den > 4.6e12 — vanishingly unlikely for
     data-dependent counts, and the best available once exact integer
     arithmetic no longer fits.
 
@@ -260,11 +253,11 @@ def ratio_round_halfup_guarded(dialect: str, num: str, den: str,
     overflow-free at any count magnitude; the <= 2^-53 relative error
     of the double product is irrelevant on the fallback branch, which
     is already IEEE arithmetic."""
-    bound = halfup_den_bound(scale, num_scale)
-    exact = ratio_round_halfup(dialect, num, den, scale, num_scale)
+    bound = halfup_den_bound(6, num_scale)
+    exact = ratio_round_halfup(dialect, num, den, 6, num_scale)
     fn = fallback_num if fallback_num is not None \
         else f"CAST({num} AS DOUBLE)"
     fd = fallback_den if fallback_den is not None else f"({den})"
-    plain = f"round({fn} / {fd}, {scale})"
+    plain = f"round({fn} / {fd}, 6)"
     g = guard if guard is not None else f"({den}) <= {bound}"
     return f"(CASE WHEN {g} THEN {exact} ELSE {plain} END)"

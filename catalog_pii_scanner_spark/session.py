@@ -25,7 +25,11 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+#: Cores of the default ``local[N]`` master and the default shuffle
+#: partition count: ``$SPARK_GRAFT_CPUS`` when set, else the CPUs this
+#: process may run on (a fixed 32 gave a 4-vCPU host 32 task slots).
+LOCAL_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS")
+                 or len(os.sched_getaffinity(0)))
 
 #: ``spark.sql.codegen.cache.maxEntries`` default: room for a catalog
 #: scan's ~110 generated classes many times over (the driver contract's
@@ -66,7 +70,7 @@ def session_conf(
     then ``extra_conf`` on top (a caller's value always wins)."""
     conf = {
         "spark.sql.shuffle.partitions": str(
-            shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
+            shuffle_partitions or LOCAL_CPUS
         ),
         "spark.sql.session.timeZone": "UTC",
         "spark.sql.adaptive.enabled": "true",
@@ -105,13 +109,12 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the session.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` so the same entry
+    ``master`` defaults to ``local[LOCAL_CPUS]`` so the same entry
     points run unchanged on a cluster (where ``master`` comes from
     spark-submit and this arg stays None -> builder default).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if master is None and "SPARK_MASTER" not in os.environ:
-        master = f"local[{cpus}]"
+        master = f"local[{LOCAL_CPUS}]"
     b = SparkSession.builder.appName(app_name)
     if master:
         b = b.master(master)

@@ -18,7 +18,7 @@ keys and audits.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 #: doc_id-hash fan-out per language in the shuffle before the write —
@@ -27,9 +27,8 @@ from pyspark.sql import functions as F
 N_BUCKETS = 16
 
 
-def export_training_corpus(spark: SparkSession, sf_dir: str,
-                           out_path: str, anonymize: bool = True,
-                           n_buckets: int = N_BUCKETS) -> dict:
+def export_training_corpus(spark: SparkSession, sf_dir: str, out_path: str,
+                           anonymize: bool = True) -> dict:
     """Write the curated training corpus under ``out_path``.
 
     A document is exported iff BOTH gates keep it: the near-dup
@@ -71,7 +70,7 @@ def export_training_corpus(spark: SparkSession, sf_dir: str,
         out = kept.withColumn("n_masked", F.lit(0).cast("bigint"))
 
     (out.repartition(F.col("lang"), F.pmod(F.col("doc_id"),
-                                           F.lit(n_buckets)))
+                                           F.lit(N_BUCKETS)))
         .sortWithinPartitions("doc_id")
         .write.mode("overwrite").partitionBy("lang").parquet(out_path))
 

@@ -53,8 +53,7 @@ PART_SCHEMAS = {"findings": FINDINGS_STORE_SCHEMA,
 
 
 def to_findings_records(per_type: DataFrame,
-                        source: str = "scan",
-                        model_version: str = MODEL_VERSION) -> DataFrame:
+                        source: str = "scan") -> DataFrame:
     """Re-nest the per-(column, type) rollup into the reference's Finding
     shape: one row per column with ``types ARRAY<STRING>`` (sorted),
     column-level confidence = max over types.
@@ -73,7 +72,7 @@ def to_findings_records(per_type: DataFrame,
             F.max("confidence").alias("confidence"),
             F.max("hit_rate").alias("hit_rate"),
         )
-        .withColumn("model_version", F.lit(model_version))
+        .withColumn("model_version", F.lit(MODEL_VERSION))
         .withColumn("scanned_at", F.current_timestamp())
         .withColumn("source", F.lit(source))
         .localCheckpoint(eager=True)

@@ -86,8 +86,7 @@ class SessionCatalogClient:
                            f"COMMENT '{escaped}'")
 
 
-def ref_parts(ref_col: str = "column_ref") -> tuple[F.Column, F.Column,
-                                                    F.Column]:
+def ref_parts() -> tuple[F.Column, F.Column, F.Column]:
     """(schema, table, column) Columns from a ``column_ref`` URI — THE
     shared decomposition for every write-back consumer (this sink's
     apply loop AND operators/incremental.writeback_diff_plan).
@@ -100,7 +99,7 @@ def ref_parts(ref_col: str = "column_ref") -> tuple[F.Column, F.Column,
     column=NULL — the apply loop would tag the wrong object (r12
     ADVICE, the latent-bug half). 2-segment refs now parse with a NULL
     schema and the segments land in table/column where they belong."""
-    parts = F.split(F.regexp_replace(ref_col, "^[a-z]+://", ""), "/")
+    parts = F.split(F.regexp_replace("column_ref", "^[a-z]+://", ""), "/")
     three = F.size(parts) >= 3
     return (
         F.when(three, parts.getItem(0)).alias("schema"),

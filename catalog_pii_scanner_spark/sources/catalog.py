@@ -80,15 +80,13 @@ def _arrow_simple_type(t) -> str:
 
 
 def parquet_catalog_columns(spark: SparkSession, sf_dir: str,
-                            tables: tuple[str, ...] | None = None,
                             catalog: str = "parquet",
                             schema: str = "testdata") -> DataFrame:
     """Enumerate real parquet footers -> canonical columns DataFrame.
     Footer-only reads (pyarrow), no data scan."""
     import pyarrow.parquet as pq
-    tables = tables or tuple(TESTDATA_SCHEMAS)
     rows = []
-    for t in tables:
+    for t in TESTDATA_SCHEMAS:
         st = pq.read_schema(f"{sf_dir}/{t}.parquet")
         for f in st:
             rows.append((
@@ -99,17 +97,15 @@ def parquet_catalog_columns(spark: SparkSession, sf_dir: str,
     return spark.createDataFrame(rows, COLUMNS_SCHEMA)
 
 
-def catalog_columns_oracle_sql(tables: tuple[str, ...] | None = None,
-                               catalog: str = "parquet",
+def catalog_columns_oracle_sql(catalog: str = "parquet",
                                schema: str = "testdata",
                                comments: dict | None = None) -> str:
     """DuckDB VALUES rendering from the shared schema constants. The Spark
     side reads real footers (or walks the session catalog); equality *is*
     the test that enumeration found exactly the declared columns/types."""
-    tables = tables or tuple(TESTDATA_SCHEMAS)
     comments = DEMO_COMMENTS if comments is None else comments
     rows = []
-    for t in tables:
+    for t in TESTDATA_SCHEMAS:
         for c, dt in TESTDATA_SCHEMAS[t]:
             comment = comments.get((t, c))
             cm = "NULL" if comment is None else f"'{comment}'"
@@ -125,7 +121,6 @@ _HMS_VIEW_PREFIX = "cpss_hms_"
 
 
 def hms_catalog_columns(spark: SparkSession, sf_dir: str,
-                        tables: tuple[str, ...] | None = None,
                         catalog: str = "spark",
                         schema: str = "session") -> DataFrame:
     """S4 as an oracle-checkable query: register the testdata tables in
@@ -135,9 +130,8 @@ def hms_catalog_columns(spark: SparkSession, sf_dir: str,
     ``listColumns`` (reference hms.py:76-106's thrift walk). The oracle is
     the declared schema constants: equality proves the catalog round-trip
     preserved every column name and logical type."""
-    tables = tables or tuple(TESTDATA_SCHEMAS)
     from .melt import read_table
-    for t in tables:
+    for t in TESTDATA_SCHEMAS:
         read_table(spark, sf_dir, t) \
             .createOrReplaceTempView(f"{_HMS_VIEW_PREFIX}{t}")
     rows = []
@@ -145,7 +139,7 @@ def hms_catalog_columns(spark: SparkSession, sf_dir: str,
         if not tbl.name.startswith(_HMS_VIEW_PREFIX):
             continue
         base = tbl.name[len(_HMS_VIEW_PREFIX):]
-        if base not in tables:
+        if base not in TESTDATA_SCHEMAS:
             continue
         for c in spark.catalog.listColumns(tbl.name):
             # catalog-level logical vocabulary: the reference carries one

@@ -5,12 +5,10 @@ column, one JDBC query each (reference: sampler.py:85-220, athena.py:97-135).
 Spark replaces the whole ladder:
 
 - ``sample_columns``: ONE job over the melted relation samples *every*
-  column — distinct non-null values, capped at n per column. No per-column
-  query fan-out; the dedup+cap is one shuffle on (column_ref, value) and a
-  per-column window. Deterministic (ORDER BY value) so it is
-  oracle-checkable; pass ``deterministic=False`` for the reference's random
-  flavor (rand(seed) ordering — still reproducible under a fixed seed and
-  partitioning, but not engine-portable).
+  column — distinct non-null values, capped at DEFAULT_SAMPLE_N per
+  column. No per-column query fan-out; the dedup+cap is one shuffle on
+  (column_ref, value) and a per-column window. Deterministic (ORDER BY
+  value), where the reference orders by rand(), so it is oracle-checkable.
 - ``athena_sample_column``: the Athena sampler's semantics — WHERE pushed
   to the scan, a deterministic value-hash fraction as the byte-cap
   analog, LIMIT n distinct values.
@@ -32,17 +30,18 @@ DEFAULT_SAMPLE_N = 20
 SALT_BUCKETS = 64
 
 
-def sample_columns(values_df: DataFrame, n: int = DEFAULT_SAMPLE_N,
-                   deterministic: bool = True, seed: int = 42,
+def sample_columns(values_df: DataFrame,
                    pre_deduped: bool = False) -> DataFrame:
-    """(column_ref, value) -> at most n distinct non-null values per column.
+    """(column_ref, value) -> the DEFAULT_SAMPLE_N smallest distinct
+    non-null values per column.
 
     Two-phase top-k: a single window per column_ref puts EVERY distinct
     value of a high-cardinality column into one task (measured 105 s at
     sf0.1 — lineitem price columns are ~600 k distinct each). Phase 1
     prunes within (column_ref, hash-salt) buckets — 64-way parallel per
-    column, and the global top-n is provably contained in the union of
-    per-bucket top-n — so the final per-column window sees <= 64*n rows.
+    column, and the global top-n (n = DEFAULT_SAMPLE_N) is provably
+    contained in the union of per-bucket top-n — so the final per-column
+    window sees <= 64*n rows.
 
     Measured-and-rejected (r5): fusing the distinct + bucket-window pair
     into one groupBy(column_ref, salt) with
@@ -60,29 +59,28 @@ def sample_columns(values_df: DataFrame, n: int = DEFAULT_SAMPLE_N,
     """
     vals = (values_df if pre_deduped else
             values_df.where(F.col("value").isNotNull()).distinct())
-    order = F.col("value") if deterministic else F.rand(seed)
     salt = F.pmod(F.xxhash64("value"), F.lit(SALT_BUCKETS))
-    w1 = Window.partitionBy("column_ref", "_salt").orderBy(order)
+    w1 = Window.partitionBy("column_ref", "_salt").orderBy("value")
     pre = (
         vals.withColumn("_salt", salt)
         .withColumn("_rn1", F.row_number().over(w1))
-        .where(F.col("_rn1") <= n)
+        .where(F.col("_rn1") <= DEFAULT_SAMPLE_N)
     )
-    w = Window.partitionBy("column_ref").orderBy(order)
+    w = Window.partitionBy("column_ref").orderBy("value")
     return (
         pre.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= n)
+        .where(F.col("rn") <= DEFAULT_SAMPLE_N)
         .select("column_ref", "value")
     )
 
 
-def sample_columns_oracle_sql(melted_sql: str,
-                              n: int = DEFAULT_SAMPLE_N) -> str:
+def sample_columns_oracle_sql(melted_sql: str) -> str:
     return f"""
 SELECT column_ref, value FROM (
   SELECT DISTINCT column_ref, value FROM {melted_sql} m
   WHERE value IS NOT NULL
-) QUALIFY row_number() OVER (PARTITION BY column_ref ORDER BY value) <= {n}
+) QUALIFY row_number() OVER (PARTITION BY column_ref ORDER BY value)
+    <= {DEFAULT_SAMPLE_N}
 """
 
 

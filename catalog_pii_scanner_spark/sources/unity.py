@@ -116,8 +116,8 @@ def unity_columns_oracle_sql(catalog: str = "unity",
 
 # --- REST path (S3) ----------------------------------------------------------
 
-def stub_rest_client(catalog: str = "unity", schema: str = "testdata",
-                     page_size: int = 2) -> "FakeUnityRestClient":
+def stub_rest_client(catalog: str = "unity",
+                     schema: str = "testdata") -> "FakeUnityRestClient":
     """Hermetic REST surface over the SAME testdata schema vocabulary
     as :func:`stub_information_schema` — so the REST walk
     (:func:`unity_rest_columns`) must land on the IDENTICAL canonical
@@ -125,14 +125,14 @@ def stub_rest_client(catalog: str = "unity", schema: str = "testdata",
     share one oracle (``unity_columns_oracle_sql``): that equality IS
     the S3 correctness contract (reference unity.py:209-242 asserts
     the same row-level parity in test_unity_rest_jdbc.py).
-    ``page_size=2`` forces real multi-page next_page_token loops over
-    the 10 testdata tables."""
+    The client's ``page_size=2`` forces real multi-page next_page_token
+    loops over the 10 testdata tables."""
     tables = {catalog: {schema: {
         t: [{"name": c, "type_name": dt, "comment": None}
             for c, dt in cols]
         for t, cols in TESTDATA_SCHEMAS.items()
     }}}
-    return FakeUnityRestClient(tables, page_size=page_size)
+    return FakeUnityRestClient(tables)
 
 
 class FakeUnityRestClient:

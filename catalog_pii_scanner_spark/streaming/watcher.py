@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.rules import candidate_score, extract_candidates
-from ..oracles import ratio_round_halfup, ratio_round_halfup_guarded
+from ..oracles import ratio_round_halfup_guarded
 
 EVENTS_SCHEMA = ("event_id bigint, ts timestamp, user_id bigint, "
                  "event_type string, value double, props string")
@@ -64,13 +64,13 @@ def events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _hourly_agg(read_table(spark, sf_dir, "events"))
 
 
-def events_hourly_oracle_sql(events_rel: str = "events") -> str:
-    return f"""
+def events_hourly_oracle_sql() -> str:
+    return """
 SELECT date_trunc('hour', ts) AS window_start, event_type,
        COUNT(*) AS n_events, COUNT(DISTINCT user_id) AS n_users,
        CAST(round(SUM(CAST(value AS DECIMAL(18,2))), 2) AS DOUBLE)
          AS sum_value
-FROM {events_rel}
+FROM events
 GROUP BY 1, 2
 """
 
@@ -97,15 +97,15 @@ def events_props_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def events_props_stats_oracle_sql(events_rel: str = "events") -> str:
-    return f"""
+def events_props_stats_oracle_sql() -> str:
+    return """
 SELECT event_type, COUNT(*) AS n_events, COUNT(k) AS n_with_k,
        CAST(SUM(k) AS BIGINT) AS sum_k, MIN(k) AS min_k,
        MAX(k) AS max_k, round(AVG(k), 6) AS avg_k
 FROM (
   SELECT event_type,
          TRY_CAST(json_extract_string(props, '$.k') AS INT) AS k
-  FROM {events_rel}
+  FROM events
 ) GROUP BY event_type
 """
 
@@ -114,8 +114,7 @@ FROM (
 OUTLIER_Z = 3.0
 
 
-def events_value_outliers(spark: SparkSession, sf_dir: str,
-                          z_threshold: float = OUTLIER_Z) -> DataFrame:
+def events_value_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event-type z-score outliers — the monitoring query a watcher
     feeds. Two-pass exact: per-type count/sum/sum-of-squares accumulate
     in DECIMAL (exact, so the reduction order between engines cannot
@@ -146,18 +145,17 @@ def events_value_outliers(spark: SparkSession, sf_dir: str,
         ev.join(F.broadcast(stats), "event_type")
         .withColumn("_z", (F.col("v").cast("double") - mean)
                     / F.sqrt(var)))
-    return (enriched.where(F.abs("_z") >= F.lit(z_threshold))
+    return (enriched.where(F.abs("_z") >= F.lit(OUTLIER_Z))
             .select("event_id", "event_type",
                     F.col("v").cast("double").alias("value"),
                     F.round("_z", 6).alias("z")))
 
 
-def events_value_outliers_oracle_sql(events_rel: str = "events",
-                                     z_threshold: float = OUTLIER_Z) -> str:
+def events_value_outliers_oracle_sql() -> str:
     return f"""
 WITH ev AS (
   SELECT event_id, event_type, CAST(value AS DECIMAL(18,2)) AS v
-  FROM {events_rel}
+  FROM events
 ),
 stats AS (
   SELECT event_type, COUNT(*) AS n,
@@ -177,7 +175,7 @@ z AS (
   FROM ev e JOIN stats s USING (event_type)
 )
 SELECT event_id, event_type, value, round(zval, 6) AS z
-FROM z WHERE abs(zval) >= {z_threshold}
+FROM z WHERE abs(zval) >= {OUTLIER_Z}
 """
 
 
@@ -252,12 +250,11 @@ def _events_stream(spark: SparkSession, events_path: str,
     return stream
 
 
-def watch_events(spark: SparkSession, events_path: str,
-                 watermark: str = "2 hours", nanos: bool = False):
+def watch_events(spark: SparkSession, events_path: str, nanos: bool = False):
     """Streaming watcher: hourly windowed aggregation over the events
     stream. Returns the streaming DataFrame (caller picks sink/trigger)."""
     stream = _events_stream(spark, events_path, nanos=nanos)
-    return _hourly_agg(stream.withWatermark("ts", watermark),
+    return _hourly_agg(stream.withWatermark("ts", "2 hours"),
                        streaming=True)
 
 
@@ -295,13 +292,13 @@ def stream_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
                           "sum_value")
 
 
-def stream_events_hourly_oracle_sql(events_rel: str = "events") -> str:
-    return f"""
+def stream_events_hourly_oracle_sql() -> str:
+    return """
 SELECT date_trunc('hour', ts) AS window_start, event_type,
        COUNT(*) AS n_events,
        CAST(round(SUM(CAST(value AS DECIMAL(18,2))), 2) AS DOUBLE)
          AS sum_value
-FROM {events_rel}
+FROM events
 GROUP BY 1, 2
 """
 
@@ -339,10 +336,10 @@ def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count("*").alias("n_users")))
 
 
-def stream_dedup_events_oracle_sql(events_rel: str = "events") -> str:
-    return f"""
+def stream_dedup_events_oracle_sql() -> str:
+    return """
 SELECT event_type, COUNT(DISTINCT user_id) AS n_users
-FROM {events_rel} GROUP BY event_type
+FROM events GROUP BY event_type
 """
 
 
@@ -373,15 +370,15 @@ def events_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def events_sessions_oracle_sql(events_rel: str = "events") -> str:
+def events_sessions_oracle_sql() -> str:
     """Gaps-and-islands rendering: a session break is a gap STRICTLY
     over 30 min. Spark's session_window merges an event landing exactly
     on last+gap (closed end — verified empirically; an sf0.1 event pair
     exactly 1800 s apart after the second-truncation caught the >= vs >
     mismatch the sf0.01 gate never exercised)."""
-    return f"""
+    return """
 WITH e AS (
-  SELECT user_id, date_trunc('second', ts) AS ts, value FROM {events_rel}
+  SELECT user_id, date_trunc('second', ts) AS ts, value FROM events
 ),
 o AS (
   SELECT user_id, ts, value,
@@ -413,8 +410,7 @@ FROM s GROUP BY user_id, sid
 SESSION_SALT_BUCKET = "day"  # date_trunc unit; "hour" for hotter keys
 
 
-def events_sessions_salted(spark: SparkSession, sf_dir: str,
-                           bucket: str = SESSION_SALT_BUCKET) -> DataFrame:
+def events_sessions_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skew-hardened twin of :func:`events_sessions` — identical output
     contract (shares its oracle; equality-tested in
     tests/test_fuzz_events.py incl. a power-law hot-key corpus).
@@ -438,7 +434,7 @@ def events_sessions_salted(spark: SparkSession, sf_dir: str,
     Deployment guidance (measured, PERF.md round 5): below ~a task's
     worth of events per (user, gap-window) the global operator is
     cheaper (the salt costs one extra shuffle + a session-level window);
-    switch to this twin — or tighten ``bucket`` to "hour" — when a
+    switch to this twin — or tighten SESSION_SALT_BUCKET to "hour" — when a
     power-law key exceeds that, i.e. when one user's events no longer
     fit one executor's task comfortably."""
     from ..sources.melt import read_table
@@ -448,7 +444,7 @@ def events_sessions_salted(spark: SparkSession, sf_dir: str,
     # and a session-window in one groupBy, and a day column is the same
     # tumbling bucket.
     frags = (
-        ev.withColumn("b", F.date_trunc(bucket, "ts"))
+        ev.withColumn("b", F.date_trunc(SESSION_SALT_BUCKET, "ts"))
         .groupBy("user_id", "b",
                  F.session_window("ts", SESSION_GAP).alias("w"))
         .agg(F.count("*").alias("n_events"),
@@ -512,8 +508,8 @@ def stream_events_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "n_events", "sum_value"))
 
 
-def stream_events_sessions_oracle_sql(events_rel: str = "events") -> str:
-    return events_sessions_oracle_sql(events_rel)
+def stream_events_sessions_oracle_sql() -> str:
+    return events_sessions_oracle_sql()
 
 
 def scan_stream(spark: SparkSession, values_dir: str, schema: str =
@@ -620,7 +616,6 @@ def stream_doc_pii_density(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def stream_dedup_keep_list(spark: SparkSession, sf_dir: str,
-                           threshold: float = 0.5,
                            shingles: DataFrame | None = None) -> DataFrame:
     """Incremental near-dup dedup: the corpus keep/drop verdict computed
     through a Structured Streaming drain — the production shape for
@@ -691,7 +686,7 @@ def stream_dedup_keep_list(spark: SparkSession, sf_dir: str,
         shingles = doc_shingles_df(spark, sf_dir)
     shingles = (shingles.join(cand_ids, "doc_id", "left_semi")
                 .localCheckpoint(eager=True))
-    verified = _jaccard_verify(pairs, shingles, threshold,
+    verified = _jaccard_verify(pairs, shingles, 0.5,
                                sizes_attached=False)
     clusters = connected_components(verified)
     docs = spark.read.parquet(path).select("doc_id")
@@ -759,9 +754,7 @@ def stream_quality_classifier(spark: SparkSession,
     return out
 
 
-def stream_phash_keep_list(spark: SparkSession, sf_dir: str,
-                           ham_max: int | None = None,
-                           max_bucket: int | None = None) -> DataFrame:
+def stream_phash_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental IMAGE dedup: the multimodal keep/drop verdict
     computed through a Structured Streaming drain — the
     stream_dedup_keep_list shape over perceptual hashes instead of
@@ -793,10 +786,6 @@ def stream_phash_keep_list(spark: SparkSession, sf_dir: str,
                                         _phash_resolve, ahash_bands,
                                         pgm_neardup_assets_from_docs)
 
-    if ham_max is None:
-        ham_max = PHASH_HAM_MAX
-    if max_bucket is None:
-        max_bucket = PHASH_MAX_BUCKET
     path = f"{sf_dir}/documents.parquet"
     schema = spark.read.parquet(path).schema
     band_dir = tempfile.mkdtemp(prefix="cpss_stream_phash_")
@@ -828,7 +817,7 @@ def stream_phash_keep_list(spark: SparkSession, sf_dir: str,
         shutil.rmtree(ckpt, ignore_errors=True)
 
     docs = spark.read.parquet(path)
-    return _phash_resolve(spark, None, docs, ham_max, max_bucket,
+    return _phash_resolve(spark, None, docs, PHASH_HAM_MAX, PHASH_MAX_BUCKET,
                           hashes=hashes)
 
 
@@ -865,10 +854,10 @@ def events_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .alias("retention")))
 
 
-def events_retention_oracle_sql(events_rel: str = "events") -> str:
+def events_retention_oracle_sql() -> str:
     return f"""
 WITH days AS (
-  SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM {events_rel}
+  SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events
 ),
 first AS (SELECT user_id, MIN(day) AS cohort FROM days GROUP BY user_id),
 activity AS (
@@ -890,8 +879,7 @@ GROUP BY a.cohort, a.day_offset, s.n_cohort
 FUNNEL_STEPS = ("view", "click", "purchase")
 
 
-def events_funnel(spark: SparkSession, sf_dir: str,
-                  steps: tuple = FUNNEL_STEPS) -> DataFrame:
+def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sequential-min funnel per user: stage k's timestamp is the
     earliest event of that type strictly AFTER the user's stage-(k-1)
     timestamp (the standard ordered-funnel semantics — a purchase before
@@ -904,46 +892,43 @@ def events_funnel(spark: SparkSession, sf_dir: str,
     from ..sources.melt import read_table
     ev = read_table(spark, sf_dir, "events").select(
         "user_id", "event_type", "ts")
-    prev = (ev.where(F.col("event_type") == steps[0])
-            .groupBy("user_id").agg(F.min("ts").alias(f"t_{steps[0]}")))
+    prev = (ev.where(F.col("event_type") == FUNNEL_STEPS[0])
+            .groupBy("user_id").agg(F.min("ts").alias(f"t_{FUNNEL_STEPS[0]}")))
     out = prev
-    for k in range(1, len(steps)):
-        prev_col = f"t_{steps[k - 1]}"
-        stage = (ev.where(F.col("event_type") == steps[k])
+    for k in range(1, len(FUNNEL_STEPS)):
+        prev_col = f"t_{FUNNEL_STEPS[k - 1]}"
+        stage = (ev.where(F.col("event_type") == FUNNEL_STEPS[k])
                  .join(out.select("user_id", prev_col), "user_id")
                  .where(F.col("ts") > F.col(prev_col))
                  .groupBy("user_id")
-                 .agg(F.min("ts").alias(f"t_{steps[k]}")))
+                 .agg(F.min("ts").alias(f"t_{FUNNEL_STEPS[k]}")))
         out = out.join(stage, "user_id", "left")
     return out
 
 
-def events_funnel_oracle_sql(events_rel: str = "events",
-                             steps: tuple = FUNNEL_STEPS) -> str:
+def events_funnel_oracle_sql() -> str:
     ctes = [f"""
 s0 AS (
-  SELECT user_id, MIN(ts) AS t_{steps[0]} FROM {events_rel}
-  WHERE event_type = '{steps[0]}' GROUP BY user_id
+  SELECT user_id, MIN(ts) AS t_{FUNNEL_STEPS[0]} FROM events
+  WHERE event_type = '{FUNNEL_STEPS[0]}' GROUP BY user_id
 )"""]
     joined = "s0"
-    for k in range(1, len(steps)):
+    for k in range(1, len(FUNNEL_STEPS)):
         ctes.append(f"""
 s{k} AS (
-  SELECT e.user_id, MIN(e.ts) AS t_{steps[k]}
-  FROM {events_rel} e JOIN s{k - 1} p ON p.user_id = e.user_id
-  WHERE e.event_type = '{steps[k]}' AND e.ts > p.t_{steps[k - 1]}
+  SELECT e.user_id, MIN(e.ts) AS t_{FUNNEL_STEPS[k]}
+  FROM events e JOIN s{k - 1} p ON p.user_id = e.user_id
+  WHERE e.event_type = '{FUNNEL_STEPS[k]}' AND e.ts > p.t_{FUNNEL_STEPS[k - 1]}
   GROUP BY e.user_id
 )""")
         joined += f" LEFT JOIN s{k} USING (user_id)"
-    cols = ", ".join(f"t_{s}" for s in steps)
+    cols = ", ".join(f"t_{s}" for s in FUNNEL_STEPS)
     return f"WITH {','.join(ctes)}\nSELECT user_id, {cols} FROM {joined}\n"
 
 
-def events_asof_join(spark: SparkSession, sf_dir: str,
-                     left_type: str = "purchase",
-                     right_type: str = "view") -> DataFrame:
-    """As-of join: each ``left_type`` event attached to the user's most
-    recent STRICTLY-earlier ``right_type`` event (last-touch
+def events_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """As-of join: each purchase event attached to the user's most
+    recent STRICTLY-earlier view event (last-touch
     attribution). Spark has no ASOF JOIN operator; the idiomatic
     distributed form is a tagged UNION + one per-user running
     ``last(..., ignoreNulls)`` window ordered by (ts, kind) — purchases
@@ -959,20 +944,20 @@ def events_asof_join(spark: SparkSession, sf_dir: str,
     from pyspark.sql import Window
     from ..sources.melt import read_table
     ev = read_table(spark, sf_dir, "events")
-    tagged = (ev.where(F.col("event_type").isin(left_type, right_type))
+    tagged = (ev.where(F.col("event_type").isin("purchase", "view"))
               .select("event_id", "user_id", "ts", "event_type",
-                      F.when(F.col("event_type") == right_type,
+                      F.when(F.col("event_type") == "view",
                              F.col("ts")).alias("r_ts"),
                       # same-ts ordering: left rows first so the running
                       # last() sees only strictly-earlier right rows
-                      F.when(F.col("event_type") == left_type, 0)
+                      F.when(F.col("event_type") == "purchase", 0)
                       .otherwise(1).alias("kind")))
     w = (Window.partitionBy("user_id").orderBy("ts", "kind")
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     return (tagged
             .withColumn("last_view_ts",
                         F.last("r_ts", ignorenulls=True).over(w))
-            .where(F.col("event_type") == left_type)
+            .where(F.col("event_type") == "purchase")
             .select("event_id", "user_id", "ts", "last_view_ts",
                     (F.unix_micros(F.col("ts").cast("timestamp"))
                      - F.unix_micros(F.col("last_view_ts")
@@ -980,16 +965,14 @@ def events_asof_join(spark: SparkSession, sf_dir: str,
                     .alias("gap_us")))
 
 
-def events_asof_join_oracle_sql(events_rel: str = "events",
-                                left_type: str = "purchase",
-                                right_type: str = "view") -> str:
-    return f"""
+def events_asof_join_oracle_sql() -> str:
+    return """
 WITH p AS (
-  SELECT event_id, user_id, ts FROM {events_rel}
-  WHERE event_type = '{left_type}'
+  SELECT event_id, user_id, ts FROM events
+  WHERE event_type = 'purchase'
 ),
-v AS (SELECT user_id, ts FROM {events_rel}
-      WHERE event_type = '{right_type}')
+v AS (SELECT user_id, ts FROM events
+      WHERE event_type = 'view')
 SELECT p.event_id, p.user_id, p.ts, v.ts AS last_view_ts,
        epoch_us(p.ts) - epoch_us(v.ts) AS gap_us
 FROM p ASOF LEFT JOIN v ON p.user_id = v.user_id AND v.ts < p.ts
@@ -1022,12 +1005,12 @@ def events_hourly_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("n").isNull().alias("filled")))
 
 
-def events_hourly_gapfill_oracle_sql(events_rel: str = "events") -> str:
-    return f"""
+def events_hourly_gapfill_oracle_sql() -> str:
+    return """
 WITH bounds AS (
   SELECT MIN(date_trunc('hour', ts)) AS h0,
          MAX(date_trunc('hour', ts)) AS h1
-  FROM {events_rel}
+  FROM events
 ),
 spine AS (
   SELECT unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS window_start
@@ -1036,12 +1019,12 @@ spine AS (
 grid AS (
   SELECT s.window_start, t.event_type
   FROM spine s CROSS JOIN (SELECT DISTINCT event_type
-                           FROM {events_rel}) t
+                           FROM events) t
 ),
 counts AS (
   SELECT date_trunc('hour', ts) AS window_start, event_type,
          COUNT(*) AS n
-  FROM {events_rel} GROUP BY 1, 2
+  FROM events GROUP BY 1, 2
 )
 SELECT g.window_start, g.event_type,
        CAST(COALESCE(c.n, 0) AS BIGINT) AS n_events,
@@ -1057,9 +1040,7 @@ LEFT JOIN counts c
 NEIGHBOR_WINDOW_US = 300_000_000
 
 
-def events_neighbor_window(spark: SparkSession, sf_dir: str,
-                           window_us: int = NEIGHBOR_WINDOW_US
-                           ) -> DataFrame:
+def events_neighbor_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event activity context via a RANGE self-join — the non-equi
     join class Spark has no native optimization for (a naive
     ``a.ts BETWEEN b.ts - W AND b.ts + W`` predicate joins every
@@ -1087,8 +1068,8 @@ def events_neighbor_window(spark: SparkSession, sf_dir: str,
                   F.unix_micros(F.col("ts").cast("timestamp"))
                   .alias("us"))
           .where(F.col("user_id").isNotNull() & F.col("us").isNotNull()))
-    w = F.lit(window_us)
-    binned = ev.withColumn("bin", F.expr(f"us DIV {window_us}"))
+    w = F.lit(NEIGHBOR_WINDOW_US)
+    binned = ev.withColumn("bin", F.expr(f"us DIV {NEIGHBOR_WINDOW_US}"))
     probes = binned.withColumn(
         "probe_bin", F.explode(F.array(F.col("bin") - 1, F.col("bin"),
                                        F.col("bin") + 1)))
@@ -1106,17 +1087,15 @@ def events_neighbor_window(spark: SparkSession, sf_dir: str,
                     .cast("bigint").alias("n_neighbors")))
 
 
-def events_neighbor_window_oracle_sql(events_rel: str = "events",
-                                      window_us: int = NEIGHBOR_WINDOW_US
-                                      ) -> str:
+def events_neighbor_window_oracle_sql() -> str:
     return f"""
 SELECT e.event_id, e.user_id,
        CAST(COUNT(n.event_id) AS BIGINT) AS n_neighbors
-FROM {events_rel} e
-LEFT JOIN {events_rel} n
+FROM events e
+LEFT JOIN events n
   ON n.user_id = e.user_id
  AND n.event_id <> e.event_id
- AND abs(epoch_us(n.ts) - epoch_us(e.ts)) <= {window_us}
+ AND abs(epoch_us(n.ts) - epoch_us(e.ts)) <= {NEIGHBOR_WINDOW_US}
 WHERE e.user_id IS NOT NULL AND e.ts IS NOT NULL
 GROUP BY e.event_id, e.user_id
 """
@@ -1451,26 +1430,24 @@ def stream_events_recent_score(spark: SparkSession,
     return out
 
 
-def events_recent_score_oracle_sql(events_rel: str = "events",
-                                   k: int = RECENT_K,
-                                   clamp: int = RECENT_CLAMP) -> str:
+def events_recent_score_oracle_sql() -> str:
     """Batch oracle for the stateful drain: rank each user's events by
     (ts, event_id) DESC and sum the clamped milli-unit values weighted
     by the recency power of two — identical integer arithmetic, no
     float pow (the weights are a generated literal CASE map, portable
     to both engines)."""
     x = f"CAST(floor(value * {RECENT_SCALE} + 0.5) AS BIGINT)"
-    cx = (f"greatest(CAST(-{clamp} AS BIGINT), "
-          f"least(CAST({clamp} AS BIGINT), {x}))")
+    cx = (f"greatest(CAST(-{RECENT_CLAMP} AS BIGINT), "
+          f"least(CAST({RECENT_CLAMP} AS BIGINT), {x}))")
     weight = ("CASE rk " + " ".join(
-        f"WHEN {r} THEN {1 << (k - r)}" for r in range(1, k + 1))
+        f"WHEN {r} THEN {1 << (RECENT_K - r)}" for r in range(1, RECENT_K + 1))
         + " ELSE 0 END")
     return f"""
 WITH ranked AS (
   SELECT user_id, {cx} AS x,
          row_number() OVER (PARTITION BY user_id
                             ORDER BY ts DESC, event_id DESC) AS rk
-  FROM {events_rel}
+  FROM events
   WHERE user_id IS NOT NULL AND ts IS NOT NULL
     AND value IS NOT NULL AND NOT isnan(value)
 )

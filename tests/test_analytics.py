@@ -93,7 +93,7 @@ def test_local_supplier_volume_hand_check(spark):
     revenue is the discounted extended price."""
     from catalog_pii_scanner_spark.operators.analytics import (
         local_supplier_volume)
-    import os, tempfile
+    import tempfile
     d = tempfile.mkdtemp(prefix="cpss_q5_")
     spark.createDataFrame(
         [(1, 10, "O", 100.0, None, "1-URGENT")],

@@ -61,7 +61,7 @@ def test_unknown_keys_rejected(tmp_path):
 @pytest.mark.parametrize("key", [
     "CPS_SAMPLE_N", "CPS_AI__LLM__PROVIDER", "CPS_AI__LLM__MODEL",
     "CPS_AI__LLM__MAX_TOKENS", "CPS_AI__LLM__TEMPERATURE",
-    "CPS_AI__LLM__REDACT",
+    "CPS_AI__LLM__REDACT", "CPS_AI__LLM__ENABLED",
 ])
 def test_deleted_keys_rejected(key):
     """Fields that nothing read were deleted; a config still setting one
@@ -75,7 +75,6 @@ def test_llm_mode_needs_ner_stage():
     NER contradicts the mode."""
     with pytest.raises(ConfigError, match="ai.ner.enabled"):
         load_config(environ={"CPS_AI__MODE": '"ensemble+llm"',
-                             "CPS_AI__LLM__ENABLED": "true",
                              "CPS_AI__NER__ENABLED": "false"})
 
 

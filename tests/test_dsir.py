@@ -6,7 +6,6 @@ deterministic."""
 from __future__ import annotations
 
 import duckdb
-import pytest
 
 from catalog_pii_scanner_spark.operators.dsir import (
     DSIR_K, dsir_select_docs, dsir_select_sql)

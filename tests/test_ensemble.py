@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from catalog_pii_scanner_spark.operators.ensemble import (
-    CALIBRATION, REFERENCE_WEIGHTS, fuse_predictions)
+    REFERENCE_WEIGHTS, fuse_predictions)
 from catalog_pii_scanner_spark.pii_types import ALL_PII_TYPES
 
 CANDS = [

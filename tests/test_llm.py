@@ -71,7 +71,7 @@ def test_cli_scan_text_mode_dispatch(spark, tmp_path, capsys, monkeypatch):
     monkeypatch.setattr(cli, "_spark", lambda app: spark)
     cfg = tmp_path / "cfg.json"
     cfg.write_text(_json.dumps({
-        "ai": {"mode": "ensemble+llm", "llm": {"enabled": True},
+        "ai": {"mode": "ensemble+llm",
                "ensemble": {"decision_threshold": 0.5}}}))
     rc = cli.main(["scan-text", "reach me at a@b.io", "--config", str(cfg)])
     assert rc == 0
@@ -98,17 +98,13 @@ def test_llm_config_block():
     from catalog_pii_scanner_spark.config import ConfigError, load_config
     cfg = load_config(environ={
         "CPS_AI__MODE": "ensemble+llm",
-        "CPS_AI__LLM__ENABLED": "true",
         "CPS_AI__LLM__COST_CAP_USD_PER_SCAN": "0.25",
     })
     assert cfg.ai.mode == "ensemble+llm"
     assert cfg.ai.llm.cost_cap_usd_per_scan == 0.25
     assert cfg.ai.llm.cache_ttl_minutes == 1440  # reference default
-    with pytest.raises(ConfigError):  # mode requires llm.enabled
-        load_config(environ={"CPS_AI__MODE": "ensemble+llm"})
     with pytest.raises(ConfigError):  # ranged field
-        load_config(environ={"CPS_AI__LLM__ENABLED": "true",
-                             "CPS_AI__LLM__CACHE_TTL_MINUTES": "-1"})
+        load_config(environ={"CPS_AI__LLM__CACHE_TTL_MINUTES": "-1"})
 
 
 def test_provider_cache_lru_bound_and_sweep():

@@ -291,9 +291,8 @@ def test_phash_same_class_docs_hash_identically(spark):
     their aHash bands must be equal and their pair distance 0; a
     different tweak on the same base shifts every pixel and must stay
     within PHASH_HAM_MAX (the near-dup claim of the synthetic corpus)."""
-    import pyspark.sql.functions as F
     from catalog_pii_scanner_spark.operators.multimodal import (
-        PHASH_BASES, PHASH_HAM_MAX, ahash_bands, phash_dedup_query,
+        PHASH_BASES, ahash_bands, phash_dedup_query,
         synthetic_pgm_neardup_assets)
     sf = "/root/testdata/sf0.001"
     hashes = {r.asset_id: (r.b0, r.b1, r.b2, r.b3)

@@ -4,7 +4,6 @@ cross-engine exactness on edge corpora, and a from-scratch hand check."""
 from __future__ import annotations
 
 import duckdb
-import pytest
 
 from catalog_pii_scanner_spark.operators import quality as Q
 

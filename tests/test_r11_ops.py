@@ -11,13 +11,13 @@ from __future__ import annotations
 
 import duckdb
 import pandas as pd
-import pytest
 from pyspark.sql import functions as F
 
 from catalog_pii_scanner_spark.operators import bpe, corpus
 from catalog_pii_scanner_spark.operators import simsearch as S
 from catalog_pii_scanner_spark.operators.incremental import (
-    NEW_ROW_GATE, incremental_findings, incremental_findings_oracle_sql)
+    NEW_ROW_GATE, distinct_basis, incremental_findings,
+    incremental_findings_oracle_sql)
 
 TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents")
@@ -44,7 +44,7 @@ def _melted(spark, sf_dir):
 # --- pii_incremental_scan -----------------------------------------------------
 
 def test_incremental_scan_matches_oracle(spark, sf_dir):
-    got = (incremental_findings(_melted(spark, sf_dir))
+    got = (incremental_findings(distinct_basis(_melted(spark, sf_dir)))
            .toPandas().sort_values(["column_ref", "pii_type"])
            .reset_index(drop=True))
     con = _duck(sf_dir)
@@ -74,7 +74,7 @@ def test_incremental_actions_follow_fingerprints(spark):
     per_col = dict(flagged.groupBy("column_ref")
                    .agg(F.max(F.col("is_new").cast("int")).alias("any"))
                    .collect())
-    out = incremental_findings(vals).toPandas()
+    out = incremental_findings(distinct_basis(vals)).toPandas()
     acts = dict(out[["column_ref", "scan_action"]]
                 .drop_duplicates().itertuples(index=False))
     for col, any_new in per_col.items():
@@ -96,11 +96,11 @@ def test_incremental_fingerprint_is_order_free(spark):
     """bit_xor + count fingerprints must not depend on row order —
     reversing the input changes no action."""
     rows = [("spark://t/c", f"v{i}") for i in range(64)]
-    a = incremental_findings(
-        spark.createDataFrame(rows, "column_ref string, value string"))
-    b = incremental_findings(
+    a = incremental_findings(distinct_basis(
+        spark.createDataFrame(rows, "column_ref string, value string")))
+    b = incremental_findings(distinct_basis(
         spark.createDataFrame(rows[::-1],
-                              "column_ref string, value string"))
+                              "column_ref string, value string")))
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple,
                                                          b.collect()))
 
@@ -245,7 +245,6 @@ def test_incremental_spark_hash_equals_duckdb_digit_form(spark, sf_dir):
 # --- deferred round-12 surface (implemented now, registration next window) ----
 
 def test_collocations_match_oracle_and_python(spark, sf_dir):
-    import math
 
     con = _duck(sf_dir)
     want = con.sql(corpus.collocations_oracle_sql()).df() \

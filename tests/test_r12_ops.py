@@ -14,7 +14,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from catalog_pii_scanner_spark.operators.incremental import (
-    NEW_ROW_GATE, findings_merge_upsert, writeback_diff_plan)
+    NEW_ROW_GATE, distinct_basis, findings_merge_upsert,
+    writeback_diff_plan)
 
 
 def _crafted_values(spark):
@@ -76,7 +77,8 @@ def _crafted_values(spark):
 
 def test_writeback_plan_action_vocabulary(spark):
     vals, col_ins, col_upd, col_kept = _crafted_values(spark)
-    plan = {r.column_ref: r for r in writeback_diff_plan(vals).collect()}
+    plan = {r.column_ref: r
+            for r in writeback_diff_plan(distinct_basis(vals)).collect()}
     assert plan[col_ins].action == "insert"
     assert plan[col_ins].prior_pii_types is None
     assert plan[col_ins].pii_types == "EMAIL"
@@ -95,14 +97,15 @@ def test_writeback_plan_idempotent_on_applied_state(spark):
     (no value passes the gate), every action is 'skip'."""
     vals, *_ = _crafted_values(spark)
     unchanged = vals.where(~F.expr(NEW_ROW_GATE))
-    plan = writeback_diff_plan(unchanged).collect()
+    plan = writeback_diff_plan(distinct_basis(unchanged)).collect()
     assert plan and all(r.action == "skip" for r in plan)
     assert all(r.prior_pii_types == r.pii_types for r in plan)
 
 
 def test_merge_upsert_action_vocabulary(spark):
     vals, col_ins, col_upd, col_kept = _crafted_values(spark)
-    out = {r.column_ref: r for r in findings_merge_upsert(vals).collect()}
+    out = {r.column_ref: r
+           for r in findings_merge_upsert(distinct_basis(vals)).collect()}
     assert out[col_ins].merge_action == "inserted"
     assert out[col_upd].merge_action == "updated"
     assert out[col_kept].merge_action == "kept"
@@ -115,10 +118,10 @@ def test_merge_upsert_one_row_per_key_and_kept_on_unchanged(spark):
     """MERGE invariants: exactly one row per column_ref, and with no
     arrivals every surviving row is the prior store's ('kept')."""
     vals, *_ = _crafted_values(spark)
-    out = findings_merge_upsert(vals)
+    out = findings_merge_upsert(distinct_basis(vals))
     assert out.count() == out.select("column_ref").distinct().count()
     unchanged = vals.where(~F.expr(NEW_ROW_GATE))
-    rows = findings_merge_upsert(unchanged).collect()
+    rows = findings_merge_upsert(distinct_basis(unchanged)).collect()
     assert rows and all(r.merge_action == "kept" for r in rows)
 
 
@@ -131,7 +134,7 @@ def test_merge_relation_matches_real_sink(spark, tmp_path_factory):
     from catalog_pii_scanner_spark.operators.findings import (
         findings_rollup)
     from catalog_pii_scanner_spark.operators.incremental import (
-        _changed_pred, _distinct_basis, _snapshot_fingerprints)
+        _changed_pred, _snapshot_fingerprints)
     from catalog_pii_scanner_spark.sinks.findings_store import (
         merge_findings, read_merged_findings, to_findings_records)
 
@@ -142,8 +145,8 @@ def test_merge_relation_matches_real_sink(spark, tmp_path_factory):
     merge_findings(spark, to_findings_records(findings_rollup(prior)),
                    store)
     # the incremental rescan: changed columns only, current values
-    basis, _, _ = _distinct_basis(vals_df)
-    changed = (_snapshot_fingerprints(basis).where(_changed_pred())
+    basis = distinct_basis(vals_df)
+    changed = (_snapshot_fingerprints(basis[0]).where(_changed_pred())
                .select("column_ref"))
     rescan = vals_df.join(F.broadcast(changed), "column_ref")
     merge_findings(spark, to_findings_records(findings_rollup(rescan)),
@@ -151,7 +154,7 @@ def test_merge_relation_matches_real_sink(spark, tmp_path_factory):
     got = {r.column_ref: ",".join(r.types)
            for r in read_merged_findings(spark, store).collect()}
     want = {r.column_ref: r.types_csv
-            for r in findings_merge_upsert(vals_df).collect()}
+            for r in findings_merge_upsert(basis).collect()}
     assert got == want
 
 

@@ -5,7 +5,6 @@ the core guarantee — no raw span text survives into model inputs."""
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from catalog_pii_scanner_spark.operators.findings import scan_values
 from catalog_pii_scanner_spark.operators.redaction import candidate_contexts

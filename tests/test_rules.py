@@ -9,7 +9,6 @@ constant per-plan planning cost, so per-case jobs would dominate runtime).
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from catalog_pii_scanner_spark.operators.findings import scan_values
 

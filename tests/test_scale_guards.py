@@ -405,6 +405,38 @@ def test_repeat_scan_reuses_generated_classes(spark, sf_dir,
     assert compiled <= 10, compiled
 
 
+def test_local_cpus_default_to_the_affinity_count():
+    """With SPARK_GRAFT_CPUS unset, the default local master and shuffle
+    partitions take the CPUs this process may run on, not a fixed
+    count. The session factory runs against a recording builder in a
+    fresh interpreter, which reads the variable at import."""
+    import subprocess
+    import sys
+    code = """
+import catalog_pii_scanner_spark.session as S
+
+class Builder:
+    conf = {}
+    def appName(self, name): return self
+    def master(self, m): self.conf["master"] = m; return self
+    def config(self, k, v): self.conf[k] = v; return self
+    def getOrCreate(self): return self.conf
+
+class Session:
+    builder = Builder()
+
+S.SparkSession = Session
+conf = S.get_spark()
+print(conf["master"], conf["spark.sql.shuffle.partitions"])
+"""
+    env = {k: v for k, v in os.environ.items()
+           if k not in ("SPARK_GRAFT_CPUS", "SPARK_MASTER")}
+    out = subprocess.run([sys.executable, "-c", code], env=env, check=True,
+                         capture_output=True, text=True).stdout.split()
+    n = len(os.sched_getaffinity(0))
+    assert out == [f"local[{n}]", str(n)]
+
+
 def test_extra_conf_overrides_codegen_cache_default():
     from catalog_pii_scanner_spark.session import session_conf
     key = "spark.sql.codegen.cache.maxEntries"

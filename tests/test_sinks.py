@@ -142,12 +142,12 @@ def test_ref_decomposition_unified_across_sink_and_plan(spark):
     assert dt == {(None, "orders", "o_comment"),
                   ("testdata", "users", "email_addr")}
     # and the diff plan's table_name/column_name match the sink's parse
-    from catalog_pii_scanner_spark.operators.incremental import \
-        writeback_diff_plan
+    from catalog_pii_scanner_spark.operators.incremental import (
+        distinct_basis, writeback_diff_plan)
     vals = spark.createDataFrame(
         [("spark://orders/o_comment", "reach me at a@b.io")],
         "column_ref string, value string")
-    plan = writeback_diff_plan(vals).collect()
+    plan = writeback_diff_plan(distinct_basis(vals)).collect()
     assert [(r.table_name, r.column_name) for r in plan] == \
         [("orders", "o_comment")]
 
@@ -676,21 +676,3 @@ def test_diff_plan_oracle_mirrors_ref_parts():
         ORDER BY table_name""").fetchall()
     assert rows == [("orders", "o_comment"), ("users", "email_addr")]
 
-
-def test_basis_values_df_exactly_one(spark):
-    """r13 review: neither param crashed opaquely inside
-    _distinct_basis; both silently discarded values_df."""
-    from catalog_pii_scanner_spark.operators.incremental import (
-        distinct_basis, findings_merge_upsert, incremental_findings,
-        writeback_diff_plan)
-    vals = spark.createDataFrame(
-        [("spark://orders/o_comment", "reach me at a@b.io")],
-        "column_ref string, value string")
-    basis = distinct_basis(vals)
-    for fn in (incremental_findings, findings_merge_upsert,
-               writeback_diff_plan):
-        with pytest.raises(ValueError, match="exactly one"):
-            fn()
-        with pytest.raises(ValueError, match="exactly one"):
-            fn(vals, basis=basis)
-        assert fn(basis=basis).count() >= 1

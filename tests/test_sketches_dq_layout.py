@@ -8,7 +8,6 @@ import hashlib
 import math
 
 import duckdb
-import pytest
 
 from catalog_pii_scanner_spark.operators.dq import (
     DQ_SPECS, dq_constraint_sql, dq_constraint_suite)

@@ -131,7 +131,7 @@ def test_knn_eval_planted_clusters(spark):
     well-labeled query predicts its own label; the mislabel is wrong."""
     from catalog_pii_scanner_spark.operators.simsearch import (
         embed_knn_eval)
-    import os, tempfile
+    import tempfile
     rng = np.random.RandomState(13)
     a = rng.randn(DIMS); b = rng.randn(DIMS)
     rows = []

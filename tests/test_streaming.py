@@ -5,7 +5,6 @@ surface, README.md:229-233)."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from catalog_pii_scanner_spark.sources.melt import read_table

@@ -6,11 +6,10 @@ calibration separates true from false candidates."""
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from catalog_pii_scanner_spark.operators.training import (
-    Calibrator, calibration_pairs, fit_calibrator, gold_contexts,
-    labeled_candidates, train_embed)
+    calibration_pairs, fit_calibrator, gold_contexts, labeled_candidates,
+    train_embed)
 from catalog_pii_scanner_spark.sources.datasets import generate_synthetic
 
 

@@ -3,7 +3,6 @@ pagination protocol — the reference's test_unity_rest_jdbc.py contract."""
 
 from __future__ import annotations
 
-import pytest
 
 from catalog_pii_scanner_spark.sources.unity import (
     FakeUnityRestClient, stub_information_schema, unity_catalog_columns,
