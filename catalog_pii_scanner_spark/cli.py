@@ -7,8 +7,11 @@ environment), each verb a thin wrapper over the engine operators.
     python -m catalog_pii_scanner_spark.cli scan-text "call 555-867-5309"
     python -m catalog_pii_scanner_spark.cli gen-synth --n 500 --out d/
     python -m catalog_pii_scanner_spark.cli train-embed --data d/ --out m.npz
-    python -m catalog_pii_scanner_spark.cli calibrate --data d/ --out c.json
-    python -m catalog_pii_scanner_spark.cli eval --data d/
+    python -m catalog_pii_scanner_spark.cli calibrate --data d/ --out c.json \
+        [--model m.npz]
+    python -m catalog_pii_scanner_spark.cli eval-trained --data d/ \
+        [--model m.npz] [--calibration c.json]
+    python -m catalog_pii_scanner_spark.cli eval --sf-dir DIR
     python -m catalog_pii_scanner_spark.cli export --store s/ --fmt csv --out e/
 """
 
@@ -239,43 +242,46 @@ def cmd_train_embed(args) -> int:
 
 
 def cmd_calibrate(args) -> int:
-    from .operators.training import fit_calibrator, fit_calibrator_ensemble
+    """Reference calibrate semantics (eval.py:80-103): per-type Platt over
+    the full raw ensemble scores, with the --model embed model bound."""
     from .operators.embeddings import EmbedModel
+    from .operators.training import fit_calibrator_ensemble, labeled_basis
     from .sources.datasets import load_jsonl
     spark = _spark("calibrate")
-    data = load_jsonl(spark, args.data)
-    if args.ensemble:
-        # reference calibrate semantics (eval.py:80-103): per-type Platt
-        # over the FULL raw ensemble scores, with the trained model bound
-        model = EmbedModel.load(args.model) if args.model else None
-        cal = fit_calibrator_ensemble(data, model=model)
-    else:
-        cal = fit_calibrator(data)
+    model = EmbedModel.load(args.model) if args.model else None
+    params = fit_calibrator_ensemble(
+        labeled_basis(load_jsonl(spark, args.data), model))
     with open(args.out, "w") as f:
-        json.dump({t: list(p) for t, p in cal.params.items()}, f)
-    print(f"calibrated types: {sorted(cal.params)} -> {args.out}")
+        json.dump({t: list(p) for t, p in params.items()}, f)
+    print(f"calibrated types: {sorted(params)} -> {args.out}")
     return 0
 
 
-def cmd_eval_trained(args) -> int:
-    """Phase-3 closure verb (reference ``cps eval``): evaluate the full
-    TRAINED ensemble on a labeled corpus."""
-    from .operators.embeddings import EmbedModel
-    from .operators.evaluate import eval_metrics_trained
-    from .operators.training import fit_calibrator_ensemble
+def _load_calibration(path: str) -> dict[str, tuple[float, float]]:
+    """A calibration JSON as ``calibrate`` writes it: ``{type: [a, b]}``.
+    The file comes from outside the program, so an unknown type or an
+    entry that is not two numbers is an error naming the key (an unknown
+    type would otherwise run silently at identity)."""
     from .pii_types import ALL_PII_TYPES
-    from .sources.datasets import load_jsonl
-    spark = _spark("eval-trained")
-    data = load_jsonl(spark, args.data).localCheckpoint(eager=True)
-    model = EmbedModel.load(args.model) if args.model else None
-    if args.calibration:
-        with open(args.calibration) as f:
-            params = {t: tuple(p) for t, p in json.load(f).items()}
-    else:
-        params = fit_calibrator_ensemble(data, model=model).params
-    calibration = {t: params.get(t, (1.0, 0.0)) for t in ALL_PII_TYPES}
-    rows = eval_metrics_trained(spark, data, model=model,
-                                calibration=calibration).collect()
+    with open(path) as f:
+        raw = json.load(f)
+    if not isinstance(raw, dict):
+        raise SystemExit(f"{path}: expected an object {{type: [a, b]}}")
+    params = {}
+    for t, p in raw.items():
+        if t not in ALL_PII_TYPES:
+            raise SystemExit(f"{path}: unknown PII type {t!r}; known: "
+                             f"{', '.join(ALL_PII_TYPES)}")
+        if not (isinstance(p, list) and len(p) == 2 and all(
+                isinstance(v, (int, float)) and not isinstance(v, bool)
+                for v in p)):
+            raise SystemExit(f"{path}: entry {t!r} must be two numbers "
+                             f"[a, b], got {p!r}")
+        params[t] = (float(p[0]), float(p[1]))
+    return params
+
+
+def _print_metrics(rows) -> None:
     for r in sorted(rows, key=lambda r: (r.level, r.pii_type)):
         if r.level == "type":
             print(f"{r.pii_type:14s} P={r.precision:.4f} "
@@ -286,23 +292,31 @@ def cmd_eval_trained(args) -> int:
           f"F1={micro.f1:.4f}")
     print(f"Macro: P={macro.precision:.4f} R={macro.recall:.4f} "
           f"F1={macro.f1:.4f}")
+
+
+def cmd_eval_trained(args) -> int:
+    """Phase-3 closure verb (reference ``cps eval``): evaluate the full
+    TRAINED ensemble on a labeled corpus; without --calibration, fit it
+    on the same labeled basis the eval reads."""
+    from .operators.embeddings import EmbedModel
+    from .operators.evaluate import eval_metrics_trained
+    from .operators.training import fit_calibrator_ensemble, labeled_basis
+    from .sources.datasets import load_jsonl
+    calibration = (_load_calibration(args.calibration) if args.calibration
+                   else None)
+    spark = _spark("eval-trained")
+    data = load_jsonl(spark, args.data).localCheckpoint(eager=True)
+    model = EmbedModel.load(args.model) if args.model else None
+    basis = labeled_basis(data, model)
+    if calibration is None:
+        calibration = fit_calibrator_ensemble(basis)
+    _print_metrics(eval_metrics_trained(basis, calibration).collect())
     return 0
 
 
 def cmd_eval(args) -> int:
     from .operators.evaluate import eval_metrics
-    spark = _spark("eval")
-    rows = eval_metrics(spark, args.sf_dir).collect()
-    for r in sorted(rows, key=lambda r: (r.level, r.pii_type)):
-        if r.level == "type":
-            print(f"{r.pii_type:14s} P={r.precision:.4f} "
-                  f"R={r.recall:.4f} F1={r.f1:.4f}")
-    micro = next(r for r in rows if r.level == "micro")
-    macro = next(r for r in rows if r.level == "macro")
-    print(f"Micro: P={micro.precision:.4f} R={micro.recall:.4f} "
-          f"F1={micro.f1:.4f}")
-    print(f"Macro: P={macro.precision:.4f} R={macro.recall:.4f} "
-          f"F1={macro.f1:.4f}")
+    _print_metrics(eval_metrics(_spark("eval"), args.sf_dir).collect())
     return 0
 
 
@@ -377,11 +391,9 @@ def build_parser() -> argparse.ArgumentParser:
     s = sub.add_parser("calibrate")
     s.add_argument("--data", required=True)
     s.add_argument("--out", required=True)
-    s.add_argument("--ensemble", action="store_true",
-                   help="fit on full raw ensemble scores "
-                        "(reference calibrate semantics)")
     s.add_argument("--model", default="",
-                   help="trained embed model (.npz) for --ensemble")
+                   help="trained embed model (.npz); default: offline "
+                        "deterministic model")
     s.set_defaults(fn=cmd_calibrate)
 
     s = sub.add_parser("eval")

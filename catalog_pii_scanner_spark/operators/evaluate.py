@@ -33,6 +33,8 @@ from ..pii_types import ALL_PII_TYPES
 from ..plans.cache import fan_out
 from ..sources.demo_catalog import FIRST_NAMES, LAST_NAMES, _case_pool
 from .rules import extract_candidates_pdf
+from .training import (LabeledBasis, fit_calibrator_ensemble, labeled_basis,
+                       train_embed)
 
 
 # --- corpus -----------------------------------------------------------------
@@ -385,27 +387,18 @@ def _metrics_from_counts(counts: DataFrame) -> DataFrame:
     return per_type.unionByName(micro).unionByName(macro)
 
 
-def eval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full eval job: corpus -> predictions -> greedy match -> metrics."""
-    texts = eval_texts(spark, sf_dir)
-    gold = eval_gold(spark, sf_dir)
-    # position-exact extraction (true finditer offsets, every occurrence).
-    # The DuckDB oracle derives positions via instr, which is equal on this
-    # corpus by construction (each entity string occurs once per text);
-    # on corpora with repeats only this path is correct.
-    preds = (
-        extract_candidates_pdf(texts, value_col="text",
-                               keep_cols=("text_id",))
-        .select("text_id", "pii_type", "match_text", "pstart", "pend")
-    )
+def _match_metrics(preds: DataFrame, gold: DataFrame) -> DataFrame:
+    """preds(text_id, pii_type, pstart, pend) + gold(text_id, pii_type,
+    gstart, gend) -> greedy match -> per-type tp/fp/fn -> the type/micro/
+    macro metric frame."""
     # preds/gold each feed the match AND a count aggregation. A plain
     # persist still re-plans (and re-compiles) the full extraction lineage
     # for every downstream job; localCheckpoint truncates the lineage so
     # the 3 consumer jobs plan against a materialized relation.
     preds = preds.localCheckpoint(eager=True)
     gold = gold.localCheckpoint(eager=True)
-    tp_pairs = greedy_match(preds, gold)
-    tp = tp_pairs.groupBy("pii_type").agg(F.count("*").alias("tp"))
+    tp = greedy_match(preds, gold).groupBy("pii_type") \
+        .agg(F.count("*").alias("tp"))
     n_pred = preds.groupBy("pii_type").agg(F.count("*").alias("n_pred"))
     n_gold = gold.groupBy("pii_type").agg(F.count("*").alias("n_gold"))
     counts = (
@@ -429,76 +422,58 @@ def eval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 11 PII types, zero-filling types absent from preds and gold.
     present = {r[0] for r in local}
     local += [(t, 0, 0, 0) for t in ALL_PII_TYPES if t not in present]
-    counts_df = spark.createDataFrame(
+    counts_df = preds.sparkSession.createDataFrame(
         local, "pii_type string, tp bigint, fp bigint, fn bigint")
     return _metrics_from_counts(counts_df)
 
 
-def eval_metrics_trained(spark: SparkSession, labeled: DataFrame,
-                         model=None,
+def eval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Full eval job: corpus -> predictions -> greedy match -> metrics."""
+    # position-exact extraction (true finditer offsets, every occurrence).
+    # The DuckDB oracle derives positions via instr, which is equal on this
+    # corpus by construction (each entity string occurs once per text);
+    # on corpora with repeats only this path is correct.
+    preds = (
+        extract_candidates_pdf(eval_texts(spark, sf_dir), value_col="text",
+                               keep_cols=("text_id",))
+        .select("text_id", "pii_type", "match_text", "pstart", "pend")
+    )
+    return _match_metrics(preds, eval_gold(spark, sf_dir))
+
+
+def eval_metrics_trained(basis: LabeledBasis,
                          calibration: dict[str, tuple[float, float]]
-                         | None = None,
-                         precomputed_lc: DataFrame | None = None,
-                         precomputed_enriched: DataFrame | None = None
                          ) -> DataFrame:
     """Phase-3 closure: evaluate the TRAINED ensemble on a labeled corpus
-    (reference ``cps eval``, cli.py:351-385): candidates -> full ensemble
-    predictions with the trained embed model + fitted calibration -> the
+    (reference ``cps eval``, cli.py:351-385): the basis's candidates ->
+    full ensemble predictions over its enrichment with the fitted
+    ``calibration`` (types it leaves out run at identity (1, 0)) -> the
     prediction's argmax label (not the rule label) greedy-matches against
     the corpus's gold spans -> the same type/micro/macro metric frame as
     :func:`eval_metrics`. The whole composition is deterministic for a
     seeded ``generate_synthetic`` corpus — asserted end-to-end in
     tests/test_training.py."""
     from .pipeline import full_scan_predictions
-    from .training import labeled_candidates
 
-    lc = precomputed_lc if precomputed_lc is not None else (
-        labeled_candidates(labeled)
-        .select("text_id", "text", "pii_type", "match_text",
-                "rule_confidence", "validated", "pstart", "pend")
-        .distinct().localCheckpoint(eager=True))
-    cands = lc.select(
-        F.col("text_id").cast("string").alias("column_ref"),
-        F.col("text").alias("value"),
-        "pii_type", "match_text", "rule_confidence", "validated")
-    fused = full_scan_predictions(cands, model=model,
-                                  calibration=calibration,
-                                  precomputed_enriched=precomputed_enriched)
+    fused = full_scan_predictions(
+        basis.fusion_candidates,
+        calibration={t: calibration.get(t, (1.0, 0.0))
+                     for t in ALL_PII_TYPES},
+        precomputed_enriched=basis.enriched)
     preds = (
         fused.join(
-            lc.select(F.col("text_id").cast("string").alias("column_ref"),
-                      F.col("text").alias("value"), "match_text",
-                      "pstart", "pend").distinct(),
+            basis.candidates.select(
+                F.col("text_id").cast("string").alias("column_ref"),
+                F.col("text").alias("value"), "match_text",
+                "pstart", "pend").distinct(),
             ["column_ref", "value", "match_text"])
         .select(F.col("column_ref").cast("bigint").alias("text_id"),
-                F.col("label").alias("pii_type"), "pstart", "pend")
-        .localCheckpoint(eager=True))
-    gold = (labeled.select("text_id", F.explode("labels").alias("l"))
+                F.col("label").alias("pii_type"), "pstart", "pend"))
+    gold = (basis.corpus.select("text_id", F.explode("labels").alias("l"))
             .select("text_id", F.col("l.type").alias("pii_type"),
                     (F.col("l.start") + 1).alias("gstart"),
-                    (F.col("l.end") + 1).alias("gend"))
-            .localCheckpoint(eager=True))
-    tp = greedy_match(preds, gold).groupBy("pii_type") \
-        .agg(F.count("*").alias("tp"))
-    n_pred = preds.groupBy("pii_type").agg(F.count("*").alias("n_pred"))
-    n_gold = gold.groupBy("pii_type").agg(F.count("*").alias("n_gold"))
-    counts = (
-        n_pred.join(n_gold, "pii_type", "full")
-        .join(tp, "pii_type", "left")
-        .select(
-            "pii_type",
-            F.coalesce("tp", F.lit(0)).alias("tp"),
-            (F.coalesce("n_pred", F.lit(0))
-             - F.coalesce("tp", F.lit(0))).alias("fp"),
-            (F.coalesce("n_gold", F.lit(0))
-             - F.coalesce("tp", F.lit(0))).alias("fn")))
-    # same driver-side materialization + zero-fill as eval_metrics
-    local = [tuple(r) for r in counts.collect()]
-    present = {r[0] for r in local}
-    local += [(t, 0, 0, 0) for t in ALL_PII_TYPES if t not in present]
-    counts_df = spark.createDataFrame(
-        local, "pii_type string, tp bigint, fp bigint, fn bigint")
-    return _metrics_from_counts(counts_df)
+                    (F.col("l.end") + 1).alias("gend")))
+    return _match_metrics(preds, gold)
 
 
 # --- oracle -----------------------------------------------------------------
@@ -603,9 +578,9 @@ UNION ALL SELECT * FROM macro
 
 #: Deterministic per-type (tp, fp, fn) of the TRAINED pipeline on the
 #: seeded synthetic corpus (n=500, seed=1234) — the whole composition
-#: (gen-synth -> train_embed -> fit_calibrator_ensemble -> ensemble
-#: predictions -> greedy match) is deterministic, and these exact counts
-#: are independently pinned by tests/test_training.py::
+#: (gen-synth -> train_embed -> labeled_basis -> fit_calibrator_ensemble
+#: -> ensemble predictions -> greedy match) is deterministic, and these
+#: exact counts are independently pinned by tests/test_training.py::
 #: test_phase3_trained_end_to_end. The oracle inlines them as literals
 #: and re-derives every downstream metric in DuckDB; if the trained
 #: pipeline drifts by a single span, the driver hash gate fails.
@@ -624,13 +599,13 @@ TRAINED_EVAL_COUNTS: tuple[tuple[str, int, int, int], ...] = (
 )
 
 
-#: (app_id, n, seed) -> (corpus, lc, model, calibration): the whole
+#: (app_id, n, seed) -> (labeled basis, fitted calibration): the whole
 #: prefix is a deterministic pure function of the seeded corpus (pinned
 #: by tests/test_training.py), so repeated gate/bench invocations in one
-#: process reuse the checkpointed corpus + candidate relation AND the
-#: fitted constants instead of re-extracting and re-running the numpy
-#: fits. Keyed by applicationId so a stale session's checkpointed RDDs
-#: are never reused across sessions.
+#: process reuse the checkpointed corpus, candidates and enrichment AND
+#: the fitted constants instead of re-extracting and re-running the
+#: numpy fits. Keyed by applicationId so a stale session's checkpointed
+#: RDDs are never reused across sessions; clear_session_memos empties it.
 _TRAINED_MEMO: dict = {}
 
 
@@ -638,48 +613,17 @@ def eval_trained_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-gate query for the trained path (reference ``cps eval``,
     cli.py:351-385): the full Phase-3 composition on the seeded synthetic
     corpus — sf-independent by design so the fitted constants stay the
-    documented ones at every gate scale. The candidate extraction runs
-    ONCE and is shared between the calibrator fit and the eval (the two
-    derive the byte-identical relation)."""
-    from ..pii_types import ALL_PII_TYPES as _TYPES
+    documented ones at every gate scale. The calibrator fit and the eval
+    read one labeled basis (one extraction, one enrichment)."""
     from ..sources.datasets import generate_synthetic
-    from .pipeline import _enriched_candidates
-    from .training import (fit_calibrator_ensemble, labeled_candidates,
-                           train_embed)
     key = (spark.sparkContext.applicationId, 500, 1234)
     if key not in _TRAINED_MEMO:
         corpus = generate_synthetic(spark, 500, seed=1234) \
             .localCheckpoint(eager=True)
-        lc = (labeled_candidates(corpus)
-              .select("text_id", "text", "pii_type", "match_text",
-                      "rule_confidence", "validated", "pstart", "pend")
-              .distinct().localCheckpoint(eager=True))
-        model = train_embed(spark, corpus)
-        # the context/NER/embed signal plumbing is a pure function of
-        # (lc, model, provider) and BOTH the calibrator fit and the
-        # trained eval derive the byte-identical relation from it — so
-        # it is fitted state too: evaluate it once, checkpoint, and
-        # hand it to both consumers (pre-r13 each analyzed + evaluated
-        # the giant context/NER/embed tree independently — the whole
-        # tree twice per cold JVM, the suite-worst cold-start in
-        # BENCH_DETAIL r12: 58.3 s cold vs 4.58 s warm).
-        cands = lc.select(
-            F.col("text_id").cast("string").alias("column_ref"),
-            F.col("text").alias("value"),
-            "pii_type", "match_text", "rule_confidence", "validated")
-        enriched = _enriched_candidates(cands, model, "regex") \
-            .localCheckpoint(eager=True)
-        cal = fit_calibrator_ensemble(corpus, model=model,
-                                      precomputed_lc=lc,
-                                      precomputed_enriched=enriched)
+        basis = labeled_basis(corpus, train_embed(spark, corpus))
         _TRAINED_MEMO.clear()     # one live session at a time
-        _TRAINED_MEMO[key] = (
-            corpus, lc, model, {t: cal.get(t) for t in _TYPES}, enriched)
-    corpus, lc, model, calibration, enriched = _TRAINED_MEMO[key]
-    return eval_metrics_trained(spark, corpus, model=model,
-                                calibration=calibration,
-                                precomputed_lc=lc,
-                                precomputed_enriched=enriched)
+        _TRAINED_MEMO[key] = (basis, fit_calibrator_ensemble(basis))
+    return eval_metrics_trained(*_TRAINED_MEMO[key])
 
 
 def eval_trained_oracle_sql() -> str:

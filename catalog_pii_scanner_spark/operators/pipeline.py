@@ -21,7 +21,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .embeddings import EmbedModel, deterministic_model, embed_probs
-from .ensemble import EnsembleWeights, REFERENCE_WEIGHTS, fuse_predictions
+from .ensemble import (EnsembleWeights, REFERENCE_WEIGHTS, fuse_predictions,
+                       raw_type_scores)
 from .ner import NER_CONFIDENCE_MIN, ner_context_signals, require_provider
 from .redaction import candidate_contexts
 
@@ -149,25 +150,12 @@ def _enriched_candidates(
                 .join(emb_map, "ckey", "left")
 
 
-def full_scan_raw_scores(
-    cands: DataFrame,
-    model: EmbedModel | None = None,
-    ner_provider: str = "regex",
-    precomputed_enriched: DataFrame | None = None,
-) -> DataFrame:
+def full_scan_raw_scores(enriched: DataFrame) -> DataFrame:
     """Pre-calibration per-type raw fused scores with the REAL signal
     path bound (reference ``Ensemble.raw_scores``, ensemble.py:138-167) —
-    the input to the calibrator fit. Output: CAND_COLS + rule_confidence
-    + validated + score_type + raw (11 rows per candidate).
-    ``precomputed_enriched`` as in :func:`full_scan_predictions`."""
-    from .ensemble import raw_type_scores
-    if precomputed_enriched is not None and ner_provider != "regex":
-        raise ValueError(
-            "precomputed_enriched already fixes the signal path; pass "
-            "ner_provider to the enrichment that builds it, not "
-            "alongside it")
-    enriched = (precomputed_enriched if precomputed_enriched is not None
-                else _enriched_candidates(cands, model, ner_provider))
+    the input to the calibrator fit. ``enriched`` is the output of
+    :func:`_enriched_candidates`. Output: CAND_COLS + rule_confidence
+    + validated + score_type + raw (11 rows per candidate)."""
     return raw_type_scores(
         enriched, ner_signal=F.col("ner_sig"),
         embed_signal=F.col("embed_probs"),

@@ -7,12 +7,14 @@ gen-synth -> train-embed -> calibrate -> eval, cli.py:291-385).
   Distributed projection; collected to the driver for the (tiny) fit,
   exactly like the reference.
 - ``train_embed``: E3 — OvR heads on gold contexts.
-- ``fit_calibrator``: F6 — per-type 1-D Platt fit (numpy logistic) on
-  (raw rules-only score, is-type) pairs built by the J2 overlap join of
-  candidates to gold (type-agnostic, first match wins). Degenerate
-  classes (all-pos / all-neg) fall back to identity (1, 0) like the
+- ``labeled_basis``: the labeled corpus, its checkpointed candidate
+  relation and the checkpointed N5+E2 enrichment of those candidates —
+  built once, read by both the calibrator fit and the trained eval.
+- ``fit_calibrator_ensemble``: F6 — the reference's per-type 1-D Platt
+  fit (numpy logistic) over the full raw ensemble score; returns
+  ``{type: (a, b)}`` for the fitted types only. Degenerate types
+  (all-pos / all-neg) are left out and run at identity (1, 0), like the
   reference (ensemble.py:170-189).
-- ``Calibrator.apply``: per-type sigmoid(a*s + b) over a score column.
 
 Scale: the spans/contexts stages are projections over the labeled corpus;
 only (score, label) pairs and contexts are collected — O(corpus), small
@@ -21,34 +23,67 @@ by construction. The fitted parameters broadcast back as plain literals.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..pii_types import ALL_PII_TYPES
 from .embeddings import EmbedModel
 from .redaction import CONTEXT_WINDOW, mask
-from .rules import W_RULE, W_VALIDATION, extract_candidates
-
-def _raw_score():
-    # built lazily: Column construction needs an active SparkContext
-    return (F.lit(W_RULE) * F.col("rule_confidence")
-            + F.lit(W_VALIDATION) * F.col("validated").cast("double"))
+from .rules import extract_candidates
 
 
 def labeled_candidates(labeled: DataFrame) -> DataFrame:
     """Candidates over a labeled corpus (text_id, text, labels) with char
-    positions and the rules-only raw score."""
+    positions."""
     cands = extract_candidates(labeled.select("text_id", "text"),
                                value_col="text", keep_cols=("text_id",))
     return (
         cands
         .withColumn("pstart", F.instr("text", F.col("match_text")))
         .withColumn("pend", F.col("pstart") + F.length("match_text"))
-        .withColumn("raw_score", _raw_score())
     )
+
+
+@dataclass(frozen=True)
+class LabeledBasis:
+    """What the calibrator fit and the trained eval both read: the
+    labeled corpus (gold spans), its distinct candidates with positions
+    and the candidates' N5+E2 signal enrichment under one embed model.
+    Both relations are checkpointed, so each consumer plans against
+    materialized data instead of re-deriving the extraction and the
+    context/NER/embed tree."""
+    corpus: DataFrame
+    candidates: DataFrame
+    enriched: DataFrame
+
+    @property
+    def fusion_candidates(self) -> DataFrame:
+        return _fusion_input(self.candidates)
+
+
+def _fusion_input(lc: DataFrame) -> DataFrame:
+    """Labeled candidates in the fusion's input shape (CAND_COLS +
+    rule_confidence + validated), text_id as column_ref."""
+    return lc.select(
+        F.col("text_id").cast("string").alias("column_ref"),
+        F.col("text").alias("value"),
+        "pii_type", "match_text", "rule_confidence", "validated")
+
+
+def labeled_basis(labeled: DataFrame,
+                  model: EmbedModel | None) -> LabeledBasis:
+    """Extract and enrich a labeled corpus once (``model`` None: the
+    deterministic offline model)."""
+    from .pipeline import _enriched_candidates
+    lc = (labeled_candidates(labeled)
+          .select("text_id", "text", "pii_type", "match_text",
+                  "rule_confidence", "validated", "pstart", "pend")
+          .distinct().localCheckpoint(eager=True))
+    enriched = _enriched_candidates(_fusion_input(lc), model, "regex") \
+        .localCheckpoint(eager=True)
+    return LabeledBasis(labeled, lc, enriched)
 
 
 def gold_contexts(labeled: DataFrame) -> DataFrame:
@@ -79,26 +114,6 @@ def train_embed(spark: SparkSession, labeled: DataFrame) -> EmbedModel:
                             [r.pii_type for r in rows])
 
 
-@dataclass
-class Calibrator:
-    """Per-type Platt parameters (F2/F6)."""
-    params: dict[str, tuple[float, float]] = field(default_factory=dict)
-
-    def get(self, t: str) -> tuple[float, float]:
-        return self.params.get(t, (1.0, 0.0))
-
-    def apply(self, df: DataFrame, score_col: str = "raw_score") -> DataFrame:
-        a = F.lit(None).cast("double")
-        b = F.lit(None).cast("double")
-        for t in ALL_PII_TYPES:
-            pa, pb = self.get(t)
-            a = F.when(F.col("pii_type") == t, F.lit(pa)).otherwise(a)
-            b = F.when(F.col("pii_type") == t, F.lit(pb)).otherwise(b)
-        z = a * F.col(score_col) + b
-        return df.withColumn(
-            "calibrated", F.lit(1.0) / (F.lit(1.0) + F.exp(-z)))
-
-
 def _fit_platt_1d(scores: np.ndarray, y: np.ndarray) -> tuple[float, float]:
     a, b = 1.0, 0.0
     n = len(y)
@@ -110,72 +125,31 @@ def _fit_platt_1d(scores: np.ndarray, y: np.ndarray) -> tuple[float, float]:
     return a, b
 
 
-def calibration_pairs(labeled: DataFrame) -> DataFrame:
-    """J2: type-agnostic overlap join of candidates to gold, first match
-    wins -> (pii_type, raw_score, is_type)."""
-    cands = labeled_candidates(labeled)
-    gold = labeled.select("text_id", F.explode("labels").alias("l")) \
-        .select("text_id", F.col("l.start").alias("gstart"),
-                F.col("l.end").alias("gend"),
-                F.col("l.type").alias("gold_type"))
-    j = cands.join(
-        gold,
-        (cands.text_id == gold.text_id)
-        & (F.col("pstart") - 1 < F.col("gend"))
-        & (F.col("gstart") < F.col("pend") - 1),
-        "left",
-    )
-    w = Window.partitionBy(cands.text_id, "pii_type", "pstart") \
-        .orderBy(F.col("gstart").asc_nulls_last())
-    return (
-        j.withColumn("rn", F.row_number().over(w)).where(F.col("rn") == 1)
-        .select("pii_type", "raw_score",
-                F.coalesce(
-                    (F.col("gold_type") == F.col("pii_type"))
-                    .cast("double"),
-                    F.lit(0.0)).alias("is_type"))
-    )
 
 
-def fit_calibrator_ensemble(labeled: DataFrame, model=None,
-                            precomputed_lc: DataFrame | None = None,
-                            precomputed_enriched: DataFrame | None = None
-                            ) -> Calibrator:
+def fit_calibrator_ensemble(basis: LabeledBasis
+                            ) -> dict[str, tuple[float, float]]:
     """The reference's calibration fit, faithfully (eval.py:80-103 +
     ensemble.py:170-189): per PII type t, a 1-D Platt scaler over the
     FULL raw ensemble score raw[t] of EVERY candidate (not just
     candidates of type t), labeled y = (first-overlapping gold's type ==
-    t). Degenerate types (no positives / all positives) fall back to
-    identity — reference ensemble.py:180-182.
+    t). Degenerate types (no positives / all positives) are not fitted
+    — they run at identity, reference ensemble.py:180-182.
 
     The (raw, y) pairs collect to the driver for the numpy fit, as the
     reference does: calibration sets are small by design (a labeled
-    sample, not the corpus); at scale the caller samples ``labeled``
+    sample, not the corpus); at scale the caller samples the corpus
     first. The raw scores themselves are computed distributed with the
     real N5+E2 signal path."""
     from .pipeline import full_scan_raw_scores
 
-    # the caller may hand over the already-checkpointed candidate
-    # relation (eval_trained_query shares ONE extraction between the
-    # calibrator fit and the trained eval — the relation is identical
-    # by construction: same projection + distinct over labeled)
-    lc = precomputed_lc if precomputed_lc is not None else (
-        labeled_candidates(labeled)
-        .select("text_id", "text", "pii_type", "match_text",
-                "rule_confidence", "validated", "pstart", "pend")
-        .distinct().localCheckpoint(eager=True))
-    cands = lc.select(
-        F.col("text_id").cast("string").alias("column_ref"),
-        F.col("text").alias("value"),
-        "pii_type", "match_text", "rule_confidence", "validated")
-    raw = full_scan_raw_scores(cands, model=model,
-                               precomputed_enriched=precomputed_enriched)
-    pos = lc.select(
+    raw = full_scan_raw_scores(basis.enriched)
+    pos = basis.candidates.select(
         F.col("text_id").cast("string").alias("column_ref"),
         F.col("text").alias("value"), "pii_type", "match_text",
         "pstart", "pend")
     raw = raw.join(pos, ["column_ref", "value", "pii_type", "match_text"])
-    gold = labeled.select(
+    gold = basis.corpus.select(
         F.col("text_id").cast("string").alias("column_ref"),
         F.explode("labels").alias("l")) \
         .select("column_ref", F.col("l.start").alias("gstart"),
@@ -196,31 +170,14 @@ def fit_calibrator_ensemble(labeled: DataFrame, model=None,
                 F.coalesce(
                     (F.col("gold_type") == F.col("score_type"))
                     .cast("double"), F.lit(0.0)).alias("y")))
-    rows = pairs.collect()
-    cal = Calibrator()
     by_type: dict[str, list] = {}
-    for r in rows:
+    for r in pairs.collect():
         by_type.setdefault(r.score_type, []).append((r.raw, r.y))
+    params: dict[str, tuple[float, float]] = {}
     for t, prs in by_type.items():
         y = np.array([p[1] for p in prs])
         if y.min() == y.max():  # no positives or all positives
             continue
         s = np.array([p[0] for p in prs])
-        cal.params[t] = _fit_platt_1d(s, y)
-    return cal
-
-
-def fit_calibrator(labeled: DataFrame) -> Calibrator:
-    rows = calibration_pairs(labeled).collect()
-    cal = Calibrator()
-    by_type: dict[str, list] = {}
-    for r in rows:
-        by_type.setdefault(r.pii_type, []).append(
-            (r.raw_score, r.is_type))
-    for t, pairs in by_type.items():
-        y = np.array([p[1] for p in pairs])
-        if y.min() == y.max():  # degenerate -> identity (reference F6)
-            continue
-        s = np.array([p[0] for p in pairs])
-        cal.params[t] = _fit_platt_1d(s, y)
-    return cal
+        params[t] = _fit_platt_1d(s, y)
+    return params

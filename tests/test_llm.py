@@ -176,7 +176,7 @@ def test_precomputed_enriched_rejects_signal_knobs(spark):
     non-default provider / budget cap / TTL / NER gate would silently
     drop the knobs the caller asked for — the contract fails loudly."""
     from catalog_pii_scanner_spark.operators.pipeline import (
-        _enriched_candidates, full_scan_predictions, full_scan_raw_scores)
+        _enriched_candidates, full_scan_predictions)
     cands = spark.createDataFrame(
         [("c1", "mail a@b.io", "EMAIL", "a@b.io", 0.9, True)],
         "column_ref string, value string, pii_type string, "
@@ -189,9 +189,6 @@ def test_precomputed_enriched_rejects_signal_knobs(spark):
         with pytest.raises(ValueError, match="precomputed_enriched"):
             full_scan_predictions(cands, precomputed_enriched=enriched,
                                   **kw)
-    with pytest.raises(ValueError, match="precomputed_enriched"):
-        full_scan_raw_scores(cands, ner_provider="fake_llm",
-                             precomputed_enriched=enriched)
     # the sanctioned combination (default regex path) still works
     assert full_scan_predictions(
         cands, precomputed_enriched=enriched).count() == 1

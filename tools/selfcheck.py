@@ -5,7 +5,11 @@ at the given sf dir, then compares row count, sorted-by-name schema, and an
 order-insensitive value hash. Usage:
 
     python tools/selfcheck.py [sf_dir] [query_name ...]
-    python tools/selfcheck.py --json OUT.json [sf_dir]   # driver-format JSON
+    python tools/selfcheck.py --json OUT.json [sf_dir] [query_name ...]
+
+The JSON report holds, per query, the match booleans plus the row counts
+and value hashes of both sides (``spark_hash``/``oracle_hash``), so the
+reports of two commits can be compared with each other directly.
 """
 
 from __future__ import annotations
@@ -98,7 +102,8 @@ def main() -> int:
                   f"rows-only check) [{t1-t0:.1f}s]")
             report[name] = {"rows_match": spark_fp[0] >= 0,
                             "schema_match": None, "hash_match": None,
-                            "spark_rows": spark_fp[0], "err": None}
+                            "spark_rows": spark_fp[0],
+                            "spark_hash": spark_fp[2], "err": None}
             continue
         try:
             res = con.execute(oracles[name])
@@ -132,6 +137,7 @@ def main() -> int:
             "schema_match": spark_fp[1] == duck_fp[1],
             "hash_match": spark_fp[2] == duck_fp[2],
             "spark_rows": spark_fp[0], "oracle_rows": duck_fp[0],
+            "spark_hash": spark_fp[2], "oracle_hash": duck_fp[2],
             "err": None}
         if not ok:
             failures += 1
