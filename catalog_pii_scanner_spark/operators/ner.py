@@ -2,7 +2,8 @@
 
 Provider model mirrors the reference: a pluggable span detector with a
 confidence gate (N3, default 0.60), merged with rule candidates by
-per-type MAX (N4, ner.py:202-228), plus context-signal histograms (N5).
+per-type MAX (N4, ner.py:202-228), plus context-signal histograms (N5):
+one ``groupBy`` per context key builds the ``ner_sig`` share map.
 
 Providers:
 - ``regex`` (default, hermetic): the reference's spaCy fallback — PERSON
@@ -27,6 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..oracles import ratio_round_halfup_guarded
+from ..pii_types import ALL_PII_TYPES
 
 from .rules import RULES, Rule, extract_candidates
 
@@ -221,13 +223,11 @@ def detect_ner_spans_model(values_df: DataFrame, value_col: str = "value",
     def gen(batches):
         prov = _get_provider(provider, provider_opts)
         for pdf in batches:
-            rows = []
-            texts = pdf[value_col].tolist()
-            for i, spans in enumerate(prov.detect_batch(texts)):
-                keep = tuple(pdf.iloc[i][c] for c in in_cols)
-                rows += [keep + span for span in spans
-                         if span[2] >= confidence_min]
-            yield pd.DataFrame(rows, columns=out_cols)
+            keeps = pdf[in_cols].itertuples(index=False, name=None)
+            spans = prov.detect_batch(pdf[value_col].tolist())
+            yield pd.DataFrame([k + s for k, ss in zip(keeps, spans)
+                                for s in ss if s[2] >= confidence_min],
+                               columns=out_cols)
 
     return values_df.select(*in_cols).mapInPandas(gen, schema)
 
@@ -337,39 +337,42 @@ totals AS (
 """
 
 
+def ner_signal_map(contexts: DataFrame, keep_cols: tuple[str, ...],
+                   provider: str, provider_opts: dict | None,
+                   confidence_min: float) -> DataFrame:
+    """N5 in ONE aggregation, ``keep_cols..., ner_sig MAP<STRING,DOUBLE>``:
+    ``groupBy(keep)`` counts the key's spans over ``context`` and, per
+    ``ALL_PII_TYPES`` label, that label's spans (every provider labels in
+    ALL_PII_TYPES). The map holds each label counted above 0 at its share,
+    rounded by ``ratio_round_halfup_guarded``. Contexts sharing a key sum
+    into one histogram; a key with no entity gives no row. Keep columns
+    named like the detector's output (pii_type/match_text/ner_score) are
+    renamed through the detection and restored."""
+    alias = {k: f"_k_{k}" for k in keep_cols
+             if k in ("pii_type", "match_text", "ner_score")}
+    safe_keep = tuple(alias.get(k, k) for k in keep_cols)
+    spans = detect_ner_spans(contexts.withColumnsRenamed(alias), "context",
+                             safe_keep, provider, confidence_min,
+                             provider_opts)
+    n = {t: f"_n{i}" for i, t in enumerate(ALL_PII_TYPES)}
+    entries = ", ".join(
+        f"IF({c} > 0, struct('{t}', "
+        f"{ratio_round_halfup_guarded('spark', c, '_total')}), NULL)"
+        for t, c in n.items())
+    return spans.groupBy(*safe_keep).agg(
+        F.count("*").alias("_total"),
+        *(F.count_if(F.col("pii_type") == t).alias(c) for t, c in n.items())
+    ).select(*(F.col(a).alias(k) for k, a in zip(keep_cols, safe_keep)),
+             F.expr(f"map_from_entries(array_compact(array({entries})))")
+             .alias("ner_sig"))
+
+
 def ner_context_signals(contexts: DataFrame,
                         keep_cols: tuple[str, ...] = ("column_ref",
                                                       "match_text"),
-                        provider: str = "regex",
-                        provider_opts: dict | None = None,
-                        confidence_min: float = NER_CONFIDENCE_MIN
-                        ) -> DataFrame:
-    """N5: entity-label histogram over redacted contexts -> normalized
-    soft signals per context. With the regex provider the entities are the
-    provider's three families detected in the (redacted) context; counts
-    normalize to shares.
-
-    Keep columns that collide with the detector's output vocabulary
-    (pii_type/match_text/ner_score — e.g. the candidate's own match_text
-    as the context key) are renamed through the detection and restored."""
-    reserved = {"pii_type", "match_text", "ner_score"}
-    alias = {k: (f"_k_{k}" if k in reserved else k) for k in keep_cols}
-    ctx = contexts
-    for k, a in alias.items():
-        if a != k:
-            ctx = ctx.withColumnRenamed(k, a)
-    safe_keep = tuple(alias[k] for k in keep_cols)
-    spans = detect_ner_spans(ctx, "context", safe_keep,
-                             provider=provider,
-                             confidence_min=confidence_min,
-                             provider_opts=provider_opts)
-    counts = spans.groupBy(*safe_keep, "pii_type").agg(
-        F.count("*").alias("n"))
-    total = counts.groupBy(*safe_keep).agg(F.sum("n").alias("total"))
-    out = counts.join(total, list(safe_keep))
-    for k, a in alias.items():
-        if a != k:
-            out = out.withColumnRenamed(a, k)
-    return out.select(*keep_cols, "pii_type",
-                      F.expr(ratio_round_halfup_guarded("spark", "n", "total"))
-                      .alias("signal"))
+                        provider: str = "regex") -> DataFrame:
+    """N5 as rows ``keep_cols..., pii_type, signal``: the entries of the
+    one-aggregation histogram :func:`ner_signal_map` builds, exploded."""
+    return ner_signal_map(contexts, keep_cols, provider, None,
+                          NER_CONFIDENCE_MIN).select(
+        *keep_cols, F.explode("ner_sig").alias("pii_type", "signal"))

@@ -3,7 +3,8 @@ src/catalog_pii_scanner/ensemble.py:69-136 — the engine behind
 ``cps scan_text``, cli.py:249-272):
 
     candidates -> redacted +/-48-char contexts (R4)
-               -> N5 context-signal histogram (per distinct context)
+               -> N5 ``ner_sig`` share map (one aggregation per
+                  distinct context, joined back with no regroup)
                -> E2 embedding probabilities (per distinct context)
                -> 11-type fusion with both signal maps bound
                -> calibrate -> normalize -> argmax [-> P6 gate]
@@ -23,7 +24,7 @@ from pyspark.sql import functions as F
 from .embeddings import EmbedModel, deterministic_model, embed_probs
 from .ensemble import (EnsembleWeights, REFERENCE_WEIGHTS, fuse_predictions,
                        raw_type_scores)
-from .ner import NER_CONFIDENCE_MIN, ner_context_signals, require_provider
+from .ner import NER_CONFIDENCE_MIN, ner_signal_map, require_provider
 from .redaction import candidate_contexts
 
 #: fusion input key columns.
@@ -49,7 +50,7 @@ def full_scan_predictions(
     live path.
 
     ``precomputed_enriched`` lets a caller that already evaluated the
-    signal plumbing (``enriched_candidates`` over the SAME cands/model/
+    signal plumbing (``_enriched_candidates`` over the SAME cands/model/
     provider — identical by construction) hand it over, so compositions
     that fit AND predict (the trained eval) analyze the context/NER/
     embed tree once instead of twice; semantics are unchanged.
@@ -101,8 +102,9 @@ def _enriched_candidates(
     llm_cache_ttl_minutes: int | None = None,
     ner_confidence_min: float = NER_CONFIDENCE_MIN,
 ) -> DataFrame:
-    """Shared signal plumbing: distinct candidates + context -> N5 signal
-    map + E2 probability map joined back by context hash."""
+    """Shared signal plumbing: distinct candidates + context -> N5
+    ``ner_sig`` map (``ner_signal_map``, no aggregation here) + E2
+    probability map joined back by context hash."""
     model = model or deterministic_model()
     # a missing model package fails here, before the checkpoint job
     require_provider(ner_provider)
@@ -136,16 +138,8 @@ def _enriched_candidates(
                 F.col("ckey") == F.col("_ok_ckey"), "left_semi")
         if llm_cache_ttl_minutes is not None:
             provider_opts = {"cache_ttl_minutes": llm_cache_ttl_minutes}
-    ner_map = (
-        ner_context_signals(ner_ctxs, keep_cols=("ckey",),
-                            provider=ner_provider,
-                            provider_opts=provider_opts,
-                            confidence_min=ner_confidence_min)
-        .groupBy("ckey")
-        .agg(F.map_from_entries(
-            F.collect_list(F.struct("pii_type", "signal")))
-            .alias("ner_sig"))
-    )
+    ner_map = ner_signal_map(ner_ctxs, ("ckey",), ner_provider,
+                             provider_opts, ner_confidence_min)
     return cands.join(ner_map, "ckey", "left") \
                 .join(emb_map, "ckey", "left")
 
